@@ -511,6 +511,7 @@ object Queries {
       // unbounded distinct-value set; for unknown domains keep the
       // default data-driven bounds path.
       case Some(w) =>
+        require(w > 0 && !w.isNaN, s"shardedCum: shard width must be positive, got $w")
         // The trailing isNotNull is a semantic no-op (v is non-null, so
         // floor(v / w) is non-null) planted deliberately: the final
         // inner join on (grp, _sh) INFERS isnotnull(_sh) on the window
@@ -538,9 +539,19 @@ object Queries {
     val byShard = sharded.groupBy(col(grpCol), col("_sh"))
       .agg(sum(col(cntCol)).as("_st"))
     val wShards = Window.partitionBy(grpCol).orderBy("_sh")
+    val wGroup = Window.partitionBy(grpCol)
+    val maxShards = 1 << 16
+    // A fixed width too fine for the data's scale shows up here as too many
+    // non-empty shards in a group: fail the query rather than broadcast an
+    // offset table that grows with the data. Rides the `tot` window, so it
+    // costs no extra job.
     val offsets = byShard.select(col(grpCol), col("_sh"),
-      (sum(col("_st")).over(wShards) - col("_st")).as("_off"),
-      sum(col("_st")).over(Window.partitionBy(grpCol)).as("tot"))
+      when(count(lit(1)).over(wGroup) <= maxShards,
+        sum(col("_st")).over(wShards) - col("_st"))
+        .otherwise(raise_error(lit(s"shardedCum: more than $maxShards non-empty " +
+          s"shards in one $grpCol group; the shard width is too fine for $valCol")))
+        .as("_off"),
+      sum(col("_st")).over(wGroup).as("tot"))
     sharded
       .withColumn("_c", sum(col(cntCol))
         .over(Window.partitionBy(col(grpCol), col("_sh")).orderBy(valCol)))

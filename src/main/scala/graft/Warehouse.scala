@@ -2,23 +2,40 @@ package graft
 
 import graft.model.{ChangeFeed, SchemaDiscovery}
 import graft.model.SchemaDiscovery.DocSchema
-import graft.ops.{Compact, Flatten, Mango, Split, Transform}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ops.{Caching, Compact, Flatten, Mango, Split, Transform}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** End-to-end warehouse build: the Spark-native `couchwarehouse.start()`.
   *
-  * Orchestration parity with reference `index.js:181-255`:
+  * Orchestration parity with reference `index.js:181-255`, in one pass over
+  * the feed:
   *   1. read the changes feed (spool → here a batch DataFrame; streaming
   *      form in [[graft.streaming.StreamIngest]]);
   *   2. optional Mango selector filter (source pushdown, A4);
   *   3. optional user transform (A5);
-  *   4. per-docType: first-doc-wins schema discovery (A6), flatten (A7),
-  *      last-writer-wins compaction + delete application + design-doc drop
-  *      (A9/A10/A11);
-  *   5. register each table as a temp view; `query(sql)` = `spark.sql`
-  *      (A16 — the half the reference delegates to SQLite/PG/MySQL/ES and
-  *      we answer natively with Catalyst).
+  *   4. ONE shuffle on `id` compacts every docType at once: per
+  *      `(id, docType)` the latest live row survives unless a tombstone of
+  *      that id carries a higher seq (last-writer-wins, delete application,
+  *      design-doc drop — A9/A10/A11). The compacted frame also carries each
+  *      `(id, docType)`'s first doc and its latest seq, so ONE metadata
+  *      aggregation over it yields the type set, each type's first-doc-wins
+  *      schema donor (A6) and the checkpoint seq — design docs and
+  *      tombstones included. That frame is materialized once per
+  *      [[ingest]]: the metadata job is the only job that reads the feed,
+  *      and every table view, export, sink and query reads the
+  *      materialization instead;
+  *   5. register each table — flatten (A7) of its type's survivors — as a
+  *      temp view; `query(sql)` = `spark.sql` (A16 — the half the
+  *      reference delegates to SQLite/PG/MySQL/ES and we answer natively
+  *      with Catalyst).
+  *
+  * The materialization belongs to this warehouse, not to the session: the
+  * next [[ingest]] releases it, and one left behind with an abandoned
+  * warehouse is unpersisted by Spark's `ContextCleaner` once no plan —
+  * table frame or temp view — refers to it any more
+  * ([[graft.ops.Caching.materialized]]).
   *
   * Driver state is exactly what the reference keeps on its single node: the
   * per-type schema map and checkpoint token. All row work is distributed.
@@ -49,22 +66,12 @@ final class Warehouse(spark: SparkSession, opts: WarehouseOptions) {
     */
   private var allChanges: Option[DataFrame] = None
 
+  /** The materialized compaction of [[allChanges]] every table reads. */
+  private var compacted: Option[DataFrame] = None
+
   def discoveredSchemas: Map[String, DocSchema] = schemas.toMap
   def checkpoint: Long = lastSeq
   def tableNames: Seq[String] = tables.keys.toSeq
-
-  /** First non-design, non-deleted doc of a type, in feed order — the schema
-    * donor (reference `index.js:55-68`). One tiny driver fetch per type.
-    */
-  private def firstDoc(changes: DataFrame): Option[String] =
-    changes
-      .where(!col("deleted") && !col("id").startsWith("_design") && col("doc").isNotNull)
-      .orderBy(col("seqNum"))
-      .select("doc")
-      .limit(1)
-      .collect()
-      .headOption
-      .map(_.getString(0))
 
   /** Ingest a batch of changes (canonical columns from [[ChangeFeed]]) and
     * (re)register the warehouse views. Returns the per-table DataFrames.
@@ -80,39 +87,35 @@ final class Warehouse(spark: SparkSession, opts: WarehouseOptions) {
       case None       => batch
     }
     allChanges = Some(transformed)
-    transformed.cache()
 
-    val types: Seq[String] = opts.split match {
-      case Some(f) => Split.discoverTypes(transformed, f)
-      case None    => Seq(Split.DefaultType)
-    }
+    compacted.foreach(Caching.release(_))
+    val mat = Caching.materialized(Warehouse.compactByType(transformed,
+      opts.split.fold(lit(Split.DefaultType))(f => Split.docType(f, col("doc")))))
+    compacted = Some(mat)
 
+    // the one metadata job; it also fills the materialization. The null
+    // group holds the ids without a live doc (tombstones, design docs).
+    val meta = mat.groupBy("t")
+      .agg(max(col("seqNum")), min(coalesce(col("first"),
+        when(col("live") && col("doc").isNotNull, struct(col("seqNum"), col("doc"))))))
+      .collect()
+    meta.flatMap(r => Option(r.get(1))).map(_.asInstanceOf[Long]).maxOption
+      .foreach(s => lastSeq = s)
+    val donors = meta.collect { case r if !r.isNullAt(0) =>
+      r.getString(0) -> Option(r.getStruct(2)).map(_.getString(1))
+    }.toMap
+
+    val types = opts.split.fold(Seq(Split.DefaultType))(_ => donors.keys.toSeq.sorted)
     types.foreach { t =>
-      val slice = opts.split match {
-        case Some(f) => Split.ofType(transformed, f, t)
-        case None    => transformed
-      }
-      val schema = schemas.getOrElseUpdate(t, {
-        firstDoc(opts.split match {
-          case Some(f) => transformed.where(Split.docType(f, col("doc")) === t)
-          case None    => transformed
-        }) match {
-          case Some(doc) => SchemaDiscovery.discover(doc)
-          case None      => DocSchema(Seq.empty)
-        }
-      })
+      val schema = schemas.getOrElseUpdate(t,
+        donors.get(t).flatten.fold(DocSchema(Seq.empty))(SchemaDiscovery.discover))
       if (schema.leaves.nonEmpty) {
-        val compacted = Compact(slice.select(col("id"), col("seqNum"), col("deleted"), col("doc")))
-        val flat = Flatten(compacted, schema)
+        val flat = Flatten(mat.where(col("live") && col("t") === t), schema)
         val name = Split.tableName(opts.database, opts.split.map(_ => t))
         flat.createOrReplaceTempView(name)
         tables(name) = flat
       }
     }
-
-    lastSeq = transformed.agg(max(col("seqNum"))).collect().headOption
-      .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long])).getOrElse(lastSeq)
-    transformed.unpersist()
     registerCheckpointView()
     tables.toMap
   }
@@ -217,6 +220,44 @@ final class Warehouse(spark: SparkSession, opts: WarehouseOptions) {
 }
 
 object Warehouse {
+
+  /** Every docType's compaction in one shuffle on `id`: one row per
+    * `(id, t)` group, `t` being `liveType` on live rows (not deleted, not a
+    * design doc) and null on the rest. Per group it keeps:
+    *   - `seqNum`, the group's latest seq (so `max(seqNum)` over all groups
+    *     is the feed's, tombstones and design docs included);
+    *   - `live` and `doc`: the latest row survives — and keeps its doc —
+    *     iff it is live and no tombstone of its id has a higher seq. This is
+    *     `Compact(Split.ofType(changes, f, t))` for every `t` at once: a doc
+    *     that changed type stays in each type it was live in, until a
+    *     tombstone removes it from all of them;
+    *   - `first`: the group's first non-null doc as `(seqNum, doc)` — the
+    *     schema-donor candidate, kept even when compaction discards that
+    *     version. Left null where it is the surviving row itself, so a doc
+    *     written once is stored once.
+    * Both windows ride the one hash exchange on `id`: the `(id, t)` window
+    * is satisfied by the `id` partitioning.
+    */
+  private def compactByType(changes: DataFrame, liveType: Column): DataFrame = {
+    val live = !col("deleted") && !col("id").startsWith("_design")
+    val group = Window.partitionBy("id", "t").orderBy(col("seqNum").desc)
+    val first = min(when(col("doc").isNotNull, struct(col("seqNum"), col("doc"))))
+      .over(group.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    val survives = col("t").isNotNull && (col("_tomb").isNull || col("seqNum") > col("_tomb"))
+    // `t` is derived after the exchange, so it is never shuffled
+    changes
+      .select(col("id"), col("seqNum"), col("deleted"), col("doc"))
+      .withColumn("_tomb", max(when(col("deleted"), col("seqNum"))).over(Window.partitionBy("id")))
+      .withColumn("t", when(live, liveType))
+      .select(col("t"), col("seqNum"), col("doc"), col("_tomb"),
+        row_number().over(group).as("_rn"), first.as("_first"))
+      .where(col("_rn") === 1)
+      .select(col("t"), col("seqNum"), survives.as("live"),
+        when(survives, col("doc")).as("doc"),
+        when(col("t").isNotNull && !(survives && col("_first.seqNum") === col("seqNum")),
+          col("_first")).as("first"))
+  }
+
   /** Build a warehouse from a changes-feed file in one call — the batch
     * analog of `couchwarehouse.start(opts)`.
     */

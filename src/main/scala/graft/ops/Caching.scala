@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.storage.StorageLevel
 
 /** Idempotent caching: `cached(df)` pins the plan only when no equivalent
@@ -19,4 +20,21 @@ import org.apache.spark.storage.StorageLevel
 private[graft] object Caching {
   def cached(df: DataFrame): DataFrame =
     if (df.storageLevel == StorageLevel.NONE) df.cache() else df
+
+  /** `df` materialized once, columnar, in memory (spilling to disk), and
+    * owned by the returned frame rather than by the session: unlike
+    * `cache()` nothing in the `CacheManager` pins it, so the blocks go when
+    * [[release]]d or, failing that, when no plan references the frame any
+    * more. The first job that reads the frame fills it; every later one
+    * reads the blocks. Lineage is kept, so a frame read after its release
+    * recomputes instead of failing.
+    */
+  def materialized(df: DataFrame): DataFrame =
+    GraftSqlBridge.inMemory(df, StorageLevel.MEMORY_AND_DISK)
+
+  /** Drop the blocks of every [[materialized]] relation under `df`. */
+  def release(df: DataFrame, blocking: Boolean = false): Unit =
+    df.queryExecution.analyzed.collect {
+      case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers
+    }.foreach(_.unpersist(blocking))
 }

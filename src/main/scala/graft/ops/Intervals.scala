@@ -18,8 +18,9 @@ object Intervals {
     * ONLY (pin-vs-recompute A/B on the sharded `marked` timeline):
     * production code never changes it — the default (pin) is the
     * measured-cheaper side at every scale probed (SCALE.md markpin row).
+    * Volatile: the probe's toggle is seen whole by any planning thread.
     */
-  private[graft] var pinMarked = true
+  @volatile private[graft] var pinMarked = true
   private def maybePin(df: DataFrame): DataFrame =
     if (pinMarked) Caching.cached(df) else df
 

@@ -10,11 +10,10 @@ import org.apache.spark.sql.functions._
   * `index.js:52`, `lib/sqlite.js:72,81`, README.md:205-217). Table names
   * strip `-` (`util.js:1-11`: `"month-54" → "month54"`).
   *
-  * Spark-native: docType is a column (`get_json_object` on the raw doc);
-  * discovery of the type set is a `distinct` over that column; fan-out is a
-  * per-type `filter` feeding each type's flatten+compact pipeline. On a real
-  * cluster the same thing can be one pass with
-  * `writer.partitionBy(splitField)`.
+  * Spark-native: docType is a column (`get_json_object` on the raw doc).
+  * The batch [[graft.Warehouse]] compacts every type in one shuffle keyed on
+  * `(id, docType)` and reads the type set off that pass; [[discoverTypes]]
+  * and [[ofType]] are the standalone per-type forms of the same split.
   */
 object Split {
 

@@ -482,7 +482,9 @@ object ScaleProbe {
     */
   private def markPinProbe(spark: SparkSession): Unit = {
     val d = "/root/testdata/sf0.1"
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+    val priorCoalesce = spark.conf.getOption(coalesceKey)
+    spark.conf.set(coalesceKey, "false")
     val base = graft.Queries.tsToNanos(spark.read.parquet(s"$d/events.parquet"))
     val ev10 = (0 until 10).map(i =>
       base.select(
@@ -539,6 +541,8 @@ object ScaleProbe {
       }
     } finally {
       graft.ops.Intervals.pinMarked = true
+      // the later probes of mode=all run with the session's own setting
+      priorCoalesce.fold(spark.conf.unset(coalesceKey))(spark.conf.set(coalesceKey, _))
       spark.sparkContext.removeSparkListener(listener)
     }
   }

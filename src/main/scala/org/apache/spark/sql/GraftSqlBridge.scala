@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.storage.StorageLevel
 
 /** Minimal bridge to `private[sql]` Column/Expression conversions — the
   * supported way for third-party libraries to lift a custom Catalyst
@@ -12,4 +14,15 @@ object GraftSqlBridge {
 
   def expression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** `df` over an in-memory columnar relation of its own that the session's
+    * `CacheManager` never sees: the same `InMemoryRelation` `df.cache()`
+    * builds, filled by the first job that reads it. Only the plans holding
+    * this frame reach its blocks, so they are unpersisted by the
+    * `ContextCleaner` once those plans are garbage.
+    */
+  def inMemory(df: DataFrame, level: StorageLevel): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    classic.Dataset.ofRows(ds.sparkSession, InMemoryRelation(level, ds.queryExecution, None))
+  }
 }

@@ -145,4 +145,20 @@ class MedianHistogramSpec extends SparkSpec {
       ("neg", 4L, 7.5), ("neg", 5L, 40.0))
     assert(m("neg") == 5.0)
   }
+
+  test("fixed-width shard: a non-positive or NaN width, or too fine a width, fails loudly") {
+    import spark.implicits._
+    val hist = Seq(("g", 1.0, 1L), ("g", 2.0, 1L)).toDF("g", "v", "c")
+    for (w <- Seq(0.0, -4.0, Double.NaN))
+      intercept[IllegalArgumentException](Queries.shardedCum(hist, "g", "v", "c", Some(w)))
+    // 70k distinct values one unit apart at width 1: 70k non-empty shards
+    val wide = spark.range(70000).select(lit("g").as("g"), col("id").cast("double").as("v"),
+      lit(1L).as("c"))
+    val e = intercept[Exception](
+      Queries.shardedCum(wide, "g", "v", "c", Some(1.0)).agg(max("cum")).collect())
+    assert(e.getMessage.contains("non-empty shards"), e.getMessage)
+    // the same data at a width that fits its scale still ranks exactly
+    assert(Queries.shardedCum(wide, "g", "v", "c", Some(64.0)).agg(max("cum"))
+      .as[Long].head() == 70000L)
+  }
 }
