@@ -14,16 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Intervals {
 
-  /** Measurement escape for [[graft.tools.ScaleProbe]]'s `markpin` probe
-    * ONLY (pin-vs-recompute A/B on the sharded `marked` timeline):
-    * production code never changes it — the default (pin) is the
-    * measured-cheaper side at every scale probed (SCALE.md markpin row).
-    * Volatile: the probe's toggle is seen whole by any planning thread.
-    */
-  @volatile private[graft] var pinMarked = true
-  private def maybePin(df: DataFrame): DataFrame =
-    if (pinMarked) Caching.cached(df) else df
-
   /** Merge overlapping-or-touching `[start, end]` intervals per key into
     * maximal islands — the gaps-and-islands coalesce: an interval starts
     * a new island exactly when its start exceeds the running maximum end
@@ -58,7 +48,18 @@ object Intervals {
     */
   def coalesce(df: DataFrame, keyCol: String, startCol: String,
                endCol: String, tieCol: String,
-               timeShards: Int = 1, autoThreshold: Long = 0L): DataFrame = {
+               timeShards: Int = 1, autoThreshold: Long = 0L): DataFrame =
+    coalesce(df, keyCol, startCol, endCol, tieCol, timeShards, autoThreshold,
+      pinMarked = true)
+
+  /** [[coalesce]] with the sharded form's `marked` pin as a parameter, for
+    * [[graft.tools.ScaleProbe]]'s `markpin` pin-vs-recompute A/B only:
+    * production always pins, the measured-cheaper side at every scale
+    * probed (SCALE.md markpin row).
+    */
+  private[graft] def coalesce(df: DataFrame, keyCol: String, startCol: String,
+                              endCol: String, tieCol: String, timeShards: Int,
+                              autoThreshold: Long, pinMarked: Boolean): DataFrame = {
     val s = col(startCol)
     val e = col(endCol)
     TimeShard.hybrid(df, keyCol, s, timeShards, autoThreshold) { base =>
@@ -100,14 +101,15 @@ object Intervals {
       // timelines, and a manual all-keys shard was already paying the
       // second window pass this replaces (disk-backed blocks vs a full
       // re-sort — the cheaper side at every scale we measured).
-      val marked = maybePin(TimeShard.joinCarry(sharded, carry, keyCol)
+      val marked0 = TimeShard.joinCarry(sharded, carry, keyCol)
         .withColumn("_pm", greatest(
           max(e).over(wLoc.rowsBetween(Window.unboundedPreceding, -1)),
           col("_cm")))
         .withColumn("_new", when(col("_pm").isNull || s > col("_pm"), 1L)
           .otherwise(0L))
         .withColumn("_li", sum(col("_new"))
-          .over(wLoc.rowsBetween(Window.unboundedPreceding, Window.currentRow))))
+          .over(wLoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      val marked = if (pinMarked) Caching.cached(marked0) else marked0
       // Carry 2: islands opened in strictly-earlier shards (per-shard
       // count = the monotone _li's max — map-side-combinable; running sum
       // again at shard granularity). A row continuing the previous

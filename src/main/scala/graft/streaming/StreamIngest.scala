@@ -1,11 +1,12 @@
 package graft.streaming
 
-import graft.model.{ChangeFeed, SchemaDiscovery}
+import graft.model.SchemaDiscovery
 import graft.model.SchemaDiscovery.DocSchema
-import graft.ops.{Compact, Flatten, Split, Transform}
+import graft.ops.{Compact, Flatten, Split}
 import graft.WarehouseOptions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.hadoop.fs.Path
 
@@ -19,26 +20,37 @@ import org.apache.hadoop.fs.Path
   * batch ingestion — the `foreachBatch` body is the direct analog of the
   * reference's `batch` event handler:
   *
-  *   1. merge the batch into the per-id latest-change STATE table
+  *   1. read what the batch touches — its `_bucket`s, highest seq and
+  *      live docTypes — in ONE aggregation, the job that also caches it;
+  *   2. merge the batch into the per-id latest-change STATE table
   *      (last-writer-wins by seqNum, tombstones retained so deletes win
-  *      over late replays — one shuffle on id per batch);
-  *   2. re-publish each docType's flattened table (parquet + temp view);
-  *   3. advance the warehouse checkpoint side-file (A13) — Spark's own
+  *      over late replays — one shuffle on id per batch), reading back
+  *      only the touched buckets' directories;
+  *   3. re-register each docType's flattened temp view over the state;
+  *   4. advance the warehouse checkpoint side-file (A13) — Spark's own
   *      `checkpointLocation` handles source offsets, the side-file is the
   *      queryable `couchwarehouse_checkpoints` analog.
+  *
+  * So a small batch costs a fixed handful of Spark jobs: the metadata
+  * aggregation, the merge's shuffle and bucket write, and one listing of
+  * the state's bucket directories for the views. Every state read is
+  * typed ([[StreamIngest.StateSchema]]), so none infers a schema from
+  * parquet footers, and [[publish]] after a batch is a no-op: the batch
+  * already published, and the views stay current until the next one.
   *
   * At-least-once delivery + idempotent merge (replayed changes collapse in
   * the LWW window) reproduces the reference's REPLACE-by-PK semantics
   * exactly (`lib/sqlite.js:82`, SURVEY §4 "Idempotent re-delivery").
   *
-  * Scale: state merge is a single hash shuffle on doc id; publish is a
-  * partitioned parquet overwrite. Nothing driver-side grows with data —
-  * the driver holds only frozen schemas and the seq counter, like the
-  * reference's single node held `theSchema`. All state plumbing
-  * (checkpoint side-file, schema donors, bucket/agg swaps) drives the
-  * Hadoop `FileSystem` resolved from `warehouseDir`, so the warehouse
-  * can live on cluster storage — the swaps are dst-absent renames,
-  * atomic on HDFS/POSIX; see [[StateFs]] for the object-store boundary.
+  * Scale: state merge is a single hash shuffle on doc id and a
+  * partitioned parquet write of the touched buckets. Nothing driver-side
+  * grows with data — the driver holds only frozen schemas and the seq
+  * counter, like the reference's single node held `theSchema`. All state
+  * plumbing (checkpoint side-file, schema donors, bucket/agg swaps)
+  * drives the Hadoop `FileSystem` resolved from `warehouseDir`, so the
+  * warehouse can live on cluster storage — the swaps are dst-absent
+  * renames, atomic on HDFS/POSIX; see [[StateFs]] for the object-store
+  * boundary.
   */
 final class StreamIngest(
     spark: SparkSession,
@@ -189,13 +201,15 @@ final class StreamIngest(
     * Untouched buckets are never read or rewritten.
     */
   def applyBatch(batch0: DataFrame, batchId: Long): Unit = {
+    published = None
     val batch = opts.transform(batch0)
       .select(col("id"), col("seqNum"), col("deleted"), col("doc"))
       .withColumn("_bucket", bucketCol)
       .cache()
     try {
-      val touched = batch.select("_bucket").distinct().collect().map(_.getInt(0))
-      val merged = existingStateTouched(touched) match {
+      val meta = batchMeta(batch)
+      val prior = existingState(Some(meta.buckets))
+      val merged = prior match {
         case Some(st) => st.unionByName(batch)
         case None     => batch
       }
@@ -208,13 +222,28 @@ final class StreamIngest(
       val state = if (maintainAgg.isDefined) state0.cache() else state0
       try {
         // agg BEFORE state (see updateAgg's exactly-once argument)
-        maintainAgg.foreach(updateAgg(_, batch, touched, state, batchId))
+        maintainAgg.foreach(updateAgg(_, batch, prior, state, batchId))
         writeBuckets(state, batchId)
       } finally if (maintainAgg.isDefined) { state.unpersist(); () }
 
-      publishWith(Some(batch))
-      advanceCheckpoint(batch)
+      publishWith(meta.types)
+      advanceCheckpoint(meta.maxSeq)
     } finally batch.unpersist()
+  }
+
+  /** What a micro-batch touches, read in ONE aggregation over the cached
+    * batch (which is also the job that fills the cache): its `_bucket`s,
+    * its highest seq, and the docTypes of its live non-design rows — the
+    * set [[Split.discoverTypes]] would return.
+    */
+  private def batchMeta(batch: DataFrame): StreamIngest.BatchMeta = {
+    val liveType = opts.split.fold(lit(null).cast("string"))(f =>
+      when(!col("deleted") && !col("id").startsWith("_design"),
+        Split.docType(f, col("doc"))))
+    val r = batch.agg(collect_set(col("_bucket")), max(col("seqNum")),
+      collect_set(liveType)).head()
+    StreamIngest.BatchMeta(r.getSeq[Int](0).toSet, Option(r.get(1)).map(_.asInstanceOf[Long]),
+      r.getSeq[String](2).toSet)
   }
 
   /** Incrementally maintain `count/sum by group` over the live docs
@@ -237,7 +266,7 @@ final class StreamIngest(
     * write across files and swap the directory the same way.
     */
   private def updateAgg(spec: StreamIngest.AggSpec, batch: DataFrame,
-                        touched: Array[Int], state: DataFrame,
+                        prior: Option[DataFrame], state: DataFrame,
                         batchId: Long): Unit = {
     val applied = appliedAggBatch()
     if (batchId <= applied) {
@@ -262,10 +291,7 @@ final class StreamIngest(
     // live (grp, value) rows of the batch's ids; docs without the group
     // field are outside the aggregate (a null join key would never merge)
     def rows(df: DataFrame): DataFrame = aggRows(spec, df.join(ids, "id"))
-    val pre = existingStateTouched(touched) match {
-      case Some(st) => rows(st)
-      case None     => rows(state.limit(0))
-    }
+    val pre = rows(prior.getOrElse(state.limit(0)))
     val post = rows(state)
     val current = aggData()
       .getOrElse(IncrementalAgg.empty(pre, "grp"))
@@ -466,38 +492,46 @@ final class StreamIngest(
   private def deleteRecursively(p: Path): Unit =
     StateFs.deleteRecursively(fs, p)
 
-  /** The persisted state table, when at least one bucket has landed. The
-    * bucket check (not a bare directory-exists) keeps an all-filtered
-    * first batch — which creates the state root but moves no buckets —
-    * from poisoning every later read with an unreadable empty directory.
-    * Manifest protocol: the live manifest names each bucket's directory;
-    * the partition column rides back as a literal per bucket read.
+  /** The persisted state table — or, given `touched`, the rows of those
+    * buckets only — when at least one such bucket has landed. The bucket
+    * check (not a bare directory-exists) keeps an all-filtered first
+    * batch — which creates the state root but moves no buckets — from
+    * poisoning every later read with an unreadable empty directory. With
+    * `touched`, both protocols open ONLY those buckets' directories: a
+    * handful of paths Spark lists on the driver, with no listing job and
+    * no post-scan filter.
     */
-  private def existingState(): Option[DataFrame] =
-    if (manifestMode) readManifestBuckets(None)
-    else {
-      val hasBuckets =
-        StateFs.listNames(fs, new Path(stateDir)).exists(_.startsWith("_bucket="))
-      if (hasBuckets) Some(spark.read.parquet(stateDir)) else None
-    }
+  private def existingState(touched: Option[Set[Int]] = None): Option[DataFrame] =
+    if (manifestMode) readManifestBuckets(touched) else readRenameBuckets(touched)
 
-  /** State rows of the `touched` buckets only — None when none of them
-    * (or no state at all) exists yet. Rename protocol reads the full
-    * partitioned table and prunes; manifest protocol opens ONLY the
-    * touched buckets' directories (no post-scan filter at all).
+  /** The one state reader of both protocols: a multi-path parquet read of
+    * `_bucket=N` directories under `base`, typed by [[StreamIngest.StateSchema]]
+    * (no footer-inference job) with `basePath` partition inference
+    * restoring `_bucket`.
     */
-  private def existingStateTouched(touched: Array[Int]): Option[DataFrame] =
-    if (manifestMode) readManifestBuckets(Some(touched.toSet))
-    else existingState().map(
-      _.where(col("_bucket").isin(touched.map(Integer.valueOf).toIndexedSeq: _*)))
+  private def readBuckets(base: Path, dirs: Seq[Path]): DataFrame =
+    spark.read.schema(StreamIngest.StateSchema)
+      .option("basePath", base.toString)
+      .parquet(dirs.map(_.toString).sorted: _*)
 
-  /** Plan shape: ONE parquet relation per referenced BATCH DIRECTORY
-    * (all of a dir's live buckets ride one multi-path scan, `basePath`
-    * partition inference restoring `_bucket`), so the union width is
-    * the number of batch dirs the manifest still references — the
-    * recent-batch handful under any touch pattern with locality, and at
-    * worst `graft.state.buckets` when every bucket's last touch was a
-    * different batch. Size bucket counts with that worst case in mind
+  /** Rename protocol: the landed `_bucket=N` directories of the state
+    * root, all of them or those in `touched`.
+    */
+  private def readRenameBuckets(touched: Option[Set[Int]]): Option[DataFrame] = {
+    val root = new Path(stateDir)
+    val dirs = StateFs.listNames(fs, root)
+      .filter(n => n.startsWith("_bucket=") &&
+        touched.forall(_.contains(n.stripPrefix("_bucket=").toInt)))
+    if (dirs.isEmpty) None else Some(readBuckets(root, dirs.map(new Path(root, _))))
+  }
+
+  /** Manifest protocol: the live manifest names each bucket's directory.
+    * Plan shape: ONE parquet relation per referenced BATCH DIRECTORY
+    * (all of a dir's live buckets ride one [[readBuckets]] scan), so the
+    * union width is the number of batch dirs the manifest still
+    * references — the recent-batch handful under any touch pattern with
+    * locality, and at worst `graft.state.buckets` when every bucket's
+    * last touch was a different batch. Size bucket counts with that worst case in mind
     * (the default 64 is a 64-way union; thousands are fine, hundreds of
     * thousands are not — at which point a periodic full-touch batch, a
     * backfill re-writing every id, collapses the manifest to one dir).
@@ -510,10 +544,8 @@ final class StreamIngest(
     else {
       val byDir = parts.groupBy(_._2.split("/", 2)(0))
       Some(byDir.toSeq.sortBy(_._1).map { case (dirName, entries) =>
-        spark.read
-          .option("basePath", stateManifest.dataPath(dirName).toString)
-          .parquet(entries.map(e => stateManifest.dataPath(e._2).toString)
-            .sorted: _*)
+        readBuckets(stateManifest.dataPath(dirName),
+          entries.map(e => stateManifest.dataPath(e._2)))
       }.reduce(_ unionByName _))
     }
   }
@@ -524,50 +556,71 @@ final class StreamIngest(
     */
   private var knownTypes: Option[Set[String]] = None
 
-  private def typesOf(df: DataFrame, splitField: String): Set[String] =
-    df.where(!col("deleted"))
-      .select(Split.docType(splitField, col("doc")).as("t")).distinct()
+  private def typesOf(live: DataFrame, splitField: String): Set[String] =
+    live.select(Split.docType(splitField, col("doc")).as("t")).distinct()
       .collect().map(_.getString(0)).toSet
+
+  /** The views the last publish registered, each with the catalog entry it
+    * got; None from the start of an [[applyBatch]] until it publishes.
+    */
+  @volatile private var published: Option[Map[String, AnyRef]] = None
 
   /** Re-register flattened per-type views over the live rows. The
     * external form scans state for the type set once and caches it;
-    * [[applyBatch]] extends the cache from the (tiny, cached) batch
+    * [[applyBatch]] extends the cache from the batch's own type set
     * instead — per-batch publish cost stays O(touched types), never a
     * full-state scan per trigger. A type whose last doc is deleted keeps
     * its (now empty) view — known types never un-publish.
+    *
+    * A no-op (no job, no listing) when the views are current: every
+    * [[applyBatch]] publishes before it returns, and this instance is the
+    * warehouse's single writer ([[StateFs]]), so the views stay current
+    * until the next batch — unless one of them was dropped or replaced in
+    * the session catalog, which re-publishes them all.
     */
-  def publish(): Unit = publishWith(None)
+  def publish(): Unit =
+    if (!published.exists(_.forall { case (name, entry) =>
+          GraftSqlBridge.tempView(spark, name).exists(_ eq entry) }))
+      publishWith(Set.empty)
 
-  private def publishWith(batch: Option[DataFrame]): Unit = existingState().foreach { st =>
-    val live = st.where(!col("deleted"))
-    val types = opts.split match {
-      case Some(f) =>
-        val seeded = knownTypes.getOrElse(typesOf(live, f))
-        val all = batch.map(b => seeded ++ typesOf(b, f)).getOrElse(seeded)
-        knownTypes = Some(all)
-        all.toSeq.sorted
-      case None => Seq(Split.DefaultType)
-    }
-    types.foreach { t =>
-      val slice = opts.split match {
-        case Some(f) => live.where(Split.docType(f, col("doc")) === t)
-        case None    => live
+  private def publishWith(batchTypes: Set[String]): Unit = {
+    val views = existingState().toSeq.flatMap { st =>
+      val live = st.where(!col("deleted"))
+      val types = opts.split match {
+        case Some(f) =>
+          val all = knownTypes.getOrElse(typesOf(live, f)) ++ batchTypes
+          knownTypes = Some(all)
+          all.toSeq.sorted
+        case None => Seq(Split.DefaultType)
       }
-      val schema = schemas.getOrElseUpdate(t, discoverFrom(slice, t))
-      if (schema.leaves.nonEmpty) {
-        val name = Split.tableName(opts.database, opts.split.map(_ => t))
-        Flatten(slice, schema).createOrReplaceTempView(name)
+      types.flatMap { t =>
+        val slice = opts.split match {
+          case Some(f) => live.where(Split.docType(f, col("doc")) === t)
+          case None    => live
+        }
+        schemaOf(slice, t).filter(_.leaves.nonEmpty).map { schema =>
+          val name = Split.tableName(opts.database, opts.split.map(_ => t))
+          Flatten(slice, schema).createOrReplaceTempView(name)
+          name -> GraftSqlBridge.tempView(spark, name).get
+        }
       }
     }
+    published = Some(views.toMap)
   }
 
-  private def discoverFrom(slice: DataFrame, docType: String): DocSchema =
-    slice.orderBy(col("seqNum")).select("doc").limit(1).collect().headOption match {
-      case Some(r) =>
+  /** The frozen schema of `docType`, discovered from its first live doc
+    * (and persisted) on first sight. A type with no live row yet — every
+    * doc of it deleted, or none landed — has no schema: nothing is
+    * memoized, so its first real doc still becomes the donor.
+    */
+  private def schemaOf(slice: DataFrame, docType: String): Option[DocSchema] =
+    schemas.get(docType).orElse {
+      slice.orderBy(col("seqNum")).select("doc").limit(1).collect().headOption.map { r =>
         val s = SchemaDiscovery.discover(r.getString(0))
         persistSchema(docType, r.getString(0))
+        schemas(docType) = s
         s
-      case None => DocSchema(Seq.empty)
+      }
     }
 
   private def persistSchema(docType: String, donorDoc: String): Unit = {
@@ -587,19 +640,28 @@ final class StreamIngest(
       StateFs.readString(fs, checkpointFile).trim.toLong
     else 0L
 
-  private def advanceCheckpoint(batch: DataFrame): Unit = {
-    val maxSeq = batch.agg(max(col("seqNum"))).collect().headOption
-      .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
+  private def advanceCheckpoint(maxSeq: Option[Long]): Unit =
     maxSeq.filter(_ > checkpoint).foreach { s =>
       // advisory side-file (re-derived from state on the next batch):
       // a torn overwrite is tolerated — see StateFs.writeString
       StateFs.writeString(fs, checkpointFile, s.toString)
     }
-  }
 
 }
 
 object StreamIngest {
+  /** Schema of the persisted state table, given to every state read so
+    * none infers it from parquet footers.
+    */
+  private val StateSchema = StructType(Seq(
+    StructField("id", StringType), StructField("seqNum", LongType),
+    StructField("deleted", BooleanType), StructField("doc", StringType),
+    StructField("_bucket", IntegerType)))
+
+  /** A micro-batch's touched buckets, highest seq and live docTypes. */
+  private final case class BatchMeta(buckets: Set[Int], maxSeq: Option[Long],
+                                     types: Set[String])
+
   /** JSON paths (get_json_object syntax, e.g. `$.type` / `$.amount`)
     * naming the doc fields the maintained aggregate groups and sums by.
     */

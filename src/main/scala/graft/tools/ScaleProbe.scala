@@ -516,9 +516,8 @@ object ScaleProbe {
         }
       }
       for (pin <- Seq(true, false)) {
-        graft.ops.Intervals.pinMarked = pin
         def run() = graft.ops.Intervals
-          .coalesce(iv, "user_id", "s", "e", "event_id", timeShards = 32)
+          .coalesce(iv, "user_id", "s", "e", "event_id", 32, 0L, pinMarked = pin)
           .write.mode("overwrite").format("noop").save()
         spark.catalog.clearCache()
         run() // warm
@@ -534,13 +533,12 @@ object ScaleProbe {
         }.minBy(_._1)
         spark.catalog.clearCache()
         val fp = graft.ops.Intervals
-          .coalesce(iv, "user_id", "s", "e", "event_id", timeShards = 32)
+          .coalesce(iv, "user_id", "s", "e", "event_id", 32, 0L, pinMarked = pin)
           .agg(sum(expr("island + s % 1000000007 + e % 1000000007 + n_rows")).as("fp"))
           .collect()(0).getLong(0)
         println(f"MARKPIN pin=$pin%-5s wall=$wall%6.2fs maxTask=$maxTask%6.2fs fp=$fp")
       }
     } finally {
-      graft.ops.Intervals.pinMarked = true
       // the later probes of mode=all run with the session's own setting
       priorCoalesce.fold(spark.conf.unset(coalesceKey))(spark.conf.set(coalesceKey, _))
       spark.sparkContext.removeSparkListener(listener)

@@ -25,4 +25,12 @@ object GraftSqlBridge {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     classic.Dataset.ofRows(ds.sparkSession, InMemoryRelation(level, ds.queryExecution, None))
   }
+
+  /** The session catalog's entry for the local temp view `name`, when one
+    * is registered. Every (re)registration stores a new entry, so reference
+    * equality with an entry seen earlier tells whether the view is still
+    * the one registered then.
+    */
+  def tempView(spark: SparkSession, name: String): Option[AnyRef] =
+    spark.asInstanceOf[classic.SparkSession].sessionState.catalog.getRawTempView(name)
 }
