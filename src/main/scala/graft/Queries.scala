@@ -2823,7 +2823,7 @@ object Queries {
       // The oracle's product operands are (20,4) x (17,4): exact
       // DECIMAL(37..38,8) in DuckDB (1.0 does not widen a (18,4)x(18,4)
       // multiply and overflows). Spark-side, precision-38 sums would carry
-      // java BigDecimal per row (~3x the primitive cost — CorrProbe), so
+      // java BigDecimal per row (~3x the primitive cost, measured), so
       // the five sums run as graft Sum128 over scale-4 fixed-point longs:
       // qf = round(q*10^4) is exactly the oracle's DECIMAL(_,4) unscaled
       // value for any input with <= 4 true decimal places (both HALF_UP),

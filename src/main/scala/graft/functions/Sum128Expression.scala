@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{DataType, Decimal, DecimalType, LongType}
   * Spark backs any decimal of precision > 18 with `java.math.BigDecimal`,
   * so each row of a DECIMAL(38,8) product-sum allocates and carries
   * object arithmetic — measured at ~3× the cost of the equivalent
-  * primitive sums (CorrProbe: 1.2 s vs 0.37 s over sf0.1 lineitem). A
+  * primitive sums (1.2 s vs 0.37 s over sf0.1 lineitem). A
   * plain `SUM(bigint)` is primitive but overflows at ~9.2e18, which
   * cents-scale products reach after ~10k rows.
   *

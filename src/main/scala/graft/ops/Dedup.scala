@@ -1328,7 +1328,11 @@ object Dedup {
     } else {
       // Fallback for any other orderable id type (string, UUID-ish,
       // fractional): lexicographic min(struct) — plans as SortAggregate,
-      // slower, but correct for every orderable dtype.
+      // slower, but correct for every orderable dtype. `gramsBase` is
+      // evaluated TWICE on this path too, with no reuse: once under the
+      // min(struct) aggregate and once as the anti join's probe side, so
+      // the spread + split + md5 shingling runs twice per doc. Pin it in
+      // this branch if the fallback is ever used at scale.
       val first = gramsBase.groupBy(col("_g"))
         .agg(min(struct(col(idCol), col("start"))).as("_f"))
         .select(col("_g"), col("_f").getField(idCol).as(idCol),

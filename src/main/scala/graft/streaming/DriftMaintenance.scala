@@ -20,7 +20,8 @@ import org.apache.hadoop.fs.Path
   * NOT idempotent under replays, hence the same batchId-marker +
   * atomic-rename pattern as [[SketchMaintenance]]/[[StreamIngest]]:
   * replayed batches are skipped, a batchId further back than the replay
-  * margin (a reset streaming checkpoint) fails loudly.
+  * margin (a reset streaming checkpoint) fails loudly
+  * ([[StateFs.alreadyApplied]]).
   *
   * State size: `sources × buckets` longs regardless of stream history —
   * the drift monitor a 100 TB/day multi-source ingest can afford to keep
@@ -37,15 +38,9 @@ final class DriftMaintenance(dir: String, buckets: Int = 1024,
   /** Apply one micro-batch (also callable directly in batch replays). */
   def applyBatch(batch: DataFrame, batchId: Long): Unit = {
     val (applied, cells) = readState()
-    if (batchId <= applied) {
-      if (applied - batchId > StreamIngest.replayMargin(batch.sparkSession))
-        throw new IllegalStateException(
-          s"drift batchId went backwards: got $batchId but $applied is " +
-            "already applied. The streaming checkpoint was likely reset " +
-            s"against existing drift state — delete $dir to rebuild, or " +
-            "restore the checkpoint.")
-      return
-    }
+    if (StateFs.alreadyApplied(batch.sparkSession, batchId, applied, "drift",
+        "The streaming checkpoint was likely reset against existing drift " +
+          s"state — delete $dir to rebuild, or restore the checkpoint.")) return
     val partial = batch
       // docs with no source are outside per-source monitoring (the
       // batch twin filters identically); a null key would NPE the
@@ -92,22 +87,7 @@ final class DriftMaintenance(dir: String, buckets: Int = 1024,
     * incompatible feature spaces into silently wrong TVDs, so it fails
     * loudly instead (the [[SketchMaintenance]] dimension-guard rule).
     */
-  private def readState(): (Long, Map[(String, Long), Long]) = {
-    // pre-r12 layout: ONE `cells.tsv` whose header line was
-    // "<applied>\t<buckets>"; the new header is "<buckets>" alone (the
-    // id rides the file name), so migration re-heads the payload
-    StateFs.migrateLegacy(fs, root, "cells.tsv", "cells", ".tsv") { bytes =>
-      val text = new String(bytes, StandardCharsets.UTF_8)
-      val nl = text.indexOf('\n')
-      val header = text.substring(0, if (nl < 0) text.length else nl).split("\t")
-      val body = if (nl < 0) "" else text.substring(nl + 1)
-      // the EARLIEST legacy header was the batch id ALONE (its reader
-      // tolerated the absent bucket field); re-head such a payload with
-      // this instance's bucket count — exactly what that reader assumed
-      val persistedBuckets = if (header.length > 1) header(1) else buckets.toString
-      (header(0).toLong,
-        (persistedBuckets + "\n" + body).getBytes(StandardCharsets.UTF_8))
-    }
+  private def readState(): (Long, Map[(String, Long), Long]) =
     StateFs.readVersioned(fs, root, "cells", ".tsv") match {
       case None => (-1L, Map.empty)
       case Some((applied, bytes)) =>
@@ -127,7 +107,6 @@ final class DriftMaintenance(dir: String, buckets: Int = 1024,
         }.toMap
         (applied, cells)
     }
-  }
 
   private def write(batchId: Long, cells: Map[(String, Long), Long]): Unit = {
     // header pins the bucket count; the batch id rides the file NAME

@@ -17,11 +17,11 @@ import org.apache.hadoop.fs.Path
   * versioned-file commit as [[SketchMaintenance]] ([[StateFs]], Hadoop
   * `FileSystem`): the persisted file's NAME carries the batchId that
   * built it, a replay is skipped, a batchId behind the replay margin
-  * (reset checkpoint) fails loudly, and the commit is a staging write +
-  * dst-absent rename — a crash leaves the old or the new sketch, never
-  * a torn one. The certified rank-error bound
-  * ([[QuantileSketchOps.bound]]) survives maintenance: merging only adds
-  * the parts' errors.
+  * (reset checkpoint) fails loudly ([[StateFs.alreadyApplied]]), and
+  * the commit is a staging write + dst-absent rename — a crash leaves
+  * the old or the new sketch, never a torn one. The certified
+  * rank-error bound ([[QuantileSketchOps.bound]]) survives maintenance:
+  * merging only adds the parts' errors.
   *
   * Scale shape: executors reduce each batch to one sketch (partials
   * merge map-side inside the agg); only that sketch reaches the driver,
@@ -38,16 +38,10 @@ final class QuantileMaintenance(dir: String, valCol: String, k: Int = 512) {
   /** Apply one micro-batch (also callable directly in batch replays). */
   def applyBatch(batch: DataFrame, batchId: Long): Unit = {
     val (applied, state) = readState()
-    if (batchId <= applied) {
-      if (applied - batchId > StreamIngest.replayMargin(batch.sparkSession))
-        throw new IllegalStateException(
-          s"quantile-sketch batchId went backwards: got $batchId but " +
-            s"$applied is already applied. The streaming checkpoint was " +
-            s"likely reset against an existing sketch — delete $dir to " +
-            "rebuild from the stream's retained history, or restore the " +
-            "checkpoint.")
-      return
-    }
+    if (StateFs.alreadyApplied(batch.sparkSession, batchId, applied,
+        "quantile-sketch", "The streaming checkpoint was likely reset " +
+          s"against an existing sketch — delete $dir to rebuild from the " +
+          "stream's retained history, or restore the checkpoint.")) return
     val arr = batch
       .agg(QuantileSketchAgg(col(valCol), k).as("sk"))
       .collect()(0).getSeq[Double](0).toArray
@@ -82,18 +76,12 @@ final class QuantileMaintenance(dir: String, valCol: String, k: Int = 512) {
   def bound(): Option[Long] =
     sketch().map(s => QuantileSketchOps.bound(new GenericArrayData(s.toArray)))
 
-  private def readState(): (Long, Option[QuantileSketch]) = {
-    // pre-r12 layout: ONE `qsketch.bin` whose first 8 bytes were the id
-    StateFs.migrateLegacy(fs, root, "qsketch.bin", "qsketch", ".bin") { bytes =>
-      (java.nio.ByteBuffer.wrap(bytes).getLong,
-        java.util.Arrays.copyOfRange(bytes, 8, bytes.length))
-    }
+  private def readState(): (Long, Option[QuantileSketch]) =
     StateFs.readVersioned(fs, root, "qsketch", ".bin") match {
       case None => (-1L, None)
       case Some((applied, bytes)) =>
         (applied, Some(QuantileSketch.deserialize(bytes)))
     }
-  }
 
   private def write(batchId: Long, sketchBytes: Array[Byte]): Unit =
     StateFs.writeVersioned(fs, root, "qsketch", ".bin", batchId, sketchBytes)

@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions.col
   * exactly-once mechanism is the versioned-file commit ([[StateFs]],
   * Hadoop `FileSystem` — the state lives wherever the data lives): the
   * persisted file's NAME carries the batchId that built it, a replay of
-  * that batchId is skipped, and a batchId further back than the
-  * one-batch replay margin (a reset streaming checkpoint) fails loudly
-  * instead of silently double- or under-counting. The commit is a
+  * that batchId is skipped, and a batchId further back than the replay
+  * margin (a reset streaming checkpoint) fails loudly instead of
+  * silently double- or under-counting ([[StateFs.alreadyApplied]]). The commit is a
   * staging write + dst-absent rename — a crash leaves either the old or
   * the new sketch, never a torn one.
   *
@@ -38,17 +38,10 @@ final class SketchMaintenance(dir: String, keyCol: String,
   /** Apply one micro-batch (also callable directly in batch replays). */
   def applyBatch(batch: DataFrame, batchId: Long): Unit = {
     val (applied, counters) = readState()
-    if (batchId <= applied) {
-      // same margin semantics (and session-conf override) as the
-      // maintained aggregate — see StreamIngest.AggReplayMargin
-      if (applied - batchId > StreamIngest.replayMargin(batch.sparkSession))
-        throw new IllegalStateException(
-          s"sketch batchId went backwards: got $batchId but $applied is " +
-            "already applied. The streaming checkpoint was likely reset " +
-            s"against an existing sketch — delete $dir to rebuild from " +
-            "the stream's retained history, or restore the checkpoint.")
-      return
-    }
+    if (StateFs.alreadyApplied(batch.sparkSession, batchId, applied, "sketch",
+        "The streaming checkpoint was likely reset against an existing " +
+          s"sketch — delete $dir to rebuild from the stream's retained " +
+          "history, or restore the checkpoint.")) return
     val partial = batch
       .agg(CountMinSketchAgg(col(keyCol), depth, width).as("sk"))
       .collect()(0).getSeq[Long](0).toArray
@@ -79,12 +72,7 @@ final class SketchMaintenance(dir: String, keyCol: String,
   /** `(appliedBatchId, [depth, width, counters…])`; (-1, empty) when no
     * sketch is persisted yet.
     */
-  private def readState(): (Long, Array[Long]) = {
-    // pre-r12 layout: ONE `cms.bin` whose first 8 bytes were the batch id
-    StateFs.migrateLegacy(fs, root, "cms.bin", "cms", ".bin") { bytes =>
-      (java.nio.ByteBuffer.wrap(bytes).getLong,
-        java.util.Arrays.copyOfRange(bytes, 8, bytes.length))
-    }
+  private def readState(): (Long, Array[Long]) =
     StateFs.readVersioned(fs, root, "cms", ".bin") match {
       case None => (-1L, Array.empty)
       case Some((applied, bytes)) =>
@@ -99,7 +87,6 @@ final class SketchMaintenance(dir: String, keyCol: String,
             else "truncated"} vs ${depth}x$width)")
         (applied, counters)
     }
-  }
 
   private def write(batchId: Long, counters: Array[Long]): Unit = {
     val bb = java.nio.ByteBuffer.allocate(8 * counters.length)

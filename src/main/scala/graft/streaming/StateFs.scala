@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 
 /** Driver-side state-file plumbing for the streaming maintainers
   * ([[StreamIngest]], [[StreamScd2]]): tiny pointer/marker files and
@@ -49,8 +50,8 @@ private[graft] object StateFs {
     * ([[SketchMaintenance]]-family classes).
     */
   def activeHadoopConf(): org.apache.hadoop.conf.Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+    SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession)
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new org.apache.hadoop.conf.Configuration())
 
@@ -132,6 +133,50 @@ private[graft] object StateFs {
   def listNames(fs: FileSystem, dir: Path): Seq[String] =
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq.map(_.getPath.getName)
+
+  // ---- the replay guard of every exactly-once state owner ----
+
+  private val ReplayMarginKey = "graft.agg.replayMargin"
+
+  /** How far a replayed batchId may legitimately lag an owner's applied
+    * marker (`graft.agg.replayMargin` session conf, default 0). Zero:
+    * with synchronous progress tracking the only legitimate re-delivery
+    * is the marker batch itself (the crash window between an owner's
+    * commit and the stream's offset commit), so any batchId strictly
+    * below the marker is a reset checkpoint. A deployment that enables
+    * `spark.sql.streaming.asyncProgressTracking` (which can re-deliver
+    * several batches whose effects were already absorbed) widens it to
+    * its async checkpointing interval in batches. A negative margin
+    * would refuse even the marker replay and wedge every owner on
+    * restart, so it is rejected with the non-numeric values.
+    */
+  def replayMargin(spark: SparkSession): Long = {
+    val v = spark.conf.getOption(ReplayMarginKey).getOrElse("0")
+    val margin = v.toLongOption.getOrElse(-1L)
+    require(margin >= 0,
+      s"$ReplayMarginKey must be a non-negative number of batches, got '$v'")
+    margin
+  }
+
+  /** The replay policy of every owner whose merge is NOT idempotent
+    * (the sketch/drift/quantile maintainers, the SCD2 dimension, the
+    * maintained aggregate, the manifest-protocol state): true when
+    * `batchId` re-delivers a batch the state committed at `applied`
+    * already absorbed — the caller skips it; false for a new batch. A
+    * batchId further behind than [[replayMargin]] means the streaming
+    * checkpoint was reset against existing state — its low ids carry
+    * genuinely new data that skipping would silently drop — so it throws,
+    * naming the owner (`what`) and how to recover (`remedy`).
+    */
+  def alreadyApplied(spark: SparkSession, batchId: Long, applied: Long,
+                     what: String, remedy: String): Boolean = {
+    val margin = replayMargin(spark)
+    if (applied - batchId > margin)
+      throw new IllegalStateException(
+        s"$what batchId went backwards: got $batchId but $applied is " +
+          s"already applied (more than the replay margin of $margin). $remedy")
+    batchId <= applied
+  }
 
   // ---- versioned small-state files (the sketch/drift maintainers) ----
   //
@@ -280,31 +325,6 @@ private[graft] object StateFs {
           }
         }
       }
-    }
-  }
-
-  /** One-time migration of a LEGACY fixed-name state file (the pre-r12
-    * java.nio overwrite-rename form) into the versioned scheme — without
-    * it, upgrading a deployment with live state would read `(-1, empty)`
-    * and the next batch would silently merge into NOTHING, the exact
-    * silent-undercount the replay-margin guards exist to prevent.
-    * `parse` extracts `(batchId, payload)` from the legacy bytes.
-    * Idempotent and crash-safe: the versioned commit lands FIRST, the
-    * legacy file deletes after; a crash between the two leaves both, and
-    * the next call prefers the versioned copy and just re-deletes the
-    * legacy file.
-    */
-  def migrateLegacy(fs: FileSystem, dir: Path, legacyName: String,
-                    prefix: String, suffix: String)(
-                    parse: Array[Byte] => (Long, Array[Byte])): Unit = {
-    val legacy = new Path(dir, legacyName)
-    if (fs.exists(legacy)) {
-      if (readVersioned(fs, dir, prefix, suffix).isEmpty) {
-        val (id, payload) = parse(readBytes(fs, legacy))
-        writeVersioned(fs, dir, prefix, suffix, id, payload)
-      }
-      fs.delete(legacy, false)
-      ()
     }
   }
 }

@@ -268,25 +268,17 @@ final class StreamIngest(
   private def updateAgg(spec: StreamIngest.AggSpec, batch: DataFrame,
                         prior: Option[DataFrame], state: DataFrame,
                         batchId: Long): Unit = {
-    val applied = appliedAggBatch()
-    if (batchId <= applied) {
-      // A crash between the agg swap and the state swap re-delivers exactly
-      // batchId == applied — that skip is the exactly-once path. A batchId
-      // further back can only mean the Spark streaming checkpoint was reset
-      // against an existing warehouse (batchIds restart at 0): skipping
-      // would silently freeze the aggregate while state keeps advancing, so
-      // fail loudly and point at the re-bootstrap path instead.
-      val margin = StreamIngest.replayMargin(spark)
-      if (applied - batchId > margin)
-        throw new IllegalStateException(
-          s"maintained-aggregate batchId went backwards: got $batchId but " +
-            s"$applied is already applied (more than the replay margin of " +
-            s"$margin). The streaming checkpoint was " +
-            "likely reset against an existing warehouse. Delete " +
-            s"$aggDir to re-bootstrap the aggregate from live state, or " +
-            "restore the original checkpointLocation.")
-      return
-    }
+    // A crash between the agg swap and the state swap re-delivers exactly
+    // batchId == applied — that skip is the exactly-once path. A batchId
+    // further back can only mean the Spark streaming checkpoint was reset
+    // against an existing warehouse (batchIds restart at 0): skipping
+    // would silently freeze the aggregate while state keeps advancing, so
+    // the guard fails loudly and points at the re-bootstrap path instead.
+    if (StateFs.alreadyApplied(spark, batchId, appliedAggBatch(),
+        "maintained-aggregate", "The streaming checkpoint was likely reset " +
+          s"against an existing warehouse. Delete $aggDir to re-bootstrap " +
+          "the aggregate from live state, or restore the original " +
+          "checkpointLocation.")) return
     val ids = batch.select("id").distinct()
     // live (grp, value) rows of the batch's ids; docs without the group
     // field are outside the aggregate (a null join key would never merge)
@@ -355,22 +347,14 @@ final class StreamIngest(
     * would never be counted. One-off bootstrap: recompute the aggregate
     * from the live state ([[IncrementalAgg.recompute]]) and land it with
     * marker batchId -1, so every subsequent micro-batch applies on top.
-    * Runs once (aggDir existing skips it); the staging+atomic-move swap is
-    * the same crash-safe path [[updateAgg]] uses.
+    * Runs once (a live aggregate skips it) and commits through the same
+    * crash-safe [[commitAgg]] path [[updateAgg]] uses.
     */
   private def bootstrapAggIfNeeded(): Unit = maintainAgg.foreach { spec =>
     val aggAbsent =
       if (manifestMode) aggManifest.live().isEmpty else !fs.exists(aggDir)
     if (aggAbsent) existingState().foreach { st =>
-      val agg = IncrementalAgg.recompute(aggRows(spec, st), "grp", "value")
-      if (manifestMode) commitAgg(agg, -1L)
-      else {
-        val staging = new Path(s"$warehouseDir/_agg_staging")
-        deleteRecursively(staging)
-        agg.coalesce(1).write.parquet(new Path(staging, "data").toString)
-        StateFs.writeString(fs, new Path(staging, "batchid"), "-1")
-        StateFs.renameInto(fs, staging, aggDir)
-      }
+      commitAgg(IncrementalAgg.recompute(aggRows(spec, st), "grp", "value"), -1L)
     }
   }
 
@@ -403,7 +387,6 @@ final class StreamIngest(
   private def writeBuckets(state: DataFrame, batchId: Long): Unit =
     if (manifestMode) {
       val live = stateManifest.live()
-      val applied = live.map(_._1).getOrElse(-1L)
       // a REPLAYED batch (at-least-once delivery after a crash between
       // the manifest commit and the stream's offset commit) finds its
       // own version already live: the committed state ALREADY reflects
@@ -412,16 +395,11 @@ final class StreamIngest(
       // re-point the one manifest readers are on for no new content. A
       // batchId further back than the replay margin is a RESET streaming
       // checkpoint whose low ids carry genuinely NEW changes — skipping
-      // those would silently drop data, so fail loudly like the agg.
-      if (batchId <= applied) {
-        if (applied - batchId > StreamIngest.replayMargin(spark))
-          throw new IllegalStateException(
-            s"state batchId went backwards: got $batchId but $applied is " +
-              "already committed. The streaming checkpoint was likely " +
-              s"reset against an existing warehouse. Delete $versRoot to " +
-              "rebuild from the stream, or restore the original " +
-              "checkpointLocation.")
-      } else {
+      // those would silently drop data, so it fails loudly like the agg.
+      if (!StateFs.alreadyApplied(spark, batchId, live.map(_._1).getOrElse(-1L),
+          "state", "The streaming checkpoint was likely reset against an " +
+            s"existing warehouse. Delete $versRoot to rebuild from the " +
+            "stream, or restore the original checkpointLocation.")) {
         // data lands ONCE under a fresh per-batch name — never a name a
         // manifest has referenced — then the versioned manifest names
         // the live buckets: untouched entries carry forward, touched
@@ -666,27 +644,6 @@ object StreamIngest {
     * naming the doc fields the maintained aggregate groups and sums by.
     */
   final case class AggSpec(groupPath: String, valuePath: String)
-
-  /** How far a replayed batchId may legitimately lag the applied marker:
-    * zero — with the synchronous progress tracking [[StreamIngest.start]]
-    * configures, the only legitimate re-delivery is the marker batch
-    * itself (the crash window between the agg swap and the offset
-    * commit), so any batchId strictly below the marker is a reset
-    * checkpoint and must fail loudly rather than silently drop its
-    * delta. A deployment that enables
-    * `spark.sql.streaming.asyncProgressTracking` (which can re-deliver
-    * several batches back whose deltas were already absorbed) must widen
-    * this via the `graft.agg.replayMargin` session conf to its async
-    * checkpointing interval in batches.
-    */
-  val AggReplayMargin: Long = 0L
-
-  /** The effective margin: [[AggReplayMargin]] unless overridden by the
-    * `graft.agg.replayMargin` session conf (see above).
-    */
-  def replayMargin(spark: SparkSession): Long =
-    spark.conf.getOption("graft.agg.replayMargin").map(_.toLong)
-      .getOrElse(AggReplayMargin)
 
   /** Recursive delete over LOCAL java.nio paths (no-op when absent) —
     * only the CLI `--reset` still uses it (its target is the launching

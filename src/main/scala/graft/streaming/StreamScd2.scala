@@ -30,8 +30,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * atomic on every filesystem of interest — an HDFS/POSIX create, and
   * even an object-store PUT of a new key — so there is no torn state
   * and, unlike an overwrite-rename pointer file, no filesystem is
-  * excluded (the round-11 `java.nio` pointer could not live on HDFS at
-  * all; see [[StateFs]] for the full atomicity boundary). The live
+  * excluded (see [[StateFs]] for the full atomicity boundary). The live
   * dimension is the HIGHEST committed marker's `data-` directory.
   * Crash before the marker lands: the replay re-applies onto the
   * previous marker's data — correct; the abandoned directory is swept
@@ -39,8 +38,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * `batchId <= applied` and skips — correct, the data already includes
   * it. A batch id further back than the replay margin means the
   * streaming checkpoint was reset against an existing dimension — fail
-  * loudly rather than silently fork the history (the [[StreamIngest]]
-  * maintained-aggregate rule).
+  * loudly rather than silently fork the history
+  * ([[StateFs.alreadyApplied]], the policy every exactly-once owner shares).
   *
   * Scale shape: identical to batch `applyCdc` — untouched entities pass
   * through the size-gated broadcast anti join and never re-shuffle;
@@ -62,35 +61,6 @@ final class StreamScd2(
   fs.mkdirs(root)
 
   private val CommitPrefix = "_commit-"
-  migrateLegacyPointer()
-
-  /** Pre-r12 dimensions committed via a `_current` pointer FILE whose
-    * content named the live `data-<batchId>` directory. Without this
-    * one-time migration the marker-based `current()` would read the
-    * dimension as EMPTY — `appliedBatch() = -1` passes the backwards
-    * guard, the sweep deletes every data directory, and the next batch
-    * silently rebuilds a forked history from itself: the exact outcome
-    * the guard exists to make loud. Idempotent and crash-safe: the
-    * marker lands first, the pointer deletes after; a crash between the
-    * two re-enters here, finds the marker present, and just re-deletes
-    * the pointer.
-    */
-  private def migrateLegacyPointer(): Unit = {
-    val pointer = new Path(root, "_current")
-    if (fs.exists(pointer)) {
-      val name = StateFs.readString(fs, pointer).trim
-      if (name.startsWith("data-")) {
-        val marker = new Path(root, s"$CommitPrefix${name.stripPrefix("data-").toLong}")
-        if (!fs.exists(marker)) fs.create(marker, false).close()
-      }
-      fs.delete(pointer, false)
-      ()
-    }
-    // a pre-r12 crash could also strand the pointer's staging file; the
-    // sweep only knows data-/_commit- names, so it would persist forever
-    fs.delete(new Path(root, "._current.tmp"), false)
-    ()
-  }
 
   /** The batch id a `data-`/`_commit-` name carries, None for names that
     * are not the protocol's (a manual `data-backup` copy, editor debris)
@@ -145,18 +115,10 @@ final class StreamScd2(
     * tests. The batch must carry `(entityCol, tieCol, tsCol)`.
     */
   def applyBatch(batch: DataFrame, batchId: Long): Unit = {
-    val applied = appliedBatch()
-    if (batchId <= applied) {
-      val margin = StreamIngest.replayMargin(spark)
-      if (applied - batchId > margin)
-        throw new IllegalStateException(
-          s"dimension batchId went backwards: got $batchId but $applied is " +
-            s"already applied (more than the replay margin of $margin). The " +
-            "streaming checkpoint was likely reset against an existing " +
-            s"dimension. Delete $dimDir to rebuild from the stream, or " +
-            "restore the original checkpointLocation.")
-      return
-    }
+    if (StateFs.alreadyApplied(spark, batchId, appliedBatch(), "dimension",
+        "The streaming checkpoint was likely reset against an existing " +
+          s"dimension. Delete $dimDir to rebuild from the stream, or " +
+          "restore the original checkpointLocation.")) return
     // sweep abandoned directories and retired markers (a crashed write,
     // the committed-away previous dimension) BEFORE reading current —
     // never after the commit, when a crash window would leave the live

@@ -87,35 +87,6 @@ class CountMinSpec extends SparkSpec {
     }
   }
 
-  test("a pre-r12 cms.bin migrates into the versioned scheme with state intact") {
-    import graft.streaming.SketchMaintenance
-    val dir = java.nio.file.Files.createTempDirectory("cms-legacy").toString
-    val sm = new SketchMaintenance(dir, "k", depth = 4, width = 64)
-    sm.applyBatch(Seq(7L, 7L, 8L).toDF("k"), 0L)
-    sm.applyBatch(Seq(7L).toDF("k"), 1L)
-    val before = sm.sketch().get.toSeq
-    // rewrite the committed state as the LEGACY single-file layout:
-    // [batchId(8 bytes)][counters...] under the fixed name `cms.bin`
-    val root = java.nio.file.Paths.get(dir)
-    val counters = java.nio.file.Files.readAllBytes(root.resolve("cms-1.bin"))
-    val bb = java.nio.ByteBuffer.allocate(8 + counters.length)
-    bb.putLong(1L); bb.put(counters)
-    java.nio.file.Files.delete(root.resolve("cms-1.bin"))
-    java.nio.file.Files.write(root.resolve("cms.bin"), bb.array())
-    // a fresh instance must read the migrated state — NOT (-1, empty),
-    // which would silently merge the next batch into nothing
-    val sm2 = new SketchMaintenance(dir, "k", depth = 4, width = 64)
-    assert(sm2.sketch().get.toSeq == before, "legacy state must migrate")
-    assert(!java.nio.file.Files.exists(root.resolve("cms.bin")),
-      "the legacy file must retire after migration")
-    // exactly-once semantics survive the migration: the replay skips,
-    // the stream continues
-    sm2.applyBatch(Seq(9L).toDF("k"), 1L)
-    assert(sm2.sketch().get.toSeq == before)
-    sm2.applyBatch(Seq(9L).toDF("k"), 2L)
-    assert(sm2.estimate(9L) >= 1L)
-  }
-
   test("nulls are ignored; an unseen key estimates only collision mass") {
     val df = Seq(Some(1L), None, Some(1L), None).toDF("v")
     val sk = df.agg(CountMinSketchAgg(col("v"), 4, 64).as("sk"))

@@ -40,46 +40,6 @@ class DriftMaintenanceSpec extends SparkSpec {
     assert(new DriftMaintenance(dir, buckets = 64).drift() == batch)
   }
 
-  test("a pre-r12 cells.tsv migrates into the versioned scheme with state intact") {
-    val dir = Files.createTempDirectory("drift-legacy").toString
-    val dm = new DriftMaintenance(dir, buckets = 64)
-    dm.applyBatch(b1, 0L)
-    dm.applyBatch(b2, 1L)
-    val batch = dm.drift()
-    // rewrite as the LEGACY layout: header line "<applied>\t<buckets>"
-    // under the fixed name `cells.tsv` (the new header is buckets alone)
-    val root = java.nio.file.Paths.get(dir)
-    val body = Files.readString(root.resolve("cells-1.tsv"))
-    Files.delete(root.resolve("cells-1.tsv"))
-    Files.writeString(root.resolve("cells.tsv"), "1\t" + body)
-    val dm2 = new DriftMaintenance(dir, buckets = 64)
-    assert(dm2.drift() == batch, "legacy state must migrate")
-    assert(!Files.exists(root.resolve("cells.tsv")))
-    // the bucket-count guard survives the re-headed payload
-    intercept[IllegalStateException] {
-      new DriftMaintenance(dir, buckets = 32).drift()
-    }
-  }
-
-  test("the EARLIEST legacy header (batch id alone, no bucket field) migrates too") {
-    val dir = Files.createTempDirectory("drift-legacy0").toString
-    val dm = new DriftMaintenance(dir, buckets = 64)
-    dm.applyBatch(b1, 0L)
-    dm.applyBatch(b2, 1L)
-    val batch = dm.drift()
-    val root = java.nio.file.Paths.get(dir)
-    // the earliest legacy layout headed the file with the batch id ALONE
-    // (its reader tolerated the absent bucket field) — cells only below
-    val cells = Files.readString(root.resolve("cells-1.tsv"))
-      .split("\n", 2)(1)
-    Files.delete(root.resolve("cells-1.tsv"))
-    Files.writeString(root.resolve("cells.tsv"), "1\n" + cells)
-    val dm2 = new DriftMaintenance(dir, buckets = 64)
-    assert(dm2.drift() == batch,
-      "an id-only legacy header must re-head with this instance's buckets")
-    assert(!Files.exists(root.resolve("cells.tsv")))
-  }
-
   test("rejects unpersistable source values") {
     val dir = Files.createTempDirectory("drift-maint-bad").toString
     val dm = new DriftMaintenance(dir, buckets = 16)

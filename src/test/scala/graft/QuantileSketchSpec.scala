@@ -84,25 +84,6 @@ class QuantileSketchSpec extends SparkSpec {
     assert(back.toArray.toSeq == sk.toArray.toSeq)
   }
 
-  test("a pre-r12 qsketch.bin migrates into the versioned scheme with state intact") {
-    import graft.streaming.QuantileMaintenance
-    val dir = java.nio.file.Files.createTempDirectory("q-legacy").toString
-    val qm = new QuantileMaintenance(dir, "v", k = 64)
-    qm.applyBatch((1 to 2000).map(_.toDouble).toDF("v"), 0L)
-    val before = qm.sketch().get.toArray.toSeq
-    val root = java.nio.file.Paths.get(dir)
-    val payload = java.nio.file.Files.readAllBytes(root.resolve("qsketch-0.bin"))
-    val bb = java.nio.ByteBuffer.allocate(8 + payload.length)
-    bb.putLong(0L); bb.put(payload)
-    java.nio.file.Files.delete(root.resolve("qsketch-0.bin"))
-    java.nio.file.Files.write(root.resolve("qsketch.bin"), bb.array())
-    val qm2 = new QuantileMaintenance(dir, "v", k = 64)
-    assert(qm2.sketch().get.toArray.toSeq == before, "legacy state must migrate")
-    assert(!java.nio.file.Files.exists(root.resolve("qsketch.bin")))
-    qm2.applyBatch((2001 to 3000).map(_.toDouble).toDF("v"), 1L)
-    assert(qm2.sketch().get.n == 3000)
-  }
-
   test("streaming maintenance: exactly-once under replay, restart, reset; bound survives") {
     import graft.streaming.QuantileMaintenance
     val dir = java.nio.file.Files.createTempDirectory("q-maint").toString

@@ -127,49 +127,17 @@ class StreamScd2Spec extends SparkSpec {
       got(12L) == Some(2L) && got(13L) == Some(3L) && got(16L) == None)
   }
 
-  test("a pre-r12 pointer-file dimension migrates instead of being swept") {
-    val dir = Files.createTempDirectory("scd2-legacy").toString
-    // build a live dimension, then rewrite its commit as the LEGACY
-    // `_current` pointer file (the pre-r12 protocol)
-    val s0 = new StreamScd2(spark, dir)
-    s0.applyBatch(b0, 0L)
-    s0.applyBatch(b1, 1L)
-    val expect = canon(s0.dim().get)
-    val root = java.nio.file.Paths.get(dir)
-    Files.delete(root.resolve("_commit-1"))
-    Files.writeString(root.resolve("_current"), "data-1")
-    // a fresh instance must MIGRATE the pointer — not read the dimension
-    // as empty, pass the backwards guard, and sweep the data away
-    val s1 = new StreamScd2(spark, dir)
-    assert(s1.appliedBatch() == 1L, "legacy pointer must migrate to a marker")
-    assert(!Files.exists(root.resolve("_current")), "pointer must be retired")
-    assert(canon(s1.dim().get) == expect)
-    // the stream continues correctly from the migrated state
-    s1.applyBatch(b2, 2L)
-    assert(canon(s1.dim().get) ==
-      canon(Scd2.build(b0.unionByName(b1).unionByName(b2))))
-    // crash window: marker landed, pointer not yet deleted — both present
-    Files.writeString(root.resolve("_current"), "data-2")
-    val s2 = new StreamScd2(spark, dir)
-    assert(s2.appliedBatch() == 2L)
-    assert(!Files.exists(root.resolve("_current")))
-  }
-
-  test("stray non-protocol names are tolerated; a stranded pointer tmp is cleared") {
+  test("stray non-protocol names are tolerated") {
     val dir = Files.createTempDirectory("scd2-stray").toString
     val s0 = new StreamScd2(spark, dir)
     s0.applyBatch(b0, 0L)
     val expect = canon(s0.dim().get)
     val root = java.nio.file.Paths.get(dir)
-    // a manual backup copy and a pre-r12 crash-stranded pointer staging
-    // file: neither name parses as a batch id
+    // a manual backup copy: the name does not parse as a batch id
     Files.createDirectory(root.resolve("data-backup"))
     Files.writeString(root.resolve("data-backup/note"), "manual copy")
-    Files.writeString(root.resolve("._current.tmp"), "data-0")
     val s1 = new StreamScd2(spark, dir)
     assert(s1.appliedBatch() == 0L, "stray names must not crash current()")
-    assert(!Files.exists(root.resolve("._current.tmp")),
-      "the stranded pointer tmp must be cleared (the sweep never will)")
     s1.applyBatch(b1, 1L) // the sweep must skip the unparsable name
     assert(Files.exists(root.resolve("data-backup/note")),
       "the sweep must not delete a non-protocol name")
