@@ -56,14 +56,11 @@ object Bench {
     def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
                 samples: Int = 2): Double = {
       // Drop any cache a query pinned (e.g. LSH signature tables, the
-      // stats-family histogram pins) so no later sample — of this query or
-      // any other — is served warm. clearCache only covers CacheManager
-      // entries; localCheckpoint blocks (iterative ops:
-      // PageRank/HITS/clusters) are RDD-level and need the sweep.
-      def dropState(): Unit = {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      }
+      // stats-family histogram pins) and every localCheckpoint block
+      // (iterative ops: PageRank/HITS/clusters) so no later sample — of
+      // this query or any other — is served warm. Blocking, so one
+      // sample's eviction never overlaps the next sample's timed region.
+      def dropState(): Unit = graft.ops.Caching.releaseAll(spark)
       if (warm) {
         try fn(spark, warmDir).write.mode("overwrite").format("noop").save()
         catch { case _: Throwable => () }

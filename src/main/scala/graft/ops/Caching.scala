@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.storage.StorageLevel
 
@@ -37,4 +37,16 @@ private[graft] object Caching {
     df.queryExecution.analyzed.collect {
       case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers
     }.foreach(_.unpersist(blocking))
+
+  /** Drop every pin the session holds and wait until the blocks are gone:
+    * each persistent RDD (`cache()` buffers, `localCheckpoint` blocks,
+    * [[materialized]] relations) is unpersisted with blocking, then the
+    * `CacheManager` is cleared. The order matters: clearing the cache
+    * first would drop its buffers from `getPersistentRDDs` without
+    * waiting for their eviction.
+    */
+  def releaseAll(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    spark.catalog.clearCache()
+  }
 }

@@ -48,7 +48,8 @@ class CouchChangesSource extends TableProvider with DataSourceRegister {
     new CouchChangesTable(
       Option(properties.get("path")).getOrElse(
         throw new IllegalArgumentException("couch-changes: missing .load(path)")),
-      Option(properties.get("selector")))
+      Option(properties.get("selector")),
+      CouchChangesSource.maxChunksPerTrigger(new CaseInsensitiveStringMap(properties)))
 }
 
 object CouchChangesSource {
@@ -59,9 +60,22 @@ object CouchChangesSource {
     StructField("deleted", BooleanType, nullable = false),
     StructField("doc", StringType),
     StructField("seqNum", LongType)))
+
+  /** The `maxChunksPerTrigger` option: a positive number of chunk files
+    * per micro-batch. Zero or a negative cap would admit no chunk, and the
+    * query would end having read nothing, so those are rejected with the
+    * non-numeric values (as Spark rejects a bad `maxFilesPerTrigger`).
+    */
+  def maxChunksPerTrigger(options: CaseInsensitiveStringMap): Option[Int] =
+    Option(options.get("maxChunksPerTrigger")).map { v =>
+      val n = v.toIntOption.getOrElse(0)
+      require(n > 0, s"couch-changes: maxChunksPerTrigger must be a positive integer, got '$v'")
+      n
+    }
 }
 
-final class CouchChangesTable(path: String, selector: Option[String])
+final class CouchChangesTable(path: String, selector: Option[String],
+                              maxChunksPerTrigger: Option[Int])
     extends Table with SupportsRead {
   // fail fast at planning time, not in a task (reference index.js:202-214
   // validates the selector up front and exits)
@@ -73,7 +87,7 @@ final class CouchChangesTable(path: String, selector: Option[String])
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ChangesScanBuilder(path, selector.orElse(Option(options.get("selector"))),
-      Option(options.get("maxChunksPerTrigger")).map(_.toInt))
+      maxChunksPerTrigger)
 }
 
 final class ChangesScanBuilder(path: String, selector: Option[String],

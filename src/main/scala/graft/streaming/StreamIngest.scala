@@ -84,6 +84,24 @@ final class StreamIngest(
     p
   }
   private def manifestMode = protocol == "manifest"
+
+  /** Number of hash buckets the state table is partitioned into
+    * (`graft.state.buckets` session conf, default 64). A batch only ever
+    * rewrites the buckets that contain a changed id, so merge cost is
+    * O(touched buckets), not O(table) — the property that keeps per-batch
+    * work bounded when the warehouse is 100 TB and a micro-batch is
+    * megabytes. Size so one bucket ≈ a comfortable task read
+    * (table_bytes / buckets ≲ a few hundred MB at target scale). Checked
+    * here, before the constructor reads or writes anything: a zero count
+    * would fail the first batch mid-task (remainder by zero).
+    */
+  private val stateBuckets: Int = {
+    val v = spark.conf.getOption("graft.state.buckets").getOrElse("64")
+    val n = v.toIntOption.getOrElse(0)
+    require(n > 0, s"graft.state.buckets must be a positive integer, got '$v'")
+    n
+  }
+
   private val versRoot = new Path(s"$warehouseDir/_state_v")
   private val aggVersRoot = new Path(s"$warehouseDir/_agg_v")
   private lazy val stateManifest = new StateFs.ManifestDir(fs, versRoot)
@@ -154,18 +172,6 @@ final class StreamIngest(
       .foreachBatch { (batch: DataFrame, batchId: Long) => applyBatch(batch, batchId) }
       .start()
   }
-
-  /** Number of hash buckets the state table is partitioned into. A batch
-    * only ever rewrites the buckets that contain a changed id, so merge
-    * cost is O(touched buckets), not O(table) — the property that keeps
-    * per-batch work bounded when the warehouse is 100 TB and a micro-batch
-    * is megabytes. Size so one bucket ≈ a comfortable task read
-    * (table_bytes / buckets ≲ a few hundred MB at target scale).
-    */
-  // lazy: read in the constructor-body guard, which runs before plain
-  // vals declared here would initialize
-  private lazy val stateBuckets: Int =
-    spark.conf.getOption("graft.state.buckets").map(_.toInt).getOrElse(64)
 
   /** The bucket count the persisted state was written with. Changing
     * `graft.state.buckets` against existing state would hash an update

@@ -18,6 +18,7 @@ object Demo {
       .appName("graft-demo")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -75,7 +76,6 @@ object Demo {
 
     // Flow 6: as-of join — each event tagged with the user's latest order
     import org.apache.spark.sql.functions.{col, unix_micros}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = graft.Queries.tsToNanos(
         spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
       .select(col("event_id"), col("user_id"), col("ts"))

@@ -2,11 +2,14 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Optimization-round measurement aid: dump the FORMATTED physical plan of
-  * every declared query (or a named subset) to one file per query, plus a
-  * one-line-per-query shape summary (exchange / scan / sort / join-strategy
-  * counts) on stdout. Session configs mirror graft.Bench so the plans are
-  * the ones the driver's bench actually executes.
+/** Optimization-round measurement aid and plan auditor: dump the
+  * FORMATTED physical plan of every declared query (or a named subset) to
+  * one file per query, plus a one-line-per-query shape summary on stdout:
+  * exchange / scan / sort / join-strategy counts and the scale properties
+  * we require — filter pushdown to the parquet scan (`pushedFilters`),
+  * top-k as `TakeOrderedAndProject`, no driver-side `CollectLimit`.
+  * Session configs mirror graft.Bench so the plans are the ones the
+  * driver's bench actually executes.
   *
   * Run: `sbt "runMain graft.tools.PlanDump <outDir> [sfDir] [query ...]"`
   */
@@ -43,11 +46,12 @@ object PlanDump {
         s"sorts=${c("\\bSort \\[")} smj=${c("SortMergeJoin")} bhj=${c("BroadcastHashJoin")} " +
         s"bnl=${c("BroadcastNestedLoop")} cartesian=${c("CartesianProduct")} " +
         s"window=${c("\\bWindow\\b")} codegen=${c("WholeStageCodegen")} " +
-        s"reusedExchange=${c("ReusedExchange")} rowscan=${c("Scan ExistingRDD")}")
+        s"reusedExchange=${c("ReusedExchange")} rowscan=${c("Scan ExistingRDD")} " +
+        s"pushedFilters=${c("PushedFilters: \\[[^\\]]")} " +
+        s"takeOrdered=${c("TakeOrderedAndProject")} collectLimit=${c("CollectLimit")}")
       // Drop any cache a query pinned so later plans aren't InMemoryScans
       // of a prior query's pin.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      graft.ops.Caching.releaseAll(spark)
     }
     spark.stop()
   }

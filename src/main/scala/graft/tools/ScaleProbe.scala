@@ -1,5 +1,6 @@
 package graft.tools
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ops.Caching
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale probes (experiment tool only; inputs stay synthetic replicas of
@@ -18,47 +19,96 @@ import org.apache.spark.sql.functions._
   *     never to an all-pairs job; the opt-in `maxBandPopulation` guard
   *     ([[graft.ops.Dedup.minhashCandidates]]) is the escape hatch when a
   *     real corpus plants one. Results → SCALE.md.
+  *   - one mode per planted-skew probe below (`graph` … `funnel`), and
+  *     `all` for every one of them in turn.
+  *   - `prof`, `aqe`, `floor`: per-query measurement aids over
+  *     `SPARK_GRAFT_SF_DIR` (default sf0.1) — a per-stage profile, an AQE
+  *     sub-feature ablation, and the per-query bench floor.
   *
-  * Run: `sbt "runMain graft.tools.ScaleProbe [pairs|linear|all]"`
+  * Every mode runs on one [[Probe]]: each reading is the fastest of its
+  * timed samples after a warm run, on dropped state, and each probe's
+  * session settings end with the probe.
+  *
+  * Run: `sbt "runMain graft.tools.ScaleProbe [mode] [query ...]"`
   */
 object ScaleProbe {
+  private val Sf01 = "/root/testdata/sf0.1"
+  /** 2024-01-01T00:00Z in ns: where every planted bot timeline starts. */
+  private val T0ns = 1704067200000000000L
+  private val NoCoalesce = "spark.sql.adaptive.coalescePartitions.enabled" -> "false"
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
+
+  /** The probes `all` runs, in its order. */
+  private val probes: Seq[(String, Probe => Unit)] = Seq(
+    "linear" -> (linearProbe _), "pairs" -> (pairsProbe _),
+    "graph" -> (graphProbe _), "stats" -> (statsProbe _),
+    "asof" -> (asofProbe _), "intervals" -> (intervalsProbe _),
+    "markpin" -> (markPinProbe _), "sessions" -> (sessionsProbe _),
+    "auto" -> (autoProbe _), "carry" -> (carryProbe _),
+    "guard" -> (guardProbe _), "policy" -> (policyProbe _),
+    "lookup" -> (lookupProbe _), "funnel" -> (funnelProbe _))
+
+  val modes: Seq[String] = probes.map(_._1) ++ Seq("all", "prof", "aqe", "floor")
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("pairs")
+    require(modes.contains(mode),
+      s"unknown mode '$mode'; usage: ScaleProbe [${modes.mkString("|")}] [query ...]")
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions","32")
       .config("spark.sql.adaptive.enabled","true")
       .config("spark.ui.enabled","false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    if (mode == "linear" || mode == "all") linearProbe(spark)
-    if (mode == "pairs" || mode == "all") pairsProbe(spark)
-    if (mode == "graph" || mode == "all") graphProbe(spark)
-    if (mode == "stats" || mode == "all") statsProbe(spark)
-    if (mode == "asof" || mode == "all") asofProbe(spark)
-    if (mode == "intervals" || mode == "all") intervalsProbe(spark)
-    if (mode == "markpin" || mode == "all") markPinProbe(spark)
-    if (mode == "sessions" || mode == "all") sessionsProbe(spark)
-    if (mode == "auto" || mode == "all") autoProbe(spark)
-    if (mode == "carry" || mode == "all") carryProbe(spark)
-    if (mode == "guard" || mode == "all") guardProbe(spark)
-    if (mode == "policy" || mode == "all") policyProbe(spark)
-    if (mode == "lookup" || mode == "all") lookupProbe(spark)
-    if (mode == "funnel" || mode == "all") funnelProbe(spark)
+    val p = new Probe(spark)
+    mode match {
+      case "all"   => probes.foreach { case (_, probe) => probe(p) }
+      case "prof"  => profProbe(p, args.toSeq.drop(1))
+      case "aqe"   => aqeProbe(p, args.toSeq.drop(1))
+      case "floor" => floorProbe(p)
+      case _       => probes.toMap.apply(mode)(p)
+    }
+    p.close()
     spark.stop()
   }
 
-  /** Max single-task duration across every job run inside `body`. */
-  private final class MaxTaskListener extends org.apache.spark.scheduler.SparkListener {
-    val maxMillis = new java.util.concurrent.atomic.AtomicLong(0)
-    override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val d = t.taskInfo.duration
-      var cur = maxMillis.get()
-      while (d > cur && !maxMillis.compareAndSet(cur, d)) cur = maxMillis.get()
-    }
+  private def noop(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
+
+  private def fingerprint(df: DataFrame, e: Column): Long =
+    df.agg(sum(e)).collect()(0).getLong(0)
+
+  /** The sf0.1 events replicated 10×, replica i re-keyed by i·10⁸ on
+    * `event_id` and i·10⁶ on `user_id`, with `ts` in ns and `extra`
+    * columns carried along.
+    */
+  private def events10(spark: SparkSession, extra: String*): DataFrame = {
+    val base = graft.Queries.tsToNanos(spark.read.parquet(s"$Sf01/events.parquet"))
+    (0 until 10).map(i =>
+      base.select(Seq(
+        (col("event_id") + lit(i.toLong * 100000000L)).as("event_id"),
+        (col("user_id") + lit(i.toLong * 1000000L)).as("user_id"),
+        col("ts")) ++ extra.map(col): _*))
+      .reduce(_ unionByName _)
   }
 
-  private def pairsProbe(spark: SparkSession): Unit = {
-    val src = "/root/testdata/sf0.1"
+  /** The planted bot: `n` events of ONE user (4242424242), event ids from
+    * `idBase` up, timestamps `ts` (over the range's `id`), plus `extra`
+    * columns.
+    */
+  private def bot(spark: SparkSession, n: Long, ts: Column, extra: Seq[Column] = Nil,
+                  idBase: Long = 900000000L): DataFrame =
+    spark.range(n).select(Seq(
+      (col("id") + idBase).as("event_id"),
+      lit(4242424242L).as("user_id"),
+      ts.as("ts")) ++ extra: _*)
+
+  /** view/click/purchase in turn, so every funnel stage sees the bot. */
+  private def cycledType: Column =
+    expr("element_at(array('view','click','purchase'), cast(id % 3 as int) + 1)")
+      .as("event_type")
+
+  private def pairsProbe(p: Probe): Unit = {
+    val spark = p.spark
+    val src = Sf01
     val out = "/tmp/graft-scale"
 
     // --- build the 10×+hot corpus (materialized so scans are realistic) ---
@@ -114,8 +164,6 @@ object ScaleProbe {
       .write.mode("overwrite").parquet(s"$out/customer.parquet")
 
     // --- probe the scored pair-stage queries at 1× and 10×+hot ---
-    val listener = new MaxTaskListener
-    spark.sparkContext.addSparkListener(listener)
     val names = Seq("q_dedup_minhash_pairs", "q_dedup_simhash_pairs",
       "q_dedup_embed_pairs", "q_dedup_clusters",
       // round-6 pair stages: intra-cluster cosine (hot sign/centroid
@@ -140,49 +188,17 @@ object ScaleProbe {
       // candidate work must track DISTINCT content — the full index side
       // (irreducible for exact containment) is the edge under test
       "q_containment")
-    try {
-      // the listener bus is asynchronous: task-end events can trail the
-      // job's return, so settle (quiesce) before resetting and reading
-      // the max — otherwise warm-up stragglers leak into the timed
-      // reading or the timed run's tail is missed
-      def settle(): Unit = {
-        var last = -1L
-        var same = 0
-        while (same < 2) {
-          Thread.sleep(100)
-          val cur = listener.maxMillis.get()
-          if (cur == last) same += 1 else { same = 0; last = cur }
-        }
-      }
-      val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY").map(_.split(",").toSet)
-      for (name <- names if only.forall(_.contains(name));
-           (label, dir) <- Seq("1x" -> src, "10x+hot" -> out)) {
-        val fn = graft.SparkEntry.queries(name)
-        fn(spark, dir).write.mode("overwrite").format("noop").save() // warm
-        // drop the warm run's pinned caches (signature/docSet tables):
-        // the timed run must rebuild them itself — same contract as the
-        // bench — and earlier queries' leftovers must not squeeze it
-        // into eviction-and-recompute stragglers
-        // best-of-2 timed runs (same defense as Bench): the host injects
-        // sporadic multi-second stalls uncorrelated with the query, and a
-        // single-shot probe row can absorb one — keep the faster run's
-        // (wall, maxTask) pair so the reading reflects the plan, not the
-        // stall
-        val (wall, maxTask) = (1 to 2).map { _ =>
-          spark.catalog.clearCache()
-          settle()
-          listener.maxMillis.set(0)
-          val t0 = System.nanoTime()
-          fn(spark, dir).write.mode("overwrite").format("noop").save()
-          val w = (System.nanoTime() - t0) / 1e9
-          settle()
-          (w, listener.maxMillis.get() / 1e3)
-        }.minBy(_._1)
-        val rows = fn(spark, dir).count()
-        spark.catalog.clearCache()
-        println(f"PAIRS $name%-24s $label%-8s wall=$wall%6.2fs maxTask=$maxTask%6.2fs rows=$rows")
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY").map(_.split(",").toSet)
+    for (name <- names if only.forall(_.contains(name));
+         (label, dir) <- Seq("1x" -> src, "10x+hot" -> out)) {
+      val fn = graft.SparkEntry.queries(name)
+      // every timed run rebuilds its own pinned caches (signature/docSet
+      // tables) — same contract as the bench
+      val (wall, maxTask) = p.measure()(noop(fn(spark, dir)))
+      val rows = fn(spark, dir).count()
+      spark.catalog.clearCache()
+      println(f"PAIRS $name%-24s $label%-8s wall=$wall%6.2fs maxTask=$maxTask%6.2fs rows=$rows")
+    }
   }
 
   /** The LSH population guard on the pairs corpus (requires the `pairs`
@@ -195,51 +211,30 @@ object ScaleProbe {
     * — identical docs verify at J = 1.0 in the unguarded run, so the
     * guard's signature-equality core covers exactly the same pairs.
     */
-  private def guardProbe(spark: SparkSession): Unit = {
+  private def guardProbe(p: Probe): Unit = {
+    val spark = p.spark
     val out = "/tmp/graft-scale"
-    if (!new java.io.File(s"$out/documents.parquet").exists()) pairsProbe(spark)
+    if (!new java.io.File(s"$out/documents.parquet").exists()) pairsProbe(p)
     val docs = spark.read.parquet(s"$out/documents.parquet")
-    val listener = new MaxTaskListener
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def settle(): Unit = {
-        var last = -1L; var same = 0
-        while (same < 2) {
-          Thread.sleep(100)
-          val cur = listener.maxMillis.get()
-          if (cur == last) same += 1 else { same = 0; last = cur }
-        }
+    var cells = Map.empty[String, Map[(String, String), Long]]
+    for ((label, cap) <- Seq("unguarded" -> Long.MaxValue, "cap=500" -> 500L)) {
+      def run() = graft.ops.Dedup
+        .crossSourceMatrix(docs, threshold = 0.5, maxBandPopulation = cap)
+      val (wall, maxTask) = p.measure()(noop(run()))
+      cells += label -> run().collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      spark.catalog.clearCache()
+      println(f"GUARD dup_matrix $label%-10s wall=$wall%6.2fs maxTask=$maxTask%6.2fs cells=${cells(label).size}")
+    }
+    val eq = cells("unguarded") == cells("cap=500")
+    println(s"GUARD cells_equal=$eq")
+    if (!eq) {
+      val a = cells("unguarded"); val b = cells("cap=500")
+      (a.keySet ++ b.keySet).toSeq.sorted.take(10).foreach { k =>
+        if (a.get(k) != b.get(k))
+          println(s"GUARD diff $k unguarded=${a.get(k)} guarded=${b.get(k)}")
       }
-      var cells = Map.empty[String, Map[(String, String), Long]]
-      for ((label, cap) <- Seq("unguarded" -> Long.MaxValue, "cap=500" -> 500L)) {
-        def run() = graft.ops.Dedup
-          .crossSourceMatrix(docs, threshold = 0.5, maxBandPopulation = cap)
-        run().write.mode("overwrite").format("noop").save() // warm
-        val (wall, maxTask) = (1 to 2).map { _ =>
-          spark.catalog.clearCache()
-          settle()
-          listener.maxMillis.set(0)
-          val t0 = System.nanoTime()
-          run().write.mode("overwrite").format("noop").save()
-          val w = (System.nanoTime() - t0) / 1e9
-          settle()
-          (w, listener.maxMillis.get() / 1e3)
-        }.minBy(_._1)
-        cells += label -> run().collect()
-          .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-        spark.catalog.clearCache()
-        println(f"GUARD dup_matrix $label%-10s wall=$wall%6.2fs maxTask=$maxTask%6.2fs cells=${cells(label).size}")
-      }
-      val eq = cells("unguarded") == cells("cap=500")
-      println(s"GUARD cells_equal=$eq")
-      if (!eq) {
-        val a = cells("unguarded"); val b = cells("cap=500")
-        (a.keySet ++ b.keySet).toSeq.sorted.take(10).foreach { k =>
-          if (a.get(k) != b.get(k))
-            println(s"GUARD diff $k unguarded=${a.get(k)} guarded=${b.get(k)}")
-        }
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   /** PageRank at 10× edges with a planted skewed in-degree: one node
@@ -248,11 +243,11 @@ object ScaleProbe {
     * to one row per map partition pre-shuffle — visible as a bounded
     * max-task, never a single task absorbing 100k rows per round.
     */
-  private def graphProbe(spark: SparkSession): Unit = {
-    val d = "/root/testdata/sf0.1"
-    val orders = spark.read.parquet(s"$d/orders.parquet")
+  private def graphProbe(p: Probe): Unit = {
+    val spark = p.spark
+    val orders = spark.read.parquet(s"$Sf01/orders.parquet")
       .select("o_orderkey", "o_custkey")
-    val li = spark.read.parquet(s"$d/lineitem.parquet")
+    val li = spark.read.parquet(s"$Sf01/lineitem.parquet")
       .select("l_orderkey", "l_suppkey")
     val e1 = orders.join(li, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("src"),
@@ -262,63 +257,30 @@ object ScaleProbe {
       .reduce(_ unionByName _)
     val hot = spark.range(100000).select(
       (col("id") + 5000000000L).as("src"), lit(9999999999L).as("dst"))
-    val listener = new MaxTaskListener
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def settle(): Unit = {
-        var last = -1L; var same = 0
-        while (same < 2) {
-          Thread.sleep(100)
-          val cur = listener.maxMillis.get()
-          if (cur == last) same += 1 else { same = 0; last = cur }
-        }
-      }
-      for ((label, edges) <- Seq("1x" -> e1, "10x+hot" -> e10.unionByName(hot))) {
-        def run() = graft.ops.Graph.pageRankPpm(edges, iters = 3)
-          .write.mode("overwrite").format("noop").save()
-        run(); settle() // warm
-        spark.catalog.clearCache()
-        listener.maxMillis.set(0)
-        val t0 = System.nanoTime()
-        run()
-        val wall = (System.nanoTime() - t0) / 1e9
-        settle()
-        val maxTask = listener.maxMillis.get() / 1e3
-        spark.catalog.clearCache()
-        println(f"GRAPH pagerank $label%-8s wall=$wall%6.2fs maxTask=$maxTask%6.2fs")
-      }
-      // deep power iteration on the hot corpus: the eager checkpoint
-      // policy (auto past 4 rounds) must hold pinned RDDs FLAT — the
-      // count after 20 rounds equals the count after 6 — while wall
-      // grows linearly in rounds (no lineage blowup, no analyzer drift)
-      def sweepRdds(): Unit = {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      }
-      val deepEdges = e10.unionByName(hot)
-      for (iters <- Seq(6, 20)) {
-        sweepRdds()
-        val t0 = System.nanoTime()
-        graft.ops.Graph.pageRankPpm(deepEdges, iters = iters)
-          .write.mode("overwrite").format("noop").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        val pins = spark.sparkContext.getPersistentRDDs.size
-        sweepRdds()
-        println(f"GRAPH pagerank-deep iters=$iters%-3d 10x+hot wall=$wall%6.2fs pinnedRDDs=$pins")
-      }
-      // HITS at depth: same flat-pins contract, both directions' rounds
-      // released as their last readers run
-      for (iters <- Seq(6, 15)) {
-        sweepRdds()
-        val t0 = System.nanoTime()
-        graft.ops.Graph.hitsPpm(deepEdges, iters = iters)
-          .write.mode("overwrite").format("noop").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        val pins = spark.sparkContext.getPersistentRDDs.size
-        sweepRdds()
-        println(f"GRAPH hits-deep     iters=$iters%-3d 10x+hot wall=$wall%6.2fs pinnedRDDs=$pins")
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    for ((label, edges) <- Seq("1x" -> e1, "10x+hot" -> e10.unionByName(hot))) {
+      val (wall, maxTask) = p.measure(samples = 1)(
+        noop(graft.ops.Graph.pageRankPpm(edges, iters = 3)))
+      spark.catalog.clearCache()
+      println(f"GRAPH pagerank $label%-8s wall=$wall%6.2fs maxTask=$maxTask%6.2fs")
+    }
+    // deep power iteration on the hot corpus: the eager checkpoint
+    // policy (auto past 4 rounds) must hold pinned RDDs FLAT — the
+    // count after 20 rounds equals the count after 6 — while wall
+    // grows linearly in rounds (no lineage blowup, no analyzer drift).
+    // HITS at depth: same flat-pins contract, both directions' rounds
+    // released as their last readers run
+    val deepEdges = e10.unionByName(hot)
+    def deep(label: String, iters: Int)(op: => DataFrame): Unit = {
+      Caching.releaseAll(spark)
+      val wall = p.wall(noop(op))
+      val pins = spark.sparkContext.getPersistentRDDs.size
+      Caching.releaseAll(spark)
+      println(f"GRAPH $label%-13s iters=$iters%-3d 10x+hot wall=$wall%6.2fs pinnedRDDs=$pins")
+    }
+    for (iters <- Seq(6, 20))
+      deep("pagerank-deep", iters)(graft.ops.Graph.pageRankPpm(deepEdges, iters = iters))
+    for (iters <- Seq(6, 15))
+      deep("hits-deep", iters)(graft.ops.Graph.hitsPpm(deepEdges, iters = iters))
   }
 
   /** As-of join under a planted hot key: one user holding a third of the
@@ -327,34 +289,29 @@ object ScaleProbe {
     * per-key as-of. Probes both forms: `timeShards = 1` (the legacy
     * single-window plan) vs the default time-sharded plan, same inputs.
     */
-  private def asofProbe(spark: SparkSession): Unit = {
-    val d = "/root/testdata/sf0.1"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private def asofProbe(p: Probe): Unit =
     // isolate the skew behavior: at this corpus size AQE coalesces the
     // whole shuffle into a few fat partitions (rows are cheap in BYTES
     // but the window sort is CPU-bound), which hides the per-(key,shard)
     // spread this probe exists to measure — a real 100 TB shuffle sits
     // far above the advisory size and never coalesces across it
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    p.withConf(NanosAsLong, NoCoalesce) {
+    val spark = p.spark
     def rep(name: String, idCol: String, n: Int): DataFrame = {
-      val base = graft.Queries.tsToNanos(spark.read.parquet(s"$d/$name.parquet"))
+      val base = graft.Queries.tsToNanos(spark.read.parquet(s"$Sf01/$name.parquet"))
       (0 until n).map(i =>
         base.withColumn(idCol, col(idCol) + lit(i.toLong * 100000000L)))
         .reduce(_ unionByName _)
     }
     val ev10 = rep("events", "event_id", 10)
     val or10 = rep("orders", "o_orderkey", 10)
-    // hot key: 500k events + 100k orders on ONE user, timestamps spread
+    // hot key: 4M events + 400k orders on ONE user, timestamps spread
     // over the fixture's date range (ns since epoch, 2024-01-01 + i sec)
-    val t0ns = 1704067200000000000L
-    val hotEv = spark.range(4000000).select(
-      (col("id") + 900000000L).as("event_id"),
-      lit(4242424242L).as("user_id"),
-      (lit(t0ns) + col("id") * 5000000000L).as("ts"))
+    val hotEv = bot(spark, 4000000, lit(T0ns) + col("id") * 5000000000L)
     val hotOrd = spark.range(400000).select(
       (col("id") + 900000000L).as("o_orderkey"),
       lit(4242424242L).as("o_custkey"),
-      (lit(t0ns) + col("id") * 25000000000L).as("ots"),
+      (lit(T0ns) + col("id") * 25000000000L).as("ots"),
       (col("id") % 1000).cast("double").as("o_totalprice"))
     // materialize both sides (same policy as pairsProbe): the sharded
     // plan legitimately scans its input 3x, and probing it against an
@@ -373,40 +330,36 @@ object ScaleProbe {
       .write.mode("overwrite").parquet(s"$out/right.parquet")
     val left = spark.read.parquet(s"$out/left.parquet")
     val right = spark.read.parquet(s"$out/right.parquet")
-    val listener = new MaxTaskListener
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def settle(): Unit = {
-        var last = -1L; var same = 0
-        while (same < 2) {
-          Thread.sleep(100)
-          val cur = listener.maxMillis.get()
-          if (cur == last) same += 1 else { same = 0; last = cur }
-        }
-      }
-      for ((label, shards, thr) <- Seq(
-             ("1-shard(window)", 1, 0L), ("32-shard", 32, 0L),
-             ("auto(32,thr=1M)", 32, 1000000L))) {
-        def run() = graft.ops.AsOfJoin.asOf(left, right, "user_id", "o_custkey",
+    for ((label, shards, thr) <- Seq(
+           ("1-shard(window)", 1, 0L), ("32-shard", 32, 0L),
+           ("auto(32,thr=1M)", 32, 1000000L))) {
+      val (wall, maxTask) = p.measure()(noop(
+        graft.ops.AsOfJoin.asOf(left, right, "user_id", "o_custkey",
           "ts", "ots", Seq("o_orderkey", "o_totalprice"),
           tieBreak = "o_orderkey", joinType = "left", timeShards = shards,
-          autoThreshold = thr)
-          .write.mode("overwrite").format("noop").save()
-        run() // warm
-        val (wall, maxTask) = (1 to 2).map { _ =>
-          spark.catalog.clearCache()
-          settle()
-          listener.maxMillis.set(0)
-          val t0 = System.nanoTime()
-          run()
-          val w = (System.nanoTime() - t0) / 1e9
-          settle()
-          (w, listener.maxMillis.get() / 1e3)
-        }.minBy(_._1)
-        println(f"ASOF $label%-16s wall=$wall%6.2fs maxTask=$maxTask%6.2fs")
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+          autoThreshold = thr)))
+      println(f"ASOF $label%-16s wall=$wall%6.2fs maxTask=$maxTask%6.2fs")
+    }
   }
+
+  /** The intervals plant under `out`: 10× events plus a 4M-event bot at
+    * 5 s spacing, each event a 30-minute `[s, e]` lease.
+    */
+  private def leases(spark: SparkSession, out: String): DataFrame = {
+    events10(spark).unionByName(bot(spark, 4000000, lit(T0ns) + col("id") * 5000000000L))
+      .select(col("user_id"), col("event_id"), col("ts").as("s"),
+        (col("ts") + 1800000000000L).as("e"))
+      .repartition(32)
+      .write.mode("overwrite").parquet(s"$out/iv.parquet")
+    spark.read.parquet(s"$out/iv.parquet")
+  }
+
+  private def leaseFp(islands: DataFrame): Long =
+    fingerprint(islands, expr("island + s % 1000000007 + e % 1000000007 + n_rows"))
+
+  private def sessionFp(sessions: DataFrame): Long =
+    fingerprint(sessions, expr("session_id + n_events + session_start % 1000000007" +
+      " + session_end % 1000000007"))
 
   /** Interval coalescing under a planted bot key: one user holding 4M
     * 30-minute leases across the timeline — the shape where the default
@@ -415,61 +368,14 @@ object ScaleProbe {
     * `timeShards` 1 vs 32 (wall + max single task), plus an output-sum
     * fingerprint proving the two forms agree.
     */
-  private def intervalsProbe(spark: SparkSession): Unit = {
-    val d = "/root/testdata/sf0.1"
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    val base = graft.Queries.tsToNanos(spark.read.parquet(s"$d/events.parquet"))
-    val ev10 = (0 until 10).map(i =>
-      base.select(
-        (col("event_id") + lit(i.toLong * 100000000L)).as("event_id"),
-        (col("user_id") + lit(i.toLong * 1000000L)).as("user_id"),
-        col("ts")))
-      .reduce(_ unionByName _)
-    val t0ns = 1704067200000000000L
-    val hot = spark.range(4000000).select(
-      (col("id") + 900000000L).as("event_id"),
-      lit(4242424242L).as("user_id"),
-      (lit(t0ns) + col("id") * 5000000000L).as("ts"))
-    val out = "/tmp/graft-scale-intervals"
-    ev10.unionByName(hot)
-      .select(col("user_id"), col("event_id"), col("ts").as("s"),
-        (col("ts") + 1800000000000L).as("e"))
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$out/iv.parquet")
-    val iv = spark.read.parquet(s"$out/iv.parquet")
-    val listener = new MaxTaskListener
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def settle(): Unit = {
-        var last = -1L; var same = 0
-        while (same < 2) {
-          Thread.sleep(100)
-          val cur = listener.maxMillis.get()
-          if (cur == last) same += 1 else { same = 0; last = cur }
-        }
-      }
-      for ((label, shards) <- Seq("1-shard(window)" -> 1, "32-shard" -> 32)) {
-        def run() = graft.ops.Intervals
-          .coalesce(iv, "user_id", "s", "e", "event_id", timeShards = shards)
-          .write.mode("overwrite").format("noop").save()
-        run() // warm
-        val (wall, maxTask) = (1 to 2).map { _ =>
-          spark.catalog.clearCache()
-          settle()
-          listener.maxMillis.set(0)
-          val t0 = System.nanoTime()
-          run()
-          val w = (System.nanoTime() - t0) / 1e9
-          settle()
-          (w, listener.maxMillis.get() / 1e3)
-        }.minBy(_._1)
-        val fp = graft.ops.Intervals
-          .coalesce(iv, "user_id", "s", "e", "event_id", timeShards = shards)
-          .agg(sum(expr("island + s % 1000000007 + e % 1000000007 + n_rows")).as("fp"))
-          .collect()(0).getLong(0)
-        println(f"INTERVALS $label%-16s wall=$wall%6.2fs maxTask=$maxTask%6.2fs fp=$fp")
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+  private def intervalsProbe(p: Probe): Unit = p.withConf(NoCoalesce) {
+    val iv = leases(p.spark, "/tmp/graft-scale-intervals")
+    for ((label, shards) <- Seq("1-shard(window)" -> 1, "32-shard" -> 32)) {
+      def run() = graft.ops.Intervals
+        .coalesce(iv, "user_id", "s", "e", "event_id", timeShards = shards)
+      val (wall, maxTask) = p.measure()(noop(run()))
+      println(f"INTERVALS $label%-16s wall=$wall%6.2fs maxTask=$maxTask%6.2fs fp=${leaseFp(run())}")
+    }
   }
 
   /** Pin-vs-recompute A/B for the sharded coalesce's `marked` timeline
@@ -480,68 +386,14 @@ object ScaleProbe {
     * Reports wall, max single task, and the result fingerprint for both
     * sides so the boundary lands in SCALE.md.
     */
-  private def markPinProbe(spark: SparkSession): Unit = {
-    val d = "/root/testdata/sf0.1"
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val priorCoalesce = spark.conf.getOption(coalesceKey)
-    spark.conf.set(coalesceKey, "false")
-    val base = graft.Queries.tsToNanos(spark.read.parquet(s"$d/events.parquet"))
-    val ev10 = (0 until 10).map(i =>
-      base.select(
-        (col("event_id") + lit(i.toLong * 100000000L)).as("event_id"),
-        (col("user_id") + lit(i.toLong * 1000000L)).as("user_id"),
-        col("ts")))
-      .reduce(_ unionByName _)
-    val t0ns = 1704067200000000000L
-    val hot = spark.range(4000000).select(
-      (col("id") + 900000000L).as("event_id"),
-      lit(4242424242L).as("user_id"),
-      (lit(t0ns) + col("id") * 5000000000L).as("ts"))
-    val out = "/tmp/graft-scale-markpin"
-    ev10.unionByName(hot)
-      .select(col("user_id"), col("event_id"), col("ts").as("s"),
-        (col("ts") + 1800000000000L).as("e"))
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$out/iv.parquet")
-    val iv = spark.read.parquet(s"$out/iv.parquet")
-    val listener = new MaxTaskListener
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def settle(): Unit = {
-        var last = -1L; var same = 0
-        while (same < 2) {
-          Thread.sleep(100)
-          val cur = listener.maxMillis.get()
-          if (cur == last) same += 1 else { same = 0; last = cur }
-        }
-      }
-      for (pin <- Seq(true, false)) {
-        def run() = graft.ops.Intervals
-          .coalesce(iv, "user_id", "s", "e", "event_id", 32, 0L, pinMarked = pin)
-          .write.mode("overwrite").format("noop").save()
-        spark.catalog.clearCache()
-        run() // warm
-        val (wall, maxTask) = (1 to 2).map { _ =>
-          spark.catalog.clearCache()
-          settle()
-          listener.maxMillis.set(0)
-          val t0 = System.nanoTime()
-          run()
-          val w = (System.nanoTime() - t0) / 1e9
-          settle()
-          (w, listener.maxMillis.get() / 1e3)
-        }.minBy(_._1)
-        spark.catalog.clearCache()
-        val fp = graft.ops.Intervals
-          .coalesce(iv, "user_id", "s", "e", "event_id", 32, 0L, pinMarked = pin)
-          .agg(sum(expr("island + s % 1000000007 + e % 1000000007 + n_rows")).as("fp"))
-          .collect()(0).getLong(0)
-        println(f"MARKPIN pin=$pin%-5s wall=$wall%6.2fs maxTask=$maxTask%6.2fs fp=$fp")
-      }
-    } finally {
-      // the later probes of mode=all run with the session's own setting
-      priorCoalesce.fold(spark.conf.unset(coalesceKey))(spark.conf.set(coalesceKey, _))
-      spark.sparkContext.removeSparkListener(listener)
+  private def markPinProbe(p: Probe): Unit = p.withConf(NoCoalesce) {
+    val iv = leases(p.spark, "/tmp/graft-scale-markpin")
+    for (pin <- Seq(true, false)) {
+      def run() = graft.ops.Intervals
+        .coalesce(iv, "user_id", "s", "e", "event_id", 32, 0L, pinMarked = pin)
+      val (wall, maxTask) = p.measure()(noop(run()))
+      p.spark.catalog.clearCache()
+      println(f"MARKPIN pin=$pin%-5s wall=$wall%6.2fs maxTask=$maxTask%6.2fs fp=${leaseFp(run())}")
     }
   }
 
@@ -554,67 +406,26 @@ object ScaleProbe {
     * scored query runs, at `timeShards` 1 vs 32, with an output-sum
     * fingerprint proving the sharded form is bit-identical.
     */
-  private def sessionsProbe(spark: SparkSession): Unit = {
-    val d = "/root/testdata/sf0.1"
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    val base = graft.Queries.tsToNanos(spark.read.parquet(s"$d/events.parquet"))
-    val ev10 = (0 until 10).map(i =>
-      base.select(
-        (col("event_id") + lit(i.toLong * 100000000L)).as("event_id"),
-        (col("user_id") + lit(i.toLong * 1000000L)).as("user_id"),
-        col("ts")))
-      .reduce(_ unionByName _)
-    val t0ns = 1704067200000000000L
+  private def sessionsProbe(p: Probe): Unit = p.withConf(NoCoalesce) {
+    val spark = p.spark
     // 4M events, 5 s apart: every ~360 consecutive events form one
     // session (30-min gap never fires within the run), ~11k sessions —
     // the realistic always-on bot, not a single giant session
-    val hot = spark.range(4000000).select(
-      (col("id") + 900000000L).as("event_id"),
-      lit(4242424242L).as("user_id"),
+    val hot = bot(spark, 4000000,
       // 5 s spacing plus a >30-min silence every 360 events so sessions
       // actually split inside the bot timeline
-      expr(s"$t0ns + id * 5000000000 + (id div 360) * 2000000000000")
-        .as("ts"))
+      expr(s"$T0ns + id * 5000000000 + (id div 360) * 2000000000000"))
     val out = "/tmp/graft-scale-sessions"
-    ev10.unionByName(hot).repartition(32)
+    events10(spark).unionByName(hot).repartition(32)
       .write.mode("overwrite").parquet(s"$out/events.parquet")
     val ev = spark.read.parquet(s"$out/events.parquet")
-    val listener = new MaxTaskListener
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def settle(): Unit = {
-        var last = -1L; var same = 0
-        while (same < 2) {
-          Thread.sleep(100)
-          val cur = listener.maxMillis.get()
-          if (cur == last) same += 1 else { same = 0; last = cur }
-        }
-      }
-      for ((label, shards) <- Seq("1-shard(window)" -> 1, "32-shard" -> 32)) {
-        def run() = graft.ops.Sessionize
-          .viaIntervals(ev, "user_id", "ts", "event_id",
-            gap = 1800000000000L, timeShards = shards)
-          .write.mode("overwrite").format("noop").save()
-        run() // warm
-        val (wall, maxTask) = (1 to 2).map { _ =>
-          spark.catalog.clearCache()
-          settle()
-          listener.maxMillis.set(0)
-          val t0 = System.nanoTime()
-          run()
-          val w = (System.nanoTime() - t0) / 1e9
-          settle()
-          (w, listener.maxMillis.get() / 1e3)
-        }.minBy(_._1)
-        val fp = graft.ops.Sessionize
-          .viaIntervals(ev, "user_id", "ts", "event_id",
-            gap = 1800000000000L, timeShards = shards)
-          .agg(sum(expr("session_id + n_events + session_start % 1000000007" +
-            " + session_end % 1000000007")).as("fp"))
-          .collect()(0).getLong(0)
-        println(f"SESSIONS $label%-16s wall=$wall%6.2fs maxTask=$maxTask%6.2fs fp=$fp")
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    for ((label, shards) <- Seq("1-shard(window)" -> 1, "32-shard" -> 32)) {
+      def run() = graft.ops.Sessionize
+        .viaIntervals(ev, "user_id", "ts", "event_id",
+          gap = 1800000000000L, timeShards = shards)
+      val (wall, maxTask) = p.measure()(noop(run()))
+      println(f"SESSIONS $label%-16s wall=$wall%6.2fs maxTask=$maxTask%6.2fs fp=${sessionFp(run())}")
+    }
   }
 
   /** The data-driven hybrid (`autoThreshold`, [[graft.ops.TimeShard]])
@@ -630,67 +441,28 @@ object ScaleProbe {
     *     manual-32-shard level WITHOUT anyone opting in, and the output
     *     fingerprint must equal the single-window form's.
     */
-  private def autoProbe(spark: SparkSession): Unit = {
-    val d = "/root/testdata/sf0.1"
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    val base = graft.Queries.tsToNanos(spark.read.parquet(s"$d/events.parquet"))
-    val ev10 = (0 until 10).map(i =>
-      base.select(
-        (col("event_id") + lit(i.toLong * 100000000L)).as("event_id"),
-        (col("user_id") + lit(i.toLong * 1000000L)).as("user_id"),
-        col("ts")))
-      .reduce(_ unionByName _)
-    val t0ns = 1704067200000000000L
-    val hot = spark.range(4000000).select(
-      (col("id") + 900000000L).as("event_id"),
-      lit(4242424242L).as("user_id"),
-      expr(s"$t0ns + id * 5000000000 + (id div 360) * 2000000000000").as("ts"))
+  private def autoProbe(p: Probe): Unit = p.withConf(NoCoalesce) {
+    val spark = p.spark
+    val ev10 = events10(spark)
+    val hot = bot(spark, 4000000,
+      expr(s"$T0ns + id * 5000000000 + (id div 360) * 2000000000000"))
     val out = "/tmp/graft-scale-auto"
     ev10.repartition(32)
       .write.mode("overwrite").parquet(s"$out/uniform/events.parquet")
     ev10.unionByName(hot).repartition(32)
       .write.mode("overwrite").parquet(s"$out/bot/events.parquet")
-    val listener = new MaxTaskListener
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def settle(): Unit = {
-        var last = -1L; var same = 0
-        while (same < 2) {
-          Thread.sleep(100)
-          val cur = listener.maxMillis.get()
-          if (cur == last) same += 1 else { same = 0; last = cur }
-        }
-      }
-      for (corpus <- Seq("uniform", "bot");
-           (label, shards, thr) <- Seq(
-             ("1-shard(window)", 1, 0L),
-             ("32-shard(manual)", 32, 0L),
-             ("auto(32,thr=1M)", 32, 1000000L))) {
-        val ev = spark.read.parquet(s"$out/$corpus/events.parquet")
-        def run() = graft.ops.Sessionize
-          .viaIntervals(ev, "user_id", "ts", "event_id",
-            gap = 1800000000000L, timeShards = shards, autoThreshold = thr)
-          .write.mode("overwrite").format("noop").save()
-        run() // warm
-        val (wall, maxTask) = (1 to 2).map { _ =>
-          spark.catalog.clearCache()
-          settle()
-          listener.maxMillis.set(0)
-          val t0 = System.nanoTime()
-          run()
-          val w = (System.nanoTime() - t0) / 1e9
-          settle()
-          (w, listener.maxMillis.get() / 1e3)
-        }.minBy(_._1)
-        val fp = graft.ops.Sessionize
-          .viaIntervals(ev, "user_id", "ts", "event_id",
-            gap = 1800000000000L, timeShards = shards, autoThreshold = thr)
-          .agg(sum(expr("session_id + n_events + session_start % 1000000007" +
-            " + session_end % 1000000007")).as("fp"))
-          .collect()(0).getLong(0)
-        println(f"AUTO $corpus%-8s $label%-17s wall=$wall%6.2fs maxTask=$maxTask%6.2fs fp=$fp")
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    for (corpus <- Seq("uniform", "bot");
+         (label, shards, thr) <- Seq(
+           ("1-shard(window)", 1, 0L),
+           ("32-shard(manual)", 32, 0L),
+           ("auto(32,thr=1M)", 32, 1000000L))) {
+      val ev = spark.read.parquet(s"$out/$corpus/events.parquet")
+      def run() = graft.ops.Sessionize
+        .viaIntervals(ev, "user_id", "ts", "event_id",
+          gap = 1800000000000L, timeShards = shards, autoThreshold = thr)
+      val (wall, maxTask) = p.measure()(noop(run()))
+      println(f"AUTO $corpus%-8s $label%-17s wall=$wall%6.2fs maxTask=$maxTask%6.2fs fp=${sessionFp(run())}")
+    }
   }
 
   /** The remaining per-user running-carry shapes under a planted bot
@@ -707,84 +479,37 @@ object ScaleProbe {
     *     gets the carry-lifted `timeShards` escape, probed 1 vs 32 with
     *     an output fingerprint proving bit-equality.
     */
-  private def carryProbe(spark: SparkSession): Unit = {
-    val d = "/root/testdata/sf0.1"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    val base = graft.Queries.tsToNanos(spark.read.parquet(s"$d/events.parquet"))
-    val ev10 = (0 until 10).map(i =>
-      base.select(
-        (col("event_id") + lit(i.toLong * 100000000L)).as("event_id"),
-        (col("user_id") + lit(i.toLong * 1000000L)).as("user_id"),
-        col("ts"), col("event_type"), col("value")))
-      .reduce(_ unionByName _)
-    val t0ns = 1704067200000000000L
+  private def carryProbe(p: Probe): Unit = p.withConf(NanosAsLong, NoCoalesce) {
+    val spark = p.spark
     // the bot cycles view/click/purchase so every funnel stage and
     // retention week sees it; 5 s spacing over ~7 months of weeks
-    val hot = spark.range(4000000).select(
-      (col("id") + 900000000L).as("event_id"),
-      lit(4242424242L).as("user_id"),
-      expr(s"$t0ns + id * 5000000000").as("ts"),
-      expr("element_at(array('view','click','purchase'), cast(id % 3 as int) + 1)")
-        .as("event_type"),
-      (col("id") % 1000).cast("double").as("value"))
+    val hot = bot(spark, 4000000, expr(s"$T0ns + id * 5000000000"),
+      Seq(cycledType, (col("id") % 1000).cast("double").as("value")))
     val out = "/tmp/graft-scale-carry"
-    ev10.unionByName(hot).repartition(32)
+    events10(spark, "event_type", "value").unionByName(hot).repartition(32)
       .write.mode("overwrite").parquet(s"$out/events.parquet")
-    val listener = new MaxTaskListener
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def settle(): Unit = {
-        var last = -1L; var same = 0
-        while (same < 2) {
-          Thread.sleep(100)
-          val cur = listener.maxMillis.get()
-          if (cur == last) same += 1 else { same = 0; last = cur }
-        }
-      }
-      def measure(label: String)(run: () => Unit): (Double, Double) = {
-        run() // warm
-        val r = (1 to 2).map { _ =>
-          spark.catalog.clearCache()
-          settle()
-          listener.maxMillis.set(0)
-          val t0 = System.nanoTime()
-          run()
-          val w = (System.nanoTime() - t0) / 1e9
-          settle()
-          (w, listener.maxMillis.get() / 1e3)
-        }.minBy(_._1)
-        println(f"CARRY $label%-24s wall=${r._1}%6.2fs maxTask=${r._2}%6.2fs")
-        r
-      }
-      // scored forms straight off SparkEntry: the probe dir substitutes
-      // for the sf dir (same schema), so the bot rides the real plans
-      for (name <- Seq("q_funnel", "q_retention")) {
-        val fn = graft.SparkEntry.queries(name)
-        measure(s"$name 10x+bot") { () =>
-          fn(spark, out).write.mode("overwrite").format("noop").save()
-        }
-      }
-      val ev = spark.read.parquet(s"$out/events.parquet")
-        .select("user_id", "event_id", "ts")
-      for ((label, shards, thr) <- Seq(
-             ("scd2 1-shard(window)", 1, 0L), ("scd2 32-shard", 32, 0L),
-             ("scd2 auto(32,thr=1M)", 32, 1000000L))) {
-        measure(label) { () =>
-          graft.ops.Scd2.build(ev, "user_id", "event_id", "ts",
-              timeShards = shards, autoThreshold = thr)
-            .write.mode("overwrite").format("noop").save()
-        }
-        val fp = graft.ops.Scd2
-          .build(ev, "user_id", "event_id", "ts", timeShards = shards,
-            autoThreshold = thr)
-          .agg(sum(expr("version + valid_from % 1000000007" +
-            " + coalesce(valid_to % 1000000007, -42)" +
-            " + if(is_current, 7, 0)")).as("fp"))
-          .collect()(0).getLong(0)
-        println(f"CARRY $label%-24s fp=$fp")
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // scored forms straight off SparkEntry: the probe dir substitutes
+    // for the sf dir (same schema), so the bot rides the real plans
+    for (name <- Seq("q_funnel", "q_retention")) {
+      val fn = graft.SparkEntry.queries(name)
+      val (wall, maxTask) = p.measure()(noop(fn(spark, out)))
+      val label = s"$name 10x+bot"
+      println(f"CARRY $label%-24s wall=$wall%6.2fs maxTask=$maxTask%6.2fs")
+    }
+    val ev = spark.read.parquet(s"$out/events.parquet")
+      .select("user_id", "event_id", "ts")
+    for ((label, shards, thr) <- Seq(
+           ("scd2 1-shard(window)", 1, 0L), ("scd2 32-shard", 32, 0L),
+           ("scd2 auto(32,thr=1M)", 32, 1000000L))) {
+      def run() = graft.ops.Scd2.build(ev, "user_id", "event_id", "ts",
+        timeShards = shards, autoThreshold = thr)
+      val (wall, maxTask) = p.measure()(noop(run()))
+      println(f"CARRY $label%-24s wall=$wall%6.2fs maxTask=$maxTask%6.2fs")
+      val fp = fingerprint(run(), expr("version + valid_from % 1000000007" +
+        " + coalesce(valid_to % 1000000007, -42)" +
+        " + if(is_current, 7, 0)"))
+      println(f"CARRY $label%-24s fp=$fp")
+    }
   }
 
   /** Histogram-rank stats under a planted hot group: one event_type
@@ -794,8 +519,9 @@ object ScaleProbe {
     * task sees more than ~1/256 of a group's distinct values; this
     * measures it (wall + max single task at 1× vs 20×+hot).
     */
-  private def statsProbe(spark: SparkSession): Unit = {
-    val src = "/root/testdata/sf0.1"
+  private def statsProbe(p: Probe): Unit = {
+    val spark = p.spark
+    val src = Sf01
     val out = "/tmp/graft-scale-stats"
     val ev = spark.read.parquet(s"$src/events.parquet")
     val ev10 = (0 until 10).map(i =>
@@ -810,50 +536,26 @@ object ScaleProbe {
     ev10.unionByName(hot).repartition(32)
       .write.mode("overwrite").parquet(s"$out/events.parquet")
 
-    val listener = new MaxTaskListener
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def settle(): Unit = {
-        var last = -1L; var same = 0
-        while (same < 2) {
-          Thread.sleep(100)
-          val cur = listener.maxMillis.get()
-          if (cur == last) same += 1 else { same = 0; last = cur }
-        }
-      }
-      for (name <- Seq("q_median", "q_quantiles", "q_mad");
-           (label, dir) <- Seq("1x" -> src, "20x+hot" -> out)) {
-        val fn = graft.SparkEntry.queries(name)
-        fn(spark, dir).write.mode("overwrite").format("noop").save() // warm
-        val (wall, maxTask) = (1 to 2).map { _ =>
-          spark.catalog.clearCache()
-          settle()
-          listener.maxMillis.set(0)
-          val t0 = System.nanoTime()
-          fn(spark, dir).write.mode("overwrite").format("noop").save()
-          val w = (System.nanoTime() - t0) / 1e9
-          settle()
-          (w, listener.maxMillis.get() / 1e3)
-        }.minBy(_._1)
-        spark.catalog.clearCache()
-        println(f"STATS $name%-16s $label%-8s wall=$wall%6.2fs maxTask=$maxTask%6.2fs")
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    for (name <- Seq("q_median", "q_quantiles", "q_mad");
+         (label, dir) <- Seq("1x" -> src, "20x+hot" -> out)) {
+      val fn = graft.SparkEntry.queries(name)
+      val (wall, maxTask) = p.measure()(noop(fn(spark, dir)))
+      spark.catalog.clearCache()
+      println(f"STATS $name%-16s $label%-8s wall=$wall%6.2fs maxTask=$maxTask%6.2fs")
+    }
   }
 
-  private def linearProbe(spark: SparkSession): Unit = {
-    val d = "/root/testdata/sf0.1"
+  private def linearProbe(p: Probe): Unit = {
+    val spark = p.spark
+    val d = Sf01
     def rep(name: String, idCols: Seq[String], n: Int): DataFrame = {
       val base = graft.Queries.tsToNanos(spark.read.parquet(s"$d/$name.parquet"))
       (0 until n).map { i =>
         idCols.foldLeft(base)((df, c) => df.withColumn(c, col(c) + lit(i.toLong * 100000000L)))
       }.reduce(_ unionByName _)
     }
-    def time(label: String)(df: => DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      df.write.mode("overwrite").format("noop").save()
-      println(f"PROBE $label ${(System.nanoTime()-t0)/1e9}%.1f s")
-    }
+    def time(label: String)(df: => DataFrame): Unit =
+      println(f"PROBE $label ${p.wall(noop(df))}%.1f s")
     // 6M-row lineitem TPC-H Q1 (10x)
     val li1 = spark.read.parquet(s"$d/lineitem.parquet")
     val li10 = rep("lineitem", Seq("l_orderkey"), 10)
@@ -879,12 +581,13 @@ object ScaleProbe {
       graft.ops.AsOfJoin.asOf(e, o, "user_id", "o_custkey", "ts", "ots",
         Seq("o_orderkey", "o_totalprice"), tieBreak = "o_orderkey")
     }
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev1 = graft.Queries.tsToNanos(spark.read.parquet(s"$d/events.parquet"))
-    val or1 = spark.read.parquet(s"$d/orders.parquet")
-    time("asof_1x (100k x 150k)") { prep(ev1, or1) }
-    time("asof_10x (1M x 1.5M)") { prep(rep("events", Seq("event_id"), 10),
-      rep("orders", Seq("o_orderkey"), 10)) }
+    p.withConf(NanosAsLong) {
+      val ev1 = graft.Queries.tsToNanos(spark.read.parquet(s"$d/events.parquet"))
+      val or1 = spark.read.parquet(s"$d/orders.parquet")
+      time("asof_1x (100k x 150k)") { prep(ev1, or1) }
+      time("asof_10x (1M x 1.5M)") { prep(rep("events", Seq("event_id"), 10),
+        rep("orders", Seq("o_orderkey"), 10)) }
+    }
     // duplicate clustering over LSH candidate pairs (10x docs)
     time("clusters_1x (5k docs)") {
       graft.ops.Dedup.clusters(graft.ops.Dedup.minhashCandidates(
@@ -919,9 +622,8 @@ object ScaleProbe {
     * Best-of-3 walls after a warm run; fingerprints are compared by the
     * `auto` probe (this one measures cost, not correctness).
     */
-  private def policyProbe(spark: SparkSession): Unit = {
-    val d = "/root/testdata/sf0.1"
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+  private def policyProbe(p: Probe): Unit = p.withConf(NoCoalesce) {
+    val spark = p.spark
     val out = "/tmp/graft-scale-policy"
     // crossJoin-with-range replication (NOT a deep union): one scan per
     // factor, re-keyed so no key crosses the threshold at any factor
@@ -931,9 +633,9 @@ object ScaleProbe {
         .withColumn(idCol, col(idCol) + col("_rep") * 100000000L)
         .withColumn(keyCol, col(keyCol) + col("_rep") * 1000000L)
         .drop("_rep")
-    val base = graft.Queries.tsToNanos(spark.read.parquet(s"$d/events.parquet"))
+    val base = graft.Queries.tsToNanos(spark.read.parquet(s"$Sf01/events.parquet"))
       .select("event_id", "user_id", "ts", "event_type")
-    val orders = spark.read.parquet(s"$d/orders.parquet")
+    val orders = spark.read.parquet(s"$Sf01/orders.parquet")
       .select(col("o_orderkey"), col("o_custkey"),
         (unix_micros(col("o_orderdate").cast("timestamp")) * 1000).as("ots"),
         col("o_totalprice"))
@@ -948,37 +650,25 @@ object ScaleProbe {
       // their rows stay comparable across rounds); only funnel reads it
       val ev3 = ev.select("event_id", "user_id", "ts")
       val orx = spark.read.parquet(s"$out/$factor/orders.parquet")
-      def shapes(shards: Int, thr: Long): Seq[(String, () => Unit)] = Seq(
+      def shapes(shards: Int, thr: Long): Seq[(String, () => DataFrame)] = Seq(
         ("sessionize", () => graft.ops.Sessionize
           .viaIntervals(ev3, "user_id", "ts", "event_id",
-            gap = 1800000000000L, timeShards = shards, autoThreshold = thr)
-          .write.mode("overwrite").format("noop").save()),
+            gap = 1800000000000L, timeShards = shards, autoThreshold = thr)),
         ("asof", () => graft.ops.AsOfJoin.asOf(ev3, orx, "user_id", "o_custkey",
           "ts", "ots", Seq("o_orderkey", "o_totalprice"),
           tieBreak = "o_orderkey", joinType = "left", timeShards = shards,
-          autoThreshold = thr)
-          .write.mode("overwrite").format("noop").save()),
+          autoThreshold = thr)),
         ("scd2", () => graft.ops.Scd2
           .build(ev3.select("user_id", "event_id", "ts"), "user_id",
-            "event_id", "ts", timeShards = shards, autoThreshold = thr)
-          .write.mode("overwrite").format("noop").save()),
+            "event_id", "ts", timeShards = shards, autoThreshold = thr)),
         ("funnel", () => graft.ops.Funnel
           .firstTimes(ev, "user_id", "ts", "event_type",
             Seq("view", "click", "purchase"),
-            timeShards = shards, autoThreshold = thr)
-          .write.mode("overwrite").format("noop").save()))
+            timeShards = shards, autoThreshold = thr)))
       val walls = scala.collection.mutable.LinkedHashMap.empty[(String, String), Double]
       for ((label, shards, thr) <- Seq(("single", 1, 0L), ("auto", 32, 1000000L));
-           (shape, run) <- shapes(shards, thr)) {
-        run() // warm
-        val wall = (1 to 3).map { _ =>
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          run()
-          (System.nanoTime() - t0) / 1e9
-        }.min
-        walls((shape, label)) = wall
-      }
+           (shape, run) <- shapes(shards, thr))
+        walls((shape, label)) = p.measure(samples = 3)(noop(run()))._1
       for (shape <- Seq("sessionize", "asof", "scd2", "funnel")) {
         val s1 = walls((shape, "single")); val sa = walls((shape, "auto"))
         val over = sa - s1
@@ -999,43 +689,22 @@ object ScaleProbe {
     * versions×events cross-product (4M × 4k pairs would be 16G rows;
     * the probed task stays seconds).
     */
-  private def lookupProbe(spark: SparkSession): Unit = {
-    val d = "/root/testdata/sf0.1"
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    val base = graft.Queries.tsToNanos(spark.read.parquet(s"$d/events.parquet"))
-    val ev10 = (0 until 10).map(i =>
-      base.select(
-        (col("event_id") + lit(i.toLong * 100000000L)).as("event_id"),
-        (col("user_id") + lit(i.toLong * 1000000L)).as("user_id"),
-        col("ts"), col("event_type")))
-      .reduce(_ unionByName _)
-    val t0ns = 1704067200000000000L
-    val botEv = spark.range(4000000).select(
-      (col("id") + 900000000L).as("event_id"),
-      lit(4242424242L).as("user_id"),
-      expr(s"$t0ns + id * 5000000000").as("ts"),
-      lit("click").as("event_type"))
-    val botVers = spark.range(4000).select(
-      (col("id") + 950000000L).as("event_id"),
-      lit(4242424242L).as("user_id"),
-      expr(s"$t0ns + id * 5000000000000").as("ts"),
-      lit("purchase").as("event_type"))
+  private def lookupProbe(p: Probe): Unit = p.withConf(NoCoalesce) {
+    val spark = p.spark
+    val ev10 = events10(spark, "event_type")
+    def plant(n: Long, spacing: String, idBase: Long, eventType: String) =
+      bot(spark, n, expr(s"$T0ns + id * $spacing"), Seq(lit(eventType).as("event_type")),
+        idBase)
+    val botEv = plant(4000000, "5000000000", 900000000L, "click")
+    val botVers = plant(4000, "5000000000000", 950000000L, "purchase")
     // the INVERTED plant (round 13): the DIMENSION is the skewed side —
     // 4k events against a 4M-version history on one entity. The join
     // form's per-entity work is events × versions regardless of which
     // side is fat (the same 16G interval checks in one hash task); the
     // as-of form shards the UNION spine (events + versions), so a hot
     // dimension triggers the escape exactly like a hot event side.
-    val botEvInv = spark.range(4000).select(
-      (col("id") + 900000000L).as("event_id"),
-      lit(4242424242L).as("user_id"),
-      expr(s"$t0ns + id * 5000000000000").as("ts"),
-      lit("click").as("event_type"))
-    val botVersInv = spark.range(4000000).select(
-      (col("id") + 950000000L).as("event_id"),
-      lit(4242424242L).as("user_id"),
-      expr(s"$t0ns + id * 5000000000").as("ts"),
-      lit("purchase").as("event_type"))
+    val botEvInv = plant(4000, "5000000000000", 900000000L, "click")
+    val botVersInv = plant(4000000, "5000000000", 950000000L, "purchase")
     val out = "/tmp/graft-scale-lookup"
     ev10.repartition(32)
       .write.mode("overwrite").parquet(s"$out/uniform/events.parquet")
@@ -1043,58 +712,35 @@ object ScaleProbe {
       .write.mode("overwrite").parquet(s"$out/bot/events.parquet")
     ev10.unionByName(botEvInv).unionByName(botVersInv).repartition(32)
       .write.mode("overwrite").parquet(s"$out/botdim/events.parquet")
-    val listener = new MaxTaskListener
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def settle(): Unit = {
-        var last = -1L; var same = 0
-        while (same < 2) {
-          Thread.sleep(100)
-          val cur = listener.maxMillis.get()
-          if (cur == last) same += 1 else { same = 0; last = cur }
-        }
-      }
-      for (corpus <- Seq("uniform", "bot", "botdim");
-           (label, shards, thr) <- Seq(
-             ("join", 1, 0L), ("asof-auto(32,thr=1M)", 32, 1000000L))) {
-        val ev = spark.read.parquet(s"$out/$corpus/events.parquet")
-        // the dim BUILD rides its own proven auto escape (bit-parity is
-        // the q_scd2_auto contract) — only botdim's 4M-version entity
-        // actually triggers it; the lookup under test is unaffected
-        val dim = graft.ops.Scd2.build(
-            ev.where(col("event_type") === "purchase")
-              .select(col("user_id"), col("event_id"), col("ts")),
-            "user_id", "event_id", "ts",
-            timeShards = 32, autoThreshold = 1000000L)
-          .select(col("user_id"), col("event_id").as("version_event"),
-            col("valid_from"), col("valid_to"), col("version"))
-        val events = ev.where(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        def run() = graft.ops.Scd2.lookup(events, dim, "user_id", "ts",
-          timeShards = shards, autoThreshold = thr)
-        run().write.mode("overwrite").format("noop").save() // warm
-        val (wall, maxTask) = (1 to 2).map { _ =>
-          spark.catalog.clearCache()
-          settle()
-          listener.maxMillis.set(0)
-          val t0 = System.nanoTime()
-          run().write.mode("overwrite").format("noop").save()
-          val w = (System.nanoTime() - t0) / 1e9
-          settle()
-          (w, listener.maxMillis.get() / 1e3)
-        }.minBy(_._1)
-        // event-sized output: every click row appears exactly once; the
-        // output fingerprint must agree across the two forms
-        val nClicks = events.count()
-        val nOut = run().count()
-        val fp = run().agg(sum(coalesce(col("version"), lit(0L)) +
-          coalesce(col("version_event") % 1000000007L, lit(0L))).as("fp"))
-          .collect()(0).getLong(0)
-        println(f"LOOKUP $corpus%-8s $label%-21s wall=$wall%6.2fs " +
-          f"maxTask=$maxTask%6.2fs clicks=$nClicks out=$nOut " +
-          f"eventSized=${nClicks == nOut} fp=$fp")
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    for (corpus <- Seq("uniform", "bot", "botdim");
+         (label, shards, thr) <- Seq(
+           ("join", 1, 0L), ("asof-auto(32,thr=1M)", 32, 1000000L))) {
+      val ev = spark.read.parquet(s"$out/$corpus/events.parquet")
+      // the dim BUILD rides its own proven auto escape (bit-parity is
+      // the q_scd2_auto contract) — only botdim's 4M-version entity
+      // actually triggers it; the lookup under test is unaffected
+      val dim = graft.ops.Scd2.build(
+          ev.where(col("event_type") === "purchase")
+            .select(col("user_id"), col("event_id"), col("ts")),
+          "user_id", "event_id", "ts",
+          timeShards = 32, autoThreshold = 1000000L)
+        .select(col("user_id"), col("event_id").as("version_event"),
+          col("valid_from"), col("valid_to"), col("version"))
+      val events = ev.where(col("event_type") === "click")
+        .select(col("event_id"), col("user_id"), col("ts"))
+      def run() = graft.ops.Scd2.lookup(events, dim, "user_id", "ts",
+        timeShards = shards, autoThreshold = thr)
+      val (wall, maxTask) = p.measure()(noop(run()))
+      // event-sized output: every click row appears exactly once; the
+      // output fingerprint must agree across the two forms
+      val nClicks = events.count()
+      val nOut = run().count()
+      val fp = fingerprint(run(), coalesce(col("version"), lit(0L)) +
+        coalesce(col("version_event") % 1000000007L, lit(0L)))
+      println(f"LOOKUP $corpus%-8s $label%-21s wall=$wall%6.2fs " +
+        f"maxTask=$maxTask%6.2fs clicks=$nClicks out=$nOut " +
+        f"eventSized=${nClicks == nOut} fp=$fp")
+    }
   }
 
   /** The funnel's THRESHOLD JOINS under a planted bot (round 13). The
@@ -1119,65 +765,105 @@ object ScaleProbe {
     * bot before the shuffle — the carry probe's scored-form row
     * measures exactly that (max task flat under the 4M bot).
     */
-  private def funnelProbe(spark: SparkSession): Unit = {
-    val d = "/root/testdata/sf0.1"
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    val base = graft.Queries.tsToNanos(spark.read.parquet(s"$d/events.parquet"))
-    val ev10 = (0 until 10).map(i =>
-      base.select(
-        (col("event_id") + lit(i.toLong * 100000000L)).as("event_id"),
-        (col("user_id") + lit(i.toLong * 1000000L)).as("user_id"),
-        col("ts"), col("event_type")))
-      .reduce(_ unionByName _)
-    val t0ns = 1704067200000000000L
-    val hot = spark.range(32000000).select(
-      (col("id") + 900000000L).as("event_id"),
-      lit(4242424242L).as("user_id"),
-      expr(s"$t0ns + id * 5000000000").as("ts"),
-      expr("element_at(array('view','click','purchase'), cast(id % 3 as int) + 1)")
-        .as("event_type"))
+  private def funnelProbe(p: Probe): Unit = p.withConf(NoCoalesce) {
+    val spark = p.spark
+    val hot = bot(spark, 32000000, expr(s"$T0ns + id * 5000000000"), Seq(cycledType))
     val out = "/tmp/graft-scale-funnel"
-    ev10.unionByName(hot).repartition(32)
+    events10(spark, "event_type").unionByName(hot).repartition(32)
       .write.mode("overwrite").parquet(s"$out/events.parquet")
-    val listener = new MaxTaskListener
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def settle(): Unit = {
-        var last = -1L; var same = 0
-        while (same < 2) {
-          Thread.sleep(100)
-          val cur = listener.maxMillis.get()
-          if (cur == last) same += 1 else { same = 0; last = cur }
-        }
+    val ev = spark.read.parquet(s"$out/events.parquet")
+      .select("user_id", "ts", "event_type")
+    for ((label, shards, thr) <- Seq(
+           ("funnel single", 1, 0L),
+           ("funnel auto(32,thr=1M)", 32, 1000000L))) {
+      def run() = graft.ops.Funnel.firstTimes(ev, "user_id", "ts",
+        "event_type", Seq("view", "click", "purchase"),
+        timeShards = shards, autoThreshold = thr)
+      val (wall, maxTask) = p.measure()(noop(run()))
+      val fp = fingerprint(run(),
+        coalesce(col("t0") % 1000000007L, lit(-1L)) +
+          coalesce(col("t1") % 1000000007L, lit(-2L)) +
+          coalesce(col("t2") % 1000000007L, lit(-3L)))
+      val users = run().count()
+      println(f"FUNNEL $label%-23s wall=$wall%6.2fs maxTask=$maxTask%6.2fs " +
+        f"users=$users fp=$fp")
+    }
+  }
+
+  private def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Sf01)
+
+  /** Per-stage wall/task profile of a query run: one timed run through
+    * the noop sink after a warm run at the same SF (so codegen/JIT are
+    * paid), then each stage's start offset, wall span, task count, summed
+    * task time, max task time, input and shuffle bytes — the local
+    * stand-in for the Spark UI's stage table.
+    */
+  private def profProbe(p: Probe, queries: Seq[String]): Unit =
+    for (n <- if (queries.isEmpty) Seq("q_dedup_spans") else queries) {
+      val fn = graft.SparkEntry.queries(n)
+      val (wall, _) = p.measure(samples = 1)(noop(fn(p.spark, sfDir)))
+      val stages = p.stages
+      println(f"\n== $n total=$wall%.3f s, ${stages.size} stages")
+      val t0n = stages.map(_._2.submitted).filter(_ > 0).minOption.getOrElse(0L)
+      stages.sortBy(_._2.submitted).foreach { case (id, s) =>
+        val span = (s.completed - s.submitted) / 1e9
+        val off = (s.submitted - t0n) / 1e9
+        println(f"  stage $id%-4d +$off%6.3f span=$span%6.3f tasks=${s.tasks}%-3d " +
+          f"taskSum=${s.taskMillis / 1e3}%7.3f max=${s.maxTaskMillis / 1e3}%6.3f " +
+          f"in=${s.input / 1024}%8dK sr=${s.shuffleRead / 1024}%6dK " +
+          f"sw=${s.shuffleWrite / 1024}%6dK  ${s.name.take(60)}")
       }
-      val ev = spark.read.parquet(s"$out/events.parquet")
-        .select("user_id", "ts", "event_type")
-      for ((label, shards, thr) <- Seq(
-             ("funnel single", 1, 0L),
-             ("funnel auto(32,thr=1M)", 32, 1000000L))) {
-        def run() = graft.ops.Funnel.firstTimes(ev, "user_id", "ts",
-          "event_type", Seq("view", "click", "purchase"),
-          timeShards = shards, autoThreshold = thr)
-        run().write.mode("overwrite").format("noop").save() // warm
-        val (wall, maxTask) = (1 to 2).map { _ =>
-          spark.catalog.clearCache()
-          settle()
-          listener.maxMillis.set(0)
-          val t0 = System.nanoTime()
-          run().write.mode("overwrite").format("noop").save()
-          val w = (System.nanoTime() - t0) / 1e9
-          settle()
-          (w, listener.maxMillis.get() / 1e3)
-        }.minBy(_._1)
-        val fp = run().agg(sum(
-          coalesce(col("t0") % 1000000007L, lit(-1L)) +
-            coalesce(col("t1") % 1000000007L, lit(-2L)) +
-            coalesce(col("t2") % 1000000007L, lit(-3L))).as("fp"))
-          .collect()(0).getLong(0)
-        val users = run().count()
-        println(f"FUNNEL $label%-23s wall=$wall%6.2fs maxTask=$maxTask%6.2fs " +
-          f"users=$users fp=$fp")
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+      Caching.releaseAll(p.spark)
+    }
+
+  /** Ablate AQE sub-features one at a time over the given queries to
+    * find WHICH runtime-adaptation path costs the wall difference the
+    * on/off A-B shows (the flag is read at execution time, so setting
+    * session conf between runs is enough).
+    */
+  private def aqeProbe(p: Probe, queries: Seq[String]): Unit = {
+    val on = "spark.sql.adaptive.enabled" -> "true"
+    val variants: Seq[(String, Seq[(String, String)])] = Seq(
+      "aqe=on" -> Seq(on),
+      "aqe=off" -> Seq("spark.sql.adaptive.enabled" -> "false"),
+      "on,noCoalesce" -> Seq(on, NoCoalesce),
+      "on,noRuntimeBhj" -> Seq(on, "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"),
+      "on,noLocalReader" -> Seq(on, "spark.sql.adaptive.localShuffleReader.enabled" -> "false"),
+      "on,noSkewJoin" -> Seq(on, "spark.sql.adaptive.skewJoin.enabled" -> "false"),
+      "on,cacheUncompressed" -> Seq(on, "spark.sql.inMemoryColumnarStorage.compressed" -> "false"),
+      "on,cacheBatch100k" -> Seq(on, "spark.sql.inMemoryColumnarStorage.batchSize" -> "100000"),
+      "on,minPart32" -> Seq(on, "spark.sql.adaptive.coalescePartitions.minPartitionNum" -> "32"),
+      "on,minPart8" -> Seq(on, "spark.sql.adaptive.coalescePartitions.minPartitionNum" -> "8"))
+    for (n <- if (queries.isEmpty) Seq("q_dedup_prefix") else queries;
+         (label, conf) <- variants) {
+      val fn = graft.SparkEntry.queries(n)
+      val (wall, maxTask) = p.withConf(conf: _*)(p.measure(samples = 3)(noop(fn(p.spark, sfDir))))
+      println(f"$n%-20s $label%-18s min=$wall%.2f  maxTask=$maxTask%.2f")
+    }
+  }
+
+  /** Decompose the per-query bench floor: scheduling, single-row-group
+    * scan serialization, shuffle, and the effect of a parallelizing
+    * repartition after the scan.
+    */
+  private def floorProbe(p: Probe): Unit = {
+    def time(label: String)(f: => Unit): Unit = {
+      val (wall, maxTask) = p.measure(samples = 3)(f)
+      println(f"$label: min=$wall%.3f s  maxTask=$maxTask%.3f s")
+    }
+    val li = p.spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val docs = p.spark.read.parquet(s"$sfDir/documents.parquet")
+    time("noop(range1)") { noop(p.spark.range(1).toDF()) }
+    time("scan count(lineitem)") { li.agg(count(lit(1))).collect(): Unit }
+    time("scan all cols noop") { noop(li) }
+    def aggShape(df: DataFrame) = df
+      .groupBy("l_returnflag", "l_linestatus")
+      .agg(sum(round(col("l_quantity") * 100).cast("long")).as("sq"),
+        sum(round(col("l_extendedprice") * 100).cast("long")).as("sb"),
+        count(lit(1)).as("n"))
+    time("agg_group (1-task scan)") { noop(aggShape(li)) }
+    time("agg_group (repartition 32)") { noop(aggShape(li.repartition(32))) }
+    time("minhash sig (1-task scan)") { noop(graft.ops.Dedup.minhash(docs)) }
+    time("minhash sig (repartition 32)") { noop(graft.ops.Dedup.minhash(docs.repartition(32))) }
   }
 }

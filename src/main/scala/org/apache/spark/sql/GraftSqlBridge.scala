@@ -1,12 +1,14 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.storage.StorageLevel
 
 /** Minimal bridge to `private[sql]` Column/Expression conversions — the
   * supported way for third-party libraries to lift a custom Catalyst
-  * `Expression` into the public `Column` API on Spark 4.
+  * `Expression` into the public `Column` API on Spark 4 — and to the few
+  * `private[spark]` hooks graft's measurement code needs.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column =
@@ -33,4 +35,10 @@ object GraftSqlBridge {
     */
   def tempView(spark: SparkSession, name: String): Option[AnyRef] =
     spark.asInstanceOf[classic.SparkSession].sessionState.catalog.getRawTempView(name)
+
+  /** Block until every event posted so far has reached every listener.
+    * The listener bus is asynchronous, so a job can return before its
+    * task-end events arrive; a reading taken after this call is complete.
+    */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -80,4 +80,17 @@ class CouchMicroBatchSpec extends SparkSpec {
     q.awaitTermination()
     assert(spark.table("mbsel").count() == 3) // v in {8,9,10}
   }
+
+  test("maxChunksPerTrigger must be a positive integer, checked at load") {
+    val dir = Files.createTempDirectory("mb-cap")
+    Files.write(dir.resolve("00001.jsonl"), change(1, "a", 1).getBytes)
+    def load(cap: String) = spark.readStream.format("couch-changes")
+      .option("maxChunksPerTrigger", cap).load(dir.toString)
+    for (bad <- Seq("0", "-1", "x")) {
+      val e = intercept[IllegalArgumentException](load(bad))
+      assert(e.getMessage.contains("maxChunksPerTrigger") && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
+    }
+    assert(load("2").isStreaming)
+  }
 }

@@ -4,9 +4,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import graft.model.{ChangeFeed, SchemaDiscovery}
 import graft.model.SchemaDiscovery.DocSchema
 import graft.ops.{Compact, Flatten, Mango, Split, Transform}
-import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -255,13 +254,13 @@ class OnePassIngestSpec extends SparkSpec {
         Option(e.taskMetrics).foreach(m => records.addAndGet(m.inputMetrics.recordsRead))
     }
     val changes = spark.read.format("couch-changes").load(dir.resolve("spool.txt").toString)
-    ListenerBusDrain(spark.sparkContext)
+    GraftSqlBridge.drainListeners(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       val w = new Warehouse(spark, WarehouseOptions(database = "once", split = Some("type")))
       w.ingest(changes)
       w.tableNames.foreach(t => w.export(t, dir.resolve(t).toString))
-      ListenerBusDrain(spark.sparkContext)
+      GraftSqlBridge.drainListeners(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     // the materialization is read in cached batches, one record per batch
     val batches = records.get - lines.size

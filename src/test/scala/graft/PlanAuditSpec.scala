@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, Log
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-quality gate over EVERY scored query: the physical plans must keep
-  * the shapes that survive a 100 TB scale-up. Complements `tools/Explain`
+  * the shapes that survive a 100 TB scale-up. Complements `tools/PlanDump`
   * (interactive audit) by failing the build on regressions.
   */
 class PlanAuditSpec extends SparkSpec {
@@ -58,7 +58,7 @@ class PlanAuditSpec extends SparkSpec {
   test("every scored plan reads parquet with a pruned schema, never SELECT *") {
     // every scan must carry an explicit ReadSchema (vectorized parquet
     // batch scan); presence alone is asserted — pruning specifics are
-    // query-dependent and audited via tools/Explain. Iterative operators
+    // query-dependent and audited via tools/PlanDump. Iterative operators
     // whose final job reads its own localCheckpoint (ExistingRDD) and
     // bounded-result operators whose final table is built on the driver
     // after distributed jobs (Dedup.clusters' gated union-find →

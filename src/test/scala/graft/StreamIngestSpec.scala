@@ -293,4 +293,19 @@ class StreamIngestSpec extends SparkSpec {
       assert(e.getMessage.contains("bucket"))
     } finally spark.conf.unset("graft.state.buckets")
   }
+
+  test("graft.state.buckets must be a positive integer, checked before any state is touched") {
+    for (bad <- Seq("0", "-1", "abc")) {
+      val wh = tempDir("buckets-bad")
+      spark.conf.set("graft.state.buckets", bad)
+      try {
+        val e = intercept[IllegalArgumentException] {
+          new StreamIngest(spark, WarehouseOptions(database = "bbad"), wh)
+        }
+        assert(e.getMessage.contains("graft.state.buckets") &&
+          e.getMessage.contains(s"'$bad'"), e.getMessage)
+        assert(new java.io.File(wh).list().isEmpty, s"$bad: nothing written")
+      } finally spark.conf.unset("graft.state.buckets")
+    }
+  }
 }

@@ -2,9 +2,8 @@ package graft
 
 import graft.model.ChangeFeed
 import graft.streaming.StreamIngest
-import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
 
@@ -48,11 +47,11 @@ class StreamPublishSpec extends SparkSpec {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.synchronized { jobs += e.stageInfos.map(_.numTasks) }
     }
-    ListenerBusDrain(spark.sparkContext)
+    GraftSqlBridge.drainListeners(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       body
-      ListenerBusDrain(spark.sparkContext)
+      GraftSqlBridge.drainListeners(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     jobs.synchronized(jobs.toList)
   }
