@@ -2753,9 +2753,7 @@ object Queries {
       .agg(count(lit(1)).as("n")))
 
   /** Tumbling 1-hour windows over the event stream, batch form (`ts` is
-    * epoch-nanos — see `t()`). The continuous twin is
-    * [[graft.streaming.EventStream.windowedCounts]]; parity is asserted in
-    * EventStreamSpec.
+    * epoch-nanos — see `t()`).
     */
   private val qWindowTumbling = Q("q_window_tumbling",
     Some("""SELECT epoch_ns(ts) // 3600000000000 AS hour_bucket, event_type,

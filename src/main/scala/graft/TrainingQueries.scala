@@ -2298,8 +2298,7 @@ object TrainingQueries {
     */
   def sourceDrift(docs: DataFrame, buckets: Int = 1024): DataFrame = {
     val cells = docs
-      // docs with no source are outside per-source monitoring (the
-      // streaming twin filters identically)
+      // docs with no source are outside per-source monitoring
       .where(col("source").isNotNull)
       .select(col("source"),
         explode(TextAnalysis.tokens(col("text"))).as("token"))

@@ -225,33 +225,6 @@ final class QuantileSketch(val k: Int) {
 }
 
 object QuantileSketch {
-  /** Rebuild a sketch from a [[QuantileSketchAgg]] EVAL array
-    * (`[n, err, L, len_0, items_0…, …]`) — the bridge that lets a
-    * driver-side consumer (e.g. streaming maintenance) keep MERGING
-    * partials that arrived as query results. The compaction-parity
-    * counter is not part of the eval layout; it restarts at 0, which
-    * affects only which of two bound-equivalent survivors later
-    * compactions keep — the certified error accounting is unchanged.
-    */
-  def fromEvalArray(arr: Array[Double], k: Int): QuantileSketch = {
-    val sk = new QuantileSketch(k)
-    sk.n = arr(0).toLong
-    sk.err = arr(1).toLong
-    val nLevels = arr(2).toInt
-    var o = 3
-    var l = 0
-    while (l < nLevels) {
-      val len = arr(o).toInt
-      o += 1
-      val a = java.util.Arrays.copyOfRange(arr, o, o + len)
-      o += len
-      if (l == 0) a.foreach(v => sk.level0.add(v.asInstanceOf[java.lang.Double]))
-      else sk.levels += a
-      l += 1
-    }
-    sk
-  }
-
   def deserialize(bytes: Array[Byte]): QuantileSketch = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
     val n = bb.getLong; val err = bb.getLong; val comps = bb.getLong

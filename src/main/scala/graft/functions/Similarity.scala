@@ -51,15 +51,6 @@ object Similarity {
   def cosineExact(a: Column, b: Column): Column =
     dotExact(a, b) / (sqrt(norm2Exact(a)) * sqrt(norm2Exact(b)))
 
-  /** Throughput kernel: sequential double fold (kept for reference /
-    * cross-checking the native expression).
-    */
-  def dotFast(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, x) => acc + x)
-
   /** Throughput cosine: the native codegen'd [[CosineSimilarity]]
     * expression — one fused primitive loop, no boxing (see its docs for
     * the measured margin over the fold/zip_with formulation).

@@ -128,17 +128,9 @@ object TextAnalysis {
     length(regexp_replace(text, "[a-z0-9 \\t\\n\\f\\r]", "")).cast("double") /
       greatest(length(text), lit(1)).cast("double")
 
-  def stopwordRatio(text: Column): Column = {
-    val padded = concat(lit(" "), text, lit(" "))
-    val stops = Seq(" the ", " a ", " of ", " and ")
-    stops.map(w => occurrences(padded, w)).reduce(_ + _).cast("double") /
-      greatest(tokenCount(text), lit(1)).cast("double")
-  }
-
   /** Composite quality score in [0,1]: favors longer docs (saturating at
-    * 500 chars) with low punctuation noise. [[stopwordRatio]] is a
-    * separate standalone signal — it is deliberately NOT folded in here
-    * (the q_quality oracle pins this two-factor formula).
+    * 500 chars) with low punctuation noise (the q_quality oracle pins
+    * this two-factor formula).
     */
   def qualityScore(text: Column): Column = {
     val lenScore = least(length(text).cast("double") / lit(500.0), lit(1.0))

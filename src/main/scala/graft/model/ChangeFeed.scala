@@ -60,10 +60,4 @@ object ChangeFeed {
       )
       .withColumn("seqNum", seqNum(col("seq")))
   }
-
-  /** Read a JSONL file of bare change objects (one JSON object per line, no
-    * envelope) — the natural format for replaying batches in tests.
-    */
-  def readJsonl(spark: SparkSession, path: String): DataFrame =
-    fromLines(spark.read.text(path), "value")
 }

@@ -448,27 +448,6 @@ object Ann {
       .parquet(s"$dir/corpus")
   }
 
-  /** Incrementally add vectors to a [[buildIvfIndex]] index: assign the
-    * new rows against the EXISTING centroid table (map-side fold, no
-    * retraining, no touch of the resident corpus) and append them to
-    * their centroid partitions — the train-once / ingest-continuously
-    * path. Parquet append to a partitioned directory only creates files
-    * under the partitions the batch hits; searches see the union
-    * immediately and partition pruning is unaffected. Re-train (a fresh
-    * [[buildIvfIndex]]) when drift makes the frozen centroids stale —
-    * the standard IVF operational trade-off.
-    */
-  def appendToIvfIndex(vectors: DataFrame, dir: String,
-                       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = vectors.sparkSession
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    assign(vectors, centroids, idCol, vecCol)
-      .select(col(idCol), col("centroid_id"), col(vecCol),
-        quantizeInt8(col(vecCol)).as("q8"))
-      .write.mode("append").partitionBy("centroid_id")
-      .parquet(s"$dir/corpus")
-  }
-
   /** Search a [[buildIvfIndex]] index: pick the query's `nprobe` nearest
     * centroids (a k×dim driver-side computation on the tiny centroid
     * table) and scan ONLY those partitions — the `isin` on the partition

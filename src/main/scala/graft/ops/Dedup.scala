@@ -235,8 +235,6 @@ object Dedup {
     * the index on `band`, and because the index is bucketed on exactly
     * that key, Catalyst reuses the bucketing — the 100-TB index side is
     * NEVER re-shuffled; only the (small) new batch exchanges to match.
-    * `mode = "append"` preserves the bucketing, so growing the index is
-    * a per-batch file append, no rewrite.
     *
     * Degenerate bands: divert boilerplate bands with [[oversizedBands]]
     * BEFORE indexing (same recall contract as [[minhashCandidates]]'s
@@ -244,40 +242,27 @@ object Dedup {
     * every future batch.
     */
   def writeBandIndex(docs: DataFrame, table: String, numBuckets: Int = 64,
-                     mode: String = "overwrite",
                      numHashes: Int = 4, shingleSize: Int = 3,
                      idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
-    if (mode == "overwrite") {
-      // A fresh session's in-memory catalog doesn't know about a managed
-      // table directory left on disk by an earlier JVM, and saveAsTable
-      // then refuses with LOCATION_ALREADY_EXISTS — drop the catalog
-      // entry AND the orphaned default-warehouse location before writing.
-      spark.sql(s"DROP TABLE IF EXISTS `$table`")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
+    // A fresh session's in-memory catalog doesn't know about a managed
+    // table directory left on disk by an earlier JVM, and saveAsTable
+    // then refuses with LOCATION_ALREADY_EXISTS — drop the catalog
+    // entry AND the orphaned default-warehouse location before writing.
+    spark.sql(s"DROP TABLE IF EXISTS `$table`")
+    val loc = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(loc)) fs.delete(loc, true)
     val sig = minhash(docs, numHashes, shingleSize, idCol, textCol)
     val bandCols = (0 until numHashes / 2).map(b => col(s"band$b"))
     sig.select(col(idCol), explode(array(bandCols: _*)).as("band"))
-      .write.mode(mode)
+      .write.mode("overwrite")
       .bucketBy(numBuckets, "band")
       .sortBy("band")
       .format("parquet")
       .saveAsTable(table)
   }
-
-  /** Grow the [[writeBandIndex]] index with a new batch (bucketing
-    * preserved — call AFTER [[incrementalCandidates]] so the batch does
-    * not pair with itself twice).
-    */
-  def appendToBandIndex(newDocs: DataFrame, table: String, numBuckets: Int = 64,
-                        numHashes: Int = 4, shingleSize: Int = 3,
-                        idCol: String = "doc_id", textCol: String = "text"): Unit =
-    writeBandIndex(newDocs, table, numBuckets, mode = "append",
-      numHashes, shingleSize, idCol, textCol)
 
   /** Candidate pairs for a NEW batch against an existing [[writeBandIndex]]
     * corpus index, plus the batch's internal pairs — exactly the pairs
@@ -1353,28 +1338,6 @@ object Dedup {
     islands.groupBy(col(idCol))
       .agg(count(lit(1)).as("n_spans"),
         sum(col("end") - col("start")).as("dup_tokens"))
-  }
-
-  /** Rebuild each doc's text with every duplicated island's tokens removed
-    * (the corpus-first occurrence of each gram survives, so shared content
-    * remains exactly once corpus-wide). Token membership is evaluated with
-    * a nested higher-order filter over the doc's island array — map-side
-    * after one islands-by-doc join; schema preserved.
-    */
-  def stripDuplicatedSpans(docs: DataFrame, k: Int = 8,
-                           idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val islands = mergeIslands(duplicatedSpans(docs, k, idCol, textCol), idCol)
-      .groupBy(col(idCol))
-      .agg(collect_list(struct(col("start"), col("end"))).as("_spans"))
-    docs.join(islands, Seq(idCol), "left")
-      .withColumn(textCol,
-        when(col("_spans").isNull, col(textCol)).otherwise(
-          array_join(
-            filter(split(col(textCol), " "),
-              (t, i) => !exists(col("_spans"),
-                sp => i >= sp.getField("start") && i < sp.getField("end"))),
-            " ")))
-      .drop("_spans")
   }
 
   /** Gaps-and-islands merge of `(idCol, start, end)` spans. */

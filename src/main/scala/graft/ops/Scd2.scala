@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
 /** Slowly-changing-dimension Type-2 maintenance: build validity-interval
   * history from a version stream, and MERGE a later change batch into an
   * existing history without rebuilding it — the batch CDC-apply path of
-  * the warehouse's dimension tables (the streaming twin of what
-  * [[graft.streaming.IncrementalAgg]] does for aggregates).
+  * the warehouse's dimension tables.
   *
   * Interval convention (same as the scored `q_scd2`): one row per
   * version, `[valid_from, valid_to)` with a NULL-open current row,

@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
   * [[Intervals.coalesce]] inherits its probed `timeShards` escape (each
   * key's timeline splits into time blocks, carries lift in-shard
   * results; bit-identical, SCALE.md intervals/sessions probes) instead
-  * of re-deriving a second sharded running-carry proof. The streaming
-  * twin is `session_window` in [[graft.streaming.EventStream]].
+  * of re-deriving a second sharded running-carry proof.
   */
 object Sessionize {
 

@@ -3,10 +3,11 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Driver-side state-file plumbing for the streaming maintainers
-  * ([[StreamIngest]], [[StreamScd2]]): tiny pointer/marker files and
-  * staging-directory swaps, driven through the Hadoop `FileSystem` API
-  * so the maintained state lives WHEREVER the data lives. The previous
+/** Driver-side state-file plumbing for [[StreamIngest]]'s state,
+  * [[StreamScd2]]'s dimension and [[graft.ops.Maintenance]]'s file
+  * compaction: tiny marker/manifest files and staging-directory swaps,
+  * driven through the Hadoop `FileSystem` API so the state lives
+  * WHEREVER the data lives. The previous
   * `java.nio` form silently pinned the pointer/marker/sweep side to the
   * DRIVER'S LOCAL DISK while the data itself went through Spark's
   * Hadoop path resolution — on any deployment whose default filesystem
@@ -28,32 +29,20 @@ import org.apache.spark.sql.SparkSession
   *     the new, never a torn one.
   *   - '''Object stores (S3A/GCS)''': `rename` is COPY+DELETE — not
   *     atomic, O(data), and a crash mid-rename can leave both halves.
-  *     Directory-swap state (the bucketed ingest state, the maintained
-  *     aggregate) must not run against an object store as-is; the
+  *     Directory-swap state (the bucketed ingest state under the
+  *     rename protocol) must not run against an object store as-is; the
   *     portable commit there is a CONDITIONAL PUT of a new manifest
   *     key (S3 `If-None-Match` / GCS `ifGenerationMatch=0` — the
   *     primitive log-structured table formats build their commit
-  *     protocols on), which [[StreamScd2]]'s marker-file flip already
-  *     approximates: it commits by creating a NEW, never-overwritten
-  *     marker object, so it degrades gracefully where only the sweep
-  *     of retired directories loses atomicity (stale data is re-swept,
-  *     never resurrected). The rename-based swaps here deliberately
-  *     target rename-capable filesystems and fail loudly (rename
-  *     returning false throws) rather than corrupting silently.
+  *     protocols on), which [[ManifestDir]] approximates: it commits
+  *     by creating a NEW, never-overwritten manifest object, so it
+  *     degrades gracefully where only the sweep of retired directories
+  *     loses atomicity (stale data is re-swept, never resurrected). The
+  *     rename-based swaps here deliberately target rename-capable
+  *     filesystems and fail loudly (rename returning false throws)
+  *     rather than corrupting silently.
   */
 private[graft] object StateFs {
-
-  /** The Hadoop configuration of the active/default SparkSession (so
-    * `fs.defaultFS`, object-store credentials, etc. apply), or a
-    * vanilla `Configuration` outside any session — for state owners
-    * constructed with only a directory string
-    * ([[SketchMaintenance]]-family classes).
-    */
-  def activeHadoopConf(): org.apache.hadoop.conf.Configuration =
-    SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
 
   /** Read a small state file fully (the `InputStream` contract allows
     * short reads — see [[graft.sources.IndexFreshness.isFresh]]).
@@ -82,6 +71,17 @@ private[graft] object StateFs {
   def writeString(fs: FileSystem, p: Path, s: String): Unit = {
     val out = fs.create(p, true)
     try out.write(s.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Commit a small marker file whole or not at all: the content goes to
+    * a hidden `.<name>.tmp` sibling, then [[renameInto]] makes it
+    * visible under the absent `p`. For markers every start parses, where
+    * a torn [[writeString]] would fail every later start.
+    */
+  def commitString(fs: FileSystem, p: Path, s: String): Unit = {
+    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
+    writeString(fs, tmp, s)
+    renameInto(fs, tmp, p)
   }
 
   /** Schemes whose `FileSystem.rename` is a COPY+DELETE emulation that
@@ -134,7 +134,7 @@ private[graft] object StateFs {
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq.map(_.getPath.getName)
 
-  // ---- the replay guard of every exactly-once state owner ----
+  // ---- the replay guard of the exactly-once state ----
 
   private val ReplayMarginKey = "graft.agg.replayMargin"
 
@@ -158,11 +158,11 @@ private[graft] object StateFs {
     margin
   }
 
-  /** The replay policy of every owner whose merge is NOT idempotent
-    * (the sketch/drift/quantile maintainers, the SCD2 dimension, the
-    * maintained aggregate, the manifest-protocol state): true when
-    * `batchId` re-delivers a batch the state committed at `applied`
-    * already absorbed — the caller skips it; false for a new batch. A
+  /** The replay policy of state whose commit must not be repeated (the
+    * manifest-protocol state of [[StreamIngest]], the dimension of
+    * [[StreamScd2]]): true when `batchId` re-delivers a batch the state
+    * committed at `applied` already absorbed — the caller skips it; false
+    * for a new batch. A
     * batchId further behind than [[replayMargin]] means the streaming
     * checkpoint was reset against existing state — its low ids carry
     * genuinely new data that skipping would silently drop — so it throws,
@@ -178,12 +178,11 @@ private[graft] object StateFs {
     batchId <= applied
   }
 
-  // ---- versioned small-state files (the sketch/drift maintainers) ----
+  // ---- versioned small-state files (the state manifest) ----
   //
-  // The exactly-once maintainers persist one small state blob whose
-  // commit must be atomic WITH its batch id. java.nio offered
-  // overwrite-ATOMIC_MOVE; no Hadoop filesystem does, portably. The
-  // versioned scheme gets the same guarantee from two portable ops:
+  // The manifest is one small state blob whose commit must be atomic
+  // WITH its batch id. java.nio offered overwrite-ATOMIC_MOVE; no
+  // Hadoop filesystem does, portably. The versioned scheme gets the same guarantee from two portable ops:
   // content goes to a HIDDEN staging name, then a dst-absent rename
   // commits it as `<prefix>-<batchId><suffix>` — the NAME carries the
   // id. Readers take the highest committed id; a crash mid-write
@@ -263,7 +262,7 @@ private[graft] object StateFs {
     * the exactly-once batch marker. Readers take the highest committed
     * manifest; a crash before the commit leaves only an unreferenced
     * data directory, swept by [[sweepUnreferenced]] at the next write
-    * (never concurrently with it — single writer, like every maintainer
+    * (never concurrently with it — single writer, like every state owner
     * here).
     */
   final class ManifestDir(fs: FileSystem, val root: Path) {

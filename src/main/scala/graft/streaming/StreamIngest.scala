@@ -46,7 +46,7 @@ import org.apache.hadoop.fs.Path
   * partitioned parquet write of the touched buckets. Nothing driver-side
   * grows with data — the driver holds only frozen schemas and the seq
   * counter, like the reference's single node held `theSchema`. All state
-  * plumbing (checkpoint side-file, schema donors, bucket/agg swaps)
+  * plumbing (checkpoint side-file, schema donors, bucket swaps)
   * drives the Hadoop `FileSystem` resolved from `warehouseDir`, so the
   * warehouse can live on cluster storage — the swaps are dst-absent
   * renames, atomic on HDFS/POSIX; see [[StateFs]] for the object-store
@@ -55,15 +55,13 @@ import org.apache.hadoop.fs.Path
 final class StreamIngest(
     spark: SparkSession,
     opts: WarehouseOptions,
-    warehouseDir: String,
-    maintainAgg: Option[StreamIngest.AggSpec] = None) {
+    warehouseDir: String) {
 
   private val stateDir = s"$warehouseDir/_state"
   private val fs = new Path(warehouseDir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
   private val checkpointFile = new Path(s"$warehouseDir/_checkpoints.json")
   private val schemaDir = new Path(s"$warehouseDir/_schemas")
-  private val aggDir = new Path(s"$warehouseDir/_agg")
 
   /** Directory-commit protocol (`graft.state.protocol` session conf):
     * `rename` (default) swaps staged directories into place with
@@ -103,9 +101,7 @@ final class StreamIngest(
   }
 
   private val versRoot = new Path(s"$warehouseDir/_state_v")
-  private val aggVersRoot = new Path(s"$warehouseDir/_agg_v")
   private lazy val stateManifest = new StateFs.ManifestDir(fs, versRoot)
-  private lazy val aggManifest = new StateFs.ManifestDir(fs, aggVersRoot)
 
   private def verifyProtocol(): Unit = {
     // the rename protocol's whole contract rests on directory rename
@@ -128,20 +124,15 @@ final class StreamIngest(
     } else {
       // pre-marker warehouses are rename-layout by construction
       if (protocol != "rename" &&
-          (StateFs.listNames(fs, new Path(stateDir)).exists(_.startsWith("_bucket=")) ||
-            fs.exists(aggDir)))
+          StateFs.listNames(fs, new Path(stateDir)).exists(_.startsWith("_bucket=")))
         throw new IllegalStateException(
           s"warehouse state at $warehouseDir predates the protocol marker " +
             "and is rename-layout; it cannot be read under " +
             "graft.state.protocol=manifest. Unset the protocol or rebuild " +
             "the warehouse.")
-      // staged write + dst-absent rename: a torn overwrite-write here (a
-      // crash during first construction) would leave a marker matching
-      // NEITHER protocol and permanently fail every later start (r13
-      // review); the rename commits the marker whole or not at all
-      val tmp = new Path(s"$warehouseDir/._state_protocol.tmp")
-      StateFs.writeString(fs, tmp, protocol)
-      StateFs.renameInto(fs, tmp, marker)
+      // staged: a torn marker would match NEITHER protocol and fail
+      // every later start
+      StateFs.commitString(fs, marker, protocol)
     }
   }
 
@@ -153,7 +144,6 @@ final class StreamIngest(
   verifyProtocol()
   recoverState()
   verifyBucketCount()
-  bootstrapAggIfNeeded()
 
   def discoveredSchemas: Map[String, DocSchema] = schemas.toMap
 
@@ -177,9 +167,8 @@ final class StreamIngest(
     * `graft.state.buckets` against existing state would hash an update
     * for id X into a bucket its current row does not live in — the
     * touched-bucket merge would never read the old row, and BOTH
-    * versions would survive as silent duplicates. Guarded like
-    * [[SketchMaintenance]] guards sketch dimensions: fail loudly at
-    * construction.
+    * versions would survive as silent duplicates. Guarded like the
+    * protocol marker: fail loudly at construction.
     */
   // def, not val: the constructor-body guard runs before later vals init
   private def bucketMeta = new Path(s"$warehouseDir/_state_buckets")
@@ -195,6 +184,14 @@ final class StreamIngest(
             "duplicate ids). Restore the original setting or rebuild the " +
             "warehouse.")
     }
+
+  /** Persist the bucket count with the first bucket write, staged like the
+    * protocol marker: [[verifyBucketCount]] parses it on every start, so a
+    * torn write would fail every later construction.
+    */
+  private def commitBucketMeta(): Unit =
+    if (!fs.exists(bucketMeta))
+      StateFs.commitString(fs, bucketMeta, stateBuckets.toString)
 
   private def bucketCol = pmod(crc32(col("id")), lit(stateBuckets)).cast("int")
 
@@ -214,24 +211,14 @@ final class StreamIngest(
       .cache()
     try {
       val meta = batchMeta(batch)
-      val prior = existingState(Some(meta.buckets))
-      val merged = prior match {
+      val merged = existingState(Some(meta.buckets)) match {
         case Some(st) => st.unionByName(batch)
         case None     => batch
       }
       // LWW per id, tombstones RETAINED (deletes survive replays; a doc
       // re-created after deletion wins via its higher seq) — the exact
       // semantic of the shared CDC compaction
-      val state0 = Compact.latestChanges(merged)
-      // the maintained aggregate reads `state` too — cache so the LWW
-      // window runs once, and release before the bucket swap
-      val state = if (maintainAgg.isDefined) state0.cache() else state0
-      try {
-        // agg BEFORE state (see updateAgg's exactly-once argument)
-        maintainAgg.foreach(updateAgg(_, batch, prior, state, batchId))
-        writeBuckets(state, batchId)
-      } finally if (maintainAgg.isDefined) { state.unpersist(); () }
-
+      writeBuckets(Compact.latestChanges(merged), batchId)
       publishWith(meta.types)
       advanceCheckpoint(meta.maxSeq)
     } finally batch.unpersist()
@@ -252,118 +239,6 @@ final class StreamIngest(
       r.getSeq[String](2).toSet)
   }
 
-  /** Incrementally maintain `count/sum by group` over the live docs
-    * ([[IncrementalAgg]]): delta = (batch ids' live rows AFTER the merge)
-    * minus (their live rows BEFORE it), applied to a one-row-per-group
-    * table — never a rescan of the state.
-    *
-    * Exactly-once across crash/replay, by ordering + marker:
-    * the agg directory (data + the batchId that built it) swaps in
-    * atomically BEFORE the state buckets do. A crash after the agg swap
-    * but before the state swap replays the batch: the marker says the
-    * delta is already applied, the skip is correct because pre-state is
-    * unchanged. A crash after both swaps replays into the marker skip +
-    * the idempotent LWW merge. Deltas are computed from state diffs (not
-    * raw batch rows), so even an unguarded re-apply of an absorbed batch
-    * is a zero delta.
-    *
-    * The maintained table is dashboard-shaped (one row per group, written
-    * `coalesce(1)`); for group cardinalities past ~10^7 rows, split the
-    * write across files and swap the directory the same way.
-    */
-  private def updateAgg(spec: StreamIngest.AggSpec, batch: DataFrame,
-                        prior: Option[DataFrame], state: DataFrame,
-                        batchId: Long): Unit = {
-    // A crash between the agg swap and the state swap re-delivers exactly
-    // batchId == applied — that skip is the exactly-once path. A batchId
-    // further back can only mean the Spark streaming checkpoint was reset
-    // against an existing warehouse (batchIds restart at 0): skipping
-    // would silently freeze the aggregate while state keeps advancing, so
-    // the guard fails loudly and points at the re-bootstrap path instead.
-    if (StateFs.alreadyApplied(spark, batchId, appliedAggBatch(),
-        "maintained-aggregate", "The streaming checkpoint was likely reset " +
-          s"against an existing warehouse. Delete $aggDir to re-bootstrap " +
-          "the aggregate from live state, or restore the original " +
-          "checkpointLocation.")) return
-    val ids = batch.select("id").distinct()
-    // live (grp, value) rows of the batch's ids; docs without the group
-    // field are outside the aggregate (a null join key would never merge)
-    def rows(df: DataFrame): DataFrame = aggRows(spec, df.join(ids, "id"))
-    val pre = rows(prior.getOrElse(state.limit(0)))
-    val post = rows(state)
-    val current = aggData()
-      .getOrElse(IncrementalAgg.empty(pre, "grp"))
-    val merged = IncrementalAgg.merge(current,
-      IncrementalAgg.delta(pre, post, "grp", "value"), "grp")
-    commitAgg(merged, batchId)
-  }
-
-  /** Land `merged` as the live aggregate for `batchId`. Rename protocol:
-    * data + marker staged together, swapped in as ONE directory rename.
-    * Manifest protocol: data lands ONCE under a fresh name (never a name
-    * a live manifest references — a replayed commit must not overwrite
-    * the directory readers are on), then the versioned manifest commit
-    * makes it live; the manifest version IS the batch marker.
-    */
-  private def commitAgg(merged: DataFrame, batchId: Long): Unit =
-    if (manifestMode) {
-      val liveMap = aggManifest.live().map(_._2).getOrElse(Map.empty)
-      aggManifest.sweepUnreferenced(liveMap)
-      val dirName = s"a$batchId-${System.nanoTime()}"
-      merged.coalesce(1).write.parquet(aggManifest.dataPath(dirName).toString)
-      aggManifest.commit(batchId, Map("data" -> dirName))
-    } else {
-      val staging = new Path(s"$warehouseDir/_agg_staging")
-      val retired = new Path(s"$warehouseDir/._agg.old")
-      deleteRecursively(staging)
-      deleteRecursively(retired)
-      merged.coalesce(1).write.parquet(new Path(staging, "data").toString)
-      StateFs.writeString(fs, new Path(staging, "batchid"), batchId.toString)
-      if (fs.exists(aggDir))
-        StateFs.renameInto(fs, aggDir, retired)
-      StateFs.renameInto(fs, staging, aggDir)
-      deleteRecursively(retired)
-    }
-
-  /** The live aggregate's raw data, protocol-resolved. */
-  private def aggData(): Option[DataFrame] =
-    if (manifestMode)
-      aggManifest.live().flatMap(_._2.get("data")).map(rel =>
-        spark.read.parquet(aggManifest.dataPath(rel).toString))
-    else if (fs.exists(new Path(aggDir, "data")))
-      Some(spark.read.parquet(new Path(aggDir, "data").toString))
-    else None
-
-  private def appliedAggBatch(): Long =
-    if (manifestMode) aggManifest.live().map(_._1).getOrElse(-1L)
-    else {
-      val f = new Path(aggDir, "batchid")
-      if (fs.exists(f)) StateFs.readString(fs, f).trim.toLong else -1L
-    }
-
-  /** The live `(grp, value)` rows a maintained aggregate is built from. */
-  private def aggRows(spec: StreamIngest.AggSpec, df: DataFrame): DataFrame =
-    df.where(!col("deleted") && !col("id").startsWith("_design"))
-      .select(get_json_object(col("doc"), spec.groupPath).as("grp"),
-        get_json_object(col("doc"), spec.valuePath).cast("double").as("value"))
-      .where(col("grp").isNotNull)
-
-  /** Enabling `maintainAgg` on a warehouse that ALREADY has state must not
-    * start the aggregate from empty — docs never touched by later batches
-    * would never be counted. One-off bootstrap: recompute the aggregate
-    * from the live state ([[IncrementalAgg.recompute]]) and land it with
-    * marker batchId -1, so every subsequent micro-batch applies on top.
-    * Runs once (a live aggregate skips it) and commits through the same
-    * crash-safe [[commitAgg]] path [[updateAgg]] uses.
-    */
-  private def bootstrapAggIfNeeded(): Unit = maintainAgg.foreach { spec =>
-    val aggAbsent =
-      if (manifestMode) aggManifest.live().isEmpty else !fs.exists(aggDir)
-    if (aggAbsent) existingState().foreach { st =>
-      commitAgg(IncrementalAgg.recompute(aggRows(spec, st), "grp", "value"), -1L)
-    }
-  }
-
   /** The warehouse's OWN outbound change feed from persisted state — the
     * CouchDB `_changes` contract re-exposed for downstream incremental
     * consumers: latest change per id with `seqNum > since`, tombstones
@@ -377,10 +252,6 @@ final class StreamIngest(
         "changesSince before any ingested state"))
       .where(col("seqNum") > since)
       .select("id", "seqNum", "deleted", "doc")
-
-  /** The maintained aggregate as `(grp, n, total)`, when configured. */
-  def maintainedAgg: Option[DataFrame] =
-    aggData().map(IncrementalAgg.finish(_, "grp"))
 
   /** Publish the merged (touched-bucket-only) state via a staging write +
     * per-bucket atomic renames, instead of dynamically overwriting the
@@ -396,12 +267,11 @@ final class StreamIngest(
       // a REPLAYED batch (at-least-once delivery after a crash between
       // the manifest commit and the stream's offset commit) finds its
       // own version already live: the committed state ALREADY reflects
-      // it (the LWW merge is deterministic), so skip — the exactly-once
-      // twin of updateAgg's marker skip. Re-committing would delete and
-      // re-point the one manifest readers are on for no new content. A
-      // batchId further back than the replay margin is a RESET streaming
-      // checkpoint whose low ids carry genuinely NEW changes — skipping
-      // those would silently drop data, so it fails loudly like the agg.
+      // it (the LWW merge is deterministic), so skip. Re-committing would
+      // delete and re-point the one manifest readers are on for no new
+      // content. A batchId further back than the replay margin is a RESET
+      // streaming checkpoint whose low ids carry genuinely NEW changes —
+      // skipping those would silently drop data, so it fails loudly.
       if (!StateFs.alreadyApplied(spark, batchId, live.map(_._1).getOrElse(-1L),
           "state", "The streaming checkpoint was likely reset against an " +
             s"existing warehouse. Delete $versRoot to rebuild from the " +
@@ -417,8 +287,7 @@ final class StreamIngest(
         val dirName = s"b$batchId-${System.nanoTime()}"
         state.write.mode("overwrite").partitionBy("_bucket")
           .parquet(stateManifest.dataPath(dirName).toString)
-        if (!fs.exists(bucketMeta))
-          StateFs.writeString(fs, bucketMeta, stateBuckets.toString)
+        commitBucketMeta()
         val touchedKeys = StateFs.listNames(fs, stateManifest.dataPath(dirName))
           .filter(_.startsWith("_bucket="))
           .map(n => n.stripPrefix("_bucket=") -> s"$dirName/$n")
@@ -430,8 +299,7 @@ final class StreamIngest(
       deleteRecursively(staging)
       state.write.mode("overwrite").partitionBy("_bucket").parquet(staging.toString)
       fs.mkdirs(root)
-      if (!fs.exists(bucketMeta))
-        StateFs.writeString(fs, bucketMeta, stateBuckets.toString)
+      commitBucketMeta()
       StateFs.listNames(fs, staging).foreach { name =>
         if (name.startsWith("_bucket=")) {
           // the retired name starts with '.', so Spark's file listing never
@@ -463,14 +331,6 @@ final class StreamIngest(
       }
     }
     deleteRecursively(new Path(s"$warehouseDir/_state_staging"))
-    // agg swap recovery: a retired agg whose replacement never landed is
-    // restored; leftover staging from an incomplete build is dropped
-    val aggRetired = new Path(s"$warehouseDir/._agg.old")
-    if (fs.exists(aggRetired)) {
-      if (fs.exists(aggDir)) deleteRecursively(aggRetired)
-      else StateFs.renameInto(fs, aggRetired, aggDir)
-    }
-    deleteRecursively(new Path(s"$warehouseDir/_agg_staging"))
   }
 
   private def deleteRecursively(p: Path): Unit =
@@ -645,11 +505,6 @@ object StreamIngest {
   /** A micro-batch's touched buckets, highest seq and live docTypes. */
   private final case class BatchMeta(buckets: Set[Int], maxSeq: Option[Long],
                                      types: Set[String])
-
-  /** JSON paths (get_json_object syntax, e.g. `$.type` / `$.amount`)
-    * naming the doc fields the maintained aggregate groups and sums by.
-    */
-  final case class AggSpec(groupPath: String, valuePath: String)
 
   /** Recursive delete over LOCAL java.nio paths (no-op when absent) —
     * only the CLI `--reset` still uses it (its target is the launching

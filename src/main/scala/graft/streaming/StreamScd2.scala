@@ -7,10 +7,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous SCD2 dimension maintenance — the streaming twin of
-  * [[graft.ops.Scd2.applyCdc]], completing the temporal family's
-  * batch/stream pairing (intervals → [[StreamIntervals]], sessions →
-  * [[EventStream]], aggregates → [[IncrementalAgg]]). The reference's
-  * monitor mode implies continuously maintained dimensions (every
+  * [[graft.ops.Scd2.applyCdc]]. The reference's monitor mode implies continuously maintained dimensions (every
   * upsert of a doc id opens a new version and closes the previous one,
   * `index.js:143-170`); batch `applyCdc` proves apply ≡ full rebuild
   * once, this class keeps that equality true UNDER A STREAM of version

@@ -86,29 +86,6 @@ object Demo {
     println("ASOF_MATCHED=" + graft.ops.AsOfJoin.asOf(ev, ord,
       "user_id", "o_custkey", "ts", "ots", Seq("o_orderkey"), "o_orderkey").count())
 
-    // Round 11: continuous SCD2 maintenance — two micro-batches of the
-    // event stream as version batches, with the data-driven auto escape
-    // on; the maintained dimension must hold exactly one open row per
-    // entity and as many rows as versions seen
-    val scd2Dir = java.nio.file.Files.createTempDirectory("demo-scd2").toString
-    val sscd = new graft.streaming.StreamScd2(spark, scd2Dir,
-      timeShards = 4, autoThreshold = 30L)
-    val (h1, h2) = (ev.where(col("event_id") % 2 === 0), ev.where(col("event_id") % 2 === 1))
-    sscd.applyBatch(h1, 0L)
-    sscd.applyBatch(h2, 1L)
-    sscd.applyBatch(h2, 1L) // at-least-once replay must be absorbed
-    val dim = sscd.dim().get
-    println(s"STREAM_SCD2=${dim.count()} open=" +
-      dim.where(col("is_current")).count())
-    // Round 12: point-in-time-correct enrichment against the LIVE
-    // dimension — every event joins the version valid at its own
-    // timestamp, so every event must match (its own version at least)
-    // with version <= its entity's total count
-    val looked = sscd.lookup(ev.select(col("event_id").as("eid"),
-      col("user_id"), col("ts"))).get
-    println(s"SCD2_LOOKUP=${looked.where(col("version").isNotNull).count()}" +
-      s"/${looked.count()}")
-
     // Flow 7 (round 5): curation pipeline, systematic PPS sample, and a
     // persistent IVF index searched with partition pruning
     val curated = graft.TrainingQueries.curate(docs)

@@ -55,38 +55,6 @@ class CountMinSpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
-  test("streaming sketch maintenance: exactly-once under replay, restart, reset") {
-    import graft.streaming.SketchMaintenance
-    val dir = java.nio.file.Files.createTempDirectory("cms-maint").toString
-    val sm = new SketchMaintenance(dir, "k", depth = 4, width = 64)
-    assert(sm.estimate(7L) == 0L, "empty sketch estimates zero")
-
-    def batch(vs: Long*) = vs.toDF("k")
-    sm.applyBatch(batch(7L, 7L, 8L), 0L)
-    sm.applyBatch(batch(7L, 9L), 1L)
-    assert(sm.estimate(7L) >= 3L)
-    val before = sm.sketch().get.toSeq
-
-    // replayed batch: the merge is NOT idempotent, the marker must skip it
-    sm.applyBatch(batch(7L, 9L), 1L)
-    assert(sm.sketch().get.toSeq == before, "replay must not double-count")
-
-    // restart: a new instance reads the persisted sketch
-    val sm2 = new SketchMaintenance(dir, "k", depth = 4, width = 64)
-    assert(sm2.sketch().get.toSeq == before)
-    sm2.applyBatch(batch(7L), 2L)
-    assert(sm2.estimate(7L) >= 4L)
-
-    // reset checkpoint (batchId far behind the marker) fails loudly
-    val e = intercept[IllegalStateException] { sm2.applyBatch(batch(1L), 0L) }
-    assert(e.getMessage.contains("batchId went backwards"))
-
-    // mismatched dimensions are rejected, not silently merged
-    intercept[IllegalArgumentException] {
-      new SketchMaintenance(dir, "k", depth = 2, width = 32).sketch()
-    }
-  }
-
   test("nulls are ignored; an unseen key estimates only collision mass") {
     val df = Seq(Some(1L), None, Some(1L), None).toDF("v")
     val sk = df.agg(CountMinSketchAgg(col("v"), 4, 64).as("sk"))

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import java.nio.file.Files
 
 /** The `graft.state.protocol=manifest` commit path: the whole bucketed
-  * ingest (state buckets + maintained aggregate) running on a filesystem
+  * ingest running on a filesystem
   * whose DIRECTORY renames fail ([[NoRenameFileSystem]] — the
   * object-store simulation), plus the crash windows the manifest layout
   * claims to close and the protocol guard that keeps the two layouts
@@ -34,31 +34,23 @@ class ManifestProtocolSpec extends SparkSpec {
     try body finally spark.conf.unset("graft.state.protocol")
   }
 
-  test("e2e on a no-directory-rename FS: merge, delete, agg, replay, restart") {
+  test("e2e on a no-directory-rename FS: merge, delete, replay, restart") {
     withManifest {
       val wh = noRenameDir("manifest-wh")
-      val spec = StreamIngest.AggSpec("$.type", "$.amount")
-      val ingest = new StreamIngest(spark,
-        WarehouseOptions(database = "mdb"), wh, maintainAgg = Some(spec))
-      def agg(i: StreamIngest): Map[String, (Long, Double)] =
-        i.maintainedAgg.get.collect()
-          .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
+      val ingest = new StreamIngest(spark, WarehouseOptions(database = "mdb"), wh)
 
       ingest.applyBatch(mk(Seq(
         change(1, "a", """{"_id":"a","_rev":"1","type":"x","amount":10.5}"""),
         change(2, "b", """{"_id":"b","_rev":"1","type":"x","amount":2.25}"""),
         change(3, "c", """{"_id":"c","_rev":"1","type":"y","amount":4.0}"""))), 0L)
-      assert(agg(ingest) == Map("x" -> (2L, 12.75), "y" -> (1L, 4.0)))
 
       val b1 = Seq(
         change(4, "b", """{"_id":"b","_rev":"2","type":"y","amount":2.25}"""),
         deletion(5, "c"))
       ingest.applyBatch(mk(b1), 1L)
-      assert(agg(ingest) == Map("x" -> (1L, 10.5), "y" -> (1L, 2.25)))
 
-      // replay of an applied batch: agg marker skips, state LWW-collapses
+      // replay of an applied batch: the manifest version skips it
       ingest.applyBatch(mk(b1), 1L)
-      assert(agg(ingest) == Map("x" -> (1L, 10.5), "y" -> (1L, 2.25)))
 
       // outbound feed sees the tombstone; publish sees live rows only
       val all = ingest.changesSince(0L).orderBy("id").collect()
@@ -67,10 +59,8 @@ class ManifestProtocolSpec extends SparkSpec {
       ingest.publish()
       assert(spark.sql("SELECT COUNT(*) FROM mdb").collect()(0).getLong(0) == 2L)
 
-      // a restarted instance reads the same state and aggregate
-      val again = new StreamIngest(spark,
-        WarehouseOptions(database = "mdb"), wh, maintainAgg = Some(spec))
-      assert(agg(again) == Map("x" -> (1L, 10.5), "y" -> (1L, 2.25)))
+      // a restarted instance reads the same state
+      val again = new StreamIngest(spark, WarehouseOptions(database = "mdb"), wh)
       again.publish()
       assert(spark.sql("SELECT COUNT(*) FROM mdb").collect()(0).getLong(0) == 2L)
     }
@@ -197,8 +187,8 @@ class ManifestProtocolSpec extends SparkSpec {
       ingest.applyBatch(mk(b), 0L)
       assert(names() == before,
         "a replayed batch must not rewrite state or re-commit the manifest")
-      // a batchId behind the margin (reset checkpoint) fails loudly even
-      // WITHOUT a maintained aggregate: its low ids carry NEW changes
+      // a batchId behind the margin (reset checkpoint) fails loudly: its
+      // low ids carry NEW changes
       ingest.applyBatch(mk(Seq(
         change(2, "b", """{"_id":"b","_rev":"1","v":2}"""))), 1L)
       val e = intercept[IllegalStateException] {
@@ -235,20 +225,5 @@ class ManifestProtocolSpec extends SparkSpec {
         "s3a://" + Files.createTempDirectory("s3a-tbl").resolve("t").toString)
     }
     assert(e2.getMessage.contains("copy+delete"))
-  }
-
-  test("agg batchId-backwards guard holds under the manifest protocol too") {
-    withManifest {
-      val wh = noRenameDir("guard3-wh")
-      val ingest = new StreamIngest(spark, WarehouseOptions(database = "g3db"), wh,
-        maintainAgg = Some(StreamIngest.AggSpec("$.type", "$.amount")))
-      ingest.applyBatch(mk(Seq(
-        change(1, "a", """{"_id":"a","_rev":"1","type":"x","amount":1.0}"""))), 4L)
-      val e = intercept[IllegalStateException] {
-        ingest.applyBatch(mk(Seq(
-          change(2, "b", """{"_id":"b","_rev":"1","type":"x","amount":1.0}"""))), 0L)
-      }
-      assert(e.getMessage.contains("batchId went backwards"))
-    }
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.util.Progressable
 import java.net.URI
+import java.util.concurrent.atomic.AtomicBoolean
 
 /** A local filesystem that REFUSES directory renames — the object-store
   * simulation ManifestProtocolSpec runs the ingest against. S3A/GCS
@@ -41,4 +43,31 @@ class NoRenameFileSystem extends RawLocalFileSystem {
         s"directory rename refused (object-store simulation): $src -> $dst")
     super.rename(src, dst)
   }
+}
+
+/** A local filesystem that, once armed, tears the next `create` of a
+  * `_state_buckets` file: the file is created (an overwrite truncates
+  * it) and the write then fails before a byte lands — a crash in the
+  * middle of a small-file overwrite. Arming is one-shot, so the restart
+  * after the simulated crash writes normally.
+  */
+class TornWriteFileSystem extends RawLocalFileSystem {
+  override def getScheme: String = "tornwrite"
+  override def getUri: URI = URI.create("tornwrite:///")
+
+  // the overload `FileSystem.create(path, overwrite)` reaches here
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    val out = super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    if (f.getName.contains("_state_buckets") && TornWriteFileSystem.armed.getAndSet(false)) {
+      out.close()
+      throw new java.io.IOException(s"torn write (crash simulation): $f")
+    }
+    out
+  }
+}
+
+object TornWriteFileSystem {
+  val armed = new AtomicBoolean(false)
 }

@@ -84,43 +84,6 @@ class QuantileSketchSpec extends SparkSpec {
     assert(back.toArray.toSeq == sk.toArray.toSeq)
   }
 
-  test("streaming maintenance: exactly-once under replay, restart, reset; bound survives") {
-    import graft.streaming.QuantileMaintenance
-    val dir = java.nio.file.Files.createTempDirectory("q-maint").toString
-    val qm = new QuantileMaintenance(dir, "v", k = 64)
-    assert(qm.quantile(0.5).isEmpty, "empty maintenance has no quantile")
-
-    def batch(range: Range) = range.map(_.toDouble).toDF("v")
-    qm.applyBatch(batch(1 to 4000), 0L)
-    qm.applyBatch(batch(4001 to 10000), 1L)
-    val before = qm.sketch().get.toArray.toSeq
-
-    // replay must not double-count mass
-    qm.applyBatch(batch(4001 to 10000), 1L)
-    assert(qm.sketch().get.toArray.toSeq == before)
-    assert(qm.sketch().get.n == 10000)
-
-    // restart: a new instance reads persisted state and keeps merging
-    val qm2 = new QuantileMaintenance(dir, "v", k = 64)
-    assert(qm2.sketch().get.toArray.toSeq == before)
-    qm2.applyBatch(batch(10001 to 12000), 2L)
-    assert(qm2.sketch().get.n == 12000)
-
-    // the certified contract holds on the maintained sketch
-    val bound = qm2.bound().get
-    val sorted = (1 to 12000).map(_.toDouble)
-    for (p <- Seq(0.25, 0.5, 0.9)) {
-      val est = qm2.quantile(p).get
-      val target = math.ceil(p * 12000).toLong
-      assert(math.abs(rankOf(sorted, est) - target) <= bound,
-        s"p=$p maintained estimate outside certified bound $bound")
-    }
-
-    // reset checkpoint fails loudly
-    val e = intercept[IllegalStateException] { qm2.applyBatch(batch(1 to 5), 0L) }
-    assert(e.getMessage.contains("batchId went backwards"))
-  }
-
   test("aggregate end-to-end over a DataFrame with groups") {
     val df = (1 to 30000).map(i => (if (i % 2 == 0) "even" else "odd", i.toDouble))
       .toDF("g", "v").repartition(8)

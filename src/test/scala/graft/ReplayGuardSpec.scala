@@ -1,12 +1,12 @@
 package graft
 
 import graft.model.ChangeFeed
-import graft.streaming.{DriftMaintenance, QuantileMaintenance, SketchMaintenance,
-  StreamIngest, StreamScd2}
+import graft.streaming.{StreamIngest, StreamScd2}
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
-/** The replay policy every exactly-once state owner shares
+/** The replay policy of the exactly-once state owners, the dimension of
+  * `StreamScd2` and the manifest-protocol state of `StreamIngest`
   * (`StateFs.alreadyApplied`), held owner by owner: a re-delivered batch
   * id within `graft.agg.replayMargin` of the applied marker is skipped
   * with the state untouched, one further behind (a reset streaming
@@ -45,35 +45,12 @@ class ReplayGuardSpec extends SparkSpec {
   }
 
   private val owners: Seq[(String, () => Owner)] = Seq(
-    "SketchMaintenance" -> { () =>
-      val dir = Files.createTempDirectory("rg-sketch")
-      val sm = new SketchMaintenance(dir.toString, "k", depth = 4, width = 64)
-      owner("sketch", dir)(sm.applyBatch(Seq(7L, 8L, 7L).toDF("k"), _))
-    },
-    "DriftMaintenance" -> { () =>
-      val dir = Files.createTempDirectory("rg-drift")
-      val dm = new DriftMaintenance(dir.toString, buckets = 64)
-      val batch = Seq((1L, "alpha beta gamma", "wiki"), (2L, "spam click buy", "web"))
-        .toDF("doc_id", "text", "source")
-      owner("drift", dir)(dm.applyBatch(batch, _))
-    },
-    "QuantileMaintenance" -> { () =>
-      val dir = Files.createTempDirectory("rg-quantile")
-      val qm = new QuantileMaintenance(dir.toString, "v", k = 64)
-      owner("quantile-sketch", dir)(qm.applyBatch((1 to 500).map(_.toDouble).toDF("v"), _))
-    },
     "StreamScd2" -> { () =>
       val dir = Files.createTempDirectory("rg-scd2")
       val s = new StreamScd2(spark, dir.toString)
       val versions = Seq((1L, 1L, 100L), (1L, 2L, 200L), (2L, 3L, 150L))
         .toDF("user_id", "event_id", "ts")
       owner("dimension", dir)(s.applyBatch(versions, _))
-    },
-    "StreamIngest maintained aggregate" -> { () =>
-      val wh = Files.createTempDirectory("rg-agg")
-      val ingest = new StreamIngest(spark, WarehouseOptions(database = "rgaggdb"),
-        wh.toString, maintainAgg = Some(StreamIngest.AggSpec("$.type", "$.amount")))
-      owner("maintained-aggregate", wh.resolve("_agg"))(ingest.applyBatch(feed, _))
     },
     "StreamIngest manifest state" -> { () =>
       val wh = Files.createTempDirectory("rg-manifest")

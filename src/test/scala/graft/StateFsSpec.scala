@@ -4,7 +4,7 @@ import graft.streaming.StateFs
 import org.apache.hadoop.fs.Path
 
 /** Crash-window contracts of the shared streaming-state plumbing: every
-  * guarantee the maintainers lean on, pinned at the StateFs level so a
+  * guarantee the streaming state leans on, pinned at the StateFs level so a
   * refactor that weakens one fails here with the mechanism named.
   */
 class StateFsSpec extends SparkSpec {
@@ -13,7 +13,7 @@ class StateFsSpec extends SparkSpec {
     new Path(java.nio.file.Files.createTempDirectory(tag).toString)
 
   private val fs = new Path(System.getProperty("java.io.tmpdir"))
-    .getFileSystem(StateFs.activeHadoopConf())
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   test("versioned state: roundtrip, newest wins, commit sweeps retired versions") {
     val dir = freshDir("statefs-v")

@@ -125,96 +125,22 @@ class StreamIngestSpec extends SparkSpec {
     assert(spark.sql("SELECT COUNT(*) FROM bdb").collect()(0).getLong(0) == 40L)
   }
 
-  test("maintained aggregate follows upserts, group moves, deletes; replay is a no-op") {
-    val wh = tempDir("agg-wh")
-    val spec = StreamIngest.AggSpec("$.type", "$.amount")
-    val ingest = new StreamIngest(spark, WarehouseOptions(database = "adb"), wh,
-      maintainAgg = Some(spec))
-    val mk = (rows: Seq[String]) => ChangeFeed.fromLines(
-      { import spark.implicits._; rows.toDF("value") }, "value")
-
-    def agg(): Map[String, (Long, Double)] =
-      ingest.maintainedAgg.get.collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
-
-    ingest.applyBatch(mk(Seq(
-      change(1, "a", """{"_id":"a","_rev":"1","type":"x","amount":10.5}"""),
-      change(2, "b", """{"_id":"b","_rev":"1","type":"x","amount":2.25}"""),
-      change(3, "c", """{"_id":"c","_rev":"1","type":"y","amount":4.0}"""))), 0L)
-    assert(agg() == Map("x" -> (2L, 12.75), "y" -> (1L, 4.0)))
-
-    // update a's amount, MOVE b to group y, delete c (group y empties then refills)
-    val b2 = Seq(
-      change(4, "a", """{"_id":"a","_rev":"2","type":"x","amount":100.0}"""),
-      change(5, "b", """{"_id":"b","_rev":"2","type":"y","amount":2.25}"""),
-      deletion(6, "c"))
-    ingest.applyBatch(mk(b2), 1L)
-    assert(agg() == Map("x" -> (1L, 100.0), "y" -> (1L, 2.25)))
-
-    // crash-replay of the SAME batch id: the marker skips the delta
-    ingest.applyBatch(mk(b2), 1L)
-    assert(agg() == Map("x" -> (1L, 100.0), "y" -> (1L, 2.25)))
-
-    // and the maintained table equals a recompute over the live docs
-    ingest.publish()
-    val truth = spark.sql(
-      "SELECT type, COUNT(*) n, SUM(amount) total FROM adb GROUP BY type")
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(agg() == truth)
-
-    // a restarted instance sees the same aggregate (directory state only)
-    val ingest2 = new StreamIngest(spark, WarehouseOptions(database = "adb"), wh,
-      maintainAgg = Some(spec))
-    val again = ingest2.maintainedAgg.get.collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(again == truth)
-  }
-
-  test("enabling maintainAgg on an existing warehouse bootstraps from live state") {
-    val wh = tempDir("boot-wh")
-    val mk = (rows: Seq[String]) => ChangeFeed.fromLines(
-      { import spark.implicits._; rows.toDF("value") }, "value")
-    // build state WITHOUT a maintained aggregate
-    val plain = new StreamIngest(spark, WarehouseOptions(database = "bootdb"), wh)
-    plain.applyBatch(mk(Seq(
-      change(1, "a", """{"_id":"a","_rev":"1","type":"x","amount":10.0}"""),
-      change(2, "b", """{"_id":"b","_rev":"1","type":"y","amount":3.0}"""),
-      change(3, "c", """{"_id":"c","_rev":"1","type":"x","amount":2.5}"""))), 0L)
-
-    // turning the aggregate on later must count a/b/c even though no
-    // future batch ever touches them
-    val spec = StreamIngest.AggSpec("$.type", "$.amount")
-    val agged = new StreamIngest(spark, WarehouseOptions(database = "bootdb"), wh,
-      maintainAgg = Some(spec))
-    def agg(i: StreamIngest): Map[String, (Long, Double)] =
-      i.maintainedAgg.get.collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(agg(agged) == Map("x" -> (2L, 12.5), "y" -> (1L, 3.0)))
-
-    // and deltas apply on top of the bootstrap (batchIds restart at 0 —
-    // the bootstrap marker is -1, so batch 0 is not skipped)
-    agged.applyBatch(mk(Seq(
-      change(4, "d", """{"_id":"d","_rev":"1","type":"y","amount":1.0}"""))), 0L)
-    assert(agg(agged) == Map("x" -> (2L, 12.5), "y" -> (2L, 4.0)))
-  }
-
-  test("a batchId behind the applied marker by more than the replay margin fails loudly") {
+  test("rename layout: a reset checkpoint's low batchIds still land") {
     val wh = tempDir("backwards-wh")
     val mk = (rows: Seq[String]) => ChangeFeed.fromLines(
       { import spark.implicits._; rows.toDF("value") }, "value")
-    val ingest = new StreamIngest(spark, WarehouseOptions(database = "bwdb"), wh,
-      maintainAgg = Some(StreamIngest.AggSpec("$.type", "$.amount")))
+    val ingest = new StreamIngest(spark, WarehouseOptions(database = "bwdb"), wh)
     ingest.applyBatch(mk(Seq(
-      change(1, "a", """{"_id":"a","_rev":"1","type":"x","amount":1.0}"""))), 4L)
-    // replay of the marker batch itself: legitimate, a silent no-op
+      change(1, "a", """{"_id":"a","_rev":"1","v":1}"""))), 4L)
+    // a reset streaming checkpoint restarts batchIds at 0: the rename
+    // layout keeps no batch marker (its LWW merge is idempotent), so the
+    // new change lands instead of being skipped as a replay
     ingest.applyBatch(mk(Seq(
-      change(1, "a", """{"_id":"a","_rev":"1","type":"x","amount":1.0}"""))), 4L)
-    // a reset checkpoint restarts batchIds at 0: must not silently freeze
-    val e = intercept[IllegalStateException] {
-      ingest.applyBatch(mk(Seq(
-        change(2, "b", """{"_id":"b","_rev":"1","type":"x","amount":1.0}"""))), 0L)
-    }
-    assert(e.getMessage.contains("batchId went backwards"))
+      change(2, "b", """{"_id":"b","_rev":"1","v":2}"""))), 0L)
+    ingest.publish()
+    val ids = spark.sql("SELECT id FROM bwdb ORDER BY id").collect().map(_.getString(0))
+    assert(ids.toSeq == Seq("a", "b"))
+    assert(ingest.checkpoint == 2L)
   }
 
   test("state-backed outbound change feed: tombstones included, resumable") {
@@ -292,6 +218,30 @@ class StreamIngestSpec extends SparkSpec {
       }
       assert(e.getMessage.contains("bucket"))
     } finally spark.conf.unset("graft.state.buckets")
+  }
+
+  test("a torn _state_buckets write does not wedge the warehouse") {
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.tornwrite.impl", classOf[TornWriteFileSystem].getName)
+    val wh = "tornwrite://" + tempDir("torn-wh")
+    val mk = (rows: Seq[String]) => ChangeFeed.fromLines(
+      { import spark.implicits._; rows.toDF("value") }, "value")
+    val batch = Seq(change(1, "a", """{"_id":"a","_rev":"1","v":1}"""))
+    TornWriteFileSystem.armed.set(true)
+    // the crash: the first bucket write dies while writing the marker
+    intercept[java.io.IOException] {
+      new StreamIngest(spark, WarehouseOptions(database = "torndb"), wh)
+        .applyBatch(mk(batch), 0L)
+    }
+    assert(!TornWriteFileSystem.armed.get, "the marker write was never attempted")
+    // the restart constructs, the replayed batch lands, the marker reads
+    val restarted = new StreamIngest(spark, WarehouseOptions(database = "torndb"), wh)
+    restarted.applyBatch(mk(batch), 0L)
+    restarted.publish()
+    assert(spark.sql("SELECT COUNT(*) FROM torndb").collect()(0).getLong(0) == 1L)
+    val marker = new org.apache.hadoop.fs.Path(s"$wh/_state_buckets")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(graft.streaming.StateFs.readString(fs, marker).trim == "64")
   }
 
   test("graft.state.buckets must be a positive integer, checked before any state is touched") {
