@@ -8,11 +8,11 @@ import org.apache.spark.sql.SparkSession
   * end-to-end flow a couchwarehouse user runs
   * (reference README.md:28-67, 205-226).
   *
-  * Run: `sbt "runMain graft.tools.Demo /root/reference/test"`
+  * Run: `sbt "runMain graft.tools.Demo src/test/resources/couch"`
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val fixtures = args.headOption.getOrElse("/root/reference/test")
+    val fixtures = args.headOption.getOrElse("src/test/resources/couch")
     val spark = SparkSession.builder()
       .master("local[4]")
       .appName("graft-demo")

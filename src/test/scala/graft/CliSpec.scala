@@ -1,6 +1,5 @@
 package graft
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import graft.tools.CouchWarehouseCli
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
@@ -12,12 +11,10 @@ import scala.jdk.CollectionConverters._
   */
 class CliSpec extends SparkSpec {
 
+  private val feed = CouchFixtures.path("samplechanges.txt")
+
   test("CLI: --url spools over HTTP, builds the warehouse, exports to Elasticsearch") {
-    val mapper = new ObjectMapper()
-    val sampleChanges = mapper
-      .readTree(new java.io.File("/root/reference/test/samplechanges.txt"))
-      .get("results").elements().asScala.toSeq
-    val couch = new FakeHttp.FakeCouch(sampleChanges)
+    val couch = new FakeHttp.FakeCouch(CouchFixtures.results)
     val es = new FakeHttp.FakeEs
     val spool = Files.createTempDirectory("cli-spool").toString
     try {
@@ -45,11 +42,7 @@ class CliSpec extends SparkSpec {
   test("CLI: COUCH_URL + COUCH_DATABASE env vars drive a flagless run") {
     // reference bin/couchwarehouse.bin.js:4-5 — both settings come from
     // the environment; no --url/--database flags at all.
-    val mapper = new ObjectMapper()
-    val sampleChanges = mapper
-      .readTree(new java.io.File("/root/reference/test/samplechanges.txt"))
-      .get("results").elements().asScala.toSeq
-    val couch = new FakeHttp.FakeCouch(sampleChanges)
+    val couch = new FakeHttp.FakeCouch(CouchFixtures.results)
     val spool = Files.createTempDirectory("cli-env-spool").toString
     val saved = CouchWarehouseCli.env
     try {
@@ -62,7 +55,7 @@ class CliSpec extends SparkSpec {
         "warehouse built for the env-named database")
       // an explicit --feed must not be shadowed by a lingering COUCH_URL
       CouchWarehouseCli.main(Array(
-        "--feed", "/root/reference/test/samplechanges.txt",
+        "--feed", feed,
         "--database", "cli_env_feed"))
       assert(spark.sql("SELECT COUNT(*) FROM cli_env_feed")
         .collect()(0).getLong(0) == 99L)
@@ -72,7 +65,7 @@ class CliSpec extends SparkSpec {
   test("CLI: --transform loads a Hook reflectively and composes with --drop-fields") {
     spark // reuse (and keep) the shared session
     CouchWarehouseCli.main(Array(
-      "--feed", "/root/reference/test/samplechanges.txt",
+      "--feed", feed,
       "--database", "cli_tf",
       "--transform", "graft.CliTestTransform",
       "--drop-fields", "verified"))
@@ -89,27 +82,27 @@ class CliSpec extends SparkSpec {
     // a class that is not a Hook fails with a clear message, not an exit
     val e = intercept[IllegalArgumentException] {
       CouchWarehouseCli.main(Array(
-        "--feed", "/root/reference/test/samplechanges.txt",
+        "--feed", feed,
         "--database", "cli_bad", "--transform", "java.lang.StringBuilder"))
     }
     assert(e.getMessage.contains("does not implement"))
     // a Function1 of the WRONG element type is caught despite erasure
     val e2 = intercept[IllegalArgumentException] {
       CouchWarehouseCli.main(Array(
-        "--feed", "/root/reference/test/samplechanges.txt",
+        "--feed", feed,
         "--database", "cli_bad", "--transform", "graft.CliBadTransform"))
     }
     assert(e2.getMessage.contains("does not implement"))
     val e3 = intercept[IllegalArgumentException] {
       CouchWarehouseCli.main(Array(
-        "--feed", "/root/reference/test/samplechanges.txt",
+        "--feed", feed,
         "--database", "cli_bad", "--transform", "graft.CliWrongReturnTransform"))
     }
     assert(e3.getMessage.contains("does not implement"),
       "a DataFrame => Long must be rejected despite the Dataset parameter")
     intercept[ClassNotFoundException] {
       CouchWarehouseCli.main(Array(
-        "--feed", "/root/reference/test/samplechanges.txt",
+        "--feed", feed,
         "--database", "cli_bad", "--transform", "no.such.Hook"))
     }
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 class CouchSourceSpec extends SparkSpec {
 
-  val feed = "/root/reference/test/samplechanges.txt"
+  val feed = CouchFixtures.path("samplechanges.txt")
 
   def read = spark.read.format("couch-changes").load(feed)
 

@@ -27,7 +27,7 @@ class JdbcUpsertSinkSpec extends SparkSpec {
   test("e2e: samplechanges feed -> JDBC target holds the 99 golden rows " +
        "and the checkpoint row") {
     val url = derbyUrl("e2e")
-    val w = Warehouse.start(spark, "/root/reference/test/samplechanges.txt",
+    val w = Warehouse.start(spark, CouchFixtures.path("samplechanges.txt"),
       WarehouseOptions(database = "sampledata"))
     w.exportJdbc("sampledata", url, "sampledata")
     val rows = queryAll(url, "SELECT COUNT(*) FROM sampledata")

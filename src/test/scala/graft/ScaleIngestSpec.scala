@@ -20,7 +20,7 @@ class ScaleIngestSpec extends SparkSpec {
 
   /** Synthetic feed: one create per doc; every 10th doc later re-written
     * with bumped value (rev 2); every 100th doc deleted last. CouchDB
-    * wire shape matches /root/reference/test/samplechanges.txt.
+    * wire shape matches the `couch/samplechanges.txt` fixture.
     */
   private lazy val feed: Seq[com.fasterxml.jackson.databind.JsonNode] = {
     var seq = 0

@@ -15,14 +15,11 @@ import scala.jdk.CollectionConverters._
 class SpoolerEsSinkSpec extends SparkSpec {
 
   private val mapper = new ObjectMapper()
-  private val fixtures = "/root/reference/test"
 
   private def tempDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  private lazy val sampleChanges: Seq[JsonNode] =
-    mapper.readTree(new java.io.File(s"$fixtures/samplechanges.txt"))
-      .get("results").elements().asScala.toSeq
+  private lazy val sampleChanges: Seq[JsonNode] = CouchFixtures.results
 
   test("spooler: pages the full feed into chunks; warehouse replays to the 99 golden rows") {
     val couch = new FakeHttp.FakeCouch(sampleChanges)
@@ -149,7 +146,7 @@ class SpoolerEsSinkSpec extends SparkSpec {
   test("ES sink: warehouse export lands 99 docs, strips id/rev from source, checkpoints") {
     val es = new FakeHttp.FakeEs
     try {
-      val w = Warehouse.start(spark, s"$fixtures/samplechanges.txt",
+      val w = Warehouse.start(spark, CouchFixtures.path("samplechanges.txt"),
         WarehouseOptions(database = "sampledata"))
       w.exportElasticsearch("sampledata", es.url, "couchwarehouse")
       val docs = es.store.asScala.filter(_._1.startsWith("couchwarehouse/"))

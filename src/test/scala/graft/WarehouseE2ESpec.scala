@@ -12,19 +12,18 @@ import scala.jdk.CollectionConverters._
   *     10 user;
   *   - run_evolve.js: frozen schema → 30 rows, 10 with NULL
   *     dispatchCourierRef.
-  * Fixtures are read from the read-only reference checkout.
+  * The feeds and golden rows are the in-repo fixtures of [[CouchFixtures]].
   */
 class WarehouseE2ESpec extends SparkSpec {
 
-  val fixtures = "/root/reference/test"
   val mapper = new ObjectMapper()
 
   test("run.js parity: changes feed → 99 golden rows") {
-    val w = Warehouse.start(spark, s"$fixtures/samplechanges.txt",
+    val w = Warehouse.start(spark, CouchFixtures.path("samplechanges.txt"),
       WarehouseOptions(database = "sampledata"))
     val got = w.query("SELECT * FROM sampledata ORDER BY id").collect()
     val golden = mapper.readTree(
-      new java.io.File(s"$fixtures/samplequery.json"))
+      new java.io.File(CouchFixtures.path("samplequery.json")))
     assert(got.length == golden.size(), s"row count ${got.length} != ${golden.size()}")
 
     val cols = w.query("SELECT * FROM sampledata").columns
@@ -47,7 +46,7 @@ class WarehouseE2ESpec extends SparkSpec {
   }
 
   test("run_mixed.js parity: split mode counts 20/200/10") {
-    val w = Warehouse.start(spark, s"$fixtures/samplechanges2.txt",
+    val w = Warehouse.start(spark, CouchFixtures.path("samplechanges2.txt"),
       WarehouseOptions(database = "sampledata", split = Some("type")))
     assert(w.query("SELECT COUNT(*) as x FROM sampledata_product").collect()(0).getLong(0) == 20L)
     assert(w.query("SELECT COUNT(*) as x FROM sampledata_order").collect()(0).getLong(0) == 200L)
@@ -55,7 +54,7 @@ class WarehouseE2ESpec extends SparkSpec {
   }
 
   test("run_evolve.js parity: frozen schema, late fields NULL") {
-    val w = Warehouse.start(spark, s"$fixtures/samplechanges3.txt",
+    val w = Warehouse.start(spark, CouchFixtures.path("samplechanges3.txt"),
       WarehouseOptions(database = "sampledata"))
     assert(w.query("SELECT COUNT(*) as x FROM sampledata").collect()(0).getLong(0) == 30L)
     assert(w.query(
@@ -64,11 +63,11 @@ class WarehouseE2ESpec extends SparkSpec {
   }
 
   test("mango selector filters the feed (A4)") {
-    val w = Warehouse.start(spark, s"$fixtures/samplechanges.txt",
+    val w = Warehouse.start(spark, CouchFixtures.path("samplechanges.txt"),
       WarehouseOptions(database = "mangodb",
         mangoSelector = Some("""{"age":{"$gt":50}}""")))
     val n = w.query("SELECT COUNT(*) x FROM mangodb").collect()(0).getLong(0)
-    val all = Warehouse.start(spark, s"$fixtures/samplechanges.txt",
+    val all = Warehouse.start(spark, CouchFixtures.path("samplechanges.txt"),
       WarehouseOptions(database = "alldb"))
     val total = all.query("SELECT COUNT(*) x FROM alldb").collect()(0).getLong(0)
     assert(n > 0 && n < total)
@@ -76,15 +75,27 @@ class WarehouseE2ESpec extends SparkSpec {
   }
 
   test("transform hook applies before the warehouse lands (A5)") {
-    val w = Warehouse.start(spark, s"$fixtures/samplechanges.txt",
-      WarehouseOptions(database = "sampledata"))
-    // post-flatten Column-pipeline transform: upper-case the name
-    val t = w.query("SELECT UPPER(name) AS name, id FROM sampledata ORDER BY id LIMIT 1").collect()(0)
-    assert(t.getString(0) == t.getString(0).toUpperCase)
+    // a doc-level hook upper-cases `name` before flatten and compaction
+    val upper = Transform.jsonDocTransform { doc =>
+      val m = new ObjectMapper()
+      Option(doc).map(m.readTree) match {
+        case Some(o: com.fasterxml.jackson.databind.node.ObjectNode) if o.has("name") =>
+          m.writeValueAsString(o.put("name", o.get("name").asText.toUpperCase))
+        case _ => doc
+      }
+    }
+    val w = Warehouse.start(spark, CouchFixtures.path("samplechanges.txt"),
+      WarehouseOptions(database = "sampledata", transform = upper))
+    val id = "001g6v3h2hrgcP45xCdc343JmY4X0qHA"
+    val name = CouchFixtures.results.find(_.get("id").asText == id).get
+      .get("doc").get("name").asText
+    assert(name != name.toUpperCase, s"fixture name '$name' must be mixed case")
+    val landed = w.query(s"SELECT name FROM sampledata WHERE id = '$id'").collect()
+    assert(landed.map(_.getString(0)).toSeq == Seq(name.toUpperCase))
   }
 
   test("checkpoint tracks last applied seq (A13/A14)") {
-    val w = Warehouse.start(spark, s"$fixtures/samplechanges.txt",
+    val w = Warehouse.start(spark, CouchFixtures.path("samplechanges.txt"),
       WarehouseOptions(database = "sampledata"))
     assert(w.checkpoint == 104L)
   }
