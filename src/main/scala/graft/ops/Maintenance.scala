@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   * atomic on HDFS/POSIX; see [[graft.streaming.StateFs]] for the
   * object-store atomicity boundary (rename there is copy+delete — run
   * compaction against rename-capable storage, or commit via a manifest
-  * as [[graft.streaming.StateFs.ManifestDir]] does for streaming state).
+  * as [[graft.streaming.StreamIngest.ManifestDir]] does for streaming
+  * state).
   */
 object Maintenance {
 
@@ -32,8 +33,9 @@ object Maintenance {
     * directory, but the swap is two renames, so a concurrent read that
     * lists `dir` in the instant between them sees a MISSING directory and
     * fails with path-not-found — schedule compaction when no readers are
-    * active (a manifest-committed layout, [[graft.streaming.StateFs.ManifestDir]],
-    * removes even that window). Crash recovery is complete: a crash
+    * active (a manifest-committed layout,
+    * [[graft.streaming.StreamIngest.ManifestDir]], removes even that
+    * window). Crash recovery is complete: a crash
     * before the swap strands only the staging dir (cleared on the next
     * call), and a crash BETWEEN the two renames leaves the data in the
     * retired dir, which the next call moves back before doing anything
@@ -57,12 +59,12 @@ object Maintenance {
     // delete the retired half — refuse up front instead (r13 review)
     StateFs.requireAtomicDirRename(fs, "compactFiles",
       "Re-bin object-store tables by writing to a NEW prefix and " +
-        "switching readers via a manifest (see StateFs.ManifestDir).")
+        "switching readers via a manifest (see StreamIngest.ManifestDir).")
     val staging = new Path(dir + ".compact_staging")
     val retired = new Path(dir + ".compact_retired")
     // crash recovery FIRST: a death between the two swap renames leaves
     // the table dir absent and the data stranded in retired — restore it
-    // before anything else (mirrors StreamIngest.recoverState)
+    // before anything else
     if (!fs.exists(root) && fs.exists(retired) &&
         fs.getFileStatus(retired).isDirectory)
       StateFs.renameInto(fs, retired, root)

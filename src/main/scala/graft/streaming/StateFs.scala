@@ -5,17 +5,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Driver-side state-file plumbing for [[StreamIngest]]'s state,
   * [[StreamScd2]]'s dimension and [[graft.ops.Maintenance]]'s file
-  * compaction: tiny marker/manifest files and staging-directory swaps,
+  * compaction: tiny marker/manifest files and compaction's directory swap,
   * driven through the Hadoop `FileSystem` API so the state lives
-  * WHEREVER the data lives. The previous
-  * `java.nio` form silently pinned the pointer/marker/sweep side to the
-  * DRIVER'S LOCAL DISK while the data itself went through Spark's
-  * Hadoop path resolution — on any deployment whose default filesystem
-  * is not the driver's local FS (HDFS, cluster NFS), the pointer and
-  * the data landed on DIFFERENT filesystems and the documented
-  * atomic-visibility contract was quietly void. [[graft.sources.IndexFreshness]]
-  * already drives Hadoop `FileSystem`; this brings the streaming state
-  * to the same posture.
+  * WHEREVER the data lives — markers and data on one filesystem, as
+  * [[graft.sources.IndexFreshness]] does too.
   *
   * Atomicity boundary (documented once, here):
   *
@@ -29,17 +22,18 @@ import org.apache.spark.sql.SparkSession
   *     the new, never a torn one.
   *   - '''Object stores (S3A/GCS)''': `rename` is COPY+DELETE — not
   *     atomic, O(data), and a crash mid-rename can leave both halves.
-  *     Directory-swap state (the bucketed ingest state under the
-  *     rename protocol) must not run against an object store as-is; the
-  *     portable commit there is a CONDITIONAL PUT of a new manifest
+  *     The portable commit there is a CONDITIONAL PUT of a new manifest
   *     key (S3 `If-None-Match` / GCS `ifGenerationMatch=0` — the
   *     primitive log-structured table formats build their commit
-  *     protocols on), which [[ManifestDir]] approximates: it commits
-  *     by creating a NEW, never-overwritten manifest object, so it
-  *     degrades gracefully where only the sweep of retired directories
-  *     loses atomicity (stale data is re-swept, never resurrected). The
-  *     rename-based swaps here deliberately target rename-capable
-  *     filesystems and fail loudly (rename returning false throws)
+  *     protocols on), which [[StreamIngest.ManifestDir]] — the one
+  *     layout of the ingest state — approximates: it commits by creating
+  *     a NEW, never-overwritten manifest object and renames no directory,
+  *     so it degrades gracefully where only the sweep of retired
+  *     directories loses atomicity (stale data is re-swept, never
+  *     resurrected). The one directory swap left,
+  *     [[graft.ops.Maintenance.compactFiles]], targets rename-capable
+  *     filesystems: it refuses copy-rename schemes up front
+  *     ([[requireAtomicDirRename]]), and a rename returning false throws
   *     rather than corrupting silently.
   */
 private[graft] object StateFs {
@@ -86,18 +80,19 @@ private[graft] object StateFs {
 
   /** Schemes whose `FileSystem.rename` is a COPY+DELETE emulation that
     * RETURNS TRUE (the object-store boundary in the class doc): a crash
-    * mid-"rename" leaves both halves and no error ever surfaced, so the
-    * directory-swap protocols must refuse these outright rather than
-    * corrupt silently. ADLS Gen2 (`abfs`) is deliberately absent — its
+    * mid-"rename" leaves both halves and no error ever surfaced, so a
+    * directory swap must refuse these outright rather than corrupt
+    * silently. ADLS Gen2 (`abfs`) is deliberately absent — its
     * directory rename is an atomic metadata op, like HDFS.
     */
   private val CopyRenameSchemes =
     Set("s3", "s3a", "s3n", "gs", "oss", "cos", "swift", "wasb", "wasbs")
 
   /** Fail loudly when `fs` cannot rename directories atomically —
-    * called by every directory-swap state owner before its first swap
-    * (Hadoop exposes no path capability for rename atomicity, so this
-    * is a scheme judgment; `remedy` names the caller's escape hatch).
+    * called by [[graft.ops.Maintenance.compactFiles]], the one directory
+    * swap, before it touches the table (Hadoop exposes no path capability
+    * for rename atomicity, so this is a scheme judgment; `remedy` names
+    * the caller's escape hatch).
     */
   def requireAtomicDirRename(fs: FileSystem, what: String,
                              remedy: String): Unit = {
@@ -159,14 +154,13 @@ private[graft] object StateFs {
   }
 
   /** The replay policy of state whose commit must not be repeated (the
-    * manifest-protocol state of [[StreamIngest]], the dimension of
+    * manifest state of [[StreamIngest]], the dimension of
     * [[StreamScd2]]): true when `batchId` re-delivers a batch the state
     * committed at `applied` already absorbed — the caller skips it; false
-    * for a new batch. A
-    * batchId further behind than [[replayMargin]] means the streaming
-    * checkpoint was reset against existing state — its low ids carry
-    * genuinely new data that skipping would silently drop — so it throws,
-    * naming the owner (`what`) and how to recover (`remedy`).
+    * for a new batch. A batchId further behind than [[replayMargin]]
+    * means the streaming checkpoint was reset against existing state — its
+    * low ids carry genuinely new data that skipping would silently drop —
+    * so it throws, naming the owner (`what`) and how to recover (`remedy`).
     */
   def alreadyApplied(spark: SparkSession, batchId: Long, applied: Long,
                      what: String, remedy: String): Boolean = {
@@ -181,8 +175,7 @@ private[graft] object StateFs {
   // ---- versioned small-state files (the state manifest) ----
   //
   // The manifest is one small state blob whose commit must be atomic
-  // WITH its batch id. java.nio offered overwrite-ATOMIC_MOVE; no
-  // Hadoop filesystem does, portably. The versioned scheme gets the same guarantee from two portable ops:
+  // WITH its batch id, from two portable ops:
   // content goes to a HIDDEN staging name, then a dst-absent rename
   // commits it as `<prefix>-<batchId><suffix>` — the NAME carries the
   // id. Readers take the highest committed id; a crash mid-write
@@ -236,94 +229,6 @@ private[graft] object StateFs {
     else {
       val id = ids.max
       Some((id, readBytes(fs, new Path(dir, s"$prefix-$id$suffix"))))
-    }
-  }
-
-  /** The OBJECT-STORE commit path the atomicity boundary above names: a
-    * state root whose live content is resolved through a versioned
-    * MANIFEST file instead of directories renamed into place. Data
-    * directories are written ONCE under deterministic per-batch names
-    * and never moved; the commit is the manifest landing via
-    * [[writeVersioned]] — a hidden tmp write plus a dst-absent rename of
-    * ONE SMALL FILE, which is an atomic metadata op on HDFS/POSIX and a
-    * single-object copy-PUT on S3A/GCS whose destination key appears
-    * atomically (the conditional-put approximation the log-structured
-    * table formats build their commit protocols on). No DIRECTORY is
-    * ever renamed, so the protocol carries no O(data), torn-halves
-    * rename anywhere — ManifestProtocolSpec proves it by running the
-    * whole bucketed ingest on a filesystem whose directory renames
-    * FAIL. (Spark's own task-output commit inside a data-directory
-    * write is the deployment's committer choice — object stores pair
-    * this protocol with a direct/“magic” committer; the manifest layer
-    * adds no renames of its own.)
-    *
-    * The manifest maps logical keys (bucket numbers, `"data"` for a
-    * singleton directory) to root-relative data paths; its version IS
-    * the exactly-once batch marker. Readers take the highest committed
-    * manifest; a crash before the commit leaves only an unreferenced
-    * data directory, swept by [[sweepUnreferenced]] at the next write
-    * (never concurrently with it — single writer, like every state owner
-    * here).
-    */
-  final class ManifestDir(fs: FileSystem, val root: Path) {
-    private val Prefix = "manifest"
-    private val Suffix = ".tsv"
-
-    /** `(batchId, key -> relative data path)` of the live manifest. */
-    def live(): Option[(Long, Map[String, String])] =
-      readVersioned(fs, root, Prefix, Suffix).map { case (id, bytes) =>
-        val entries = new String(bytes, "UTF-8").split("\n", -1)
-          .filter(_.nonEmpty).map { line =>
-            val Array(k, v) = line.split("\t", 2)
-            k -> v
-          }.toMap
-        (id, entries)
-      }
-
-    /** Absolute path of a manifest entry's data directory. */
-    def dataPath(rel: String): Path = new Path(root, rel)
-
-    /** Commit `entries` as the batch-`batchId` manifest (see class doc
-      * for why this single small-file commit is the portable one).
-      */
-    def commit(batchId: Long, entries: Map[String, String]): Unit = {
-      val sb = new StringBuilder
-      entries.toSeq.sorted.foreach { case (k, v) =>
-        require(!k.contains('\t') && !k.contains('\n') && !v.contains('\n'),
-          s"manifest entry contains a tab/newline: $k -> $v")
-        sb.append(k).append('\t').append(v).append('\n')
-      }
-      writeVersioned(fs, root, Prefix, Suffix, batchId,
-        sb.toString.getBytes("UTF-8"))
-    }
-
-    /** Delete data directories no manifest references any more — crash
-      * orphans (data written, commit never landed) and directories fully
-      * retired by later commits. A top-level directory that is PARTIALLY
-      * referenced (a per-batch write whose untouched sub-directories are
-      * still live) keeps its referenced children; its retired child
-      * directories are dropped. Call BEFORE writing a batch's data dir
-      * (single writer), never after the commit — a concurrent reader of
-      * the just-retired state has the same scheduling caveat as the
-      * rename-based swaps.
-      */
-    def sweepUnreferenced(referenced: Map[String, String]): Unit = {
-      val refs = referenced.values.toSet
-      val tops = refs.map(_.split("/", 2)(0))
-      listNames(fs, root).foreach { n =>
-        val protocolFile = n.startsWith(s"$Prefix-") || n.startsWith(".")
-        if (!protocolFile) {
-          if (!tops.contains(n)) deleteRecursively(fs, new Path(root, n))
-          else if (!refs.contains(n)) {
-            // partially referenced batch dir: drop retired sub-dirs only
-            listNames(fs, new Path(root, n)).foreach { s =>
-              val p = new Path(root, s"$n/$s")
-              if (fs.getFileStatus(p).isDirectory && !refs.contains(s"$n/$s"))
-                deleteRecursively(fs, p)
-            }
-          }
-        }
-      }
     }
   }
 }

@@ -5,10 +5,14 @@ import graft.model.SchemaDiscovery.DocSchema
 import graft.ops.{Compact, Flatten, Split}
 import graft.WarehouseOptions
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** Continuous ingestion: the Spark Structured Streaming form of the
   * reference's monitor mode (`index.js:143-170` — longpoll loop, per-batch
@@ -25,63 +29,43 @@ import org.apache.hadoop.fs.Path
   *   2. merge the batch into the per-id latest-change STATE table
   *      (last-writer-wins by seqNum, tombstones retained so deletes win
   *      over late replays — one shuffle on id per batch), reading back
-  *      only the touched buckets' directories;
+  *      only the touched buckets' files;
   *   3. re-register each docType's flattened temp view over the state;
   *   4. advance the warehouse checkpoint side-file (A13) — Spark's own
   *      `checkpointLocation` handles source offsets, the side-file is the
   *      queryable `couchwarehouse_checkpoints` analog.
   *
-  * So a small batch costs a fixed handful of Spark jobs: the metadata
-  * aggregation, the merge's shuffle and bucket write, and one listing of
-  * the state's bucket directories for the views. Every state read is
-  * typed ([[StreamIngest.StateSchema]]), so none infers a schema from
-  * parquet footers, and [[publish]] after a batch is a no-op: the batch
-  * already published, and the views stay current until the next one.
+  * State layout ([[StreamIngest.ManifestDir]]): each batch writes its
+  * touched buckets once, under a new per-batch directory, and commits a
+  * versioned manifest naming every live parquet file. Every state read is
+  * one parquet scan over the files it names, listing nothing. So a small
+  * batch costs a fixed handful of Spark jobs: the
+  * metadata aggregation and the merge's shuffle and bucket write; and
+  * [[publish]] after a batch is a no-op: the batch already published,
+  * and the views stay current until the next one.
   *
   * At-least-once delivery + idempotent merge (replayed changes collapse in
   * the LWW window) reproduces the reference's REPLACE-by-PK semantics
   * exactly (`lib/sqlite.js:82`, SURVEY §4 "Idempotent re-delivery").
   *
   * Scale: state merge is a single hash shuffle on doc id and a
-  * partitioned parquet write of the touched buckets. Nothing driver-side
-  * grows with data — the driver holds only frozen schemas and the seq
-  * counter, like the reference's single node held `theSchema`. All state
-  * plumbing (checkpoint side-file, schema donors, bucket swaps)
-  * drives the Hadoop `FileSystem` resolved from `warehouseDir`, so the
-  * warehouse can live on cluster storage — the swaps are dst-absent
-  * renames, atomic on HDFS/POSIX; see [[StateFs]] for the object-store
-  * boundary.
+  * partitioned parquet write of the touched buckets. The driver holds the
+  * manifest (a few files per bucket, not rows), frozen schemas and the
+  * seq counter, like the reference's single node held `theSchema`. All
+  * state plumbing drives the Hadoop `FileSystem` resolved from
+  * `warehouseDir`, so the warehouse can live on cluster storage, object
+  * stores included ([[StateFs]] has the atomicity boundary).
   */
 final class StreamIngest(
     spark: SparkSession,
     opts: WarehouseOptions,
     warehouseDir: String) {
+  import StreamIngest.StateFile
 
-  private val stateDir = s"$warehouseDir/_state"
   private val fs = new Path(warehouseDir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
   private val checkpointFile = new Path(s"$warehouseDir/_checkpoints.json")
   private val schemaDir = new Path(s"$warehouseDir/_schemas")
-
-  /** Directory-commit protocol (`graft.state.protocol` session conf):
-    * `rename` (default) swaps staged directories into place with
-    * dst-absent renames — atomic on HDFS/POSIX, the right choice
-    * wherever rename is a metadata op; `manifest` never renames a
-    * directory at all — data lands once under per-batch names and a
-    * versioned manifest file names the live content
-    * ([[StateFs.ManifestDir]]) — the object-store posture. The choice is
-    * persisted and guarded like the bucket count: reading rename-layout
-    * state through manifest eyes (or vice versa) would see an EMPTY
-    * warehouse and silently fork it, the exact failure the replay-margin
-    * guards exist to make loud.
-    */
-  private val protocol: String = {
-    val p = spark.conf.getOption("graft.state.protocol").getOrElse("rename")
-    require(p == "rename" || p == "manifest",
-      s"graft.state.protocol must be 'rename' or 'manifest', got '$p'")
-    p
-  }
-  private def manifestMode = protocol == "manifest"
 
   /** Number of hash buckets the state table is partitioned into
     * (`graft.state.buckets` session conf, default 64). A batch only ever
@@ -101,48 +85,25 @@ final class StreamIngest(
   }
 
   private val versRoot = new Path(s"$warehouseDir/_state_v")
-  private lazy val stateManifest = new StateFs.ManifestDir(fs, versRoot)
-
-  private def verifyProtocol(): Unit = {
-    // the rename protocol's whole contract rests on directory rename
-    // being an atomic metadata op; object-store "rename" is a
-    // copy+delete that REPORTS SUCCESS, so refuse up front (r13 review)
-    if (!manifestMode)
-      StateFs.requireAtomicDirRename(fs, "the 'rename' state protocol",
-        "Set graft.state.protocol=manifest (the object-store commit " +
-          "path) for this warehouse.")
-    val marker = new Path(s"$warehouseDir/_state_protocol")
-    if (fs.exists(marker)) {
-      val persisted = StateFs.readString(fs, marker).trim
-      if (persisted != protocol)
-        throw new IllegalStateException(
-          s"warehouse state at $warehouseDir was committed under the " +
-            s"'$persisted' protocol but graft.state.protocol=$protocol — " +
-            "each protocol is blind to the other's layout, so switching " +
-            "would read the warehouse as EMPTY and fork it. Restore the " +
-            "original setting or rebuild the warehouse.")
-    } else {
-      // pre-marker warehouses are rename-layout by construction
-      if (protocol != "rename" &&
-          StateFs.listNames(fs, new Path(stateDir)).exists(_.startsWith("_bucket=")))
-        throw new IllegalStateException(
-          s"warehouse state at $warehouseDir predates the protocol marker " +
-            "and is rename-layout; it cannot be read under " +
-            "graft.state.protocol=manifest. Unset the protocol or rebuild " +
-            "the warehouse.")
-      // staged: a torn marker would match NEITHER protocol and fail
-      // every later start
-      StateFs.commitString(fs, marker, protocol)
-    }
-  }
+  private val stateManifest = new StreamIngest.ManifestDir(fs, versRoot)
+  // Warehouses of the retired layouts fail here, before any read or write:
+  // the rename layout's `_state/_bucket=N` directories, which no manifest
+  // names, would read as EMPTY and be silently forked; `live()` refuses a
+  // manifest of the retired directory-level format.
+  private val renameLayout = new Path(s"$warehouseDir/_state")
+  if (StateFs.listNames(fs, renameLayout).exists(_.startsWith("_bucket=")))
+    throw new IllegalStateException(
+      s"$renameLayout holds state in the retired rename layout (_bucket=N " +
+        "directories), which is no longer read: opening it would read the " +
+        "warehouse as EMPTY and fork it. Rebuild the warehouse from its " +
+        "feed (CLI --reset).")
+  stateManifest.live()
 
   /** Frozen per-docType schemas, persisted as the donor document JSON so a
     * restarted stream keeps first-doc-wins semantics (§1.4).
     */
   private val schemas = scala.collection.mutable.LinkedHashMap.empty[String, DocSchema]
   loadSchemas()
-  verifyProtocol()
-  recoverState()
   verifyBucketCount()
 
   def discoveredSchemas: Map[String, DocSchema] = schemas.toMap
@@ -167,8 +128,8 @@ final class StreamIngest(
     * `graft.state.buckets` against existing state would hash an update
     * for id X into a bucket its current row does not live in — the
     * touched-bucket merge would never read the old row, and BOTH
-    * versions would survive as silent duplicates. Guarded like the
-    * protocol marker: fail loudly at construction.
+    * versions would survive as silent duplicates. So it fails loudly at
+    * construction.
     */
   // def, not val: the constructor-body guard runs before later vals init
   private def bucketMeta = new Path(s"$warehouseDir/_state_buckets")
@@ -185,9 +146,9 @@ final class StreamIngest(
             "warehouse.")
     }
 
-  /** Persist the bucket count with the first bucket write, staged like the
-    * protocol marker: [[verifyBucketCount]] parses it on every start, so a
-    * torn write would fail every later construction.
+  /** Persist the bucket count with the first bucket write, staged
+    * ([[StateFs.commitString]]): [[verifyBucketCount]] parses it on every
+    * start, so a torn write would fail every later construction.
     */
   private def commitBucketMeta(): Unit =
     if (!fs.exists(bucketMeta))
@@ -196,12 +157,12 @@ final class StreamIngest(
   private def bucketCol = pmod(crc32(col("id")), lit(stateBuckets)).cast("int")
 
   /** One micro-batch application; also callable directly for batch replay
-    * tests. Idempotent: applying the same batch twice is a no-op.
+    * tests. A replay of the last applied batch is skipped ([[replayed]]).
     *
     * Bucketed merge: ids hash to a `_bucket` partition; only partitions
     * present in the batch are read back, merged (last-writer-wins), and
-    * atomically swapped in from a staging write ([[writeBuckets]]).
-    * Untouched buckets are never read or rewritten.
+    * written under a new name that the next manifest points at
+    * ([[writeBuckets]]). Untouched buckets are never read or rewritten.
     */
   def applyBatch(batch0: DataFrame, batchId: Long): Unit = {
     published = None
@@ -211,14 +172,19 @@ final class StreamIngest(
       .cache()
     try {
       val meta = batchMeta(batch)
-      val merged = existingState(Some(meta.buckets)) match {
-        case Some(st) => st.unionByName(batch)
-        case None     => batch
+      val live = stateManifest.live()
+      if (!replayed(batchId, meta.maxSeq, live)) {
+        val files = live.toSeq.flatMap(_.files)
+        val merged = existingState(files.filter(f => meta.buckets(f.bucket))) match {
+          case Some(st) => st.unionByName(batch)
+          case None     => batch
+        }
+        // LWW per id, tombstones RETAINED (deletes survive replays; a doc
+        // re-created after deletion wins via its higher seq) — the exact
+        // semantic of the shared CDC compaction
+        writeBuckets(Compact.latestChanges(merged), batchId,
+          (live.map(_.maxSeq) ++ meta.maxSeq).maxOption.getOrElse(-1L), files)
       }
-      // LWW per id, tombstones RETAINED (deletes survive replays; a doc
-      // re-created after deletion wins via its higher seq) — the exact
-      // semantic of the shared CDC compaction
-      writeBuckets(Compact.latestChanges(merged), batchId)
       publishWith(meta.types)
       advanceCheckpoint(meta.maxSeq)
     } finally batch.unpersist()
@@ -253,146 +219,79 @@ final class StreamIngest(
       .where(col("seqNum") > since)
       .select("id", "seqNum", "deleted", "doc")
 
-  /** Publish the merged (touched-bucket-only) state via a staging write +
-    * per-bucket atomic renames, instead of dynamically overwriting the
-    * directory a task may still be reading from. A reader never observes a
-    * partially written bucket: the swap is rename-only. A crash between
-    * two bucket swaps can leave a bucket retired but not yet replaced —
-    * [[recoverState]] restores it on the next start, and the LWW merge is
-    * replay-idempotent on top of that.
+  /** True when `batchId` re-delivers a batch the `live` manifest already
+    * absorbed (a crash between the manifest commit and the stream's
+    * offset commit): it is skipped, since re-committing would re-point
+    * the manifest readers are on for no new content. A RESET streaming
+    * checkpoint's low ids carry NEW changes that a skip would silently
+    * drop, so it fails loudly: an id further back than the replay margin
+    * ([[StateFs.alreadyApplied]]), or one within it carrying a seq past
+    * the highest the state absorbed.
     */
-  private def writeBuckets(state: DataFrame, batchId: Long): Unit =
-    if (manifestMode) {
-      val live = stateManifest.live()
-      // a REPLAYED batch (at-least-once delivery after a crash between
-      // the manifest commit and the stream's offset commit) finds its
-      // own version already live: the committed state ALREADY reflects
-      // it (the LWW merge is deterministic), so skip. Re-committing would
-      // delete and re-point the one manifest readers are on for no new
-      // content. A batchId further back than the replay margin is a RESET
-      // streaming checkpoint whose low ids carry genuinely NEW changes —
-      // skipping those would silently drop data, so it fails loudly.
-      if (!StateFs.alreadyApplied(spark, batchId, live.map(_._1).getOrElse(-1L),
-          "state", "The streaming checkpoint was likely reset against an " +
-            s"existing warehouse. Delete $versRoot to rebuild from the " +
-            "stream, or restore the original checkpointLocation.")) {
-        // data lands ONCE under a fresh per-batch name — never a name a
-        // manifest has referenced — then the versioned manifest names
-        // the live buckets: untouched entries carry forward, touched
-        // ones point into the new batch dir. Crash before the commit:
-        // the orphan dir is swept here on the next attempt. No
-        // directory is ever renamed.
-        val liveMap = live.map(_._2).getOrElse(Map.empty)
-        stateManifest.sweepUnreferenced(liveMap)
-        val dirName = s"b$batchId-${System.nanoTime()}"
-        state.write.mode("overwrite").partitionBy("_bucket")
-          .parquet(stateManifest.dataPath(dirName).toString)
-        commitBucketMeta()
-        val touchedKeys = StateFs.listNames(fs, stateManifest.dataPath(dirName))
-          .filter(_.startsWith("_bucket="))
-          .map(n => n.stripPrefix("_bucket=") -> s"$dirName/$n")
-        stateManifest.commit(batchId, liveMap ++ touchedKeys)
+  private def replayed(batchId: Long, maxSeq: Option[Long],
+                       live: Option[StreamIngest.ManifestVersion]): Boolean =
+    live.exists { m =>
+      val remedy = "The streaming checkpoint was likely reset against an " +
+        s"existing warehouse. Delete $versRoot to rebuild from the stream, " +
+        "or restore the original checkpointLocation."
+      val replay = StateFs.alreadyApplied(spark, batchId, m.batchId, "state", remedy)
+      maxSeq.filter(s => replay && s > m.maxSeq).foreach { s =>
+        throw new IllegalStateException(s"state batchId went backwards: got " +
+          s"$batchId with seq $s, but batch ${m.batchId} is already applied " +
+          s"and the state holds seqs only up to ${m.maxSeq}. $remedy")
       }
-    } else {
-      val root = new Path(stateDir)
-      val staging = new Path(s"$warehouseDir/_state_staging")
-      deleteRecursively(staging)
-      state.write.mode("overwrite").partitionBy("_bucket").parquet(staging.toString)
-      fs.mkdirs(root)
-      commitBucketMeta()
-      StateFs.listNames(fs, staging).foreach { name =>
-        if (name.startsWith("_bucket=")) {
-          // the retired name starts with '.', so Spark's file listing never
-          // picks it up even if a crash strands it
-          val target = new Path(root, name)
-          val retired = new Path(root, s".$name.old")
-          deleteRecursively(retired)
-          if (fs.exists(target))
-            StateFs.renameInto(fs, target, retired)
-          StateFs.renameInto(fs, new Path(staging, name), target)
-          deleteRecursively(retired)
-        }
-      }
-      deleteRecursively(staging)
+      replay
     }
 
-  /** Crash recovery for [[writeBuckets]]: a retired bucket whose
-    * replacement never landed is moved back; leftover retired/staging
-    * directories from completed swaps are dropped.
+  /** Land the merged (touched-bucket-only) state ONCE under a fresh
+    * per-batch directory and commit a manifest naming every live file and
+    * the highest seq absorbed: the entries of untouched buckets in `live`
+    * carry forward, touched ones point into the new directory, which one
+    * recursive listing reads right after the write. Readers see the old
+    * manifest or the new one, never a half-written bucket
+    * ([[StreamIngest.ManifestDir]]); a crash before the commit leaves an
+    * orphan directory, swept on the next attempt.
     */
-  private def recoverState(): Unit = {
-    val root = new Path(stateDir)
-    StateFs.listNames(fs, root).foreach { name =>
-      if (name.startsWith("._bucket=") && name.endsWith(".old")) {
-        val p = new Path(root, name)
-        val target = new Path(root, name.stripPrefix(".").stripSuffix(".old"))
-        if (fs.exists(target)) deleteRecursively(p)
-        else StateFs.renameInto(fs, p, target)
+  private def writeBuckets(state: DataFrame, batchId: Long, maxSeq: Long,
+                           live: Seq[StateFile]): Unit = {
+    stateManifest.sweepUnreferenced(live)
+    val dirName = s"b$batchId-${System.nanoTime()}"
+    state.write.mode("overwrite").partitionBy("_bucket")
+      .parquet(stateManifest.dataPath(dirName).toString)
+    commitBucketMeta()
+    val landed = stateManifest.landed(dirName)
+    val touched = landed.map(_.bucket).toSet
+    stateManifest.commit(batchId, maxSeq, live.filterNot(f => touched(f.bucket)) ++ landed)
+  }
+
+  /** The persisted state table over `files` — by default the live
+    * manifest's, read afresh so an instance that does not write still
+    * sees the writer's commits — None when there are none (an
+    * all-filtered first batch commits a manifest with no files). ONE
+    * parquet relation over exactly those files, with each `_bucket` value
+    * mapped to its directory and every file's status taken from the
+    * manifest: Spark lists nothing, infers neither a schema from footers
+    * nor partitions from paths, and the scan needs no post-scan filter.
+    */
+  private def existingState(files: Seq[StateFile] =
+      stateManifest.live().toSeq.flatMap(_.files)): Option[DataFrame] =
+    Option.when(files.nonEmpty) {
+      val statuses = files.map(f => f.bucket -> new FileStatus(f.length, false, 0, 0, 0,
+        fs.makeQualified(stateManifest.dataPath(f.rel))))
+      val byDir = statuses.groupBy(_._2.getPath.getParent)
+        .map { case (dir, fss) => dir -> fss.map(_._2).toArray }
+      val listed = new FileStatusCache {
+        override def getLeafFiles(dir: Path): Option[Array[FileStatus]] = byDir.get(dir)
+        def putLeafFiles(dir: Path, leafFiles: Array[FileStatus]): Unit = ()
+        def invalidateAll(): Unit = ()
       }
+      val partitions = statuses.map { case (b, st) => PartitionPath(InternalRow(b), st.getPath.getParent) }
+        .distinct.sortBy(_.path.toString)
+      val index = new InMemoryFileIndex(spark, partitions.map(_.path), Map.empty, None, listed,
+        Some(PartitionSpec(StreamIngest.BucketSchema, partitions)))
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, StreamIngest.BucketSchema,
+        StreamIngest.DataSchema, None, new ParquetFileFormat, Map.empty)(spark))
     }
-    deleteRecursively(new Path(s"$warehouseDir/_state_staging"))
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    StateFs.deleteRecursively(fs, p)
-
-  /** The persisted state table — or, given `touched`, the rows of those
-    * buckets only — when at least one such bucket has landed. The bucket
-    * check (not a bare directory-exists) keeps an all-filtered first
-    * batch — which creates the state root but moves no buckets — from
-    * poisoning every later read with an unreadable empty directory. With
-    * `touched`, both protocols open ONLY those buckets' directories: a
-    * handful of paths Spark lists on the driver, with no listing job and
-    * no post-scan filter.
-    */
-  private def existingState(touched: Option[Set[Int]] = None): Option[DataFrame] =
-    if (manifestMode) readManifestBuckets(touched) else readRenameBuckets(touched)
-
-  /** The one state reader of both protocols: a multi-path parquet read of
-    * `_bucket=N` directories under `base`, typed by [[StreamIngest.StateSchema]]
-    * (no footer-inference job) with `basePath` partition inference
-    * restoring `_bucket`.
-    */
-  private def readBuckets(base: Path, dirs: Seq[Path]): DataFrame =
-    spark.read.schema(StreamIngest.StateSchema)
-      .option("basePath", base.toString)
-      .parquet(dirs.map(_.toString).sorted: _*)
-
-  /** Rename protocol: the landed `_bucket=N` directories of the state
-    * root, all of them or those in `touched`.
-    */
-  private def readRenameBuckets(touched: Option[Set[Int]]): Option[DataFrame] = {
-    val root = new Path(stateDir)
-    val dirs = StateFs.listNames(fs, root)
-      .filter(n => n.startsWith("_bucket=") &&
-        touched.forall(_.contains(n.stripPrefix("_bucket=").toInt)))
-    if (dirs.isEmpty) None else Some(readBuckets(root, dirs.map(new Path(root, _))))
-  }
-
-  /** Manifest protocol: the live manifest names each bucket's directory.
-    * Plan shape: ONE parquet relation per referenced BATCH DIRECTORY
-    * (all of a dir's live buckets ride one [[readBuckets]] scan), so the
-    * union width is the number of batch dirs the manifest still
-    * references — the recent-batch handful under any touch pattern with
-    * locality, and at worst `graft.state.buckets` when every bucket's
-    * last touch was a different batch. Size bucket counts with that worst case in mind
-    * (the default 64 is a 64-way union; thousands are fine, hundreds of
-    * thousands are not — at which point a periodic full-touch batch, a
-    * backfill re-writing every id, collapses the manifest to one dir).
-    */
-  private def readManifestBuckets(touched: Option[Set[Int]]): Option[DataFrame] = {
-    val parts = stateManifest.live().map(_._2).getOrElse(Map.empty)
-      .toSeq.map { case (k, rel) => k.toInt -> rel }
-      .filter { case (b, _) => touched.forall(_.contains(b)) }
-    if (parts.isEmpty) None
-    else {
-      val byDir = parts.groupBy(_._2.split("/", 2)(0))
-      Some(byDir.toSeq.sortBy(_._1).map { case (dirName, entries) =>
-        readBuckets(stateManifest.dataPath(dirName),
-          entries.map(e => stateManifest.dataPath(e._2)))
-      }.reduce(_ unionByName _))
-    }
-  }
 
   /** docTypes ever published, cached so the per-batch path never rescans
     * the full state (None until the first publish seeds it — from state
@@ -494,17 +393,131 @@ final class StreamIngest(
 }
 
 object StreamIngest {
-  /** Schema of the persisted state table, given to every state read so
-    * none infers it from parquet footers.
+  /** Schema of the persisted state table — its parquet columns and its
+    * `_bucket` partition column — given to every state read so none
+    * infers it from parquet footers or paths.
     */
-  private val StateSchema = StructType(Seq(
+  private val DataSchema = StructType(Seq(
     StructField("id", StringType), StructField("seqNum", LongType),
-    StructField("deleted", BooleanType), StructField("doc", StringType),
-    StructField("_bucket", IntegerType)))
+    StructField("deleted", BooleanType), StructField("doc", StringType)))
+  private val BucketSchema = StructType(Seq(StructField("_bucket", IntegerType)))
 
   /** A micro-batch's touched buckets, highest seq and live docTypes. */
   private final case class BatchMeta(buckets: Set[Int], maxSeq: Option[Long],
                                      types: Set[String])
+
+  /** A live state file as the manifest names it: its `_bucket`, its path
+    * relative to the manifest root and its byte length (the one status
+    * field a parquet scan needs that the path does not carry).
+    */
+  private[graft] final case class StateFile(bucket: Int, rel: String, length: Long) {
+    def dir: String = rel.substring(0, rel.lastIndexOf('/'))
+  }
+
+  /** A committed manifest: its version (the last applied batchId), the
+    * highest seq the state has absorbed (-1 before any) and the live files.
+    */
+  private[graft] final case class ManifestVersion(batchId: Long, maxSeq: Long,
+                                                  files: Seq[StateFile])
+
+  /** The layout of the state, safe on object stores ([[StateFs]]'s
+    * atomicity boundary): each batch writes its touched buckets ONCE as
+    * `<root>/b<batchId>-<nanos>/_bucket=N/` directories, never moved, and
+    * a versioned MANIFEST — a `maxSeq⇥N` header, then one
+    * `bucket⇥path⇥length` line per live parquet file — is the file index.
+    * The commit is the manifest landing via [[StateFs.writeVersioned]]: a
+    * dst-absent rename of ONE SMALL FILE, atomic on HDFS/POSIX and a
+    * single-object copy-PUT on S3A/GCS; no DIRECTORY is ever renamed. The
+    * manifest's version IS the exactly-once batch marker; a crash before
+    * the commit leaves only an unreferenced data directory, swept by
+    * [[sweepUnreferenced]] at the next write (single writer).
+    */
+  private[graft] final class ManifestDir(fs: FileSystem, val root: Path) {
+    private val Prefix = "manifest"
+    private val Suffix = ".tsv"
+    private val Header = "maxSeq"
+
+    /** The live manifest. Any other form — the retired directory-level
+      * `bucket⇥dir` manifest — fails loudly with the manifest named,
+      * rather than reading the state wrong.
+      */
+    def live(): Option[ManifestVersion] =
+      StateFs.readVersioned(fs, root, Prefix, Suffix).map { case (id, bytes) =>
+        val lines = new String(bytes, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
+        def retired(line: String) = new IllegalStateException(
+          s"state manifest ${new Path(root, s"$Prefix-$id$Suffix")} holds " +
+            s"'$line', not a $Header header and bucket⇥file⇥length entries: a " +
+            "retired state layout that is no longer read. Rebuild the " +
+            "warehouse from its feed (CLI --reset).")
+        val maxSeq = lines.headOption.map(_.split("\t", -1)) match {
+          case Some(Array(Header, n)) if n.toLongOption.nonEmpty => n.toLong
+          case _ => throw retired(lines.headOption.getOrElse(""))
+        }
+        ManifestVersion(id, maxSeq, lines.tail.map { line =>
+          line.split("\t", -1) match {
+            case Array(b, rel, len) if b.toIntOption.nonEmpty && len.toLongOption.nonEmpty =>
+              StateFile(b.toInt, rel, len.toLong)
+            case _ => throw retired(line)
+          }
+        })
+      }
+
+    /** Absolute path of a data directory or file under the root. */
+    def dataPath(rel: String): Path = new Path(root, rel)
+
+    /** The parquet files a partitioned write landed under `dirName`: ONE
+      * recursive listing, once per batch, right after the write. Hidden
+      * and `_`-prefixed names (checksums, `_SUCCESS`) are not data.
+      */
+    def landed(dirName: String): Seq[StateFile] = {
+      val it = fs.listFiles(dataPath(dirName), true)
+      val out = Seq.newBuilder[StateFile]
+      while (it.hasNext) {
+        val st = it.next()
+        val (name, dir) = (st.getPath.getName, st.getPath.getParent.getName)
+        if (dir.startsWith("_bucket=") && !name.startsWith("_") && !name.startsWith("."))
+          out += StateFile(dir.stripPrefix("_bucket=").toInt, s"$dirName/$dir/$name", st.getLen)
+      }
+      out.result()
+    }
+
+    /** Commit `files` and `maxSeq` as the batch-`batchId` manifest (see
+      * the class doc for why this single small-file commit is the
+      * portable one).
+      */
+    def commit(batchId: Long, maxSeq: Long, files: Seq[StateFile]): Unit = {
+      val text = files.sortBy(_.rel).map { f =>
+        require(!f.rel.contains('\t') && !f.rel.contains('\n'),
+          s"manifest path contains a tab/newline: ${f.rel}")
+        s"${f.bucket}\t${f.rel}\t${f.length}\n"
+      }.mkString(s"$Header\t$maxSeq\n", "", "")
+      StateFs.writeVersioned(fs, root, Prefix, Suffix, batchId, text.getBytes("UTF-8"))
+    }
+
+    /** Delete data directories no manifest references any more — crash
+      * orphans (data written, commit never landed) and directories fully
+      * retired by later commits. A batch directory that is PARTIALLY
+      * referenced (its untouched bucket directories are still live) keeps
+      * the bucket directories `referenced` files live in; its retired ones
+      * are dropped. Call BEFORE writing a batch's data dir (single
+      * writer), never after the commit: a reader still scanning the
+      * just-retired state must not lose its files.
+      */
+    def sweepUnreferenced(referenced: Seq[StateFile]): Unit = {
+      val dirs = referenced.map(_.dir).toSet
+      val tops = dirs.map(_.split("/", 2)(0))
+      StateFs.listNames(fs, root).foreach { n =>
+        if (!n.startsWith(s"$Prefix-") && !n.startsWith(".")) {
+          if (!tops.contains(n)) StateFs.deleteRecursively(fs, new Path(root, n))
+          else StateFs.listNames(fs, new Path(root, n)).foreach { s =>
+            val p = new Path(root, s"$n/$s")
+            if (!dirs.contains(s"$n/$s") && fs.getFileStatus(p).isDirectory)
+              StateFs.deleteRecursively(fs, p)
+          }
+        }
+      }
+    }
+  }
 
   /** Recursive delete over LOCAL java.nio paths (no-op when absent) —
     * only the CLI `--reset` still uses it (its target is the launching

@@ -1,9 +1,31 @@
 package graft
 
-import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.util.Progressable
 import java.net.URI
 import java.util.concurrent.atomic.AtomicBoolean
+
+/** The local filesystem under another scheme. Its listings return plain
+  * statuses: RawLocalFileSystem's own load their permissions through a
+  * `java.io.File` of the path's URI, which rejects any scheme but `file`,
+  * so `listFiles` (which reads each status's permission) would fail.
+  */
+abstract class LocalFileSystemAs(scheme: String) extends RawLocalFileSystem {
+  override def getScheme: String = scheme
+  override def getUri: URI = URI.create(s"$scheme:///")
+  override def listStatus(f: Path): Array[FileStatus] =
+    super.listStatus(f).map(s => new FileStatus(s.getLen, s.isDirectory,
+      s.getReplication, s.getBlockSize, s.getModificationTime, s.getPath))
+}
+
+/** A local filesystem masquerading as S3A — for the scheme guard that
+  * refuses a directory swap on copy+delete-rename stores
+  * (`StateFs.requireAtomicDirRename`). Unlike [[NoRenameFileSystem]]
+  * its renames "work" (as S3A's do — that is the hazard: they report
+  * success without atomicity), so only the up-front guard stands
+  * between a caller and a silent mid-swap loss.
+  */
+class FakeS3aFileSystem extends LocalFileSystemAs("s3a")
 
 /** A local filesystem that REFUSES directory renames — the object-store
   * simulation ManifestProtocolSpec runs the ingest against. S3A/GCS
@@ -16,21 +38,7 @@ import java.util.concurrent.atomic.AtomicBoolean
   * deployment's pluggable choice (object stores pair a manifest layout
   * with a direct/"magic" committer), not the protocol under test here.
   */
-/** A local filesystem masquerading as S3A — for the scheme guards that
-  * refuse directory-swap protocols on copy+delete-rename stores
-  * (`StateFs.requireAtomicDirRename`). Unlike [[NoRenameFileSystem]]
-  * its renames "work" (as S3A's do — that is the hazard: they report
-  * success without atomicity), so only the up-front guard stands
-  * between a caller and a silent mid-swap loss.
-  */
-class FakeS3aFileSystem extends RawLocalFileSystem {
-  override def getScheme: String = "s3a"
-  override def getUri: URI = URI.create("s3a:///")
-}
-
-class NoRenameFileSystem extends RawLocalFileSystem {
-  override def getScheme: String = "norename"
-  override def getUri: URI = URI.create("norename:///")
+class NoRenameFileSystem extends LocalFileSystemAs("norename") {
 
   override def rename(src: Path, dst: Path): Boolean = {
     val exempt = src.toString.contains("_temporary") ||
@@ -51,9 +59,7 @@ class NoRenameFileSystem extends RawLocalFileSystem {
   * middle of a small-file overwrite. Arming is one-shot, so the restart
   * after the simulated crash writes normally.
   */
-class TornWriteFileSystem extends RawLocalFileSystem {
-  override def getScheme: String = "tornwrite"
-  override def getUri: URI = URI.create("tornwrite:///")
+class TornWriteFileSystem extends LocalFileSystemAs("tornwrite") {
 
   // the overload `FileSystem.create(path, overwrite)` reaches here
   override def create(f: Path, overwrite: Boolean, bufferSize: Int,

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 /** The replay policy of the exactly-once state owners, the dimension of
-  * `StreamScd2` and the manifest-protocol state of `StreamIngest`
+  * `StreamScd2` and the manifest state of `StreamIngest`
   * (`StateFs.alreadyApplied`), held owner by owner: a re-delivered batch
   * id within `graft.agg.replayMargin` of the applied marker is skipped
   * with the state untouched, one further behind (a reset streaming
@@ -54,9 +54,7 @@ class ReplayGuardSpec extends SparkSpec {
     },
     "StreamIngest manifest state" -> { () =>
       val wh = Files.createTempDirectory("rg-manifest")
-      val ingest = withConf("graft.state.protocol", "manifest") {
-        new StreamIngest(spark, WarehouseOptions(database = "rgmdb"), wh.toString)
-      }
+      val ingest = new StreamIngest(spark, WarehouseOptions(database = "rgmdb"), wh.toString)
       owner("state", wh.resolve("_state_v"))(ingest.applyBatch(feed, _))
     })
 

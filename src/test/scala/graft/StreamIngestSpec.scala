@@ -96,17 +96,12 @@ class StreamIngestSpec extends SparkSpec {
     ingest.applyBatch(mk((1 to 40).map(i =>
       change(i, s"doc$i", s"""{"_id":"doc$i","_rev":"1","v":$i}"""))), 0L)
 
-    val stateDir = java.nio.file.Paths.get(s"$wh/_state")
-    def snapshot(): Map[String, Set[String]] =
-      java.nio.file.Files.list(stateDir).toArray.toSeq
-        .map(_.asInstanceOf[java.nio.file.Path])
-        .filter(p => p.getFileName.toString.startsWith("_bucket="))
-        .map { p =>
-          p.getFileName.toString ->
-            java.nio.file.Files.list(p).toArray.toSeq
-              .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
-              .filter(_.endsWith(".parquet")).toSet
-        }.toMap
+    val manifest = new StreamIngest.ManifestDir(
+      new org.apache.hadoop.fs.Path(wh).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new org.apache.hadoop.fs.Path(s"$wh/_state_v"))
+    // bucket -> its live parquet files, as the manifest names them
+    def snapshot(): Map[Int, Set[String]] =
+      manifest.live().get.files.groupBy(_.bucket).map { case (b, fs) => b -> fs.map(_.rel).toSet }
 
     val before = snapshot()
     assert(before.size > 3, s"expected several buckets, got ${before.keys}")
@@ -123,24 +118,6 @@ class StreamIngestSpec extends SparkSpec {
     val v = spark.sql("SELECT v FROM bdb WHERE id = 'doc1'").collect()(0).getDouble(0)
     assert(v == 100.0)
     assert(spark.sql("SELECT COUNT(*) FROM bdb").collect()(0).getLong(0) == 40L)
-  }
-
-  test("rename layout: a reset checkpoint's low batchIds still land") {
-    val wh = tempDir("backwards-wh")
-    val mk = (rows: Seq[String]) => ChangeFeed.fromLines(
-      { import spark.implicits._; rows.toDF("value") }, "value")
-    val ingest = new StreamIngest(spark, WarehouseOptions(database = "bwdb"), wh)
-    ingest.applyBatch(mk(Seq(
-      change(1, "a", """{"_id":"a","_rev":"1","v":1}"""))), 4L)
-    // a reset streaming checkpoint restarts batchIds at 0: the rename
-    // layout keeps no batch marker (its LWW merge is idempotent), so the
-    // new change lands instead of being skipped as a replay
-    ingest.applyBatch(mk(Seq(
-      change(2, "b", """{"_id":"b","_rev":"1","v":2}"""))), 0L)
-    ingest.publish()
-    val ids = spark.sql("SELECT id FROM bwdb ORDER BY id").collect().map(_.getString(0))
-    assert(ids.toSeq == Seq("a", "b"))
-    assert(ingest.checkpoint == 2L)
   }
 
   test("state-backed outbound change feed: tombstones included, resumable") {
@@ -160,33 +137,6 @@ class StreamIngestSpec extends SparkSpec {
     val tail = ingest.changesSince(3L).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(tail == Seq(("b", 4L)))
-  }
-
-  test("crash recovery: a retired-but-unreplaced bucket is restored on restart") {
-    val wh = tempDir("recover-wh")
-    val mk = (ls: Seq[String]) => ChangeFeed.fromLines(
-      { import spark.implicits._; ls.toDF("value") }, "value")
-    val ingest = new StreamIngest(spark, WarehouseOptions(database = "cdb"), wh)
-    ingest.applyBatch(mk(Seq(
-      change(1, "k1", """{"_id":"k1","_rev":"1","v":1}"""),
-      change(2, "k2", """{"_id":"k2","_rev":"1","v":2}"""))), 0L)
-
-    // simulate a crash mid-swap: one bucket moved aside, replacement lost
-    val root = Paths.get(wh, "_state")
-    val bucket = Files.list(root).iterator()
-    var victim: java.nio.file.Path = null
-    while (bucket.hasNext && victim == null) {
-      val p = bucket.next()
-      if (p.getFileName.toString.startsWith("_bucket=")) victim = p
-    }
-    val retired = root.resolve("." + victim.getFileName.toString + ".old")
-    Files.move(victim, retired)
-
-    // a fresh StreamIngest (restart) must restore the bucket
-    val restarted = new StreamIngest(spark, WarehouseOptions(database = "cdb"), wh)
-    assert(Files.exists(victim) && !Files.exists(retired))
-    restarted.publish()
-    assert(spark.sql("SELECT COUNT(*) FROM cdb").collect()(0).getLong(0) == 2L)
   }
 
   test("an all-filtered first batch does not poison the state directory") {

@@ -2,9 +2,10 @@ package graft
 
 import graft.model.ChangeFeed
 import graft.streaming.StreamIngest
+import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import scala.collection.mutable.ArrayBuffer
 
 /** What one `StreamIngest` sync costs and what its views show: the job
@@ -62,11 +63,12 @@ class StreamPublishSpec extends SparkSpec {
       WarehouseOptions(database = "jb", split = Some("type")), wh)
     ingest.applyBatch(mk(base(2000)), 0L)
     ingest.publish()
-    val bucketDirs = Files.list(Paths.get(wh, "_state")).toArray
-      .count(_.toString.contains("_bucket="))
+    val fs = new Path(wh).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val buckets = new StreamIngest.ManifestDir(fs, new Path(s"$wh/_state_v")).live().get.files
+      .map(_.bucket).distinct.size
     // above spark.sql.sources.parallelPartitionDiscovery.threshold (32):
-    // a listing of every bucket dir is a Spark job of one task per dir
-    assert(bucketDirs == 64)
+    // a listing of every bucket dir would be a Spark job of one task per dir
+    assert(buckets == 64)
 
     val sync = mk(Seq(deletion(2001, "d1"), typed(2002, "d2001", "user", 7)) ++
       (2 to 9).map(i => typed(2001 + i, s"d$i", types(i % 3), 1000 + i)))
@@ -75,10 +77,11 @@ class StreamPublishSpec extends SparkSpec {
       ingest.applyBatch(sync, 1L)
       publishJobs = jobsDuring(ingest.publish())
     }
-    // the metadata aggregation (cache fill, exchange, result), the LWW
-    // merge write (exchange, write) and one listing for the views
-    assert(jobs.size <= 6, s"${jobs.size} jobs: $jobs")
-    assert(jobs.count(_ == Seq(bucketDirs)) == 1, s"listing jobs: $jobs")
+    // the metadata aggregation (cache fill, exchange, result) and the LWW
+    // merge write (exchange, write); the views read the manifest's files
+    // with no listing
+    assert(jobs.size <= 5, s"${jobs.size} jobs: $jobs")
+    assert(!jobs.contains(Seq(buckets)), s"listing jobs: $jobs")
     assert(publishJobs.isEmpty, s"publish right after a batch ran $publishJobs")
 
     assert(ingest.checkpoint == 2010L)
@@ -120,25 +123,23 @@ class StreamPublishSpec extends SparkSpec {
     assert(types.map(t => rows(s"fv_$t")) == before)
   }
 
-  test("rename- and manifest-protocol warehouses publish equal views") {
+  test("after three batches a restarted StreamIngest publishes equal views") {
     val batches = Seq(
       base(40) :+ change(41, "_design/v", """{"_id":"_design/v","views":{}}"""),
       Seq(deletion(42, "d5"), typed(43, "d6", "user", 60), typed(44, "d41", "order", 1)),
       Seq(typed(45, "d5", "product", 5), deletion(46, "d41"), typed(47, "d7", "order", 70)))
-    def run(db: String): Seq[Seq[String]] = {
-      val ingest = new StreamIngest(spark,
-        WarehouseOptions(database = db, split = Some("type")), tempDir(s"$db-wh"))
-      batches.zipWithIndex.foreach { case (b, i) =>
-        ingest.applyBatch(mk(b), i.toLong)
-        ingest.publish()
-      }
-      types.map(t => rows(s"${db}_$t"))
+    val wh = tempDir("rs-wh")
+    val opts = WarehouseOptions(database = "rs", split = Some("type"))
+    val ingest = new StreamIngest(spark, opts, wh)
+    batches.zipWithIndex.foreach { case (b, i) =>
+      ingest.applyBatch(mk(b), i.toLong)
+      ingest.publish()
     }
-    val renamed = run("pr")
-    spark.conf.set("graft.state.protocol", "manifest")
-    val manifested = try run("pm") finally spark.conf.unset("graft.state.protocol")
-    assert(renamed == manifested)
-    assert(renamed.map(_.size) == Seq(13, 14, 13))
+    val running = types.map(t => rows(s"rs_$t"))
+    types.foreach(t => spark.catalog.dropTempView(s"rs_$t"))
+    new StreamIngest(spark, opts, wh).publish()
+    assert(types.map(t => rows(s"rs_$t")) == running)
+    assert(running.map(_.size) == Seq(13, 14, 13))
   }
 
   test("a design doc in an earlier batch does not freeze an empty _default schema") {
