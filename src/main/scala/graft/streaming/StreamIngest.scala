@@ -4,7 +4,7 @@ import graft.model.SchemaDiscovery
 import graft.model.SchemaDiscovery.DocSchema
 import graft.ops.{Compact, Flatten, Split}
 import graft.WarehouseOptions
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
   InMemoryFileIndex, PartitionPath, PartitionSpec}
@@ -13,6 +13,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import scala.jdk.CollectionConverters._
 
 /** Continuous ingestion: the Spark Structured Streaming form of the
   * reference's monitor mode (`index.js:143-170` — longpoll loop, per-batch
@@ -20,47 +21,55 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *
   * Source: a stream of change-feed lines (file source here; a CouchDB
   * `_changes` MicroBatchStream source can be swapped in without touching
-  * the batch logic). Each micro-batch runs the same distributed pipeline as
-  * batch ingestion — the `foreachBatch` body is the direct analog of the
-  * reference's `batch` event handler:
+  * the batch logic). Each micro-batch is the direct analog of the
+  * reference's `batch` event handler (`foreachBatch` → [[applyBatch]]):
   *
-  *   1. read what the batch touches — its `_bucket`s, highest seq and
-  *      live docTypes — in ONE aggregation, the job that also caches it;
-  *   2. merge the batch into the per-id latest-change STATE table
-  *      (last-writer-wins by seqNum, tombstones retained so deletes win
-  *      over late replays — one shuffle on id per batch), reading back
-  *      only the touched buckets' files;
+  *   1. ONE job collects the batch when it is small (at most
+  *      [[StreamIngest.SmallBatchRows]] rows), else its first rows only;
+  *      what it touches — `_bucket`s, highest seq, live docTypes — comes
+  *      from those rows, or from ONE aggregation over the cached large
+  *      batch;
+  *   2. a small batch whose every seq is above the state's `maxSeq` is
+  *      last-writer-wins collapsed on the driver into the pending DELTA,
+  *      which the manifest commit carries: no state read, no shuffle, no
+  *      bucket write. Any other batch — large, replayed or older-seq — or
+  *      a delta past its bound ([[StreamIngest.deltaBound]]) takes the
+  *      bucketed merge, which folds the pending delta in: one shuffle on
+  *      id over the touched buckets' files, the delta and the batch (LWW
+  *      by seqNum, tombstones retained so deletes win over late replays);
   *   3. re-register each docType's flattened temp view over the state;
   *   4. advance the warehouse checkpoint side-file (A13) — Spark's own
   *      `checkpointLocation` handles source offsets, the side-file is the
   *      queryable `couchwarehouse_checkpoints` analog.
   *
-  * State layout ([[StreamIngest.ManifestDir]]): each batch writes its
-  * touched buckets once, under a new per-batch directory, and commits a
-  * versioned manifest naming every live parquet file. Every state read is
-  * one parquet scan over the files it names, listing nothing. So a small
-  * batch costs a fixed handful of Spark jobs: the
-  * metadata aggregation and the merge's shuffle and bucket write; and
-  * [[publish]] after a batch is a no-op: the batch already published,
-  * and the views stay current until the next one.
+  * State layout ([[StreamIngest.ManifestDir]]): bucket files written once
+  * under per-batch directories, and a versioned manifest naming every live
+  * parquet file plus the delta's rows. Every state read is one parquet scan
+  * over the files it names, listing nothing, with the delta resolved at
+  * plan time: the base rows whose id is not in the delta, plus the delta
+  * as a local relation. So a small sync costs one Spark job, and
+  * [[publish]] after a batch is a no-op: the batch already published, and
+  * the views stay current until the next one.
   *
   * At-least-once delivery + idempotent merge (replayed changes collapse in
   * the LWW window) reproduces the reference's REPLACE-by-PK semantics
   * exactly (`lib/sqlite.js:82`, SURVEY §4 "Idempotent re-delivery").
   *
-  * Scale: state merge is a single hash shuffle on doc id and a
+  * Scale: a small sync is O(batch) — the couchwarehouse model of one
+  * upsert per change; a merge is a single hash shuffle on doc id and a
   * partitioned parquet write of the touched buckets. The driver holds the
-  * manifest (a few files per bucket, not rows), frozen schemas and the
-  * seq counter, like the reference's single node held `theSchema`. All
-  * state plumbing drives the Hadoop `FileSystem` resolved from
-  * `warehouseDir`, so the warehouse can live on cluster storage, object
-  * stores included ([[StateFs]] has the atomicity boundary).
+  * manifest (a few files per bucket and a delta of at most one average
+  * bucket, not the table), frozen schemas and the seq counter, like the
+  * reference's single node held `theSchema`. All state plumbing drives the
+  * Hadoop `FileSystem` resolved from `warehouseDir`, so the warehouse can
+  * live on cluster storage, object stores included ([[StateFs]] has the
+  * atomicity boundary).
   */
 final class StreamIngest(
     spark: SparkSession,
     opts: WarehouseOptions,
     warehouseDir: String) {
-  import StreamIngest.StateFile
+  import StreamIngest.{BatchMeta, DeltaRow, ManifestVersion, StateFile}
 
   private val fs = new Path(warehouseDir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -159,58 +168,92 @@ final class StreamIngest(
   /** One micro-batch application; also callable directly for batch replay
     * tests. A replay of the last applied batch is skipped ([[replayed]]).
     *
-    * Bucketed merge: ids hash to a `_bucket` partition; only partitions
-    * present in the batch are read back, merged (last-writer-wins), and
-    * written under a new name that the next manifest points at
-    * ([[writeBuckets]]). Untouched buckets are never read or rewritten.
+    * A small batch above the state's `maxSeq` joins the pending delta
+    * ([[withDelta]]); any other batch takes the bucketed merge
+    * ([[merge]]): ids hash to a `_bucket` partition; only partitions
+    * present in the batch or the delta are read back, merged
+    * (last-writer-wins), and written under a new name that the next
+    * manifest points at ([[writeBuckets]]). Untouched buckets are never
+    * read or rewritten.
     */
   def applyBatch(batch0: DataFrame, batchId: Long): Unit = {
     published = None
     val batch = opts.transform(batch0)
       .select(col("id"), col("seqNum"), col("deleted"), col("doc"))
       .withColumn("_bucket", bucketCol)
-      .cache()
-    try {
-      val meta = batchMeta(batch)
-      val live = stateManifest.live()
-      if (!replayed(batchId, meta.maxSeq, live)) {
-        val files = live.toSeq.flatMap(_.files)
-        val merged = existingState(files.filter(f => meta.buckets(f.bucket))) match {
-          case Some(st) => st.unionByName(batch)
-          case None     => batch
-        }
-        // LWW per id, tombstones RETAINED (deletes survive replays; a doc
-        // re-created after deletion wins via its higher seq) — the exact
-        // semantic of the shared CDC compaction
-        writeBuckets(Compact.latestChanges(merged), batchId,
-          (live.map(_.maxSeq) ++ meta.maxSeq).maxOption.getOrElse(-1L), files)
-      }
-      publishWith(meta.types)
-      advanceCheckpoint(meta.maxSeq)
-    } finally batch.unpersist()
-  }
-
-  /** What a micro-batch touches, read in ONE aggregation over the cached
-    * batch (which is also the job that fills the cache): its `_bucket`s,
-    * its highest seq, and the docTypes of its live non-design rows — the
-    * set [[Split.discoverTypes]] would return.
-    */
-  private def batchMeta(batch: DataFrame): StreamIngest.BatchMeta = {
     val liveType = opts.split.fold(lit(null).cast("string"))(f =>
       when(!col("deleted") && !col("id").startsWith("_design"),
         Split.docType(f, col("doc"))))
+    val head = batch.withColumn("_type", liveType)
+      .limit(StreamIngest.SmallBatchRows + 1).collect().toSeq
+    val small = Option.when(head.size <= StreamIngest.SmallBatchRows)(head)
+    val input = small.fold(batch.cache())(rows =>
+      StreamIngest.frame(spark, rows.map(r => Row.fromSeq(r.toSeq.init))))
+    try {
+      val meta = small.fold(batchMeta(input, liveType))(BatchMeta.of)
+      val live = stateManifest.live()
+      if (!replayed(batchId, meta.maxSeq, live)) {
+        val m = live.getOrElse(StreamIngest.NoState)
+        val maxSeq = (m.maxSeq +: meta.maxSeq.toSeq).max
+        stateManifest.sweepUnreferenced(m.files)
+        small.flatMap(withDelta(m, _)) match {
+          case Some(delta) => stateManifest.commit(batchId, maxSeq, m.files, delta)
+          case None        => writeBuckets(merge(m, input, meta.buckets), batchId, maxSeq, m.files)
+        }
+      }
+      publishWith(meta.types)
+      advanceCheckpoint(meta.maxSeq)
+    } finally if (small.isEmpty) input.unpersist()
+  }
+
+  /** What a large micro-batch touches, read in ONE aggregation over the
+    * cached batch (which is also the job that fills the cache): its
+    * `_bucket`s, its highest seq, and the docTypes of its `liveType`
+    * rows — the set [[Split.discoverTypes]] would return.
+    */
+  private def batchMeta(batch: DataFrame, liveType: Column): BatchMeta = {
     val r = batch.agg(collect_set(col("_bucket")), max(col("seqNum")),
       collect_set(liveType)).head()
-    StreamIngest.BatchMeta(r.getSeq[Int](0).toSet, Option(r.get(1)).map(_.asInstanceOf[Long]),
+    BatchMeta(r.getSeq[Int](0).toSet, Option(r.get(1)).map(_.asInstanceOf[Long]),
       r.getSeq[String](2).toSet)
+  }
+
+  /** The pending delta of `m` with a small batch's `rows` applied, LWW
+    * collapsed per id (tombstones kept, `_design/` docs dropped, as
+    * [[Compact.latestChanges]] does) — None when the batch must take the
+    * bucketed merge instead: a row with no seq or one at or below the
+    * state's `maxSeq` (a replay's or an older change: only a merge orders
+    * it against the base, while readers drop every base row of a delta id
+    * unseen), or a delta past [[StreamIngest.deltaBound]].
+    */
+  private def withDelta(m: ManifestVersion,
+                        rows: Seq[Row]): Option[Seq[DeltaRow]] =
+    Option.when(rows.forall(r => !r.isNullAt(1) && r.getLong(1) > m.maxSeq && !r.isNullAt(2))) {
+      DeltaRow.latest(m.delta ++ rows.flatMap(DeltaRow.of))
+    }.filter(_.map(_.size).sum <= StreamIngest.deltaBound(m))
+
+  /** The bucketed merge of `input` into the state of `m`, folding its
+    * delta in: the files of the buckets `input` or the delta touch, the
+    * delta rows and `input`, last writer wins per id.
+    */
+  private def merge(m: ManifestVersion, input: DataFrame,
+                    buckets: Set[Int]): DataFrame = {
+    val touched = buckets ++ m.delta.map(_.bucket)
+    val parts = scan(m.files.filter(f => touched(f.bucket))).toSeq :+
+      StreamIngest.frame(spark, m.delta.map(_.row)) :+ input
+    // LWW per id, tombstones RETAINED (deletes survive replays; a doc
+    // re-created after deletion wins via its higher seq) — the exact
+    // semantic of the shared CDC compaction
+    Compact.latestChanges(parts.reduce(_ unionByName _))
   }
 
   /** The warehouse's OWN outbound change feed from persisted state — the
     * CouchDB `_changes` contract re-exposed for downstream incremental
     * consumers: latest change per id with `seqNum > since`, tombstones
     * included so deletes propagate (the state table already holds exactly
-    * that — this is a filter over the bucketed parquet, no shuffle).
-    * Resume token = `max(seqNum)` consumed ([[checkpoint]] for all).
+    * that — this is a filter over the bucketed parquet and the delta, no
+    * shuffle). Resume token = `max(seqNum)` consumed ([[checkpoint]] for
+    * all).
     */
   def changesSince(since: Long): DataFrame =
     existingState()
@@ -229,7 +272,7 @@ final class StreamIngest(
     * the highest the state absorbed.
     */
   private def replayed(batchId: Long, maxSeq: Option[Long],
-                       live: Option[StreamIngest.ManifestVersion]): Boolean =
+                       live: Option[ManifestVersion]): Boolean =
     live.exists { m =>
       val remedy = "The streaming checkpoint was likely reset against an " +
         s"existing warehouse. Delete $versRoot to rebuild from the stream, " +
@@ -245,36 +288,48 @@ final class StreamIngest(
 
   /** Land the merged (touched-bucket-only) state ONCE under a fresh
     * per-batch directory and commit a manifest naming every live file and
-    * the highest seq absorbed: the entries of untouched buckets in `live`
-    * carry forward, touched ones point into the new directory, which one
-    * recursive listing reads right after the write. Readers see the old
-    * manifest or the new one, never a half-written bucket
+    * the highest seq absorbed, with no delta (the merge folded it in):
+    * the entries of untouched buckets in `live` carry forward, touched
+    * ones point into the new directory, which one listing per bucket
+    * directory reads right after the write. Readers see the old manifest
+    * or the new one, never a half-written bucket
     * ([[StreamIngest.ManifestDir]]); a crash before the commit leaves an
     * orphan directory, swept on the next attempt.
     */
   private def writeBuckets(state: DataFrame, batchId: Long, maxSeq: Long,
                            live: Seq[StateFile]): Unit = {
-    stateManifest.sweepUnreferenced(live)
     val dirName = s"b$batchId-${System.nanoTime()}"
     state.write.mode("overwrite").partitionBy("_bucket")
       .parquet(stateManifest.dataPath(dirName).toString)
     commitBucketMeta()
     val landed = stateManifest.landed(dirName)
     val touched = landed.map(_.bucket).toSet
-    stateManifest.commit(batchId, maxSeq, live.filterNot(f => touched(f.bucket)) ++ landed)
+    stateManifest.commit(batchId, maxSeq, live.filterNot(f => touched(f.bucket)) ++ landed, Nil)
   }
 
-  /** The persisted state table over `files` — by default the live
-    * manifest's, read afresh so an instance that does not write still
-    * sees the writer's commits — None when there are none (an
-    * all-filtered first batch commits a manifest with no files). ONE
-    * parquet relation over exactly those files, with each `_bucket` value
-    * mapped to its directory and every file's status taken from the
-    * manifest: Spark lists nothing, infers neither a schema from footers
-    * nor partitions from paths, and the scan needs no post-scan filter.
+  /** The persisted state table as `m` (by default the live manifest,
+    * read afresh so an instance that does not write still sees the
+    * writer's commits) names it — None before any state: the scan of its
+    * files without the rows of the delta's ids, plus the delta rows, a
+    * local relation resolved at plan time (no broadcast, no second scan).
     */
-  private def existingState(files: Seq[StateFile] =
-      stateManifest.live().toSeq.flatMap(_.files)): Option[DataFrame] =
+  private def existingState(m: Option[ManifestVersion] =
+      stateManifest.live()): Option[DataFrame] =
+    m.flatMap { v =>
+      val delta = Option.when(v.delta.nonEmpty)(StreamIngest.frame(spark, v.delta.map(_.row)))
+      val base = scan(v.files).map(b =>
+        if (delta.isEmpty) b else b.where(!col("id").isin(v.delta.map(_.id): _*)))
+      (base ++ delta).reduceOption(_ unionByName _)
+    }
+
+  /** ONE parquet relation over exactly `files` (None when there are none:
+    * an all-filtered first batch commits a manifest with no files), with
+    * each `_bucket` value mapped to its directory and every file's status
+    * taken from the manifest: Spark lists nothing, infers neither a
+    * schema from footers nor partitions from paths, and the scan needs no
+    * post-scan filter.
+    */
+  private def scan(files: Seq[StateFile]): Option[DataFrame] =
     Option.when(files.nonEmpty) {
       val statuses = files.map(f => f.bucket -> new FileStatus(f.length, false, 0, 0, 0,
         fs.makeQualified(stateManifest.dataPath(f.rel))))
@@ -401,10 +456,75 @@ object StreamIngest {
     StructField("id", StringType), StructField("seqNum", LongType),
     StructField("deleted", BooleanType), StructField("doc", StringType)))
   private val BucketSchema = StructType(Seq(StructField("_bucket", IntegerType)))
+  private val StateSchema = StructType(DataSchema.fields ++ BucketSchema.fields)
+
+  /** The most rows a batch may have to be collected to the driver and
+    * join the delta; a larger one takes the bucketed merge.
+    */
+  private[graft] val SmallBatchRows = 1000
+
+  /** The driver-memory cap on the pending delta (its [[DeltaRow.size]]s),
+    * whatever the size of the base.
+    */
+  private val MaxDeltaBytes: Long = 1L << 20
+
+  /** How large the pending delta of `m` may grow before a sync folds it
+    * into the buckets: one average bucket of the base (the manifest's file
+    * bytes over its buckets), so merge-on-read never carries more than
+    * about one bucket's worth of rows, and at most [[MaxDeltaBytes]]. A
+    * state with no files has no delta: its first batch writes the base.
+    */
+  private def deltaBound(m: ManifestVersion): Long = {
+    val buckets = m.files.map(_.bucket).distinct.size
+    if (buckets == 0) 0L else math.min(MaxDeltaBytes, m.files.map(_.length).sum / buckets)
+  }
+
+  /** A state frame of `rows` (`StateSchema`): a local relation, which
+    * the plan carries, so reading it runs no job of its own.
+    */
+  private def frame(spark: SparkSession, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, StateSchema)
 
   /** A micro-batch's touched buckets, highest seq and live docTypes. */
   private final case class BatchMeta(buckets: Set[Int], maxSeq: Option[Long],
                                      types: Set[String])
+
+  private object BatchMeta {
+    /** The meta of a collected batch: rows of `StateSchema` plus its live
+      * docType (null for a tombstone or a design doc), as `batchMeta`
+      * aggregates it.
+      */
+    def of(rows: Seq[Row]): BatchMeta = BatchMeta(
+      rows.filterNot(_.isNullAt(4)).map(_.getInt(4)).toSet,
+      rows.filterNot(_.isNullAt(1)).map(_.getLong(1)).maxOption,
+      rows.filterNot(_.isNullAt(5)).map(_.getString(5)).toSet)
+  }
+
+  /** A row of the pending delta: the latest change of `id`, newer than
+    * every base row, in `_bucket` `bucket` once folded.
+    */
+  private[graft] final case class DeltaRow(id: String, seqNum: Long, deleted: Boolean,
+                                           doc: String, bucket: Int) {
+    def row: Row = Row(id, seqNum, deleted, doc, bucket)
+
+    /** Its weight against [[deltaBound]]: the chars of its id and doc. */
+    def size: Long = id.length + Option(doc).fold(0)(_.length)
+  }
+
+  private[graft] object DeltaRow {
+    /** A collected batch row (`StateSchema` order, seq and deleted set)
+      * as a delta row; None for the rows the LWW merge drops: no id, or a
+      * `_design/` doc.
+      */
+    def of(r: Row): Option[DeltaRow] =
+      Option(r.getString(0)).filterNot(_.startsWith("_design")).map(id =>
+        DeltaRow(id, r.getLong(1), r.getBoolean(2), r.getString(3), r.getInt(4)))
+
+    /** The latest row per id (highest seq), ordered by id. */
+    def latest(rows: Seq[DeltaRow]): Seq[DeltaRow] =
+      rows.groupMapReduce(_.id)(identity)((a, b) => if (b.seqNum > a.seqNum) b else a)
+        .values.toSeq.sortBy(_.id)
+  }
 
   /** A live state file as the manifest names it: its `_bucket`, its path
     * relative to the manifest root and its byte length (the one status
@@ -415,16 +535,22 @@ object StreamIngest {
   }
 
   /** A committed manifest: its version (the last applied batchId), the
-    * highest seq the state has absorbed (-1 before any) and the live files.
+    * highest seq the state has absorbed (-1 before any), the live files
+    * and the pending delta.
     */
   private[graft] final case class ManifestVersion(batchId: Long, maxSeq: Long,
-                                                  files: Seq[StateFile])
+                                                  files: Seq[StateFile], delta: Seq[DeltaRow])
+
+  /** The state before the first commit. */
+  private val NoState = ManifestVersion(-1L, -1L, Nil, Nil)
 
   /** The layout of the state, safe on object stores ([[StateFs]]'s
-    * atomicity boundary): each batch writes its touched buckets ONCE as
+    * atomicity boundary): each merge writes its touched buckets ONCE as
     * `<root>/b<batchId>-<nanos>/_bucket=N/` directories, never moved, and
     * a versioned MANIFEST — a `maxSeq⇥N` header, then one
-    * `bucket⇥path⇥length` line per live parquet file — is the file index.
+    * `bucket⇥path⇥length` line per live parquet file and one
+    * `delta⇥bucket⇥seq⇥deleted⇥id⇥doc` line per pending delta row (id
+    * and doc escaped) — is the file index and the delta.
     * The commit is the manifest landing via [[StateFs.writeVersioned]]: a
     * dst-absent rename of ONE SMALL FILE, atomic on HDFS/POSIX and a
     * single-object copy-PUT on S3A/GCS; no DIRECTORY is ever renamed. The
@@ -436,6 +562,7 @@ object StreamIngest {
     private val Prefix = "manifest"
     private val Suffix = ".tsv"
     private val Header = "maxSeq"
+    private val Delta = "delta"
 
     /** The live manifest. Any other form — the retired directory-level
       * `bucket⇥dir` manifest — fails loudly with the manifest named,
@@ -446,52 +573,82 @@ object StreamIngest {
         val lines = new String(bytes, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
         def retired(line: String) = new IllegalStateException(
           s"state manifest ${new Path(root, s"$Prefix-$id$Suffix")} holds " +
-            s"'$line', not a $Header header and bucket⇥file⇥length entries: a " +
+            s"'$line', not a $Header header and file or delta entries: a " +
             "retired state layout that is no longer read. Rebuild the " +
             "warehouse from its feed (CLI --reset).")
         val maxSeq = lines.headOption.map(_.split("\t", -1)) match {
           case Some(Array(Header, n)) if n.toLongOption.nonEmpty => n.toLong
           case _ => throw retired(lines.headOption.getOrElse(""))
         }
-        ManifestVersion(id, maxSeq, lines.tail.map { line =>
+        val entries = lines.tail.map { line =>
           line.split("\t", -1) match {
             case Array(b, rel, len) if b.toIntOption.nonEmpty && len.toLongOption.nonEmpty =>
-              StateFile(b.toInt, rel, len.toLong)
+              Left(StateFile(b.toInt, rel, len.toLong))
+            case Array(Delta, b, seq, del, i, doc) if b.toIntOption.nonEmpty &&
+                seq.toLongOption.nonEmpty && del.toBooleanOption.nonEmpty =>
+              Right(DeltaRow(unescape(i), seq.toLong, del.toBoolean, unescape(doc), b.toInt))
             case _ => throw retired(line)
           }
-        })
+        }
+        ManifestVersion(id, maxSeq, entries.collect { case Left(f) => f },
+          entries.collect { case Right(d) => d })
+      }
+
+    /** A field of a delta line: `\`, tab and newline backslash-escaped,
+      * null as `\N`.
+      */
+    private def escape(s: String): String =
+      if (s == null) "\\N"
+      else s.replace("\\", "\\\\").replace("\t", "\\t").replace("\n", "\\n")
+
+    private def unescape(s: String): String =
+      if (s == "\\N") null
+      else {
+        val b = new StringBuilder(s.length)
+        var i = 0
+        while (i < s.length) {
+          val c = s.charAt(i)
+          if (c == '\\' && i + 1 < s.length) {
+            b += (s.charAt(i + 1) match { case 't' => '\t'; case 'n' => '\n'; case o => o })
+            i += 2
+          } else { b += c; i += 1 }
+        }
+        b.toString
       }
 
     /** Absolute path of a data directory or file under the root. */
     def dataPath(rel: String): Path = new Path(root, rel)
 
-    /** The parquet files a partitioned write landed under `dirName`: ONE
-      * recursive listing, once per batch, right after the write. Hidden
-      * and `_`-prefixed names (checksums, `_SUCCESS`) are not data.
+    /** The parquet files a partitioned write landed under `dirName`, once
+      * per merge, right after the write: one `listStatus` of the directory
+      * and one per `_bucket=` directory in it (a recursive `listFiles`
+      * builds located statuses, whose permissions the local filesystem
+      * reads by a shell-out per file). Hidden and `_`-prefixed names
+      * (checksums, `_SUCCESS`) are not data.
       */
-    def landed(dirName: String): Seq[StateFile] = {
-      val it = fs.listFiles(dataPath(dirName), true)
-      val out = Seq.newBuilder[StateFile]
-      while (it.hasNext) {
-        val st = it.next()
-        val (name, dir) = (st.getPath.getName, st.getPath.getParent.getName)
-        if (dir.startsWith("_bucket=") && !name.startsWith("_") && !name.startsWith("."))
-          out += StateFile(dir.stripPrefix("_bucket=").toInt, s"$dirName/$dir/$name", st.getLen)
-      }
-      out.result()
-    }
+    def landed(dirName: String): Seq[StateFile] =
+      for {
+        d <- fs.listStatus(dataPath(dirName)).toSeq
+        dir = d.getPath.getName if d.isDirectory && dir.startsWith("_bucket=")
+        f <- fs.listStatus(d.getPath).toSeq
+        name = f.getPath.getName if !name.startsWith("_") && !name.startsWith(".")
+      } yield StateFile(dir.stripPrefix("_bucket=").toInt, s"$dirName/$dir/$name", f.getLen)
 
-    /** Commit `files` and `maxSeq` as the batch-`batchId` manifest (see
-      * the class doc for why this single small-file commit is the
-      * portable one).
+    /** Commit `files`, the pending `delta` and `maxSeq` as the
+      * batch-`batchId` manifest (see the class doc for why this single
+      * small-file commit is the portable one).
       */
-    def commit(batchId: Long, maxSeq: Long, files: Seq[StateFile]): Unit = {
-      val text = files.sortBy(_.rel).map { f =>
+    def commit(batchId: Long, maxSeq: Long, files: Seq[StateFile], delta: Seq[DeltaRow]): Unit = {
+      val text = new StringBuilder(s"$Header\t$maxSeq\n")
+      files.sortBy(_.rel).foreach { f =>
         require(!f.rel.contains('\t') && !f.rel.contains('\n'),
           s"manifest path contains a tab/newline: ${f.rel}")
-        s"${f.bucket}\t${f.rel}\t${f.length}\n"
-      }.mkString(s"$Header\t$maxSeq\n", "", "")
-      StateFs.writeVersioned(fs, root, Prefix, Suffix, batchId, text.getBytes("UTF-8"))
+        text ++= s"${f.bucket}\t${f.rel}\t${f.length}\n"
+      }
+      delta.sortBy(_.id).foreach { d =>
+        text ++= s"$Delta\t${d.bucket}\t${d.seqNum}\t${d.deleted}\t${escape(d.id)}\t${escape(d.doc)}\n"
+      }
+      StateFs.writeVersioned(fs, root, Prefix, Suffix, batchId, text.toString.getBytes("UTF-8"))
     }
 
     /** Delete data directories no manifest references any more — crash
@@ -499,9 +656,9 @@ object StreamIngest {
       * retired by later commits. A batch directory that is PARTIALLY
       * referenced (its untouched bucket directories are still live) keeps
       * the bucket directories `referenced` files live in; its retired ones
-      * are dropped. Call BEFORE writing a batch's data dir (single
-      * writer), never after the commit: a reader still scanning the
-      * just-retired state must not lose its files.
+      * are dropped. Call BEFORE a batch writes its data dir or commits
+      * (single writer), never after the commit: a reader still scanning
+      * the just-retired state must not lose its files.
       */
     def sweepUnreferenced(referenced: Seq[StateFile]): Unit = {
       val dirs = referenced.map(_.dir).toSet

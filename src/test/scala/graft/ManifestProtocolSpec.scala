@@ -100,9 +100,12 @@ class ManifestProtocolSpec extends SparkSpec {
     assert(v0 == 0L && map0.size > 3, s"expected several buckets, got $map0")
 
     // touch exactly one id: exactly one manifest entry moves to the new
-    // batch dir; every other entry still points into batch 0's dir
+    // batch dir; every other entry still points into batch 0's dir (each
+    // batch re-delivers an applied change, which sends it down the
+    // bucketed merge)
     ingest.applyBatch(mk(Seq(
-      change(99, "doc1", """{"_id":"doc1","_rev":"2","v":100}"""))), 1L)
+      change(99, "doc1", """{"_id":"doc1","_rev":"2","v":100}"""),
+      change(1, "doc1", """{"_id":"doc1","_rev":"1","v":1}"""))), 1L)
     val (v1, map1) = live()
     assert(v1 == 1L)
     val moved = map0.keySet.filter(k => map1(k) != map0(k))
@@ -111,7 +114,8 @@ class ManifestProtocolSpec extends SparkSpec {
     // the NEXT write sweeps the superseded sub-directory out of batch
     // 0's dir while its still-live siblings stay
     ingest.applyBatch(mk(Seq(
-      change(100, "doc1", """{"_id":"doc1","_rev":"3","v":101}"""))), 2L)
+      change(100, "doc1", """{"_id":"doc1","_rev":"3","v":101}"""),
+      change(99, "doc1", """{"_id":"doc1","_rev":"2","v":100}"""))), 2L)
     val (_, map2) = live()
     val supersededRel = map0(moved.head)
     assert(!fs.exists(new Path(s"$wh/_state_v/$supersededRel")),
@@ -129,13 +133,16 @@ class ManifestProtocolSpec extends SparkSpec {
     val wh = Files.createTempDirectory("one-scan-wh").toString
     val ingest = new StreamIngest(spark, WarehouseOptions(database = "osdb"), wh)
     // three batches touching different buckets: the live files span
-    // three batch directories
+    // three batch directories (the later two re-deliver an applied
+    // change, which sends them down the bucketed merge)
     ingest.applyBatch(mk((1 to 40).map(i =>
       change(i, s"doc$i", s"""{"_id":"doc$i","_rev":"1","v":$i}"""))), 0L)
     ingest.applyBatch(mk(Seq(
-      change(41, "doc1", """{"_id":"doc1","_rev":"2","v":100}"""))), 1L)
+      change(41, "doc1", """{"_id":"doc1","_rev":"2","v":100}"""),
+      change(1, "doc1", """{"_id":"doc1","_rev":"1","v":1}"""))), 1L)
     ingest.applyBatch(mk(Seq(deletion(42, "doc2"),
-      change(43, "doc41", """{"_id":"doc41","_rev":"1","v":41}"""))), 2L)
+      change(43, "doc41", """{"_id":"doc41","_rev":"1","v":41}"""),
+      change(2, "doc2", """{"_id":"doc2","_rev":"1","v":2}"""))), 2L)
     val fs = new Path(wh).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = new StreamIngest.ManifestDir(fs, new Path(s"$wh/_state_v")).live().get.files
     assert(files.map(_.rel.split("/")(0)).distinct.size == 3, s"$files")

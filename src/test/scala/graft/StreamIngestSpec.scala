@@ -106,9 +106,11 @@ class StreamIngestSpec extends SparkSpec {
     val before = snapshot()
     assert(before.size > 3, s"expected several buckets, got ${before.keys}")
 
-    // touch exactly one id → exactly one bucket
+    // touch exactly one id → exactly one bucket; the re-delivered seq-1
+    // change (at-least-once) sends the batch down the bucketed merge
     ingest.applyBatch(mk(Seq(
-      change(99, "doc1", """{"_id":"doc1","_rev":"2","v":100}"""))), 1L)
+      change(99, "doc1", """{"_id":"doc1","_rev":"2","v":100}"""),
+      change(1, "doc1", """{"_id":"doc1","_rev":"1","v":1}"""))), 1L)
     val after = snapshot()
 
     val changed = before.keySet.filter(k => before(k) != after.getOrElse(k, Set.empty))

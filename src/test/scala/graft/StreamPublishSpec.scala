@@ -77,10 +77,11 @@ class StreamPublishSpec extends SparkSpec {
       ingest.applyBatch(sync, 1L)
       publishJobs = jobsDuring(ingest.publish())
     }
-    // the metadata aggregation (cache fill, exchange, result) and the LWW
-    // merge write (exchange, write); the views read the manifest's files
-    // with no listing
-    assert(jobs.size <= 5, s"${jobs.size} jobs: $jobs")
+    // the batch lands as a delta in the manifest commit: the one job that
+    // collects it, no shuffle, no state read or bucket write; the views
+    // read the manifest's files with no listing
+    assert(jobs.size <= 1, s"${jobs.size} jobs: $jobs")
+    assert(jobs.forall(_.size == 1), s"a job with a shuffle: $jobs")
     assert(!jobs.contains(Seq(buckets)), s"listing jobs: $jobs")
     assert(publishJobs.isEmpty, s"publish right after a batch ran $publishJobs")
 
