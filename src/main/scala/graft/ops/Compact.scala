@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -47,10 +47,12 @@ object Compact {
   /** Latest change per id with TOMBSTONES RETAINED (design docs still
     * dropped) — the CDC form of [[apply]]: consumers of an outbound
     * change feed need the delete events, not just the survivors. Same
-    * single shuffle on id.
+    * single shuffle on id. `within`: columns that are functions of id,
+    * added to the window's key so that input already partitioned on them
+    * needs no second exchange.
     */
-  def latestChanges(changes: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("id")).orderBy(col("seqNum").desc)
+  def latestChanges(changes: DataFrame, within: Column*): DataFrame = {
+    val w = Window.partitionBy(within :+ col("id"): _*).orderBy(col("seqNum").desc)
     changes
       .where(!col("id").startsWith("_design"))
       .withColumn("_rn", row_number().over(w))

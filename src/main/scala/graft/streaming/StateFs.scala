@@ -58,9 +58,8 @@ private[graft] object StateFs {
 
   /** Overwrite-write a small state file. NOT atomic w.r.t. content on
     * any filesystem (an overwrite truncates before it writes) — callers
-    * either tolerate a torn advisory file (the checkpoint side-file,
-    * re-derived from state on the next batch) or write into a STAGING
-    * name and commit via [[renameInto]].
+    * that cannot tolerate a torn file write into a STAGING name and
+    * commit via [[renameInto]].
     */
   def writeString(fs: FileSystem, p: Path, s: String): Unit = {
     val out = fs.create(p, true)

@@ -5,9 +5,9 @@ import graft.model.SchemaDiscovery.DocSchema
 import graft.ops.{Compact, Flatten, Split}
 import graft.WarehouseOptions
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
-  InMemoryFileIndex, PartitionPath, PartitionSpec}
+  InMemoryFileIndex, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -34,36 +34,35 @@ import scala.jdk.CollectionConverters._
   *      which the manifest commit carries: no state read, no shuffle, no
   *      bucket write. Any other batch — large, replayed or older-seq — or
   *      a delta past its bound ([[StreamIngest.deltaBound]]) takes the
-  *      bucketed merge, which folds the pending delta in: one shuffle on
-  *      id over the touched buckets' files, the delta and the batch (LWW
-  *      by seqNum, tombstones retained so deletes win over late replays);
-  *   3. re-register each docType's flattened temp view over the state;
-  *   4. advance the warehouse checkpoint side-file (A13) — Spark's own
-  *      `checkpointLocation` handles source offsets, the side-file is the
-  *      queryable `couchwarehouse_checkpoints` analog.
+  *      bucketed [[merge]], which folds the pending delta in (LWW by
+  *      seqNum, tombstones retained so deletes win over late replays);
+  *   3. re-register each docType's flattened temp view over the state the
+  *      commit just named.
   *
-  * State layout ([[StreamIngest.ManifestDir]]): bucket files written once
-  * under per-batch directories, and a versioned manifest naming every live
-  * parquet file plus the delta's rows. Every state read is one parquet scan
-  * over the files it names, listing nothing, with the delta resolved at
-  * plan time: the base rows whose id is not in the delta, plus the delta
-  * as a local relation. So a small sync costs one Spark job, and
-  * [[publish]] after a batch is a no-op: the batch already published, and
-  * the views stay current until the next one.
+  * The warehouse checkpoint (A13) is the manifest's `maxSeq`, committed
+  * with the state; Spark's `checkpointLocation` holds source offsets.
+  *
+  * State layout ([[StreamIngest.ManifestDir]]): data files written once
+  * under per-batch directories, each a run of hash buckets sized by scan
+  * split, and a versioned manifest naming every live file plus the delta's
+  * rows. Every state read is one parquet scan over the files it names,
+  * listing nothing, with the delta resolved at plan time: the base rows
+  * whose id is not in the delta, plus the delta as a local relation. So a
+  * small sync costs one Spark job, and [[publish]] after a batch is a
+  * no-op: the views stay current until the next batch.
   *
   * At-least-once delivery + idempotent merge (replayed changes collapse in
   * the LWW window) reproduces the reference's REPLACE-by-PK semantics
   * exactly (`lib/sqlite.js:82`, SURVEY §4 "Idempotent re-delivery").
   *
   * Scale: a small sync is O(batch) — the couchwarehouse model of one
-  * upsert per change; a merge is a single hash shuffle on doc id and a
-  * partitioned parquet write of the touched buckets. The driver holds the
-  * manifest (a few files per bucket and a delta of at most one average
-  * bucket, not the table), frozen schemas and the seq counter, like the
-  * reference's single node held `theSchema`. All state plumbing drives the
-  * Hadoop `FileSystem` resolved from `warehouseDir`, so the warehouse can
-  * live on cluster storage, object stores included ([[StateFs]] has the
-  * atomicity boundary).
+  * upsert per change; a merge is one shuffle and one file per group. The
+  * driver holds the manifest (a line per bucket of each file and a delta
+  * of at most one average bucket, not the table), frozen schemas and the
+  * seq counter, like the reference's single node held `theSchema`. All
+  * state plumbing drives the Hadoop `FileSystem` resolved from
+  * `warehouseDir`, so the warehouse can live on cluster storage, object
+  * stores included ([[StateFs]] has the atomicity boundary).
   */
 final class StreamIngest(
     spark: SparkSession,
@@ -73,17 +72,18 @@ final class StreamIngest(
 
   private val fs = new Path(warehouseDir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private val checkpointFile = new Path(s"$warehouseDir/_checkpoints.json")
   private val schemaDir = new Path(s"$warehouseDir/_schemas")
 
   /** Number of hash buckets the state table is partitioned into
     * (`graft.state.buckets` session conf, default 64). A batch only ever
-    * rewrites the buckets that contain a changed id, so merge cost is
-    * O(touched buckets), not O(table) — the property that keeps per-batch
-    * work bounded when the warehouse is 100 TB and a micro-batch is
-    * megabytes. Size so one bucket ≈ a comfortable task read
-    * (table_bytes / buckets ≲ a few hundred MB at target scale). Checked
-    * here, before the constructor reads or writes anything: a zero count
+    * rewrites the files holding a bucket with a changed id, so merge cost
+    * is O(touched buckets), not O(table) — the property that keeps
+    * per-batch work bounded when the warehouse is 100 TB and a micro-batch
+    * is megabytes. A file holds a run of buckets up to one scan split
+    * (`spark.sql.files.maxPartitionBytes`), so a small state is one file;
+    * size so one bucket ≈ a comfortable task read (table_bytes / buckets ≲
+    * a few hundred MB at target scale), and each file is one bucket.
+    * Checked before the constructor reads or writes anything: a zero count
     * would fail the first batch mid-task (remainder by zero).
     */
   private val stateBuckets: Int = {
@@ -147,12 +147,10 @@ final class StreamIngest(
     if (fs.exists(bucketMeta)) {
       val persisted = StateFs.readString(fs, bucketMeta).trim.toInt
       if (persisted != stateBuckets)
-        throw new IllegalStateException(
-          s"state was bucketed with $persisted buckets but " +
-            s"graft.state.buckets=$stateBuckets — a different count strands " +
-            "existing rows in buckets the merge never probes (silent " +
-            "duplicate ids). Restore the original setting or rebuild the " +
-            "warehouse.")
+        throw new IllegalStateException(s"state was bucketed with $persisted buckets but " +
+          s"graft.state.buckets=$stateBuckets — a different count strands existing rows in " +
+          "buckets the merge never probes (silent duplicate ids). Restore the original " +
+          "setting or rebuild the warehouse.")
     }
 
   /** Persist the bucket count with the first bucket write, staged
@@ -169,12 +167,9 @@ final class StreamIngest(
     * tests. A replay of the last applied batch is skipped ([[replayed]]).
     *
     * A small batch above the state's `maxSeq` joins the pending delta
-    * ([[withDelta]]); any other batch takes the bucketed merge
-    * ([[merge]]): ids hash to a `_bucket` partition; only partitions
-    * present in the batch or the delta are read back, merged
-    * (last-writer-wins), and written under a new name that the next
-    * manifest points at ([[writeBuckets]]). Untouched buckets are never
-    * read or rewritten.
+    * ([[withDelta]]); any other batch takes the bucketed [[merge]]. The
+    * views are then published over the manifest just committed, with no
+    * second read of it.
     */
   def applyBatch(batch0: DataFrame, batchId: Long): Unit = {
     published = None
@@ -192,30 +187,29 @@ final class StreamIngest(
     try {
       val meta = small.fold(batchMeta(input, liveType))(BatchMeta.of)
       val live = stateManifest.live()
-      if (!replayed(batchId, meta.maxSeq, live)) {
+      val now = if (replayed(batchId, meta.maxSeq, live)) live else {
         val m = live.getOrElse(StreamIngest.NoState)
         val maxSeq = (m.maxSeq +: meta.maxSeq.toSeq).max
         stateManifest.sweepUnreferenced(m.files)
-        small.flatMap(withDelta(m, _)) match {
+        Some(small.flatMap(withDelta(m, _)) match {
           case Some(delta) => stateManifest.commit(batchId, maxSeq, m.files, delta)
-          case None        => writeBuckets(merge(m, input, meta.buckets), batchId, maxSeq, m.files)
-        }
+          case None        => merge(m, input, meta, batchId, maxSeq)
+        })
       }
-      publishWith(meta.types)
-      advanceCheckpoint(meta.maxSeq)
+      publishWith(meta.types, now)
     } finally if (small.isEmpty) input.unpersist()
   }
 
   /** What a large micro-batch touches, read in ONE aggregation over the
     * cached batch (which is also the job that fills the cache): its
-    * `_bucket`s, its highest seq, and the docTypes of its `liveType`
-    * rows — the set [[Split.discoverTypes]] would return.
+    * `_bucket`s, its highest seq, the docTypes of its `liveType` rows —
+    * the set [[Split.discoverTypes]] would return — and its chars.
     */
   private def batchMeta(batch: DataFrame, liveType: Column): BatchMeta = {
     val r = batch.agg(collect_set(col("_bucket")), max(col("seqNum")),
-      collect_set(liveType)).head()
+      collect_set(liveType), sum(length(concat_ws("", col("id"), col("doc"))))).head()
     BatchMeta(r.getSeq[Int](0).toSet, Option(r.get(1)).map(_.asInstanceOf[Long]),
-      r.getSeq[String](2).toSet)
+      r.getSeq[String](2).toSet, Option(r.get(3)).fold(0L)(_.asInstanceOf[Long]))
   }
 
   /** The pending delta of `m` with a small batch's `rows` applied, LWW
@@ -233,27 +227,48 @@ final class StreamIngest(
     }.filter(_.map(_.size).sum <= StreamIngest.deltaBound(m))
 
   /** The bucketed merge of `input` into the state of `m`, folding its
-    * delta in: the files of the buckets `input` or the delta touch, the
-    * delta rows and `input`, last writer wins per id.
+    * delta in, written ONCE under a fresh per-batch directory and committed
+    * with no delta. It reads every live file naming a bucket that `input`
+    * or the delta touch and rewrites the union of their buckets as G
+    * groups of consecutive buckets, G = estimated bytes over one scan split
+    * (`spark.sql.files.maxPartitionBytes`), between 1 and one per bucket.
+    * ONE exchange on the group serves both the last-writer-wins window and
+    * the write: each group is one task's one file. The other files' lines
+    * carry forward. A crash before the commit leaves an orphan directory,
+    * swept on the next attempt.
     */
-  private def merge(m: ManifestVersion, input: DataFrame,
-                    buckets: Set[Int]): DataFrame = {
-    val touched = buckets ++ m.delta.map(_.bucket)
-    val parts = scan(m.files.filter(f => touched(f.bucket))).toSeq :+
+  private def merge(m: ManifestVersion, input: DataFrame, meta: BatchMeta,
+                    batchId: Long, maxSeq: Long): ManifestVersion = {
+    val touched = meta.buckets ++ m.delta.map(_.bucket)
+    val readRels = m.files.filter(f => touched(f.bucket)).map(_.rel).toSet
+    val (read, kept) = m.files.partition(f => readRels(f.rel))
+    val buckets = (touched ++ read.map(_.bucket)).toIndexedSeq.sorted
+    val bytes = read.distinctBy(_.rel).map(_.length).sum + m.delta.map(_.size).sum + meta.bytes
+    val split = JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    val g = math.max(1L, math.min(buckets.size.toLong, (bytes + split - 1) / split)).toInt
+    val groupOf = buckets.zipWithIndex.map { case (b, i) => b -> i * g / buckets.size }.toMap
+    val parts = scan(read).map(_.withColumn("_bucket", bucketCol)).toSeq :+
       StreamIngest.frame(spark, m.delta.map(_.row)) :+ input
-    // LWW per id, tombstones RETAINED (deletes survive replays; a doc
-    // re-created after deletion wins via its higher seq) — the exact
-    // semantic of the shared CDC compaction
-    Compact.latestChanges(parts.reduce(_ unionByName _))
+    // a null id has no bucket; the window drops its row
+    val grouped = parts.reduce(_ unionByName _).withColumn("_group", coalesce(
+      typedLit(Seq.tabulate(stateBuckets)(groupOf.getOrElse(_, 0))).getItem(col("_bucket")), lit(0)))
+    val dirName = s"b$batchId-${System.nanoTime()}"
+    // tombstones RETAINED: deletes survive replays, a re-created doc wins
+    // by its higher seq
+    Compact.latestChanges(grouped.repartitionById(g, col("_group")), col("_group"))
+      .select(StreamIngest.DataSchema.fieldNames.toSeq.map(col): _*)
+      .write.mode("overwrite").option(StreamIngest.SuccessMarker, "false")
+      .parquet(stateManifest.dataPath(dirName).toString)
+    commitBucketMeta()
+    val groups = (0 until g).map(k => buckets.filter(groupOf(_) == k))
+    stateManifest.commit(batchId, maxSeq, kept ++ stateManifest.landed(dirName, groups), Nil)
   }
 
   /** The warehouse's OWN outbound change feed from persisted state — the
     * CouchDB `_changes` contract re-exposed for downstream incremental
     * consumers: latest change per id with `seqNum > since`, tombstones
-    * included so deletes propagate (the state table already holds exactly
-    * that — this is a filter over the bucketed parquet and the delta, no
-    * shuffle). Resume token = `max(seqNum)` consumed ([[checkpoint]] for
-    * all).
+    * included so deletes propagate (a filter over the state, no shuffle).
+    * Resume token = `max(seqNum)` consumed ([[checkpoint]] for all).
     */
   def changesSince(since: Long): DataFrame =
     existingState()
@@ -286,65 +301,40 @@ final class StreamIngest(
       replay
     }
 
-  /** Land the merged (touched-bucket-only) state ONCE under a fresh
-    * per-batch directory and commit a manifest naming every live file and
-    * the highest seq absorbed, with no delta (the merge folded it in):
-    * the entries of untouched buckets in `live` carry forward, touched
-    * ones point into the new directory, which one listing per bucket
-    * directory reads right after the write. Readers see the old manifest
-    * or the new one, never a half-written bucket
-    * ([[StreamIngest.ManifestDir]]); a crash before the commit leaves an
-    * orphan directory, swept on the next attempt.
-    */
-  private def writeBuckets(state: DataFrame, batchId: Long, maxSeq: Long,
-                           live: Seq[StateFile]): Unit = {
-    val dirName = s"b$batchId-${System.nanoTime()}"
-    state.write.mode("overwrite").partitionBy("_bucket")
-      .parquet(stateManifest.dataPath(dirName).toString)
-    commitBucketMeta()
-    val landed = stateManifest.landed(dirName)
-    val touched = landed.map(_.bucket).toSet
-    stateManifest.commit(batchId, maxSeq, live.filterNot(f => touched(f.bucket)) ++ landed, Nil)
-  }
-
-  /** The persisted state table as `m` (by default the live manifest,
-    * read afresh so an instance that does not write still sees the
-    * writer's commits) names it — None before any state: the scan of its
-    * files without the rows of the delta's ids, plus the delta rows, a
-    * local relation resolved at plan time (no broadcast, no second scan).
+  /** The persisted state table as `m` (by default the live manifest, read
+    * afresh so a reading instance sees the writer's commits) names it —
+    * None before any state: the scan of its files without the rows of the
+    * delta's ids, plus the delta rows as a local relation (no broadcast,
+    * no second scan).
     */
   private def existingState(m: Option[ManifestVersion] =
       stateManifest.live()): Option[DataFrame] =
     m.flatMap { v =>
-      val delta = Option.when(v.delta.nonEmpty)(StreamIngest.frame(spark, v.delta.map(_.row)))
+      val delta = Option.when(v.delta.nonEmpty)(
+        StreamIngest.frame(spark, v.delta.map(_.row)).drop("_bucket"))
       val base = scan(v.files).map(b =>
         if (delta.isEmpty) b else b.where(!col("id").isin(v.delta.map(_.id): _*)))
       (base ++ delta).reduceOption(_ unionByName _)
     }
 
-  /** ONE parquet relation over exactly `files` (None when there are none:
-    * an all-filtered first batch commits a manifest with no files), with
-    * each `_bucket` value mapped to its directory and every file's status
-    * taken from the manifest: Spark lists nothing, infers neither a
-    * schema from footers nor partitions from paths, and the scan needs no
-    * post-scan filter.
+  /** ONE parquet relation (`id`, `seqNum`, `deleted`, `doc`) over exactly
+    * `files`, each read once however many buckets it names (None when
+    * there are none), every status taken from the manifest: Spark lists
+    * nothing and infers neither a schema nor partitions. A row's bucket is
+    * a function of its id ([[bucketCol]]).
     */
   private def scan(files: Seq[StateFile]): Option[DataFrame] =
     Option.when(files.nonEmpty) {
-      val statuses = files.map(f => f.bucket -> new FileStatus(f.length, false, 0, 0, 0,
-        fs.makeQualified(stateManifest.dataPath(f.rel))))
-      val byDir = statuses.groupBy(_._2.getPath.getParent)
-        .map { case (dir, fss) => dir -> fss.map(_._2).toArray }
+      val byDir = files.distinctBy(_.rel).map(f => new FileStatus(f.length, false, 0, 0, 0,
+        fs.makeQualified(stateManifest.dataPath(f.rel)))).groupBy(_.getPath.getParent)
       val listed = new FileStatusCache {
-        override def getLeafFiles(dir: Path): Option[Array[FileStatus]] = byDir.get(dir)
+        override def getLeafFiles(dir: Path): Option[Array[FileStatus]] = byDir.get(dir).map(_.toArray)
         def putLeafFiles(dir: Path, leafFiles: Array[FileStatus]): Unit = ()
         def invalidateAll(): Unit = ()
       }
-      val partitions = statuses.map { case (b, st) => PartitionPath(InternalRow(b), st.getPath.getParent) }
-        .distinct.sortBy(_.path.toString)
-      val index = new InMemoryFileIndex(spark, partitions.map(_.path), Map.empty, None, listed,
-        Some(PartitionSpec(StreamIngest.BucketSchema, partitions)))
-      spark.baseRelationToDataFrame(HadoopFsRelation(index, StreamIngest.BucketSchema,
+      val index = new InMemoryFileIndex(spark, byDir.keys.toSeq.sortBy(_.toString), Map.empty,
+        None, listed, Some(PartitionSpec(new StructType(), Nil)))
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
         StreamIngest.DataSchema, None, new ParquetFileFormat, Map.empty)(spark))
     }
 
@@ -379,10 +369,10 @@ final class StreamIngest(
   def publish(): Unit =
     if (!published.exists(_.forall { case (name, entry) =>
           GraftSqlBridge.tempView(spark, name).exists(_ eq entry) }))
-      publishWith(Set.empty)
+      publishWith(Set.empty, stateManifest.live())
 
-  private def publishWith(batchTypes: Set[String]): Unit = {
-    val views = existingState().toSeq.flatMap { st =>
+  private def publishWith(batchTypes: Set[String], m: Option[ManifestVersion]): Unit = {
+    val views = existingState(m).toSeq.flatMap { st =>
       val live = st.where(!col("deleted"))
       val types = opts.split match {
         case Some(f) =>
@@ -433,30 +423,27 @@ final class StreamIngest(
         StateFs.readString(fs, new Path(schemaDir, n)))
     }
 
-  def checkpoint: Long =
-    if (fs.exists(checkpointFile))
-      StateFs.readString(fs, checkpointFile).trim.toLong
-    else 0L
-
-  private def advanceCheckpoint(maxSeq: Option[Long]): Unit =
-    maxSeq.filter(_ > checkpoint).foreach { s =>
-      // advisory side-file (re-derived from state on the next batch):
-      // a torn overwrite is tolerated — see StateFs.writeString
-      StateFs.writeString(fs, checkpointFile, s.toString)
-    }
+  /** The highest seq the state has absorbed (A13), 0 before any: the live
+    * manifest's `maxSeq`, committed atomically with the state.
+    */
+  def checkpoint: Long = stateManifest.live().fold(0L)(m => math.max(0L, m.maxSeq))
 
 }
 
 object StreamIngest {
-  /** Schema of the persisted state table — its parquet columns and its
-    * `_bucket` partition column — given to every state read so none
-    * infers it from parquet footers or paths.
+  /** Columns of the persisted state files, given to every state read so
+    * none infers them from parquet footers; in-flight state rows also
+    * carry their `_bucket`.
     */
   private val DataSchema = StructType(Seq(
     StructField("id", StringType), StructField("seqNum", LongType),
     StructField("deleted", BooleanType), StructField("doc", StringType)))
-  private val BucketSchema = StructType(Seq(StructField("_bucket", IntegerType)))
-  private val StateSchema = StructType(DataSchema.fields ++ BucketSchema.fields)
+  private val StateSchema = DataSchema.add("_bucket", IntegerType)
+
+  /** The Hadoop write option that, off, spares a merge's directory the
+    * `_SUCCESS` file: the manifest commit is what makes it live.
+    */
+  private val SuccessMarker = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
 
   /** The most rows a batch may have to be collected to the driver and
     * join the delta; a larger one takes the bucketed merge.
@@ -469,15 +456,21 @@ object StreamIngest {
   private val MaxDeltaBytes: Long = 1L << 20
 
   /** How large the pending delta of `m` may grow before a sync folds it
-    * into the buckets: one average bucket of the base (the manifest's file
-    * bytes over its buckets), so merge-on-read never carries more than
-    * about one bucket's worth of rows, and at most [[MaxDeltaBytes]]. A
-    * state with no files has no delta: its first batch writes the base.
+    * into the buckets: one average bucket of the base (the manifest's
+    * distinct file bytes over its buckets), so merge-on-read never carries
+    * more than about one bucket's worth of rows, and at most
+    * [[MaxDeltaBytes]]. A state with no files has no delta: its first
+    * batch writes the base.
     */
   private def deltaBound(m: ManifestVersion): Long = {
     val buckets = m.files.map(_.bucket).distinct.size
-    if (buckets == 0) 0L else math.min(MaxDeltaBytes, m.files.map(_.length).sum / buckets)
+    if (buckets == 0) 0L
+    else math.min(MaxDeltaBytes, m.files.distinctBy(_.rel).map(_.length).sum / buckets)
   }
+
+  /** The weight of a state row: the chars of its id and doc. */
+  private def chars(id: String, doc: String): Long =
+    Option(id).fold(0)(_.length) + Option(doc).fold(0)(_.length)
 
   /** A state frame of `rows` (`StateSchema`): a local relation, which
     * the plan carries, so reading it runs no job of its own.
@@ -485,9 +478,11 @@ object StreamIngest {
   private def frame(spark: SparkSession, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(rows.asJava, StateSchema)
 
-  /** A micro-batch's touched buckets, highest seq and live docTypes. */
+  /** A micro-batch's touched buckets, highest seq, live docTypes and
+    * [[chars]].
+    */
   private final case class BatchMeta(buckets: Set[Int], maxSeq: Option[Long],
-                                     types: Set[String])
+                                     types: Set[String], bytes: Long)
 
   private object BatchMeta {
     /** The meta of a collected batch: rows of `StateSchema` plus its live
@@ -497,7 +492,8 @@ object StreamIngest {
     def of(rows: Seq[Row]): BatchMeta = BatchMeta(
       rows.filterNot(_.isNullAt(4)).map(_.getInt(4)).toSet,
       rows.filterNot(_.isNullAt(1)).map(_.getLong(1)).maxOption,
-      rows.filterNot(_.isNullAt(5)).map(_.getString(5)).toSet)
+      rows.filterNot(_.isNullAt(5)).map(_.getString(5)).toSet,
+      rows.map(r => chars(r.getString(0), r.getString(3))).sum)
   }
 
   /** A row of the pending delta: the latest change of `id`, newer than
@@ -507,8 +503,8 @@ object StreamIngest {
                                            doc: String, bucket: Int) {
     def row: Row = Row(id, seqNum, deleted, doc, bucket)
 
-    /** Its weight against [[deltaBound]]: the chars of its id and doc. */
-    def size: Long = id.length + Option(doc).fold(0)(_.length)
+    /** Its weight against [[deltaBound]]. */
+    def size: Long = chars(id, doc)
   }
 
   private[graft] object DeltaRow {
@@ -526,9 +522,10 @@ object StreamIngest {
         .values.toSeq.sortBy(_.id)
   }
 
-  /** A live state file as the manifest names it: its `_bucket`, its path
-    * relative to the manifest root and its byte length (the one status
-    * field a parquet scan needs that the path does not carry).
+  /** A live state file as the manifest names it, once per bucket it
+    * holds: the `_bucket`, its path relative to the manifest root and its
+    * byte length (the one status field a parquet scan needs that the path
+    * does not carry).
     */
   private[graft] final case class StateFile(bucket: Int, rel: String, length: Long) {
     def dir: String = rel.substring(0, rel.lastIndexOf('/'))
@@ -545,13 +542,13 @@ object StreamIngest {
   private val NoState = ManifestVersion(-1L, -1L, Nil, Nil)
 
   /** The layout of the state, safe on object stores ([[StateFs]]'s
-    * atomicity boundary): each merge writes its touched buckets ONCE as
-    * `<root>/b<batchId>-<nanos>/_bucket=N/` directories, never moved, and
-    * a versioned MANIFEST — a `maxSeq⇥N` header, then one
-    * `bucket⇥path⇥length` line per live parquet file and one
-    * `delta⇥bucket⇥seq⇥deleted⇥id⇥doc` line per pending delta row (id
-    * and doc escaped) — is the file index and the delta.
-    * The commit is the manifest landing via [[StateFs.writeVersioned]]: a
+    * atomicity boundary): each merge writes ONCE, never moved, one
+    * `<root>/b<batchId>-<nanos>/part-NNNNN-*` file per group of buckets
+    * (files of the earlier layout, `b<batchId>-<nanos>/_bucket=N/part-*`,
+    * are one-bucket groups), and a versioned MANIFEST — a `maxSeq⇥N`
+    * header, one `bucket⇥path⇥length` line per bucket of each live file,
+    * one `delta⇥bucket⇥seq⇥deleted⇥id⇥doc` line per pending delta row (id
+    * and doc escaped) — is the file index and the delta. The commit is the manifest landing via [[StateFs.writeVersioned]]: a
     * dst-absent rename of ONE SMALL FILE, atomic on HDFS/POSIX and a
     * single-object copy-PUT on S3A/GCS; no DIRECTORY is ever renamed. The
     * manifest's version IS the exactly-once batch marker; a crash before
@@ -619,28 +616,32 @@ object StreamIngest {
     /** Absolute path of a data directory or file under the root. */
     def dataPath(rel: String): Path = new Path(root, rel)
 
-    /** The parquet files a partitioned write landed under `dirName`, once
-      * per merge, right after the write: one `listStatus` of the directory
-      * and one per `_bucket=` directory in it (a recursive `listFiles`
-      * builds located statuses, whose permissions the local filesystem
-      * reads by a shell-out per file). Hidden and `_`-prefixed names
-      * (checksums, `_SUCCESS`) are not data.
+    /** The parquet files a merge landed under `dirName`, each once per
+      * bucket of its group (`groups`, by index), read by one `listStatus`
+      * right after the write. A file's group is the write task's
+      * partition, which Spark's committer puts in its `part-NNNNN-` name.
+      * Hidden and `_`-prefixed names (checksums, `_SUCCESS`) are not data.
       */
-    def landed(dirName: String): Seq[StateFile] =
+    def landed(dirName: String, groups: IndexedSeq[Seq[Int]]): Seq[StateFile] =
       for {
-        d <- fs.listStatus(dataPath(dirName)).toSeq
-        dir = d.getPath.getName if d.isDirectory && dir.startsWith("_bucket=")
-        f <- fs.listStatus(d.getPath).toSeq
+        f <- fs.listStatus(dataPath(dirName)).toSeq
         name = f.getPath.getName if !name.startsWith("_") && !name.startsWith(".")
-      } yield StateFile(dir.stripPrefix("_bucket=").toInt, s"$dirName/$dir/$name", f.getLen)
+        b <- name match {
+          case PartFile(p) if p.toInt < groups.size => groups(p.toInt)
+          case _ => throw new IllegalStateException(s"${f.getPath}: not a part-NNNNN- file of a group")
+        }
+      } yield StateFile(b, s"$dirName/$name", f.getLen)
+
+    private val PartFile = """part-(\d+)-.*""".r
 
     /** Commit `files`, the pending `delta` and `maxSeq` as the
       * batch-`batchId` manifest (see the class doc for why this single
-      * small-file commit is the portable one).
+      * small-file commit is the portable one), returned as readers see it.
       */
-    def commit(batchId: Long, maxSeq: Long, files: Seq[StateFile], delta: Seq[DeltaRow]): Unit = {
+    def commit(batchId: Long, maxSeq: Long, files: Seq[StateFile],
+               delta: Seq[DeltaRow]): ManifestVersion = {
       val text = new StringBuilder(s"$Header\t$maxSeq\n")
-      files.sortBy(_.rel).foreach { f =>
+      files.sortBy(f => (f.rel, f.bucket)).foreach { f =>
         require(!f.rel.contains('\t') && !f.rel.contains('\n'),
           s"manifest path contains a tab/newline: ${f.rel}")
         text ++= s"${f.bucket}\t${f.rel}\t${f.length}\n"
@@ -649,27 +650,26 @@ object StreamIngest {
         text ++= s"$Delta\t${d.bucket}\t${d.seqNum}\t${d.deleted}\t${escape(d.id)}\t${escape(d.doc)}\n"
       }
       StateFs.writeVersioned(fs, root, Prefix, Suffix, batchId, text.toString.getBytes("UTF-8"))
+      ManifestVersion(batchId, maxSeq, files, delta)
     }
 
-    /** Delete data directories no manifest references any more — crash
-      * orphans (data written, commit never landed) and directories fully
-      * retired by later commits. A batch directory that is PARTIALLY
-      * referenced (its untouched bucket directories are still live) keeps
-      * the bucket directories `referenced` files live in; its retired ones
-      * are dropped. Call BEFORE a batch writes its data dir or commits
-      * (single writer), never after the commit: a reader still scanning
-      * the just-retired state must not lose its files.
+    /** Delete data no manifest references any more — crash orphans (data
+      * written, commit never landed) and data retired by later commits. A
+      * batch directory that is PARTIALLY referenced (some of its files, or
+      * of its per-bucket directories, still live) keeps exactly what
+      * `referenced` names; its retired entries are dropped. Call BEFORE a
+      * batch writes its data dir or commits (single writer), never after
+      * the commit: a reader still scanning the just-retired state must not
+      * lose its files.
       */
     def sweepUnreferenced(referenced: Seq[StateFile]): Unit = {
-      val dirs = referenced.map(_.dir).toSet
-      val tops = dirs.map(_.split("/", 2)(0))
+      val live = referenced.flatMap(f => Seq(f.rel, f.dir, f.dir.split("/")(0))).toSet
       StateFs.listNames(fs, root).foreach { n =>
         if (!n.startsWith(s"$Prefix-") && !n.startsWith(".")) {
-          if (!tops.contains(n)) StateFs.deleteRecursively(fs, new Path(root, n))
+          if (!live.contains(n)) StateFs.deleteRecursively(fs, new Path(root, n))
           else StateFs.listNames(fs, new Path(root, n)).foreach { s =>
-            val p = new Path(root, s"$n/$s")
-            if (!dirs.contains(s"$n/$s") && fs.getFileStatus(p).isDirectory)
-              StateFs.deleteRecursively(fs, p)
+            if (!s.startsWith(".") && !live.contains(s"$n/$s"))
+              StateFs.deleteRecursively(fs, new Path(root, s"$n/$s"))
           }
         }
       }

@@ -85,79 +85,90 @@ class ManifestProtocolSpec extends SparkSpec {
   }
 
   test("partially retired batch dirs drop exactly their superseded buckets") {
-    val wh = noRenameDir("sweep-wh")
-    val ingest = new StreamIngest(spark, WarehouseOptions(database = "swdb"), wh)
-    // enough ids to land several buckets in batch 0's dir
-    ingest.applyBatch(mk((1 to 40).map(i =>
-      change(i, s"doc$i", s"""{"_id":"doc$i","_rev":"1","v":$i}"""))), 0L)
-    val fs = new Path(wh).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifest = new StreamIngest.ManifestDir(fs, new Path(s"$wh/_state_v"))
-    // bucket -> its directory, derived from the manifest's file entries
-    def live() = manifest.live().map { m =>
-      m.batchId -> m.files.map(f => f.bucket -> f.dir).toMap
-    }.get
-    val (v0, map0) = live()
-    assert(v0 == 0L && map0.size > 3, s"expected several buckets, got $map0")
+    // a 256-byte scan split: batch 0's dir holds several files of a few
+    // buckets each
+    withConf("spark.sql.files.maxPartitionBytes" -> "256") {
+      val wh = noRenameDir("sweep-wh")
+      val ingest = new StreamIngest(spark, WarehouseOptions(database = "swdb"), wh)
+      // enough ids to land several buckets in batch 0's dir
+      ingest.applyBatch(mk((1 to 40).map(i =>
+        change(i, s"doc$i", s"""{"_id":"doc$i","_rev":"1","v":$i}"""))), 0L)
+      val fs = new Path(wh).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val manifest = new StreamIngest.ManifestDir(fs, new Path(s"$wh/_state_v"))
+      // bucket -> its file, derived from the manifest's file entries
+      def live() = manifest.live().map { m =>
+        m.batchId -> m.files.map(f => f.bucket -> f.rel).toMap
+      }.get
+      val (v0, map0) = live()
+      assert(v0 == 0L && map0.size > 3, s"expected several buckets, got $map0")
+      assert(map0.values.toSet.size > 1, s"expected several files, got $map0")
 
-    // touch exactly one id: exactly one manifest entry moves to the new
-    // batch dir; every other entry still points into batch 0's dir (each
-    // batch re-delivers an applied change, which sends it down the
-    // bucketed merge)
-    ingest.applyBatch(mk(Seq(
-      change(99, "doc1", """{"_id":"doc1","_rev":"2","v":100}"""),
-      change(1, "doc1", """{"_id":"doc1","_rev":"1","v":1}"""))), 1L)
-    val (v1, map1) = live()
-    assert(v1 == 1L)
-    val moved = map0.keySet.filter(k => map1(k) != map0(k))
-    assert(moved.size == 1, s"exactly one bucket should move, got $moved")
+      // touch exactly one id: exactly the entries of one file move to the
+      // new batch dir; every other entry still points into batch 0's dir
+      // (each batch re-delivers an applied change, which sends it down the
+      // bucketed merge)
+      ingest.applyBatch(mk(Seq(
+        change(99, "doc1", """{"_id":"doc1","_rev":"2","v":100}"""),
+        change(1, "doc1", """{"_id":"doc1","_rev":"1","v":1}"""))), 1L)
+      val (v1, map1) = live()
+      assert(v1 == 1L)
+      val moved = map0.keySet.filter(k => map1(k) != map0(k))
+      val superseded = moved.map(map0)
+      assert(superseded.size == 1, s"exactly one file should move, got $superseded")
+      assert(moved == map0.keySet.filter(k => superseded(map0(k))))
 
-    // the NEXT write sweeps the superseded sub-directory out of batch
-    // 0's dir while its still-live siblings stay
-    ingest.applyBatch(mk(Seq(
-      change(100, "doc1", """{"_id":"doc1","_rev":"3","v":101}"""),
-      change(99, "doc1", """{"_id":"doc1","_rev":"2","v":100}"""))), 2L)
-    val (_, map2) = live()
-    val supersededRel = map0(moved.head)
-    assert(!fs.exists(new Path(s"$wh/_state_v/$supersededRel")),
-      "the superseded bucket sub-dir must be swept")
-    map2.filter(_._2.startsWith(map0(moved.head).split("/")(0))).foreach {
-      case (_, rel) => assert(fs.exists(new Path(s"$wh/_state_v/$rel")))
+      // the NEXT write sweeps the superseded file out of batch 0's dir
+      // while its still-live siblings stay
+      ingest.applyBatch(mk(Seq(
+        change(100, "doc1", """{"_id":"doc1","_rev":"3","v":101}"""),
+        change(99, "doc1", """{"_id":"doc1","_rev":"2","v":100}"""))), 2L)
+      val (_, map2) = live()
+      assert(!fs.exists(new Path(s"$wh/_state_v/${superseded.head}")),
+        "the superseded file must be swept")
+      val dir0 = superseded.head.split("/")(0)
+      assert(map2.values.exists(_.startsWith(s"$dir0/")), s"batch 0's dir is fully retired: $map2")
+      map2.filter(_._2.startsWith(s"$dir0/")).foreach {
+        case (_, rel) => assert(fs.exists(new Path(s"$wh/_state_v/$rel")))
+      }
+      ingest.publish()
+      val v = spark.sql("SELECT v FROM swdb WHERE id = 'doc1'").collect()(0).getDouble(0)
+      assert(v == 101.0)
+      assert(spark.sql("SELECT COUNT(*) FROM swdb").collect()(0).getLong(0) == 40L)
     }
-    ingest.publish()
-    val v = spark.sql("SELECT v FROM swdb WHERE id = 'doc1'").collect()(0).getDouble(0)
-    assert(v == 101.0)
-    assert(spark.sql("SELECT COUNT(*) FROM swdb").collect()(0).getLong(0) == 40L)
   }
 
   test("the state is read as one scan of the manifest's files") {
-    val wh = Files.createTempDirectory("one-scan-wh").toString
-    val ingest = new StreamIngest(spark, WarehouseOptions(database = "osdb"), wh)
-    // three batches touching different buckets: the live files span
-    // three batch directories (the later two re-deliver an applied
-    // change, which sends them down the bucketed merge)
-    ingest.applyBatch(mk((1 to 40).map(i =>
-      change(i, s"doc$i", s"""{"_id":"doc$i","_rev":"1","v":$i}"""))), 0L)
-    ingest.applyBatch(mk(Seq(
-      change(41, "doc1", """{"_id":"doc1","_rev":"2","v":100}"""),
-      change(1, "doc1", """{"_id":"doc1","_rev":"1","v":1}"""))), 1L)
-    ingest.applyBatch(mk(Seq(deletion(42, "doc2"),
-      change(43, "doc41", """{"_id":"doc41","_rev":"1","v":41}"""),
-      change(2, "doc2", """{"_id":"doc2","_rev":"1","v":2}"""))), 2L)
-    val fs = new Path(wh).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = new StreamIngest.ManifestDir(fs, new Path(s"$wh/_state_v")).live().get.files
-    assert(files.map(_.rel.split("/")(0)).distinct.size == 3, s"$files")
+    // a 256-byte scan split, so that the live files span several dirs
+    withConf("spark.sql.files.maxPartitionBytes" -> "256") {
+      val wh = Files.createTempDirectory("one-scan-wh").toString
+      val ingest = new StreamIngest(spark, WarehouseOptions(database = "osdb"), wh)
+      // three batches touching different buckets: the live files span
+      // three batch directories (the later two re-deliver an applied
+      // change, which sends them down the bucketed merge)
+      ingest.applyBatch(mk((1 to 40).map(i =>
+        change(i, s"doc$i", s"""{"_id":"doc$i","_rev":"1","v":$i}"""))), 0L)
+      ingest.applyBatch(mk(Seq(
+        change(41, "doc1", """{"_id":"doc1","_rev":"2","v":100}"""),
+        change(1, "doc1", """{"_id":"doc1","_rev":"1","v":1}"""))), 1L)
+      ingest.applyBatch(mk(Seq(deletion(42, "doc2"),
+        change(43, "doc41", """{"_id":"doc41","_rev":"1","v":41}"""),
+        change(2, "doc2", """{"_id":"doc2","_rev":"1","v":2}"""))), 2L)
+      val fs = new Path(wh).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val files = new StreamIngest.ManifestDir(fs, new Path(s"$wh/_state_v")).live().get.files
+      assert(files.map(_.rel.split("/")(0)).distinct.size == 3, s"$files")
 
-    val feed = ingest.changesSince(0L)
-    val got = feed.collect().map(_.toString).sorted.toSeq
-    val plan = feed.queryExecution.executedPlan
-    val helper = new AdaptiveSparkPlanHelper {}
-    assert(helper.collect(plan) { case s: FileSourceScanExec => s }.size == 1, plan)
-    assert(helper.collect(plan) { case u: UnionExec => u }.isEmpty, plan)
+      val feed = ingest.changesSince(0L)
+      val got = feed.collect().map(_.toString).sorted.toSeq
+      val plan = feed.queryExecution.executedPlan
+      val helper = new AdaptiveSparkPlanHelper {}
+      assert(helper.collect(plan) { case s: FileSourceScanExec => s }.size == 1, plan)
+      assert(helper.collect(plan) { case u: UnionExec => u }.isEmpty, plan)
 
-    val plain = spark.read.schema("id STRING, seqNum LONG, deleted BOOLEAN, doc STRING")
-      .parquet(files.map(f => s"$wh/_state_v/${f.rel}"): _*)
-    assert(got == plain.collect().map(_.toString).sorted.toSeq)
-    assert(got.size == 41)
+      val plain = spark.read.schema("id STRING, seqNum LONG, deleted BOOLEAN, doc STRING")
+        .parquet(files.map(f => s"$wh/_state_v/${f.rel}").distinct: _*)
+      assert(got == plain.collect().map(_.toString).sorted.toSeq)
+      assert(got.size == 41)
+    }
   }
 
   test("a rename-layout warehouse fails loudly at construction") {
@@ -229,7 +240,7 @@ class ManifestProtocolSpec extends SparkSpec {
     assert(e.getMessage.contains("state batchId went backwards") &&
       e.getMessage.contains("seq 2") && e.getMessage.contains("up to 1"), e.getMessage)
     assert(names() == before, "a refused batch must not touch state")
-    assert(restarted.checkpoint == 1L, "the side-file must not report an unabsorbed seq")
+    assert(restarted.checkpoint == 1L, "the checkpoint must not report an unabsorbed seq")
     // the true replay of batch 0 is still skipped
     restarted.applyBatch(mk(b0), 0L)
     assert(names() == before)

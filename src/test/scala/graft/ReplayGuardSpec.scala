@@ -26,11 +26,6 @@ class ReplayGuardSpec extends SparkSpec {
   private val Applied = 5L
   private val MarginKey = "graft.agg.replayMargin"
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    spark.conf.set(key, value)
-    try body finally spark.conf.unset(key)
-  }
-
   private def change(seq: Int, id: String, doc: String): String =
     s"""{"seq":"$seq-x","id":"$id","changes":[{"rev":"$seq-r"}],"doc":$doc}"""
 
@@ -89,7 +84,7 @@ class ReplayGuardSpec extends SparkSpec {
     test(s"$name: a margin of 2 skips an id 2 behind and fails one 3 behind") {
       val o = mk()
       val before = snapshot(o.root)
-      withConf(MarginKey, "2") {
+      withConf(MarginKey -> "2") {
         o.apply(Applied - 2)
         assert(snapshot(o.root) == before, "a skipped replay must not touch state")
         val e = intercept[IllegalStateException](o.apply(Applied - 3))
@@ -102,7 +97,7 @@ class ReplayGuardSpec extends SparkSpec {
     test(s"$name: a negative or non-numeric margin is rejected, naming the key") {
       val o = mk()
       val before = snapshot(o.root)
-      for (bad <- Seq("-1", "2x")) withConf(MarginKey, bad) {
+      for (bad <- Seq("-1", "2x")) withConf(MarginKey -> bad) {
         // the crash-window replay of the marker batch must not wedge the
         // owner behind a misleading "went backwards" error
         val e = intercept[IllegalArgumentException](o.apply(Applied))

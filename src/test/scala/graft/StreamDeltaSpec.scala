@@ -33,6 +33,15 @@ class StreamDeltaSpec extends SparkSpec {
   private def typed(seq: Int, id: String, t: String, v: Int): String =
     change(seq, id, s"""{"_id":"$id","_rev":"$seq-r","type":"$t","v":$v}""")
 
+  /** [[typed]] with 288 hex chars that parquet cannot compress away, so a
+    * small base's average bucket holds a few small changes: the delta
+    * bound is one average bucket of the base's file bytes.
+    */
+  private def padded(seq: Int, id: String, t: String, v: Int): String = {
+    val pad = (1 to 8).map(k => java.util.UUID.nameUUIDFromBytes(s"$id-$k".getBytes("UTF-8"))).mkString
+    change(seq, id, s"""{"_id":"$id","_rev":"$seq-r","type":"$t","v":$v,"pad":"$pad"}""")
+  }
+
   private def mk(rows: Seq[String]): DataFrame = ChangeFeed.fromLines(
     { import spark.implicits._; rows.toDF("value") }, "value")
 
@@ -117,7 +126,7 @@ class StreamDeltaSpec extends SparkSpec {
   test("a small sync rewrites no bucket and writes no data file") {
     val wh = tempDir("nowrite-wh")
     val ingest = new StreamIngest(spark, WarehouseOptions(database = "nwdb"), wh)
-    ingest.applyBatch(mk((1 to 40).map(i => typed(i, s"d$i", "order", i))), 0L)
+    ingest.applyBatch(mk((1 to 40).map(i => padded(i, s"d$i", "order", i))), 0L)
     val fs = new Path(wh).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def dataDirs() = StateFs.listNames(fs, new Path(s"$wh/_state_v")).filterNot(_.startsWith("manifest-")).toSet
     val (files, dirs) = (manifest(wh).live().get.files, dataDirs())
@@ -135,7 +144,7 @@ class StreamDeltaSpec extends SparkSpec {
   test("with a pending delta the state is one scan and a local relation, no broadcast") {
     val wh = tempDir("plan-wh")
     val ingest = new StreamIngest(spark, WarehouseOptions(database = "pldb"), wh)
-    ingest.applyBatch(mk((1 to 40).map(i => typed(i, s"d$i", "order", i))), 0L)
+    ingest.applyBatch(mk((1 to 40).map(i => padded(i, s"d$i", "order", i))), 0L)
     ingest.applyBatch(mk(Seq(deletion(41, "d1"), typed(42, "d2", "order", 200))), 1L)
     assert(manifest(wh).live().get.delta.size == 2)
     val feed = ingest.changesSince(0L)
@@ -154,7 +163,7 @@ class StreamDeltaSpec extends SparkSpec {
     val wh = tempDir("restart-wh")
     val opts = WarehouseOptions(database = "rdb", split = Some("type"))
     val first = new StreamIngest(spark, opts, wh)
-    val base = (1 to 30).map(i => typed(i, s"d$i", types(i % 3), i))
+    val base = (1 to 30).map(i => padded(i, s"d$i", types(i % 3), i))
     first.applyBatch(mk(base), 0L)
     // ids with a raw tab and newline, a doc with backslash escapes and a
     // literal \N: the manifest's delta lines must carry them exactly

@@ -71,6 +71,23 @@ class StreamIngestSpec extends SparkSpec {
     assert(ingest.checkpoint == 2L)
   }
 
+  test("a second instance on the same warehouse reports the writer's checkpoint") {
+    val wh = tempDir("ckpt-wh")
+    val mk = (rows: Seq[String]) => ChangeFeed.fromLines(
+      { import spark.implicits._; rows.toDF("value") }, "value")
+    val writer = new StreamIngest(spark, WarehouseOptions(database = "cpdb"), wh)
+    val reader = new StreamIngest(spark, WarehouseOptions(database = "cpdb2"), wh)
+    assert(writer.checkpoint == 0L && reader.checkpoint == 0L)
+    writer.applyBatch(mk((1 to 3).map(i =>
+      change(i, s"k$i", s"""{"_id":"k$i","_rev":"1","v":$i}"""))), 0L)
+    assert(reader.checkpoint == 3L)
+    // a small batch lands as a delta in the manifest commit: the reader
+    // sees its seq too
+    writer.applyBatch(mk(Seq(change(4, "k1", """{"_id":"k1","_rev":"2","v":10}"""))), 1L)
+    assert(writer.checkpoint == 4L && reader.checkpoint == 4L)
+    assert(new StreamIngest(spark, WarehouseOptions(database = "cpdb3"), wh).checkpoint == 4L)
+  }
+
   test("schema registry survives restart (frozen first-doc-wins)") {
     val wh = tempDir("restart-wh")
     val ingest = new StreamIngest(spark, WarehouseOptions(database = "xdb"), wh)
@@ -88,38 +105,46 @@ class StreamIngestSpec extends SparkSpec {
   }
 
   test("bucketed state: untouched buckets are not rewritten") {
-    val wh = tempDir("bucket-wh")
-    val ingest = new StreamIngest(spark, WarehouseOptions(database = "bdb"), wh)
-    val mk = (rows: Seq[String]) => ChangeFeed.fromLines(
-      { import spark.implicits._; rows.toDF("value") }, "value")
-    // enough ids to populate several buckets
-    ingest.applyBatch(mk((1 to 40).map(i =>
-      change(i, s"doc$i", s"""{"_id":"doc$i","_rev":"1","v":$i}"""))), 0L)
+    // a 256-byte scan split: the state is several files of a few buckets
+    withConf("spark.sql.files.maxPartitionBytes" -> "256") {
+      val wh = tempDir("bucket-wh")
+      val ingest = new StreamIngest(spark, WarehouseOptions(database = "bdb"), wh)
+      val mk = (rows: Seq[String]) => ChangeFeed.fromLines(
+        { import spark.implicits._; rows.toDF("value") }, "value")
+      // enough ids to populate several buckets
+      ingest.applyBatch(mk((1 to 40).map(i =>
+        change(i, s"doc$i", s"""{"_id":"doc$i","_rev":"1","v":$i}"""))), 0L)
 
-    val manifest = new StreamIngest.ManifestDir(
-      new org.apache.hadoop.fs.Path(wh).getFileSystem(spark.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(s"$wh/_state_v"))
-    // bucket -> its live parquet files, as the manifest names them
-    def snapshot(): Map[Int, Set[String]] =
-      manifest.live().get.files.groupBy(_.bucket).map { case (b, fs) => b -> fs.map(_.rel).toSet }
+      val manifest = new StreamIngest.ManifestDir(
+        new org.apache.hadoop.fs.Path(wh).getFileSystem(spark.sparkContext.hadoopConfiguration),
+        new org.apache.hadoop.fs.Path(s"$wh/_state_v"))
+      // bucket -> its live parquet files, as the manifest names them
+      def snapshot(): Map[Int, Set[String]] =
+        manifest.live().get.files.groupBy(_.bucket).map { case (b, fs) => b -> fs.map(_.rel).toSet }
 
-    val before = snapshot()
-    assert(before.size > 3, s"expected several buckets, got ${before.keys}")
+      val before = snapshot()
+      assert(before.size > 3, s"expected several buckets, got ${before.keys}")
+      assert(before.values.flatten.toSet.size > 1, s"expected several files, got $before")
 
-    // touch exactly one id → exactly one bucket; the re-delivered seq-1
-    // change (at-least-once) sends the batch down the bucketed merge
-    ingest.applyBatch(mk(Seq(
-      change(99, "doc1", """{"_id":"doc1","_rev":"2","v":100}"""),
-      change(1, "doc1", """{"_id":"doc1","_rev":"1","v":1}"""))), 1L)
-    val after = snapshot()
+      // touch exactly one id → exactly the buckets of the one file holding
+      // its bucket; the re-delivered seq-1 change (at-least-once) sends the
+      // batch down the bucketed merge
+      ingest.applyBatch(mk(Seq(
+        change(99, "doc1", """{"_id":"doc1","_rev":"2","v":100}"""),
+        change(1, "doc1", """{"_id":"doc1","_rev":"1","v":1}"""))), 1L)
+      val after = snapshot()
 
-    val changed = before.keySet.filter(k => before(k) != after.getOrElse(k, Set.empty))
-    assert(changed.size == 1, s"exactly one bucket should change, got $changed")
-    // and the data is correct
-    ingest.publish()
-    val v = spark.sql("SELECT v FROM bdb WHERE id = 'doc1'").collect()(0).getDouble(0)
-    assert(v == 100.0)
-    assert(spark.sql("SELECT COUNT(*) FROM bdb").collect()(0).getLong(0) == 40L)
+      val changed = before.keySet.filter(k => before(k) != after.getOrElse(k, Set.empty))
+      val holders = changed.flatMap(before)
+      assert(holders.size == 1, s"exactly one file should be rewritten, got $holders")
+      assert(changed == before.collect { case (b, fs) if fs.exists(holders) => b }.toSet)
+      assert(changed.size < before.size, s"every bucket changed: $changed")
+      // and the data is correct
+      ingest.publish()
+      val v = spark.sql("SELECT v FROM bdb WHERE id = 'doc1'").collect()(0).getDouble(0)
+      assert(v == 100.0)
+      assert(spark.sql("SELECT COUNT(*) FROM bdb").collect()(0).getLong(0) == 40L)
+    }
   }
 
   test("state-backed outbound change feed: tombstones included, resumable") {
