@@ -29,22 +29,27 @@ object Flatten {
   private def quote(field: String): String = s"`$field`"
 
   /** One projected Column per schema leaf, reading from a parsed struct
-    * column `_parsed` (scalars) or the raw doc text (arrays).
+    * column `_parsed` (scalars) or the raw doc text (arrays); the `_id`
+    * leaf from the column `idCol` instead, when given.
     */
-  private def leafColumns(schema: DocSchema, docCol: String): Seq[Column] =
+  private def leafColumns(schema: DocSchema, docCol: String, idCol: Option[String]): Seq[Column] =
     schema.leaves.map { l =>
       if (l.isArray)
         get_json_object(col(docCol), "$." + l.path.mkString(".")).as(l.name)
+      else if (l.path == Seq("_id") && idCol.nonEmpty)
+        col(idCol.get).as(l.name)
       else
         col("_parsed." + l.path.map(quote).mkString(".")).cast(l.dataType).as(l.name)
     }
 
   /** Flatten `docCol` (raw JSON document text) of `df` into one column per
     * schema leaf, keeping the listed metadata columns (e.g. seqNum/deleted)
-    * after the leaves.
+    * after the leaves. With `idCol`, the `id` leaf is that column of `df`
+    * (a change id equal to the doc's `_id`): a plain column, so a filter
+    * on it runs below the parse.
     */
   def apply(df: DataFrame, schema: DocSchema, docCol: String = "doc",
-            keep: Seq[String] = Seq.empty): DataFrame =
+            keep: Seq[String] = Seq.empty, idCol: Option[String] = None): DataFrame =
     df.withColumn("_parsed", from_json(col(docCol), schema.parseSchema))
-      .select(leafColumns(schema, docCol) ++ keep.map(col): _*)
+      .select(leafColumns(schema, docCol, idCol) ++ keep.map(col): _*)
 }

@@ -6,13 +6,17 @@ import graft.ops.{Compact, Flatten, Split}
 import graft.WarehouseOptions
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.catalyst.expressions.{In, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
-  InMemoryFileIndex, PartitionSpec}
+  InMemoryFileIndex, LogicalRelation, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import scala.jdk.CollectionConverters._
 
 /** Continuous ingestion: the Spark Structured Streaming form of the
@@ -24,20 +28,24 @@ import scala.jdk.CollectionConverters._
   * the batch logic). Each micro-batch is the direct analog of the
   * reference's `batch` event handler (`foreachBatch` → [[applyBatch]]):
   *
-  *   1. ONE job collects the batch when it is small (at most
-  *      [[StreamIngest.SmallBatchRows]] rows), else its first rows only;
-  *      what it touches — `_bucket`s, highest seq, live docTypes — comes
-  *      from those rows, or from ONE aggregation over the cached large
-  *      batch;
+  *   1. ONE job — one select, analyzed once, plus a limit — collects the
+  *      batch when it is small (at most [[StreamIngest.SmallBatchRows]]
+  *      rows), else its first rows only; each row's `_bucket` and `_type`
+  *      (its docType) are computed there, and what the batch touches —
+  *      `_bucket`s, highest seq, live docTypes — comes from those rows, or
+  *      from ONE aggregation over the cached large batch;
   *   2. a small batch whose every seq is above the state's `maxSeq` is
   *      last-writer-wins collapsed on the driver into the pending DELTA,
   *      which the manifest commit carries: no state read, no shuffle, no
   *      bucket write. Any other batch — large, replayed or older-seq — or
-  *      a delta past its bound ([[StreamIngest.deltaBound]]) takes the
-  *      bucketed [[merge]], which folds the pending delta in (LWW by
-  *      seqNum, tombstones retained so deletes win over late replays);
+  *      a delta past one average bucket of the base's rows
+  *      ([[StreamIngest.deltaFits]]) takes the bucketed [[merge]], which
+  *      folds the pending delta in (LWW by seqNum, tombstones retained so
+  *      deletes win over late replays);
   *   3. re-register each docType's flattened temp view over the state the
-  *      commit just named.
+  *      commit just named: its plan, analyzed once per docType, with the
+  *      commit's file relation and delta put in by a tree transform and
+  *      stored in the session catalog as it stands.
   *
   * The warehouse checkpoint (A13) is the manifest's `maxSeq`, committed
   * with the state; Spark's `checkpointLocation` holds source offsets.
@@ -48,8 +56,17 @@ import scala.jdk.CollectionConverters._
   * rows. Every state read is one parquet scan over the files it names,
   * listing nothing, with the delta resolved at plan time: the base rows
   * whose id is not in the delta, plus the delta as a local relation. So a
-  * small sync costs one Spark job, and [[publish]] after a batch is a
-  * no-op: the views stay current until the next batch.
+  * small sync costs one Spark job and one SQL execution (its collect) and
+  * analyzes no view; [[publish]] after a batch is a no-op: the views stay
+  * current until the next batch.
+  *
+  * A view's `id` is the state's `id` column (the change id, which CouchDB
+  * keeps equal to the doc's `_id`; a change whose doc says otherwise fails
+  * its sync), and its type filter reads the stored `_type`; with
+  * `!deleted`, both are plain columns, so a point read on `id` filters in
+  * the scan and parses only the docs it returns. Files written before
+  * `_type` was stored, or under another split field, are typed from the
+  * doc until a merge rewrites them.
   *
   * At-least-once delivery + idempotent merge (replayed changes collapse in
   * the LWW window) reproduces the reference's REPLACE-by-PK semantics
@@ -163,36 +180,46 @@ final class StreamIngest(
 
   private def bucketCol = pmod(crc32(col("id")), lit(stateBuckets)).cast("int")
 
+  /** A row that a view can show: live, and not a `_design/` doc. */
+  private def liveDoc = !col("deleted") && !col("id").startsWith("_design")
+
+  /** The docType of a view-visible row (null for any other, and for every
+    * row without `--split`): what the stored `_type` column holds.
+    */
+  private def liveType: Column = opts.split.fold(lit(null).cast("string"))(f =>
+    when(liveDoc, Split.docType(f, col("doc"))))
+
   /** One micro-batch application; also callable directly for batch replay
     * tests. A replay of the last applied batch is skipped ([[replayed]]).
     *
-    * A small batch above the state's `maxSeq` joins the pending delta
-    * ([[withDelta]]); any other batch takes the bucketed [[merge]]. The
-    * views are then published over the manifest just committed, with no
-    * second read of it.
+    * The batch is read as ONE select — the state columns, `_type` and
+    * `_bucket` computed once here, and each live doc's `_id` for
+    * [[checkIds]] — plus a limit. A small batch above the state's `maxSeq`
+    * joins the pending delta ([[withDelta]]); any other batch takes the
+    * bucketed [[merge]]. The views are then published over the manifest
+    * just committed, with no second read of it.
     */
   def applyBatch(batch0: DataFrame, batchId: Long): Unit = {
     published = None
-    val batch = opts.transform(batch0)
-      .select(col("id"), col("seqNum"), col("deleted"), col("doc"))
-      .withColumn("_bucket", bucketCol)
-    val liveType = opts.split.fold(lit(null).cast("string"))(f =>
-      when(!col("deleted") && !col("id").startsWith("_design"),
-        Split.docType(f, col("doc"))))
-    val head = batch.withColumn("_type", liveType)
-      .limit(StreamIngest.SmallBatchRows + 1).collect().toSeq
+    val batch = opts.transform(batch0).select(col("id"), col("seqNum"), col("deleted"),
+      col("doc"), liveType.as("_type"), bucketCol.as("_bucket"),
+      when(liveDoc, get_json_object(col("doc"), "$._id")).as("_docId"))
+    val head = batch.limit(StreamIngest.SmallBatchRows + 1).collect().toSeq
     val small = Option.when(head.size <= StreamIngest.SmallBatchRows)(head)
-    val input = small.fold(batch.cache())(rows =>
+    small.foreach(rows => checkIds(rows.collectFirst {
+      case r if !r.isNullAt(6) && r.getString(6) != r.getString(0) => (r.getString(0), r.getString(6))
+    }))
+    lazy val input = small.fold(batch.cache())(rows =>
       StreamIngest.frame(spark, rows.map(r => Row.fromSeq(r.toSeq.init))))
     try {
-      val meta = small.fold(batchMeta(input, liveType))(BatchMeta.of)
-      val live = stateManifest.live()
+      val meta = small.fold(batchMeta(input))(BatchMeta.of)
+      val live = liveState()
       val now = if (replayed(batchId, meta.maxSeq, live)) live else {
         val m = live.getOrElse(StreamIngest.NoState)
         val maxSeq = (m.maxSeq +: meta.maxSeq.toSeq).max
         stateManifest.sweepUnreferenced(m.files)
         Some(small.flatMap(withDelta(m, _)) match {
-          case Some(delta) => stateManifest.commit(batchId, maxSeq, m.files, delta)
+          case Some(delta) => stateManifest.commit(batchId, maxSeq, opts.split, m.files, delta)
           case None        => merge(m, input, meta, batchId, maxSeq)
         })
       }
@@ -200,14 +227,27 @@ final class StreamIngest(
     } finally if (small.isEmpty) input.unpersist()
   }
 
+  /** Fail the sync on a live change whose doc's `_id` is not its id,
+    * given as (id, `_id`). CouchDB never writes one; the views take
+    * their `id` from the change id and last-writer-wins keys on it, so
+    * such a doc would show under an id it does not carry.
+    */
+  private def checkIds(mismatch: Option[(String, String)]): Unit = mismatch.foreach {
+    case (id, docId) => throw new IllegalStateException(s"change '$id' carries a doc whose " +
+      s"_id is '$docId': a change's id must equal its doc's _id")
+  }
+
   /** What a large micro-batch touches, read in ONE aggregation over the
     * cached batch (which is also the job that fills the cache): its
-    * `_bucket`s, its highest seq, the docTypes of its `liveType` rows —
-    * the set [[Split.discoverTypes]] would return — and its chars.
+    * `_bucket`s, its highest seq, its `_type`s — the set
+    * [[Split.discoverTypes]] would return — and its chars; a live change
+    * whose doc's `_id` differs from its id fails it ([[checkIds]]).
     */
-  private def batchMeta(batch: DataFrame, liveType: Column): BatchMeta = {
+  private def batchMeta(batch: DataFrame): BatchMeta = {
     val r = batch.agg(collect_set(col("_bucket")), max(col("seqNum")),
-      collect_set(liveType), sum(length(concat_ws("", col("id"), col("doc"))))).head()
+      collect_set(col("_type")), sum(length(concat_ws("", col("id"), col("doc")))),
+      max(when(col("_docId") =!= col("id"), struct(col("id"), col("_docId"))))).head()
+    checkIds(Option(r.getStruct(4)).map(m => (m.getString(0), m.getString(1))))
     BatchMeta(r.getSeq[Int](0).toSet, Option(r.get(1)).map(_.asInstanceOf[Long]),
       r.getSeq[String](2).toSet, Option(r.get(3)).fold(0L)(_.asInstanceOf[Long]))
   }
@@ -218,13 +258,13 @@ final class StreamIngest(
     * bucketed merge instead: a row with no seq or one at or below the
     * state's `maxSeq` (a replay's or an older change: only a merge orders
     * it against the base, while readers drop every base row of a delta id
-    * unseen), or a delta past [[StreamIngest.deltaBound]].
+    * unseen), or a delta past [[StreamIngest.deltaFits]].
     */
   private def withDelta(m: ManifestVersion,
                         rows: Seq[Row]): Option[Seq[DeltaRow]] =
     Option.when(rows.forall(r => !r.isNullAt(1) && r.getLong(1) > m.maxSeq && !r.isNullAt(2))) {
       DeltaRow.latest(m.delta ++ rows.flatMap(DeltaRow.of))
-    }.filter(_.map(_.size).sum <= StreamIngest.deltaBound(m))
+    }.filter(StreamIngest.deltaFits(m, _))
 
   /** The bucketed merge of `input` into the state of `m`, folding its
     * delta in, written ONCE under a fresh per-batch directory and committed
@@ -233,7 +273,10 @@ final class StreamIngest(
     * groups of consecutive buckets, G = estimated bytes over one scan split
     * (`spark.sql.files.maxPartitionBytes`), between 1 and one per bucket.
     * ONE exchange on the group serves both the last-writer-wins window and
-    * the write: each group is one task's one file. The other files' lines
+    * the write: each group is one task's one file. Every row it writes
+    * carries its `_type`: the batch's from its select, the state's as
+    * stored, or derived from the doc when a file or delta row read has
+    * none under this split field ([[typedState]]). The other files' lines
     * carry forward. A crash before the commit leaves an orphan directory,
     * swept on the next attempt.
     */
@@ -247,8 +290,10 @@ final class StreamIngest(
     val split = JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
     val g = math.max(1L, math.min(buckets.size.toLong, (bytes + split - 1) / split)).toInt
     val groupOf = buckets.zipWithIndex.map { case (b, i) => b -> i * g / buckets.size }.toMap
-    val parts = scan(read).map(_.withColumn("_bucket", bucketCol)).toSeq :+
-      StreamIngest.frame(spark, m.delta.map(_.row)) :+ input
+    val state = (scan(read).map(_.withColumn("_bucket", bucketCol)).toSeq :+
+      StreamIngest.frame(spark, m.delta.map(_.row))).reduce(_ unionByName _)
+    val parts = Seq(if (typedState(m.copy(files = read))) state else state.withColumn("_type", liveType),
+      input.select(StreamIngest.StateSchema.fieldNames.toSeq.map(col): _*))
     // a null id has no bucket; the window drops its row
     val grouped = parts.reduce(_ unionByName _).withColumn("_group", coalesce(
       typedLit(Seq.tabulate(stateBuckets)(groupOf.getOrElse(_, 0))).getItem(col("_bucket")), lit(0)))
@@ -261,7 +306,8 @@ final class StreamIngest(
       .parquet(stateManifest.dataPath(dirName).toString)
     commitBucketMeta()
     val groups = (0 until g).map(k => buckets.filter(groupOf(_) == k))
-    stateManifest.commit(batchId, maxSeq, kept ++ stateManifest.landed(dirName, groups), Nil)
+    stateManifest.commit(batchId, maxSeq, opts.split,
+      kept ++ stateManifest.landed(dirName, groups), Nil)
   }
 
   /** The warehouse's OWN outbound change feed from persisted state — the
@@ -301,42 +347,66 @@ final class StreamIngest(
       replay
     }
 
+  /** The live manifest as this instance reads it: a manifest whose
+    * `_type`s were computed under another split field than this
+    * instance's has them demoted — no file line keeps its row count and no
+    * delta row its docType — so nothing trusts a stale `_type` (they are
+    * derived from the doc until the next merge rewrites the file, and the
+    * next commit records this split field).
+    */
+  private def liveState(): Option[ManifestVersion] = stateManifest.live().map { m =>
+    if (m.split == opts.split) m
+    else m.copy(files = m.files.map(_.copy(rows = None)),
+      delta = m.delta.map(_.copy(docType = null)), split = opts.split)
+  }
+
+  /** True when every file and live delta row of `m` carries a `_type`
+    * computed under this instance's split field: its line has a row count
+    * (files written since `_type` was stored) and its docType is set.
+    */
+  private def typedState(m: ManifestVersion): Boolean =
+    m.files.forall(_.rows.nonEmpty) &&
+      (opts.split.isEmpty || m.delta.forall(d => d.deleted || d.docType != null))
+
   /** The persisted state table as `m` (by default the live manifest, read
     * afresh so a reading instance sees the writer's commits) names it —
     * None before any state: the scan of its files without the rows of the
     * delta's ids, plus the delta rows as a local relation (no broadcast,
-    * no second scan).
+    * no second scan). This shape holds with no delta too (the optimizer
+    * drops the empty relation and folds the empty `IN`), so one analyzed
+    * view plan fits every commit ([[rebind]]). A state with a delta always has
+    * files ([[StreamIngest.deltaFits]]).
     */
-  private def existingState(m: Option[ManifestVersion] =
-      stateManifest.live()): Option[DataFrame] =
-    m.flatMap { v =>
-      val delta = Option.when(v.delta.nonEmpty)(
-        StreamIngest.frame(spark, v.delta.map(_.row)).drop("_bucket"))
-      val base = scan(v.files).map(b =>
-        if (delta.isEmpty) b else b.where(!col("id").isin(v.delta.map(_.id): _*)))
-      (base ++ delta).reduceOption(_ unionByName _)
+  private def existingState(m: Option[ManifestVersion] = liveState()): Option[DataFrame] =
+    m.filter(_.files.nonEmpty).map { v =>
+      scan(v.files).get.where(!col("id").isin(v.delta.map(_.id): _*))
+        .unionByName(StreamIngest.frame(spark, v.delta.map(_.row)).drop("_bucket"))
     }
 
-  /** ONE parquet relation (`id`, `seqNum`, `deleted`, `doc`) over exactly
-    * `files`, each read once however many buckets it names (None when
-    * there are none), every status taken from the manifest: Spark lists
-    * nothing and infers neither a schema nor partitions. A row's bucket is
-    * a function of its id ([[bucketCol]]).
+  /** ONE parquet relation (`id`, `seqNum`, `deleted`, `doc`, `_type`) over
+    * exactly `files`, each read once however many buckets it names (None
+    * when there are none). A file written before `_type` was stored reads
+    * it as null. A row's bucket is a function of its id ([[bucketCol]]).
     */
   private def scan(files: Seq[StateFile]): Option[DataFrame] =
-    Option.when(files.nonEmpty) {
-      val byDir = files.distinctBy(_.rel).map(f => new FileStatus(f.length, false, 0, 0, 0,
-        fs.makeQualified(stateManifest.dataPath(f.rel)))).groupBy(_.getPath.getParent)
-      val listed = new FileStatusCache {
-        override def getLeafFiles(dir: Path): Option[Array[FileStatus]] = byDir.get(dir).map(_.toArray)
-        def putLeafFiles(dir: Path, leafFiles: Array[FileStatus]): Unit = ()
-        def invalidateAll(): Unit = ()
-      }
-      val index = new InMemoryFileIndex(spark, byDir.keys.toSeq.sortBy(_.toString), Map.empty,
-        None, listed, Some(PartitionSpec(new StructType(), Nil)))
-      spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
-        StreamIngest.DataSchema, None, new ParquetFileFormat, Map.empty)(spark))
+    Option.when(files.nonEmpty)(spark.baseRelationToDataFrame(relation(files)))
+
+  /** The file relation of [[scan]], every status taken from the manifest:
+    * Spark lists nothing and infers neither a schema nor partitions.
+    */
+  private def relation(files: Seq[StateFile]): HadoopFsRelation = {
+    val byDir = files.distinctBy(_.rel).map(f => new FileStatus(f.length, false, 0, 0, 0,
+      fs.makeQualified(stateManifest.dataPath(f.rel)))).groupBy(_.getPath.getParent)
+    val listed = new FileStatusCache {
+      override def getLeafFiles(dir: Path): Option[Array[FileStatus]] = byDir.get(dir).map(_.toArray)
+      def putLeafFiles(dir: Path, leafFiles: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
     }
+    val index = new InMemoryFileIndex(spark, byDir.keys.toSeq.sortBy(_.toString), Map.empty,
+      None, listed, Some(PartitionSpec(new StructType(), Nil)))
+    HadoopFsRelation(index, new StructType(), StreamIngest.DataSchema, None,
+      new ParquetFileFormat, Map.empty)(spark)
+  }
 
   /** docTypes ever published, cached so the per-batch path never rescans
     * the full state (None until the first publish seeds it — from state
@@ -344,14 +414,22 @@ final class StreamIngest(
     */
   private var knownTypes: Option[Set[String]] = None
 
-  private def typesOf(live: DataFrame, splitField: String): Set[String] =
-    live.select(Split.docType(splitField, col("doc")).as("t")).distinct()
-      .collect().map(_.getString(0)).toSet
+  /** The docType a view filters on: the stored `_type` when `typed`
+    * ([[typedState]]), else derived from the doc.
+    */
+  private def typeCol(splitField: String, typed: Boolean): Column =
+    if (typed) col("_type") else Split.docType(splitField, col("doc"))
 
   /** The views the last publish registered, each with the catalog entry it
     * got; None from the start of an [[applyBatch]] until it publishes.
     */
   @volatile private var published: Option[Map[String, AnyRef]] = None
+
+  /** Each view's analyzed plan, built once per (docType, whether it reads
+    * the stored `_type`) — its schema is frozen — and re-pointed at each
+    * commit's state by [[rebind]]; no sync analyzes a view.
+    */
+  private val viewPlans = scala.collection.mutable.Map.empty[(String, Boolean), LogicalPlan]
 
   /** Re-register flattened per-type views over the live rows. The
     * external form scans state for the type set once and caches it;
@@ -369,31 +447,51 @@ final class StreamIngest(
   def publish(): Unit =
     if (!published.exists(_.forall { case (name, entry) =>
           GraftSqlBridge.tempView(spark, name).exists(_ eq entry) }))
-      publishWith(Set.empty, stateManifest.live())
+      publishWith(Set.empty, liveState())
 
+  /** Each view is its type's analyzed plan ([[viewPlans]]) with `m`'s file
+    * relation, delta rows and delta ids put in, stored in the session
+    * catalog as it stands: no analysis, no SQL execution, no job — except
+    * the type scan of a first publish and the donor read of a type's first
+    * live doc ([[schemaOf]]).
+    */
   private def publishWith(batchTypes: Set[String], m: Option[ManifestVersion]): Unit = {
-    val views = existingState(m).toSeq.flatMap { st =>
-      val live = st.where(!col("deleted"))
+    val views = m.filter(_.files.nonEmpty).toSeq.flatMap { v =>
+      val typed = typedState(v)
+      lazy val live = existingState(Some(v)).get.where(!col("deleted"))
       val types = opts.split match {
         case Some(f) =>
-          val all = knownTypes.getOrElse(typesOf(live, f)) ++ batchTypes
+          val all = knownTypes.getOrElse(live.select(typeCol(f, typed)).distinct()
+            .collect().map(_.getString(0)).toSet) ++ batchTypes
           knownTypes = Some(all)
           all.toSeq.sorted
         case None => Seq(Split.DefaultType)
       }
+      val rel = relation(v.files)
       types.flatMap { t =>
-        val slice = opts.split match {
-          case Some(f) => live.where(Split.docType(f, col("doc")) === t)
-          case None    => live
-        }
+        def slice = opts.split.fold(live)(f => live.where(typeCol(f, typed) === t))
         schemaOf(slice, t).filter(_.leaves.nonEmpty).map { schema =>
+          val plan = viewPlans.getOrElseUpdate((t, typed),
+            Flatten(slice, schema, idCol = Some("id")).queryExecution.analyzed)
           val name = Split.tableName(opts.database, opts.split.map(_ => t))
-          Flatten(slice, schema).createOrReplaceTempView(name)
-          name -> GraftSqlBridge.tempView(spark, name).get
+          name -> GraftSqlBridge.replaceTempView(spark, name, rebind(plan, v, rel))
         }
       }
     }
     published = Some(views.toMap)
+  }
+
+  /** `plan`, a view over [[existingState]], re-pointed at the state of
+    * `m` by tree transform: its file relation swapped for `rel`, its local
+    * relation's rows and its `NOT id IN (…)` list for `m`'s delta. Every
+    * attribute id stays, so the plan needs no analysis.
+    */
+  private def rebind(plan: LogicalPlan, m: ManifestVersion, rel: HadoopFsRelation): LogicalPlan = {
+    val ids = m.delta.map(d => Literal.create(d.id, StringType))
+    plan.transformUp {
+      case l: LogicalRelation => l.copy(relation = rel)
+      case l: LocalRelation => l.copy(data = LocalRelation.fromExternalRows(l.output, m.delta.map(_.row)).data)
+    }.transformAllExpressions { case in: In => in.copy(list = ids) }
   }
 
   /** The frozen schema of `docType`, discovered from its first live doc
@@ -401,7 +499,7 @@ final class StreamIngest(
     * doc of it deleted, or none landed — has no schema: nothing is
     * memoized, so its first real doc still becomes the donor.
     */
-  private def schemaOf(slice: DataFrame, docType: String): Option[DocSchema] =
+  private def schemaOf(slice: => DataFrame, docType: String): Option[DocSchema] =
     schemas.get(docType).orElse {
       slice.orderBy(col("seqNum")).select("doc").limit(1).collect().headOption.map { r =>
         val s = SchemaDiscovery.discover(r.getString(0))
@@ -432,12 +530,14 @@ final class StreamIngest(
 
 object StreamIngest {
   /** Columns of the persisted state files, given to every state read so
-    * none infers them from parquet footers; in-flight state rows also
-    * carry their `_bucket`.
+    * none infers them from parquet footers: the change, and `_type`, the
+    * docType a view of it filters on (null unless the row is live and
+    * `--split` is set). In-flight state rows also carry their `_bucket`.
     */
   private val DataSchema = StructType(Seq(
     StructField("id", StringType), StructField("seqNum", LongType),
-    StructField("deleted", BooleanType), StructField("doc", StringType)))
+    StructField("deleted", BooleanType), StructField("doc", StringType),
+    StructField("_type", StringType)))
   private val StateSchema = DataSchema.add("_bucket", IntegerType)
 
   /** The Hadoop write option that, off, spares a merge's directory the
@@ -455,17 +555,24 @@ object StreamIngest {
     */
   private val MaxDeltaBytes: Long = 1L << 20
 
-  /** How large the pending delta of `m` may grow before a sync folds it
-    * into the buckets: one average bucket of the base (the manifest's
-    * distinct file bytes over its buckets), so merge-on-read never carries
-    * more than about one bucket's worth of rows, and at most
-    * [[MaxDeltaBytes]]. A state with no files has no delta: its first
-    * batch writes the base.
+  /** Whether `delta` may stay pending over the base of `m` rather than
+    * fold into it: at most one average bucket of the base's rows (the
+    * row counts of its distinct files over the buckets they name), so
+    * merge-on-read never carries more than about one bucket's worth of
+    * rows, and at most [[MaxDeltaBytes]]. While a file's line has no row
+    * count (a manifest written before lines carried one), the bucket is
+    * measured in bytes instead: the delta's [[DeltaRow.size]]s against the
+    * files' distinct bytes over their buckets. A state with no files has
+    * no delta: its first batch writes the base.
     */
-  private def deltaBound(m: ManifestVersion): Long = {
+  private def deltaFits(m: ManifestVersion, delta: Seq[DeltaRow]): Boolean = {
     val buckets = m.files.map(_.bucket).distinct.size
-    if (buckets == 0) 0L
-    else math.min(MaxDeltaBytes, m.files.distinctBy(_.rel).map(_.length).sum / buckets)
+    val files = m.files.distinctBy(_.rel)
+    val bytes = delta.map(_.size).sum
+    if (buckets == 0) delta.isEmpty
+    else if (files.forall(_.rows.nonEmpty))
+      bytes <= MaxDeltaBytes && delta.size.toLong * buckets <= files.flatMap(_.rows).sum
+    else bytes <= math.min(MaxDeltaBytes, files.map(_.length).sum / buckets)
   }
 
   /** The weight of a state row: the chars of its id and doc. */
@@ -485,25 +592,25 @@ object StreamIngest {
                                      types: Set[String], bytes: Long)
 
   private object BatchMeta {
-    /** The meta of a collected batch: rows of `StateSchema` plus its live
-      * docType (null for a tombstone or a design doc), as `batchMeta`
-      * aggregates it.
+    /** The meta of a collected batch: rows of `StateSchema` (and the doc's
+      * `_id`), as `batchMeta` aggregates it.
       */
     def of(rows: Seq[Row]): BatchMeta = BatchMeta(
-      rows.filterNot(_.isNullAt(4)).map(_.getInt(4)).toSet,
+      rows.filterNot(_.isNullAt(5)).map(_.getInt(5)).toSet,
       rows.filterNot(_.isNullAt(1)).map(_.getLong(1)).maxOption,
-      rows.filterNot(_.isNullAt(5)).map(_.getString(5)).toSet,
+      rows.filterNot(_.isNullAt(4)).map(_.getString(4)).toSet,
       rows.map(r => chars(r.getString(0), r.getString(3))).sum)
   }
 
   /** A row of the pending delta: the latest change of `id`, newer than
-    * every base row, in `_bucket` `bucket` once folded.
+    * every base row, with its `_type` `docType`, in `_bucket` `bucket` once
+    * folded.
     */
   private[graft] final case class DeltaRow(id: String, seqNum: Long, deleted: Boolean,
-                                           doc: String, bucket: Int) {
-    def row: Row = Row(id, seqNum, deleted, doc, bucket)
+                                           doc: String, docType: String, bucket: Int) {
+    def row: Row = Row(id, seqNum, deleted, doc, docType, bucket)
 
-    /** Its weight against [[deltaBound]]. */
+    /** Its weight against [[deltaFits]]' byte caps. */
     def size: Long = chars(id, doc)
   }
 
@@ -514,7 +621,7 @@ object StreamIngest {
       */
     def of(r: Row): Option[DeltaRow] =
       Option(r.getString(0)).filterNot(_.startsWith("_design")).map(id =>
-        DeltaRow(id, r.getLong(1), r.getBoolean(2), r.getString(3), r.getInt(4)))
+        DeltaRow(id, r.getLong(1), r.getBoolean(2), r.getString(3), r.getString(4), r.getInt(5)))
 
     /** The latest row per id (highest seq), ordered by id. */
     def latest(rows: Seq[DeltaRow]): Seq[DeltaRow] =
@@ -523,32 +630,41 @@ object StreamIngest {
   }
 
   /** A live state file as the manifest names it, once per bucket it
-    * holds: the `_bucket`, its path relative to the manifest root and its
+    * holds: the `_bucket`, its path relative to the manifest root, its
     * byte length (the one status field a parquet scan needs that the path
-    * does not carry).
+    * does not carry) and its row count — None on a line written before
+    * lines carried one, whose file may also lack `_type`.
     */
-  private[graft] final case class StateFile(bucket: Int, rel: String, length: Long) {
+  private[graft] final case class StateFile(bucket: Int, rel: String, length: Long,
+                                            rows: Option[Long]) {
     def dir: String = rel.substring(0, rel.lastIndexOf('/'))
   }
 
   /** A committed manifest: its version (the last applied batchId), the
-    * highest seq the state has absorbed (-1 before any), the live files
-    * and the pending delta.
+    * highest seq the state has absorbed (-1 before any), the split field
+    * its `_type`s were computed under, the live files and the pending
+    * delta.
     */
   private[graft] final case class ManifestVersion(batchId: Long, maxSeq: Long,
+                                                  split: Option[String],
                                                   files: Seq[StateFile], delta: Seq[DeltaRow])
 
   /** The state before the first commit. */
-  private val NoState = ManifestVersion(-1L, -1L, Nil, Nil)
+  private val NoState = ManifestVersion(-1L, -1L, None, Nil, Nil)
 
   /** The layout of the state, safe on object stores ([[StateFs]]'s
     * atomicity boundary): each merge writes ONCE, never moved, one
     * `<root>/b<batchId>-<nanos>/part-NNNNN-*` file per group of buckets
     * (files of the earlier layout, `b<batchId>-<nanos>/_bucket=N/part-*`,
-    * are one-bucket groups), and a versioned MANIFEST — a `maxSeq⇥N`
-    * header, one `bucket⇥path⇥length` line per bucket of each live file,
-    * one `delta⇥bucket⇥seq⇥deleted⇥id⇥doc` line per pending delta row (id
-    * and doc escaped) — is the file index and the delta. The commit is the manifest landing via [[StateFs.writeVersioned]]: a
+    * are one-bucket groups), and a versioned MANIFEST — a
+    * `maxSeq⇥N⇥split` header (the split field the `_type`s were computed
+    * under), one `bucket⇥path⇥length⇥rows` line per bucket of each live
+    * file, one `delta⇥bucket⇥seq⇥deleted⇥id⇥doc⇥type` line per pending
+    * delta row (strings escaped) — is the file index and the delta.
+    * Manifests written before `_type` was stored, with a `maxSeq⇥N` header,
+    * `bucket⇥path⇥length` lines and no delta `type`, read as untyped (no
+    * split, no row counts, null types). The commit is the manifest landing
+    * via [[StateFs.writeVersioned]]: a
     * dst-absent rename of ONE SMALL FILE, atomic on HDFS/POSIX and a
     * single-object copy-PUT on S3A/GCS; no DIRECTORY is ever renamed. The
     * manifest's version IS the exactly-once batch marker; a crash before
@@ -573,21 +689,24 @@ object StreamIngest {
             s"'$line', not a $Header header and file or delta entries: a " +
             "retired state layout that is no longer read. Rebuild the " +
             "warehouse from its feed (CLI --reset).")
-        val maxSeq = lines.headOption.map(_.split("\t", -1)) match {
-          case Some(Array(Header, n)) if n.toLongOption.nonEmpty => n.toLong
+        val (maxSeq, split) = lines.headOption.map(_.split("\t", -1)) match {
+          case Some(Array(Header, n, rest @ _*)) if n.toLongOption.nonEmpty && rest.size <= 1 =>
+            (n.toLong, rest.headOption.flatMap(f => Option(unescape(f))))
           case _ => throw retired(lines.headOption.getOrElse(""))
         }
         val entries = lines.tail.map { line =>
           line.split("\t", -1) match {
-            case Array(b, rel, len) if b.toIntOption.nonEmpty && len.toLongOption.nonEmpty =>
-              Left(StateFile(b.toInt, rel, len.toLong))
-            case Array(Delta, b, seq, del, i, doc) if b.toIntOption.nonEmpty &&
-                seq.toLongOption.nonEmpty && del.toBooleanOption.nonEmpty =>
-              Right(DeltaRow(unescape(i), seq.toLong, del.toBoolean, unescape(doc), b.toInt))
+            case Array(b, rel, len, rows @ _*) if b.toIntOption.nonEmpty &&
+                len.toLongOption.nonEmpty && rows.size <= 1 && rows.forall(_.toLongOption.nonEmpty) =>
+              Left(StateFile(b.toInt, rel, len.toLong, rows.headOption.map(_.toLong)))
+            case Array(Delta, b, seq, del, i, doc, t @ _*) if b.toIntOption.nonEmpty &&
+                seq.toLongOption.nonEmpty && del.toBooleanOption.nonEmpty && t.size <= 1 =>
+              Right(DeltaRow(unescape(i), seq.toLong, del.toBoolean, unescape(doc),
+                t.headOption.map(unescape).orNull, b.toInt))
             case _ => throw retired(line)
           }
         }
-        ManifestVersion(id, maxSeq, entries.collect { case Left(f) => f },
+        ManifestVersion(id, maxSeq, split, entries.collect { case Left(f) => f },
           entries.collect { case Right(d) => d })
       }
 
@@ -618,39 +737,49 @@ object StreamIngest {
 
     /** The parquet files a merge landed under `dirName`, each once per
       * bucket of its group (`groups`, by index), read by one `listStatus`
-      * right after the write. A file's group is the write task's
-      * partition, which Spark's committer puts in its `part-NNNNN-` name.
-      * Hidden and `_`-prefixed names (checksums, `_SUCCESS`) are not data.
+      * right after the write, with the row count of its parquet footer. A
+      * file's group is the write task's partition, which Spark's committer
+      * puts in its `part-NNNNN-` name. Hidden and `_`-prefixed names
+      * (checksums, `_SUCCESS`) are not data.
       */
     def landed(dirName: String, groups: IndexedSeq[Seq[Int]]): Seq[StateFile] =
       for {
         f <- fs.listStatus(dataPath(dirName)).toSeq
         name = f.getPath.getName if !name.startsWith("_") && !name.startsWith(".")
-        b <- name match {
+        buckets = name match {
           case PartFile(p) if p.toInt < groups.size => groups(p.toInt)
           case _ => throw new IllegalStateException(s"${f.getPath}: not a part-NNNNN- file of a group")
         }
-      } yield StateFile(b, s"$dirName/$name", f.getLen)
+        rows <- Option.when(buckets.nonEmpty)(rowCount(f)).toSeq
+        b <- buckets
+      } yield StateFile(b, s"$dirName/$name", f.getLen, Some(rows))
+
+    private def rowCount(f: FileStatus): Long = {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, fs.getConf))
+      try reader.getRecordCount finally reader.close()
+    }
 
     private val PartFile = """part-(\d+)-.*""".r
 
-    /** Commit `files`, the pending `delta` and `maxSeq` as the
-      * batch-`batchId` manifest (see the class doc for why this single
-      * small-file commit is the portable one), returned as readers see it.
+    /** Commit `maxSeq`, the `split` field the `_type`s were computed
+      * under, `files` and the pending `delta` as the batch-`batchId`
+      * manifest (see the class doc for why this single small-file commit is
+      * the portable one), returned as readers see it.
       */
-    def commit(batchId: Long, maxSeq: Long, files: Seq[StateFile],
+    def commit(batchId: Long, maxSeq: Long, split: Option[String], files: Seq[StateFile],
                delta: Seq[DeltaRow]): ManifestVersion = {
-      val text = new StringBuilder(s"$Header\t$maxSeq\n")
+      val text = new StringBuilder(s"$Header\t$maxSeq\t${escape(split.orNull)}\n")
       files.sortBy(f => (f.rel, f.bucket)).foreach { f =>
         require(!f.rel.contains('\t') && !f.rel.contains('\n'),
           s"manifest path contains a tab/newline: ${f.rel}")
-        text ++= s"${f.bucket}\t${f.rel}\t${f.length}\n"
+        text ++= s"${f.bucket}\t${f.rel}\t${f.length}${f.rows.fold("")(n => s"\t$n")}\n"
       }
       delta.sortBy(_.id).foreach { d =>
-        text ++= s"$Delta\t${d.bucket}\t${d.seqNum}\t${d.deleted}\t${escape(d.id)}\t${escape(d.doc)}\n"
+        text ++= s"$Delta\t${d.bucket}\t${d.seqNum}\t${d.deleted}\t${escape(d.id)}\t" +
+          s"${escape(d.doc)}\t${escape(d.docType)}\n"
       }
       StateFs.writeVersioned(fs, root, Prefix, Suffix, batchId, text.toString.getBytes("UTF-8"))
-      ManifestVersion(batchId, maxSeq, files, delta)
+      ManifestVersion(batchId, maxSeq, split, files, delta)
     }
 
     /** Delete data no manifest references any more — crash orphans (data

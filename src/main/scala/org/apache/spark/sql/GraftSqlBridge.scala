@@ -1,7 +1,11 @@
 package org.apache.spark.sql
 
 import org.apache.spark.SparkContext
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat, CatalogTable,
+  CatalogTableType, TemporaryViewRelation}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.storage.StorageLevel
 
@@ -34,11 +38,40 @@ object GraftSqlBridge {
     * the one registered then.
     */
   def tempView(spark: SparkSession, name: String): Option[AnyRef] =
-    spark.asInstanceOf[classic.SparkSession].sessionState.catalog.getRawTempView(name)
+    catalog(spark).getRawTempView(name)
+
+  /** Register `plan`, already analyzed, as the local temp view `name`
+    * (replacing any view of that name) and return its catalog entry
+    * ([[tempView]]). The entry is what `createOrReplaceTempView` stores
+    * for a Dataset, the analyzed plan itself, but the plan is neither
+    * analyzed again nor registered by a command's SQL execution: it is
+    * marked analyzed as it stands, so a plan whose relations were swapped
+    * by a tree transform keeps its attribute ids and skips the analyzer.
+    */
+  def replaceTempView(spark: SparkSession, name: String, plan: LogicalPlan): AnyRef = {
+    catalyst.GraftPlans.markAnalyzed(plan)
+    val desc = CatalogTable(identifier = TableIdentifier(name),
+      tableType = CatalogTableType.VIEW, storage = CatalogStorageFormat.empty,
+      schema = plan.schema, properties = Map(CatalogTable.VIEW_STORING_ANALYZED_PLAN -> "true"))
+    catalog(spark).createTempView(name, TemporaryViewRelation(desc, Some(plan)),
+      overrideIfExists = true)
+    catalog(spark).getRawTempView(name).get
+  }
+
+  private def catalog(spark: SparkSession) =
+    spark.asInstanceOf[classic.SparkSession].sessionState.catalog
 
   /** Block until every event posted so far has reached every listener.
     * The listener bus is asynchronous, so a job can return before its
     * task-end events arrive; a reading taken after this call is complete.
     */
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
+
+package catalyst {
+  /** The `private[catalyst]` half of [[GraftSqlBridge.replaceTempView]]. */
+  private[sql] object GraftPlans {
+    /** Flag every node of `plan` analyzed, as the analyzer does on exit. */
+    def markAnalyzed(plan: plans.logical.LogicalPlan): Unit = plan.setAnalyzed()
+  }
 }

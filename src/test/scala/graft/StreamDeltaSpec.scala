@@ -33,14 +33,12 @@ class StreamDeltaSpec extends SparkSpec {
   private def typed(seq: Int, id: String, t: String, v: Int): String =
     change(seq, id, s"""{"_id":"$id","_rev":"$seq-r","type":"$t","v":$v}""")
 
-  /** [[typed]] with 288 hex chars that parquet cannot compress away, so a
-    * small base's average bucket holds a few small changes: the delta
-    * bound is one average bucket of the base's file bytes.
+  /** A `StreamIngest` on a state of 4 buckets, so that a base of a few
+    * dozen docs holds a few changes per bucket: the delta bound is one
+    * average bucket of the base's rows.
     */
-  private def padded(seq: Int, id: String, t: String, v: Int): String = {
-    val pad = (1 to 8).map(k => java.util.UUID.nameUUIDFromBytes(s"$id-$k".getBytes("UTF-8"))).mkString
-    change(seq, id, s"""{"_id":"$id","_rev":"$seq-r","type":"$t","v":$v,"pad":"$pad"}""")
-  }
+  private def fewBuckets(opts: WarehouseOptions, wh: String): StreamIngest =
+    withConf("graft.state.buckets" -> "4")(new StreamIngest(spark, opts, wh))
 
   private def mk(rows: Seq[String]): DataFrame = ChangeFeed.fromLines(
     { import spark.implicits._; rows.toDF("value") }, "value")
@@ -73,7 +71,7 @@ class StreamDeltaSpec extends SparkSpec {
       val rnd = new Random(seed)
       val wh = tempDir(s"prop-wh-$seed")
       val db = s"pdb$seed"
-      val ingest = new StreamIngest(spark, WarehouseOptions(database = db, split = Some("type")), wh)
+      val ingest = fewBuckets(WarehouseOptions(database = db, split = Some("type")), wh)
       val m = manifest(wh)
       val ids = (1 to 24).map(i => s"k$i")
       val applied = ArrayBuffer.empty[String]
@@ -116,17 +114,38 @@ class StreamDeltaSpec extends SparkSpec {
         }
       }
       // a restarted instance reads the same state and views
-      val restarted = new StreamIngest(spark, WarehouseOptions(database = db, split = Some("type")), wh)
+      val restarted = fewBuckets(WarehouseOptions(database = db, split = Some("type")), wh)
       assert(sorted(restarted.changesSince(-1L)) == recompute(applied.toSeq))
     }
     assert(deltaCommits > 5 && foldsOfDelta > 2 && merges > foldsOfDelta,
       s"delta commits $deltaCommits, folds of a delta $foldsOfDelta, merges $merges")
   }
 
+  test("a base of known row count folds at the first sync that takes the delta past rows per bucket") {
+    val wh = tempDir("rows-wh")
+    val ingest = new StreamIngest(spark, WarehouseOptions(database = "rbdb"), wh)
+    ingest.applyBatch(mk((1 to 640).map(i => typed(i, s"d$i", "order", i))), 0L)
+    val base = manifest(wh).live().get
+    val files = base.files.map(_.rel).distinct
+    val rows = base.files.distinctBy(_.rel).flatMap(_.rows).sum
+    val buckets = base.files.map(_.bucket).distinct.size
+    // the manifest's row count is the file's
+    assert(rows == 640L && spark.read.parquet(files.map(f => s"$wh/_state_v/$f"): _*).count() == rows)
+    // one new doc per sync: the delta may hold rows / buckets rows
+    val bound = (rows / buckets).toInt
+    assert(bound >= 5, s"$rows rows in $buckets buckets")
+    for (k <- 1 to bound + 1) {
+      ingest.applyBatch(mk(Seq(typed(640 + k, s"n$k", "order", k))), k.toLong)
+      val m = manifest(wh).live().get
+      if (k.toLong * buckets <= rows) assert(m.delta.size == k && m.files == base.files, s"sync $k")
+      else assert(m.delta.isEmpty && m.files.map(_.rel).distinct != files, s"sync $k did not fold")
+    }
+  }
+
   test("a small sync rewrites no bucket and writes no data file") {
     val wh = tempDir("nowrite-wh")
-    val ingest = new StreamIngest(spark, WarehouseOptions(database = "nwdb"), wh)
-    ingest.applyBatch(mk((1 to 40).map(i => padded(i, s"d$i", "order", i))), 0L)
+    val ingest = fewBuckets(WarehouseOptions(database = "nwdb"), wh)
+    ingest.applyBatch(mk((1 to 40).map(i => typed(i, s"d$i", "order", i))), 0L)
     val fs = new Path(wh).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def dataDirs() = StateFs.listNames(fs, new Path(s"$wh/_state_v")).filterNot(_.startsWith("manifest-")).toSet
     val (files, dirs) = (manifest(wh).live().get.files, dataDirs())
@@ -143,8 +162,8 @@ class StreamDeltaSpec extends SparkSpec {
 
   test("with a pending delta the state is one scan and a local relation, no broadcast") {
     val wh = tempDir("plan-wh")
-    val ingest = new StreamIngest(spark, WarehouseOptions(database = "pldb"), wh)
-    ingest.applyBatch(mk((1 to 40).map(i => padded(i, s"d$i", "order", i))), 0L)
+    val ingest = fewBuckets(WarehouseOptions(database = "pldb"), wh)
+    ingest.applyBatch(mk((1 to 40).map(i => typed(i, s"d$i", "order", i))), 0L)
     ingest.applyBatch(mk(Seq(deletion(41, "d1"), typed(42, "d2", "order", 200))), 1L)
     assert(manifest(wh).live().get.delta.size == 2)
     val feed = ingest.changesSince(0L)
@@ -162,8 +181,8 @@ class StreamDeltaSpec extends SparkSpec {
   test("a restart with a pending delta reads it back, escaped fields included, and folds it") {
     val wh = tempDir("restart-wh")
     val opts = WarehouseOptions(database = "rdb", split = Some("type"))
-    val first = new StreamIngest(spark, opts, wh)
-    val base = (1 to 30).map(i => padded(i, s"d$i", types(i % 3), i))
+    val first = fewBuckets(opts, wh)
+    val base = (1 to 30).map(i => typed(i, s"d$i", types(i % 3), i))
     first.applyBatch(mk(base), 0L)
     // ids with a raw tab and newline, a doc with backslash escapes and a
     // literal \N: the manifest's delta lines must carry them exactly
@@ -180,7 +199,7 @@ class StreamDeltaSpec extends SparkSpec {
     val views = types.map(t => spark.table(s"rdb_$t").count())
     val expected = recompute(base ++ odd)
 
-    val restarted = new StreamIngest(spark, opts, wh)
+    val restarted = fewBuckets(opts, wh)
     assert(sorted(restarted.changesSince(-1L)) == expected)
     types.foreach(t => spark.catalog.dropTempView(s"rdb_$t"))
     restarted.publish()
@@ -199,9 +218,9 @@ class StreamDeltaSpec extends SparkSpec {
 
   test("a second instance's changesSince sees the writer's delta") {
     val wh = tempDir("reader-wh")
-    val writer = new StreamIngest(spark, WarehouseOptions(database = "wdb"), wh)
+    val writer = fewBuckets(WarehouseOptions(database = "wdb"), wh)
     writer.applyBatch(mk((1 to 20).map(i => typed(i, s"d$i", "order", i))), 0L)
-    val reader = new StreamIngest(spark, WarehouseOptions(database = "wdb2"), wh)
+    val reader = fewBuckets(WarehouseOptions(database = "wdb2"), wh)
     assert(reader.changesSince(20L).isEmpty)
     writer.applyBatch(mk(Seq(typed(21, "d3", "order", 300), deletion(22, "d4"))), 1L)
     assert(manifest(wh).live().get.delta.nonEmpty)
@@ -213,7 +232,7 @@ class StreamDeltaSpec extends SparkSpec {
   test("a reset checkpoint's new seqs fail loudly with a delta pending, never skipped") {
     val wh = tempDir("reset-wh")
     val opts = WarehouseOptions(database = "rsdb")
-    val ingest = new StreamIngest(spark, opts, wh)
+    val ingest = fewBuckets(opts, wh)
     ingest.applyBatch(mk((1 to 20).map(i => typed(i, s"d$i", "order", i))), 0L)
     val b1 = Seq(typed(21, "d1", "order", 100), typed(22, "n1", "order", 1))
     ingest.applyBatch(mk(b1), 1L)
@@ -224,7 +243,7 @@ class StreamDeltaSpec extends SparkSpec {
     val before = names()
     // a fresh checkpoint re-delivers batch 1 with a newer change: within
     // the margin, but past the seqs the delta commit recorded
-    val restarted = new StreamIngest(spark, opts, wh)
+    val restarted = fewBuckets(opts, wh)
     val e = intercept[IllegalStateException] {
       restarted.applyBatch(mk(b1 :+ typed(23, "n2", "order", 2)), 1L)
     }

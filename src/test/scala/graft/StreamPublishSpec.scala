@@ -3,8 +3,9 @@ package graft
 import graft.model.ChangeFeed
 import graft.streaming.StreamIngest
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import java.nio.file.Files
 import scala.collection.mutable.ArrayBuffer
 
@@ -42,11 +43,19 @@ class StreamPublishSpec extends SparkSpec {
   /** Every job started while `body` runs, as the task count of each of
     * its stages.
     */
-  private def jobsDuring(body: => Unit): Seq[Seq[Int]] = {
-    val jobs = ArrayBuffer.empty[Seq[Int]]
+  private def jobsDuring(body: => Unit): Seq[Seq[Int]] =
+    eventsDuring(body) { case e: SparkListenerJobStart => e.stageInfos.map(_.numTasks) }
+
+  /** The description of every SQL execution started while `body` runs. */
+  private def sqlDuring(body: => Unit): Seq[String] =
+    eventsDuring(body) { case e: SparkListenerSQLExecutionStart => e.description }
+
+  private def eventsDuring[T](body: => Unit)(pick: PartialFunction[SparkListenerEvent, T]): Seq[T] = {
+    val seen = ArrayBuffer.empty[T]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.synchronized { jobs += e.stageInfos.map(_.numTasks) }
+      override def onJobStart(e: SparkListenerJobStart): Unit = onOtherEvent(e)
+      override def onOtherEvent(e: SparkListenerEvent): Unit =
+        pick.lift(e).foreach(t => seen.synchronized { seen += t })
     }
     GraftSqlBridge.drainListeners(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
@@ -54,7 +63,7 @@ class StreamPublishSpec extends SparkSpec {
       body
       GraftSqlBridge.drainListeners(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.synchronized(jobs.toList)
+    seen.synchronized(seen.toList)
   }
 
   test("a 10-change sync on a 64-bucket state runs a fixed handful of jobs; publish after it none") {
@@ -73,9 +82,10 @@ class StreamPublishSpec extends SparkSpec {
     val sync = mk(Seq(deletion(2001, "d1"), typed(2002, "d2001", "user", 7)) ++
       (2 to 9).map(i => typed(2001 + i, s"d$i", types(i % 3), 1000 + i)))
     var publishJobs: Seq[Seq[Int]] = Nil
+    var publishSql, syncSql: Seq[String] = Nil
     val jobs = jobsDuring {
-      ingest.applyBatch(sync, 1L)
-      publishJobs = jobsDuring(ingest.publish())
+      syncSql = sqlDuring(ingest.applyBatch(sync, 1L))
+      publishSql = sqlDuring { publishJobs = jobsDuring(ingest.publish()) }
     }
     // the batch lands as a delta in the manifest commit: the one job that
     // collects it, no shuffle, no state read or bucket write; the views
@@ -84,11 +94,21 @@ class StreamPublishSpec extends SparkSpec {
     assert(jobs.forall(_.size == 1), s"a job with a shuffle: $jobs")
     assert(!jobs.contains(Seq(buckets)), s"listing jobs: $jobs")
     assert(publishJobs.isEmpty, s"publish right after a batch ran $publishJobs")
+    // one SQL execution, the collect: the views are stored as analyzed
+    // plans, with no view command
+    assert(syncSql.size == 1, s"SQL executions of the sync: $syncSql")
+    assert(publishSql.isEmpty, s"SQL executions of publish: $publishSql")
 
     assert(ingest.checkpoint == 2010L)
     assert(spark.table("jb_user").count() == (1 to 2000).count(_ % 3 == 2) + 1)
     assert(spark.table("jb_order").where("id = 'd9'").select("v").head().getDouble(0) == 1009.0)
     assert(spark.table("jb_product").where("id = 'd1'").isEmpty)
+
+    // a type's first doc still gets its view
+    ingest.applyBatch(mk(Seq(typed(2011, "r1", "refund", 3))), 2L)
+    ingest.publish()
+    assert(rows("jb_refund") == Seq("[refund,3.0,r1,2011-r]"))
+    assert(spark.table("jb_user").count() == (1 to 2000).count(_ % 3 == 2) + 1)
   }
 
   test("publish() re-registers a dropped or replaced view") {

@@ -1,0 +1,238 @@
+package graft
+
+import graft.model.ChangeFeed
+import graft.ops.{Compact, Flatten, Split}
+import graft.streaming.{StateFs, StreamIngest}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+/** The views `StreamIngest` publishes read the stored `_type` and the
+  * state's `id`: a point read filters on plain columns below the doc
+  * parse, and every view equals the definition that parses each doc for
+  * its type and id, on the couch fixtures, on a warehouse written before
+  * `_type` was stored, and under a split field other than the one the
+  * state was typed with. A doc whose `_id` is not its change id fails its
+  * sync. Every warehouse is built in-process.
+  */
+class StreamViewSpec extends SparkSpec {
+
+  private val helper = new AdaptiveSparkPlanHelper {}
+
+  private def change(seq: Int, id: String, doc: String): String =
+    s"""{"seq":"$seq-x","id":"$id","changes":[{"rev":"$seq-r"}],"doc":$doc}"""
+
+  private def deletion(seq: Int, id: String): String =
+    s"""{"seq":"$seq-x","id":"$id","changes":[{"rev":"$seq-r"}],"deleted":true,"doc":{"_id":"$id","_rev":"$seq-r","_deleted":true}}"""
+
+  /** A doc typed twice over: `type` one of three, `kind` one of two. */
+  private def typed(seq: Int, id: String, v: Int): String = change(seq, id,
+    s"""{"_id":"$id","_rev":"$seq-r","type":"${Seq("order", "product", "user")(v % 3)}","kind":"k${v % 2}","v":$v}""")
+
+  private def mk(rows: Seq[String]): DataFrame = ChangeFeed.fromLines(
+    { import spark.implicits._; rows.toDF("value") }, "value")
+
+  private def tempDir(prefix: String): String = Files.createTempDirectory(prefix).toString
+
+  private def fsOf(wh: String) = new Path(wh).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def manifest(wh: String) = new StreamIngest.ManifestDir(fsOf(wh), new Path(s"$wh/_state_v"))
+
+  /** An instance on a state of 4 buckets, so that a few dozen docs hold
+    * several changes per bucket and small syncs land as a delta (its
+    * bound is one average bucket of the base's rows).
+    */
+  private def ingestOf(wh: String, db: String, split: Option[String]): StreamIngest =
+    withConf("graft.state.buckets" -> "4")(
+      new StreamIngest(spark, WarehouseOptions(database = db, split = split), wh))
+
+  /** The change lines of the couch fixture `name`. */
+  private def fixture(name: String): Seq[String] =
+    Files.readAllLines(Paths.get(CouchFixtures.path(name))).asScala.toSeq
+      .map(_.trim.stripSuffix(",")).filter(_.startsWith("{\"seq\""))
+
+  /** Every view of `ingest` against the definition that parses the doc for
+    * its type and its id: `Flatten` over the live LWW rows of `lines` whose
+    * doc-derived docType is the view's, with the instance's frozen schema.
+    */
+  private def assertViews(ingest: StreamIngest, db: String, split: Option[String],
+                          lines: Seq[String], clue: String): Unit = {
+    ingest.publish()
+    val live = Compact.latestChanges(mk(lines)).where(!col("deleted"))
+    val types = split.fold(Seq(Split.DefaultType))(f =>
+      live.select(Split.docType(f, col("doc"))).distinct().collect().map(_.getString(0)).toSeq)
+    assert(types.nonEmpty, clue)
+    types.foreach { t =>
+      val want = Flatten(split.fold(live)(f => live.where(Split.docType(f, col("doc")) === t)),
+        ingest.discoveredSchemas(t))
+      val view = spark.table(Split.tableName(db, split.map(_ => t)))
+      assert(view.schema == want.schema, s"$clue: $t")
+      assert(view.collect().map(_.toString).sorted.toSeq ==
+        want.collect().map(_.toString).sorted.toSeq, s"$clue: $t")
+    }
+  }
+
+  /** Each node of `plan` that parses a doc with `from_json`. */
+  private def parses(plan: SparkPlan): Seq[SparkPlan] =
+    helper.collect(plan) { case p if p.expressions.exists(_.exists(_.isInstanceOf[JsonToStructs])) => p }
+
+  /** The plan of a point read of `id` through `view`: no `get_json_object`
+    * anywhere, and every `from_json` above a filter on `id` and `_type`.
+    */
+  private def assertPointRead(view: String, id: String, v: Double): Unit = {
+    val read = spark.table(view).where(col("id") === id).select("v")
+    assert(read.collect().map(_.getDouble(0)).toSeq == Seq(v))
+    val plan = read.queryExecution.executedPlan
+    assert(!plan.toString.toLowerCase.contains("get_json_object") &&
+      !plan.toString.contains("GetJsonObject"), plan)
+    assert(parses(plan).nonEmpty, plan)
+    parses(plan).foreach { p =>
+      val below = helper.collect(p) { case f: FilterExec => f.condition.references.map(_.name).toSet }
+      assert(below.exists(r => r.contains("id") && r.contains("_type")), plan)
+    }
+  }
+
+  test("a point read on a view filters on id and _type below from_json, folded and with a delta") {
+    val wh = tempDir("point-wh")
+    val ingest = ingestOf(wh, "ptdb", Some("type"))
+    ingest.applyBatch(mk((1 to 600).map(i => typed(i, s"d$i", i))), 0L)
+    ingest.publish()
+    assert(manifest(wh).live().get.delta.isEmpty)
+    assertPointRead("ptdb_order", "d42", 42.0)
+
+    ingest.applyBatch(mk(Seq(typed(601, "d42", 45), typed(602, "d7", 7), deletion(603, "d3"))), 1L)
+    ingest.publish()
+    assert(manifest(wh).live().get.delta.size == 3)
+    assertPointRead("ptdb_order", "d42", 45.0)
+    assertPointRead("ptdb_product", "d7", 7.0)
+    assert(spark.table("ptdb_order").where(col("id") === "d3").isEmpty)
+  }
+
+  test("every view equals the doc-parsing definition on the couch fixtures, split and not") {
+    for {
+      (name, split) <- Seq("samplechanges.txt" -> None, "samplechanges2.txt" -> Some("type"),
+        "samplechanges2.txt" -> None, "samplechanges3.txt" -> Some("type"))
+    } {
+      val lines = fixture(name).zipWithIndex
+      val db = s"fx${split.size}${name.filter(_.isDigit)}"
+      val wh = tempDir("fixture-wh")
+      val ingest = ingestOf(wh, db, split)
+      // a base of the first half, then syncs of 7 changes: deltas and folds
+      val (base, rest) = lines.splitAt(lines.size / 2)
+      ingest.applyBatch(mk(base.map(_._1)), 0L)
+      assertViews(ingest, db, split, base.map(_._1), s"$name $split base")
+      rest.grouped(7).zipWithIndex.foreach { case (sync, b) =>
+        ingest.applyBatch(mk(sync.map(_._1)), b + 1L)
+        val applied = lines.take(sync.last._2 + 1).map(_._1)
+        assertViews(ingest, db, split, applied, s"$name $split sync $b")
+      }
+    }
+  }
+
+  test("a warehouse written before _type was stored reads, syncs and folds into the new layout") {
+    val wh = tempDir("untyped-wh")
+    val root = s"$wh/_state_v"
+    val feed = (1 to 120).map(i => typed(i, s"d$i", i))
+    // the earlier layout: files with no _type, `bucket⇥path⇥length` lines
+    // under a `maxSeq⇥N` header, `delta⇥bucket⇥seq⇥deleted⇥id⇥doc` lines
+    Compact.latestChanges(mk(feed)).select("id", "seqNum", "deleted", "doc")
+      .coalesce(1).write.parquet(s"$root/b0-1")
+    val fs = fsOf(wh)
+    val file = fs.listStatus(new Path(s"$root/b0-1")).find(_.getPath.getName.startsWith("part-")).get
+    def bucketOf(id: String): Long = {
+      val c = new java.util.zip.CRC32
+      c.update(id.getBytes("UTF-8"))
+      c.getValue % 4
+    }
+    val pending = Seq(typed(121, "d5", 500), typed(122, "n1", 1))
+    val deltaLines = Compact.latestChanges(mk(pending)).collect().map { r =>
+      val id = r.getAs[String]("id")
+      s"delta\t${bucketOf(id)}\t${r.getAs[Long]("seqNum")}\tfalse\t$id\t${r.getAs[String]("doc")}"
+    }
+    val fileLines = feed.indices.map(i => bucketOf(s"d${i + 1}")).distinct.sorted.map(b =>
+      s"$b\tb0-1/${file.getPath.getName}\t${file.getLen}")
+    Files.write(Paths.get(root, "manifest-0.tsv"),
+      (("maxSeq\t122" +: (fileLines ++ deltaLines)).mkString("\n") + "\n").getBytes("UTF-8"))
+    Files.write(Paths.get(wh, "_state_buckets"), "4".getBytes("UTF-8"))
+
+    val opts = WarehouseOptions(database = "utdb", split = Some("type"))
+    val ingest = ingestOf(wh, "utdb", opts.split)
+    var applied = feed ++ pending
+    assertViews(ingest, "utdb", opts.split, applied, "as written")
+    // a delta sync adds typed rows to the untyped ones
+    val sync = Seq(typed(123, "d6", 600), deletion(124, "d7"))
+    ingest.applyBatch(mk(sync), 1L)
+    applied ++= sync
+    assert(manifest(wh).live().get.delta.size == 4)
+    assertViews(ingest, "utdb", opts.split, applied, "with a delta")
+    // a replayed change takes the merge, which folds every file touched
+    ingest.applyBatch(mk(Seq(typed(125, "d8", 800), typed(3, "d3", 3))), 2L)
+    applied :+= typed(125, "d8", 800)
+    val m = manifest(wh).live().get
+    assert(m.delta.isEmpty && m.split == Some("type"))
+    assert(m.files.forall(_.rows.nonEmpty), m.files)
+    val lines = new String(StateFs.readVersioned(fs, new Path(root), "manifest", ".tsv").get._2, "UTF-8")
+      .split("\n").toSeq
+    assert(lines.head == "maxSeq\t125\ttype" && lines.tail.forall(_.split("\t").length == 4), lines)
+    val stored = spark.read.parquet(m.files.map(f => s"$root/${f.rel}").distinct: _*)
+    assert(stored.where(!col("deleted") && col("_type").isNull).isEmpty)
+    assertViews(ingest, "utdb", opts.split, applied, "folded")
+    assertPointRead("utdb_order", "d6", 600.0)
+  }
+
+  test("a warehouse reopened under another split field never shows a row under the wrong type") {
+    val wh = tempDir("resplit-wh")
+    val first = ingestOf(wh, "rsp", Some("type"))
+    var applied = (1 to 90).map(i => typed(i, s"d$i", i))
+    first.applyBatch(mk(applied), 0L)
+    // a delta typed by `type`, left pending
+    val pending = Seq(typed(91, "d1", 2), typed(92, "d2", 4))
+    first.applyBatch(mk(pending), 1L)
+    applied ++= pending
+    assert(manifest(wh).live().get.delta.nonEmpty)
+    var (seq, batch) = (92, 1L)
+    for (split <- Seq(Some("kind"), None, Some("type"), Some("kind"))) {
+      val db = s"rsp${split.getOrElse("none")}"
+      val ingest = ingestOf(wh, db, split)
+      assertViews(ingest, db, split, applied, s"$split reopened")
+      // a new doc and an update, a replayed change that takes the merge,
+      // and a delta left pending for the next split field
+      val steps = Seq(
+        Seq(typed(seq + 1, "d10", seq + 1), typed(seq + 2, s"n$seq", seq)),
+        Seq(typed(seq + 3, "d11", seq + 3), typed(5, "d5", 5)),
+        Seq(typed(seq + 4, "d12", seq)))
+      steps.zipWithIndex.foreach { case (lines, k) =>
+        ingest.applyBatch(mk(lines), batch + 1 + k)
+        applied ++= lines
+        assertViews(ingest, db, split, applied, s"$split step $k")
+        if (k == 1) assert(manifest(wh).live().get.split == split)
+      }
+      assert(manifest(wh).live().get.delta.nonEmpty, s"$split: no delta pending")
+      seq += 4
+      batch += steps.size
+    }
+  }
+
+  test("a live change whose doc _id is not its id fails its sync, small batch or large") {
+    val wh = tempDir("idguard-wh")
+    val ingest = ingestOf(wh, "igdb", Some("type"))
+    ingest.applyBatch(mk((1 to 20).map(i => typed(i, s"d$i", i))), 0L)
+    val before = manifest(wh).live().get
+    val forged = change(21, "d3", """{"_id":"other","_rev":"21-r","type":"order","v":1}""")
+    val small = intercept[IllegalStateException](ingest.applyBatch(mk(Seq(typed(22, "d4", 4), forged)), 1L))
+    assert(small.getMessage.contains("'d3'") && small.getMessage.contains("'other'"), small.getMessage)
+    val large = (23 to 23 + StreamIngest.SmallBatchRows).map(i => typed(i, s"n$i", i)) :+ forged
+    val e = intercept[IllegalStateException](ingest.applyBatch(mk(large), 1L))
+    assert(e.getMessage.contains("'d3'") && e.getMessage.contains("'other'"), e.getMessage)
+    assert(manifest(wh).live().get == before, "a refused batch must not commit")
+    // a tombstone's doc and a design doc are not checked
+    ingest.applyBatch(mk(Seq(deletion(30, "d5"),
+      change(31, "_design/x", """{"_id":"_design/y","views":{}}"""))), 1L)
+    assert(ingest.checkpoint == 31L)
+  }
+}
