@@ -100,8 +100,7 @@ object Scd2 {
     * today's dimension row would leak post-event attribute changes into
     * features computed for past events). The reference's monitor mode
     * keeps the warehouse continuously current for exactly this kind of
-    * consumer (`index.js:143-170`); [[graft.streaming.StreamScd2]]
-    * exposes the same lookup against its live dimension.
+    * consumer (`index.js:143-170`).
     *
     * Join shape — ONE shuffle on the entity key, never a cross-product:
     * the entity equality is the join's equi-key (hash/merge planned),
@@ -229,10 +228,9 @@ object Scd2 {
     * rescanned per consumer (count + anti + semi would otherwise pay it
     * three times). The materialization is executor-local and
     * lineage-truncating; an executor loss during the apply fails the
-    * batch and the caller's replay re-applies it (the streaming caller,
-    * [[graft.streaming.StreamScd2]], is exactly-once under replay
-    * already), and the blocks are reclaimed by the context cleaner once
-    * the apply's frames are unreferenced — no per-batch cache pin
+    * batch and the caller's replay re-applies it, and the blocks are
+    * reclaimed by the context cleaner once the apply's frames are
+    * unreferenced — no per-batch cache pin
     * accumulates. Past `broadcastThreshold` (default 4M entities ≈ a
     * few hundred MB of broadcast hash relation for typical key widths)
     * the gate drops the hint and lets the planner (and AQE, from

@@ -180,8 +180,8 @@ object TimeShard {
     *     [[Scd2.applyCdc]]; that second aggregate is the price of never
     *     shipping an unchecked row set through the driver, paid only on
     *     a 10¹⁰-row-scale skew profile that is about to pay carry joins
-    *     anyway. Nothing is persisted at any tier, so streaming callers
-    *     like [[graft.streaming.StreamScd2]] stay leak-free per
+    *     anyway. Nothing is persisted at any tier, so a caller that
+    *     runs it once per micro-batch stays leak-free per
     *     invocation. A hot key's window task sees ~1/`timeShards` of
     *     its timeline; every cold window task is bounded by
     *     `autoThreshold` rows.

@@ -95,9 +95,8 @@ object SkippingIndex {
   /** Build and persist the manifest for `cols` over the parquet dir:
     * footer-only reads, one task per file batch, `files × cols` rows
     * out. Returns the persisted manifest. Re-run after any layout change
-    * ([[graft.ops.Maintenance.compactFiles]] / `zOrderWrite` /
-    * appends) — the manifest describes exactly the files present at
-    * build time.
+    * ([[graft.ops.Maintenance.zOrderWrite]] / rewrites / appends) — the
+    * manifest describes exactly the files present at build time.
     */
   def build(spark: SparkSession, dir: String, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "build requires at least one column")

@@ -64,9 +64,9 @@ import scala.jdk.CollectionConverters._
   * keeps equal to the doc's `_id`; a change whose doc says otherwise fails
   * its sync), and its type filter reads the stored `_type`; with
   * `!deleted`, both are plain columns, so a point read on `id` filters in
-  * the scan and parses only the docs it returns. Files written before
-  * `_type` was stored, or under another split field, are typed from the
-  * doc until a merge rewrites them.
+  * the scan and parses only the docs it returns. The manifest records the
+  * bucket count and the split field the `_type`s were computed under; an
+  * instance opened with others fails at construction ([[verifyLayout]]).
   *
   * At-least-once delivery + idempotent merge (replayed changes collapse in
   * the LWW window) reproduces the reference's REPLACE-by-PK semantics
@@ -112,25 +112,16 @@ final class StreamIngest(
 
   private val versRoot = new Path(s"$warehouseDir/_state_v")
   private val stateManifest = new StreamIngest.ManifestDir(fs, versRoot)
-  // Warehouses of the retired layouts fail here, before any read or write:
-  // the rename layout's `_state/_bucket=N` directories, which no manifest
-  // names, would read as EMPTY and be silently forked; `live()` refuses a
-  // manifest of the retired directory-level format.
-  private val renameLayout = new Path(s"$warehouseDir/_state")
-  if (StateFs.listNames(fs, renameLayout).exists(_.startsWith("_bucket=")))
-    throw new IllegalStateException(
-      s"$renameLayout holds state in the retired rename layout (_bucket=N " +
-        "directories), which is no longer read: opening it would read the " +
-        "warehouse as EMPTY and fork it. Rebuild the warehouse from its " +
-        "feed (CLI --reset).")
-  stateManifest.live()
+  stateManifest.live().foreach(verifyLayout)
+
+  /** The state before its first commit, under this instance's layout. */
+  private val noState = ManifestVersion(-1L, -1L, stateBuckets, opts.split, Nil, Nil)
 
   /** Frozen per-docType schemas, persisted as the donor document JSON so a
     * restarted stream keeps first-doc-wins semantics (§1.4).
     */
   private val schemas = scala.collection.mutable.LinkedHashMap.empty[String, DocSchema]
   loadSchemas()
-  verifyBucketCount()
 
   def discoveredSchemas: Map[String, DocSchema] = schemas.toMap
 
@@ -150,33 +141,28 @@ final class StreamIngest(
       .start()
   }
 
-  /** The bucket count the persisted state was written with. Changing
-    * `graft.state.buckets` against existing state would hash an update
-    * for id X into a bucket its current row does not live in — the
-    * touched-bucket merge would never read the old row, and BOTH
-    * versions would survive as silent duplicates. So it fails loudly at
-    * construction.
+  /** Fail construction on a manifest written under another layout than
+    * this instance's, before any read or write:
+    *   - another bucket count would hash an update for id X into a bucket
+    *     its current row does not live in — the touched-bucket merge would
+    *     never read the old row, and BOTH versions would survive as silent
+    *     duplicates;
+    *   - another split field would show rows under the docTypes of the
+    *     stored `_type` column, which the `_schemas/` registry also names.
     */
-  // def, not val: the constructor-body guard runs before later vals init
-  private def bucketMeta = new Path(s"$warehouseDir/_state_buckets")
-
-  private def verifyBucketCount(): Unit =
-    if (fs.exists(bucketMeta)) {
-      val persisted = StateFs.readString(fs, bucketMeta).trim.toInt
-      if (persisted != stateBuckets)
-        throw new IllegalStateException(s"state was bucketed with $persisted buckets but " +
-          s"graft.state.buckets=$stateBuckets — a different count strands existing rows in " +
-          "buckets the merge never probes (silent duplicate ids). Restore the original " +
-          "setting or rebuild the warehouse.")
-    }
-
-  /** Persist the bucket count with the first bucket write, staged
-    * ([[StateFs.commitString]]): [[verifyBucketCount]] parses it on every
-    * start, so a torn write would fail every later construction.
-    */
-  private def commitBucketMeta(): Unit =
-    if (!fs.exists(bucketMeta))
-      StateFs.commitString(fs, bucketMeta, stateBuckets.toString)
+  private def verifyLayout(m: ManifestVersion): Unit = {
+    if (m.buckets != stateBuckets)
+      throw new IllegalStateException(s"state was bucketed with ${m.buckets} buckets but " +
+        s"graft.state.buckets=$stateBuckets — a different count strands existing rows in " +
+        "buckets the merge never probes (silent duplicate ids). Restore the original " +
+        "setting or rebuild the warehouse (CLI --reset).")
+    def field(s: Option[String]) = s.fold("no --split")(f => s"--split '$f'")
+    if (m.split != opts.split)
+      throw new IllegalStateException(s"state under $versRoot was typed with " +
+        s"${field(m.split)}, but this instance has ${field(opts.split)}: its stored _type " +
+        "column and _schemas/ registry name the docTypes of the former. Reopen with " +
+        s"${field(m.split)} or rebuild the warehouse from its feed (CLI --reset).")
+  }
 
   private def bucketCol = pmod(crc32(col("id")), lit(stateBuckets)).cast("int")
 
@@ -213,13 +199,13 @@ final class StreamIngest(
       StreamIngest.frame(spark, rows.map(r => Row.fromSeq(r.toSeq.init))))
     try {
       val meta = small.fold(batchMeta(input))(BatchMeta.of)
-      val live = liveState()
+      val live = stateManifest.live()
       val now = if (replayed(batchId, meta.maxSeq, live)) live else {
-        val m = live.getOrElse(StreamIngest.NoState)
+        val m = live.getOrElse(noState)
         val maxSeq = (m.maxSeq +: meta.maxSeq.toSeq).max
         stateManifest.sweepUnreferenced(m.files)
         Some(small.flatMap(withDelta(m, _)) match {
-          case Some(delta) => stateManifest.commit(batchId, maxSeq, opts.split, m.files, delta)
+          case Some(delta) => stateManifest.commit(m.copy(batchId = batchId, maxSeq = maxSeq, delta = delta))
           case None        => merge(m, input, meta, batchId, maxSeq)
         })
       }
@@ -275,10 +261,8 @@ final class StreamIngest(
     * ONE exchange on the group serves both the last-writer-wins window and
     * the write: each group is one task's one file. Every row it writes
     * carries its `_type`: the batch's from its select, the state's as
-    * stored, or derived from the doc when a file or delta row read has
-    * none under this split field ([[typedState]]). The other files' lines
-    * carry forward. A crash before the commit leaves an orphan directory,
-    * swept on the next attempt.
+    * stored. The other files' lines carry forward. A crash before the
+    * commit leaves an orphan directory, swept on the next attempt.
     */
   private def merge(m: ManifestVersion, input: DataFrame, meta: BatchMeta,
                     batchId: Long, maxSeq: Long): ManifestVersion = {
@@ -290,10 +274,9 @@ final class StreamIngest(
     val split = JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
     val g = math.max(1L, math.min(buckets.size.toLong, (bytes + split - 1) / split)).toInt
     val groupOf = buckets.zipWithIndex.map { case (b, i) => b -> i * g / buckets.size }.toMap
-    val state = (scan(read).map(_.withColumn("_bucket", bucketCol)).toSeq :+
-      StreamIngest.frame(spark, m.delta.map(_.row))).reduce(_ unionByName _)
-    val parts = Seq(if (typedState(m.copy(files = read))) state else state.withColumn("_type", liveType),
-      input.select(StreamIngest.StateSchema.fieldNames.toSeq.map(col): _*))
+    val parts = scan(read).map(_.withColumn("_bucket", bucketCol)).toSeq :+
+      StreamIngest.frame(spark, m.delta.map(_.row)) :+
+      input.select(StreamIngest.StateSchema.fieldNames.toSeq.map(col): _*)
     // a null id has no bucket; the window drops its row
     val grouped = parts.reduce(_ unionByName _).withColumn("_group", coalesce(
       typedLit(Seq.tabulate(stateBuckets)(groupOf.getOrElse(_, 0))).getItem(col("_bucket")), lit(0)))
@@ -304,10 +287,9 @@ final class StreamIngest(
       .select(StreamIngest.DataSchema.fieldNames.toSeq.map(col): _*)
       .write.mode("overwrite").option(StreamIngest.SuccessMarker, "false")
       .parquet(stateManifest.dataPath(dirName).toString)
-    commitBucketMeta()
     val groups = (0 until g).map(k => buckets.filter(groupOf(_) == k))
-    stateManifest.commit(batchId, maxSeq, opts.split,
-      kept ++ stateManifest.landed(dirName, groups), Nil)
+    stateManifest.commit(m.copy(batchId = batchId, maxSeq = maxSeq,
+      files = kept ++ stateManifest.landed(dirName, groups), delta = Nil))
   }
 
   /** The warehouse's OWN outbound change feed from persisted state — the
@@ -323,50 +305,31 @@ final class StreamIngest(
       .where(col("seqNum") > since)
       .select("id", "seqNum", "deleted", "doc")
 
-  /** True when `batchId` re-delivers a batch the `live` manifest already
-    * absorbed (a crash between the manifest commit and the stream's
+  /** True when `batchId` re-delivers the batch the `live` manifest
+    * absorbed last (a crash between the manifest commit and the stream's
     * offset commit): it is skipped, since re-committing would re-point
-    * the manifest readers are on for no new content. A RESET streaming
-    * checkpoint's low ids carry NEW changes that a skip would silently
-    * drop, so it fails loudly: an id further back than the replay margin
-    * ([[StateFs.alreadyApplied]]), or one within it carrying a seq past
-    * the highest the state absorbed.
+    * the manifest readers are on for no new content. Any lower id, or the
+    * same id carrying a seq past the highest the state absorbed, comes
+    * from a RESET streaming checkpoint whose low ids carry NEW changes
+    * that a skip would silently drop, so it fails loudly. Spark's
+    * synchronous progress tracking — the one `foreachBatch` under an
+    * `AvailableNow` trigger ([[start]]) allows — re-delivers at most that
+    * one batch.
     */
   private def replayed(batchId: Long, maxSeq: Option[Long],
                        live: Option[ManifestVersion]): Boolean =
     live.exists { m =>
-      val remedy = "The streaming checkpoint was likely reset against an " +
-        s"existing warehouse. Delete $versRoot to rebuild from the stream, " +
-        "or restore the original checkpointLocation."
-      val replay = StateFs.alreadyApplied(spark, batchId, m.batchId, "state", remedy)
-      maxSeq.filter(s => replay && s > m.maxSeq).foreach { s =>
-        throw new IllegalStateException(s"state batchId went backwards: got " +
-          s"$batchId with seq $s, but batch ${m.batchId} is already applied " +
-          s"and the state holds seqs only up to ${m.maxSeq}. $remedy")
+      def backwards(got: String, held: String) = new IllegalStateException(
+        s"state batchId went backwards: got $batchId$got, but batch ${m.batchId} is already " +
+          s"applied$held. The streaming checkpoint was likely reset against an existing " +
+          s"warehouse. Delete $versRoot to rebuild from the stream, or restore the original " +
+          "checkpointLocation.")
+      if (batchId < m.batchId) throw backwards("", "")
+      maxSeq.filter(s => batchId == m.batchId && s > m.maxSeq).foreach { s =>
+        throw backwards(s" with seq $s", s" and the state holds seqs only up to ${m.maxSeq}")
       }
-      replay
+      batchId == m.batchId
     }
-
-  /** The live manifest as this instance reads it: a manifest whose
-    * `_type`s were computed under another split field than this
-    * instance's has them demoted — no file line keeps its row count and no
-    * delta row its docType — so nothing trusts a stale `_type` (they are
-    * derived from the doc until the next merge rewrites the file, and the
-    * next commit records this split field).
-    */
-  private def liveState(): Option[ManifestVersion] = stateManifest.live().map { m =>
-    if (m.split == opts.split) m
-    else m.copy(files = m.files.map(_.copy(rows = None)),
-      delta = m.delta.map(_.copy(docType = null)), split = opts.split)
-  }
-
-  /** True when every file and live delta row of `m` carries a `_type`
-    * computed under this instance's split field: its line has a row count
-    * (files written since `_type` was stored) and its docType is set.
-    */
-  private def typedState(m: ManifestVersion): Boolean =
-    m.files.forall(_.rows.nonEmpty) &&
-      (opts.split.isEmpty || m.delta.forall(d => d.deleted || d.docType != null))
 
   /** The persisted state table as `m` (by default the live manifest, read
     * afresh so a reading instance sees the writer's commits) names it —
@@ -377,7 +340,7 @@ final class StreamIngest(
     * view plan fits every commit ([[rebind]]). A state with a delta always has
     * files ([[StreamIngest.deltaFits]]).
     */
-  private def existingState(m: Option[ManifestVersion] = liveState()): Option[DataFrame] =
+  private def existingState(m: Option[ManifestVersion] = stateManifest.live()): Option[DataFrame] =
     m.filter(_.files.nonEmpty).map { v =>
       scan(v.files).get.where(!col("id").isin(v.delta.map(_.id): _*))
         .unionByName(StreamIngest.frame(spark, v.delta.map(_.row)).drop("_bucket"))
@@ -385,8 +348,8 @@ final class StreamIngest(
 
   /** ONE parquet relation (`id`, `seqNum`, `deleted`, `doc`, `_type`) over
     * exactly `files`, each read once however many buckets it names (None
-    * when there are none). A file written before `_type` was stored reads
-    * it as null. A row's bucket is a function of its id ([[bucketCol]]).
+    * when there are none). A row's bucket is a function of its id
+    * ([[bucketCol]]).
     */
   private def scan(files: Seq[StateFile]): Option[DataFrame] =
     Option.when(files.nonEmpty)(spark.baseRelationToDataFrame(relation(files)))
@@ -414,22 +377,16 @@ final class StreamIngest(
     */
   private var knownTypes: Option[Set[String]] = None
 
-  /** The docType a view filters on: the stored `_type` when `typed`
-    * ([[typedState]]), else derived from the doc.
-    */
-  private def typeCol(splitField: String, typed: Boolean): Column =
-    if (typed) col("_type") else Split.docType(splitField, col("doc"))
-
   /** The views the last publish registered, each with the catalog entry it
     * got; None from the start of an [[applyBatch]] until it publishes.
     */
   @volatile private var published: Option[Map[String, AnyRef]] = None
 
-  /** Each view's analyzed plan, built once per (docType, whether it reads
-    * the stored `_type`) — its schema is frozen — and re-pointed at each
-    * commit's state by [[rebind]]; no sync analyzes a view.
+  /** Each view's analyzed plan, built once per docType — its schema is
+    * frozen — and re-pointed at each commit's state by [[rebind]]; no sync
+    * analyzes a view.
     */
-  private val viewPlans = scala.collection.mutable.Map.empty[(String, Boolean), LogicalPlan]
+  private val viewPlans = scala.collection.mutable.Map.empty[String, LogicalPlan]
 
   /** Re-register flattened per-type views over the live rows. The
     * external form scans state for the type set once and caches it;
@@ -447,7 +404,7 @@ final class StreamIngest(
   def publish(): Unit =
     if (!published.exists(_.forall { case (name, entry) =>
           GraftSqlBridge.tempView(spark, name).exists(_ eq entry) }))
-      publishWith(Set.empty, liveState())
+      publishWith(Set.empty, stateManifest.live())
 
   /** Each view is its type's analyzed plan ([[viewPlans]]) with `m`'s file
     * relation, delta rows and delta ids put in, stored in the session
@@ -457,11 +414,10 @@ final class StreamIngest(
     */
   private def publishWith(batchTypes: Set[String], m: Option[ManifestVersion]): Unit = {
     val views = m.filter(_.files.nonEmpty).toSeq.flatMap { v =>
-      val typed = typedState(v)
       lazy val live = existingState(Some(v)).get.where(!col("deleted"))
       val types = opts.split match {
-        case Some(f) =>
-          val all = knownTypes.getOrElse(live.select(typeCol(f, typed)).distinct()
+        case Some(_) =>
+          val all = knownTypes.getOrElse(live.select("_type").distinct()
             .collect().map(_.getString(0)).toSet) ++ batchTypes
           knownTypes = Some(all)
           all.toSeq.sorted
@@ -469,9 +425,9 @@ final class StreamIngest(
       }
       val rel = relation(v.files)
       types.flatMap { t =>
-        def slice = opts.split.fold(live)(f => live.where(typeCol(f, typed) === t))
+        def slice = opts.split.fold(live)(_ => live.where(col("_type") === t))
         schemaOf(slice, t).filter(_.leaves.nonEmpty).map { schema =>
-          val plan = viewPlans.getOrElseUpdate((t, typed),
+          val plan = viewPlans.getOrElseUpdate(t,
             Flatten(slice, schema, idCol = Some("id")).queryExecution.analyzed)
           val name = Split.tableName(opts.database, opts.split.map(_ => t))
           name -> GraftSqlBridge.replaceTempView(spark, name, rebind(plan, v, rel))
@@ -502,22 +458,30 @@ final class StreamIngest(
   private def schemaOf(slice: => DataFrame, docType: String): Option[DocSchema] =
     schemas.get(docType).orElse {
       slice.orderBy(col("seqNum")).select("doc").limit(1).collect().headOption.map { r =>
-        val s = SchemaDiscovery.discover(r.getString(0))
-        persistSchema(docType, r.getString(0))
+        val s = SchemaDiscovery.discover(persistSchema(docType, r.getString(0)))
         schemas(docType) = s
         s
       }
     }
 
-  private def persistSchema(docType: String, donorDoc: String): Unit = {
-    fs.mkdirs(schemaDir)
-    StateFs.writeString(fs, new Path(schemaDir, s"$docType.json"), donorDoc)
+  /** The persisted donor of `docType`: one already there (another
+    * instance's) is kept, else `donorDoc` is committed whole
+    * ([[StateFs.commitString]]) — every start parses it, and a torn donor
+    * would load as a schema of no columns (its view never published) or
+    * fail every start.
+    */
+  private def persistSchema(docType: String, donorDoc: String): String = {
+    val donor = new Path(schemaDir, s"$docType.json")
+    if (fs.exists(donor)) StateFs.readString(fs, donor)
+    else { StateFs.commitString(fs, donor, donorDoc); donorDoc }
   }
 
+  /** The persisted donors, skipping the hidden staging names of a
+    * [[persistSchema]] a crash cut short.
+    */
   private def loadSchemas(): Unit =
-    StateFs.listNames(fs, schemaDir).foreach { n =>
-      val t = n.stripSuffix(".json")
-      schemas(t) = SchemaDiscovery.discover(
+    StateFs.listNames(fs, schemaDir).filterNot(_.startsWith(".")).foreach { n =>
+      schemas(n.stripSuffix(".json")) = SchemaDiscovery.discover(
         StateFs.readString(fs, new Path(schemaDir, n)))
     }
 
@@ -559,20 +523,14 @@ object StreamIngest {
     * fold into it: at most one average bucket of the base's rows (the
     * row counts of its distinct files over the buckets they name), so
     * merge-on-read never carries more than about one bucket's worth of
-    * rows, and at most [[MaxDeltaBytes]]. While a file's line has no row
-    * count (a manifest written before lines carried one), the bucket is
-    * measured in bytes instead: the delta's [[DeltaRow.size]]s against the
-    * files' distinct bytes over their buckets. A state with no files has
-    * no delta: its first batch writes the base.
+    * rows, and at most [[MaxDeltaBytes]]. A state with no files has no
+    * delta: its first batch writes the base.
     */
   private def deltaFits(m: ManifestVersion, delta: Seq[DeltaRow]): Boolean = {
     val buckets = m.files.map(_.bucket).distinct.size
-    val files = m.files.distinctBy(_.rel)
-    val bytes = delta.map(_.size).sum
     if (buckets == 0) delta.isEmpty
-    else if (files.forall(_.rows.nonEmpty))
-      bytes <= MaxDeltaBytes && delta.size.toLong * buckets <= files.flatMap(_.rows).sum
-    else bytes <= math.min(MaxDeltaBytes, files.map(_.length).sum / buckets)
+    else delta.map(_.size).sum <= MaxDeltaBytes &&
+      delta.size.toLong * buckets <= m.files.distinctBy(_.rel).map(_.rows).sum
   }
 
   /** The weight of a state row: the chars of its id and doc. */
@@ -632,44 +590,36 @@ object StreamIngest {
   /** A live state file as the manifest names it, once per bucket it
     * holds: the `_bucket`, its path relative to the manifest root, its
     * byte length (the one status field a parquet scan needs that the path
-    * does not carry) and its row count — None on a line written before
-    * lines carried one, whose file may also lack `_type`.
+    * does not carry) and its row count.
     */
-  private[graft] final case class StateFile(bucket: Int, rel: String, length: Long,
-                                            rows: Option[Long]) {
+  private[graft] final case class StateFile(bucket: Int, rel: String, length: Long, rows: Long) {
     def dir: String = rel.substring(0, rel.lastIndexOf('/'))
   }
 
   /** A committed manifest: its version (the last applied batchId), the
-    * highest seq the state has absorbed (-1 before any), the split field
-    * its `_type`s were computed under, the live files and the pending
-    * delta.
+    * highest seq the state has absorbed (-1 before any), the bucket count
+    * its rows were hashed with, the split field its `_type`s were computed
+    * under, the live files and the pending delta.
     */
-  private[graft] final case class ManifestVersion(batchId: Long, maxSeq: Long,
+  private[graft] final case class ManifestVersion(batchId: Long, maxSeq: Long, buckets: Int,
                                                   split: Option[String],
                                                   files: Seq[StateFile], delta: Seq[DeltaRow])
 
-  /** The state before the first commit. */
-  private val NoState = ManifestVersion(-1L, -1L, None, Nil, Nil)
-
   /** The layout of the state, safe on object stores ([[StateFs]]'s
     * atomicity boundary): each merge writes ONCE, never moved, one
-    * `<root>/b<batchId>-<nanos>/part-NNNNN-*` file per group of buckets
-    * (files of the earlier layout, `b<batchId>-<nanos>/_bucket=N/part-*`,
-    * are one-bucket groups), and a versioned MANIFEST — a
-    * `maxSeq⇥N⇥split` header (the split field the `_type`s were computed
-    * under), one `bucket⇥path⇥length⇥rows` line per bucket of each live
-    * file, one `delta⇥bucket⇥seq⇥deleted⇥id⇥doc⇥type` line per pending
-    * delta row (strings escaped) — is the file index and the delta.
-    * Manifests written before `_type` was stored, with a `maxSeq⇥N` header,
-    * `bucket⇥path⇥length` lines and no delta `type`, read as untyped (no
-    * split, no row counts, null types). The commit is the manifest landing
-    * via [[StateFs.writeVersioned]]: a
-    * dst-absent rename of ONE SMALL FILE, atomic on HDFS/POSIX and a
-    * single-object copy-PUT on S3A/GCS; no DIRECTORY is ever renamed. The
-    * manifest's version IS the exactly-once batch marker; a crash before
-    * the commit leaves only an unreferenced data directory, swept by
-    * [[sweepUnreferenced]] at the next write (single writer).
+    * `<root>/b<batchId>-<nanos>/part-NNNNN-*` file per group of buckets,
+    * and a versioned MANIFEST — a `maxSeq⇥N⇥buckets⇥split` header (the
+    * bucket count the rows were hashed with, the split field the `_type`s
+    * were computed under), one `bucket⇥path⇥length⇥rows` line per bucket
+    * of each live file, one `delta⇥bucket⇥seq⇥deleted⇥id⇥doc⇥type` line
+    * per pending delta row (strings escaped) — is the file index and the
+    * delta, and the one state file besides the data. The commit is the
+    * manifest landing via [[StateFs.writeVersioned]]: a dst-absent rename
+    * of ONE SMALL FILE, atomic on HDFS/POSIX and a single-object copy-PUT
+    * on S3A/GCS; no DIRECTORY is ever renamed. The manifest's version IS
+    * the exactly-once batch marker; a crash before the commit leaves only
+    * an unreferenced data directory, swept by [[sweepUnreferenced]] at the
+    * next write (single writer).
     */
   private[graft] final class ManifestDir(fs: FileSystem, val root: Path) {
     private val Prefix = "manifest"
@@ -677,36 +627,36 @@ object StreamIngest {
     private val Header = "maxSeq"
     private val Delta = "delta"
 
-    /** The live manifest. Any other form — the retired directory-level
-      * `bucket⇥dir` manifest — fails loudly with the manifest named,
-      * rather than reading the state wrong.
+    /** The live manifest. Any other form — each earlier format of this
+      * layout included — fails loudly with the manifest named, rather than
+      * reading the state wrong.
       */
     def live(): Option[ManifestVersion] =
       StateFs.readVersioned(fs, root, Prefix, Suffix).map { case (id, bytes) =>
         val lines = new String(bytes, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
-        def retired(line: String) = new IllegalStateException(
+        def unreadable(line: String) = new IllegalStateException(
           s"state manifest ${new Path(root, s"$Prefix-$id$Suffix")} holds " +
-            s"'$line', not a $Header header and file or delta entries: a " +
-            "retired state layout that is no longer read. Rebuild the " +
-            "warehouse from its feed (CLI --reset).")
-        val (maxSeq, split) = lines.headOption.map(_.split("\t", -1)) match {
-          case Some(Array(Header, n, rest @ _*)) if n.toLongOption.nonEmpty && rest.size <= 1 =>
-            (n.toLong, rest.headOption.flatMap(f => Option(unescape(f))))
-          case _ => throw retired(lines.headOption.getOrElse(""))
+            s"'$line', not a $Header header with a bucket count and file or " +
+            "delta entries of the current format: an earlier state layout " +
+            "that is no longer read. Rebuild the warehouse from its feed " +
+            "(CLI --reset).")
+        val (maxSeq, buckets, split) = lines.headOption.map(_.split("\t", -1)) match {
+          case Some(Array(Header, n, b, f)) if n.toLongOption.nonEmpty && b.toIntOption.exists(_ > 0) =>
+            (n.toLong, b.toInt, Option(unescape(f)))
+          case _ => throw unreadable(lines.headOption.getOrElse(""))
         }
         val entries = lines.tail.map { line =>
           line.split("\t", -1) match {
-            case Array(b, rel, len, rows @ _*) if b.toIntOption.nonEmpty &&
-                len.toLongOption.nonEmpty && rows.size <= 1 && rows.forall(_.toLongOption.nonEmpty) =>
-              Left(StateFile(b.toInt, rel, len.toLong, rows.headOption.map(_.toLong)))
-            case Array(Delta, b, seq, del, i, doc, t @ _*) if b.toIntOption.nonEmpty &&
-                seq.toLongOption.nonEmpty && del.toBooleanOption.nonEmpty && t.size <= 1 =>
-              Right(DeltaRow(unescape(i), seq.toLong, del.toBoolean, unescape(doc),
-                t.headOption.map(unescape).orNull, b.toInt))
-            case _ => throw retired(line)
+            case Array(b, rel, len, rows) if b.toIntOption.nonEmpty &&
+                len.toLongOption.nonEmpty && rows.toLongOption.nonEmpty =>
+              Left(StateFile(b.toInt, rel, len.toLong, rows.toLong))
+            case Array(Delta, b, seq, del, i, doc, t) if b.toIntOption.nonEmpty &&
+                seq.toLongOption.nonEmpty && del.toBooleanOption.nonEmpty =>
+              Right(DeltaRow(unescape(i), seq.toLong, del.toBoolean, unescape(doc), unescape(t), b.toInt))
+            case _ => throw unreadable(line)
           }
         }
-        ManifestVersion(id, maxSeq, split, entries.collect { case Left(f) => f },
+        ManifestVersion(id, maxSeq, buckets, split, entries.collect { case Left(f) => f },
           entries.collect { case Right(d) => d })
       }
 
@@ -752,7 +702,7 @@ object StreamIngest {
         }
         rows <- Option.when(buckets.nonEmpty)(rowCount(f)).toSeq
         b <- buckets
-      } yield StateFile(b, s"$dirName/$name", f.getLen, Some(rows))
+      } yield StateFile(b, s"$dirName/$name", f.getLen, rows)
 
     private def rowCount(f: FileStatus): Long = {
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, fs.getConf))
@@ -761,38 +711,35 @@ object StreamIngest {
 
     private val PartFile = """part-(\d+)-.*""".r
 
-    /** Commit `maxSeq`, the `split` field the `_type`s were computed
-      * under, `files` and the pending `delta` as the batch-`batchId`
-      * manifest (see the class doc for why this single small-file commit is
-      * the portable one), returned as readers see it.
+    /** Commit `m` as the batch-`m.batchId` manifest (see the class doc
+      * for why this single small-file commit is the portable one), returned
+      * as readers see it.
       */
-    def commit(batchId: Long, maxSeq: Long, split: Option[String], files: Seq[StateFile],
-               delta: Seq[DeltaRow]): ManifestVersion = {
-      val text = new StringBuilder(s"$Header\t$maxSeq\t${escape(split.orNull)}\n")
-      files.sortBy(f => (f.rel, f.bucket)).foreach { f =>
+    def commit(m: ManifestVersion): ManifestVersion = {
+      val text = new StringBuilder(s"$Header\t${m.maxSeq}\t${m.buckets}\t${escape(m.split.orNull)}\n")
+      m.files.sortBy(f => (f.rel, f.bucket)).foreach { f =>
         require(!f.rel.contains('\t') && !f.rel.contains('\n'),
           s"manifest path contains a tab/newline: ${f.rel}")
-        text ++= s"${f.bucket}\t${f.rel}\t${f.length}${f.rows.fold("")(n => s"\t$n")}\n"
+        text ++= s"${f.bucket}\t${f.rel}\t${f.length}\t${f.rows}\n"
       }
-      delta.sortBy(_.id).foreach { d =>
+      m.delta.sortBy(_.id).foreach { d =>
         text ++= s"$Delta\t${d.bucket}\t${d.seqNum}\t${d.deleted}\t${escape(d.id)}\t" +
           s"${escape(d.doc)}\t${escape(d.docType)}\n"
       }
-      StateFs.writeVersioned(fs, root, Prefix, Suffix, batchId, text.toString.getBytes("UTF-8"))
-      ManifestVersion(batchId, maxSeq, split, files, delta)
+      StateFs.writeVersioned(fs, root, Prefix, Suffix, m.batchId, text.toString.getBytes("UTF-8"))
+      m
     }
 
     /** Delete data no manifest references any more — crash orphans (data
       * written, commit never landed) and data retired by later commits. A
-      * batch directory that is PARTIALLY referenced (some of its files, or
-      * of its per-bucket directories, still live) keeps exactly what
-      * `referenced` names; its retired entries are dropped. Call BEFORE a
-      * batch writes its data dir or commits (single writer), never after
-      * the commit: a reader still scanning the just-retired state must not
-      * lose its files.
+      * batch directory that is PARTIALLY referenced (some of its files
+      * still live) keeps exactly what `referenced` names; its retired files
+      * are dropped. Call BEFORE a batch writes its data dir or commits
+      * (single writer), never after the commit: a reader still scanning the
+      * just-retired state must not lose its files.
       */
     def sweepUnreferenced(referenced: Seq[StateFile]): Unit = {
-      val live = referenced.flatMap(f => Seq(f.rel, f.dir, f.dir.split("/")(0))).toSet
+      val live = referenced.flatMap(f => Seq(f.rel, f.dir)).toSet
       StateFs.listNames(fs, root).foreach { n =>
         if (!n.startsWith(s"$Prefix-") && !n.startsWith(".")) {
           if (!live.contains(n)) StateFs.deleteRecursively(fs, new Path(root, n))
@@ -807,9 +754,8 @@ object StreamIngest {
 
   /** Recursive delete over LOCAL java.nio paths (no-op when absent) —
     * only the CLI `--reset` still uses it (its target is the launching
-    * user's local spool/warehouse dirs by construction); every state
-    * owner, [[graft.ops.Maintenance]] included, drives the Hadoop
-    * `FileSystem` ([[StateFs]]).
+    * user's local spool/warehouse dirs by construction); the state itself
+    * is driven through the Hadoop `FileSystem` ([[StateFs]]).
     */
   def deleteRecursively(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {

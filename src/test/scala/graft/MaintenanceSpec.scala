@@ -7,38 +7,6 @@ import java.nio.file.Files
 class MaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
-  test("compactFiles re-bins many small files, preserving the data atomically") {
-    val dir = Files.createTempDirectory("compact").resolve("t").toString
-    val df = (1L to 10000L).map(i => (i, s"row $i")).toDF("id", "s")
-    df.repartition(20).write.parquet(dir)
-    def files(): Int = {
-      val s = Files.walk(java.nio.file.Paths.get(dir))
-      try s.filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-        .count().toInt
-      finally s.close()
-    }
-    assert(files() == 20)
-    val n = Maintenance.compactFiles(spark, dir, targetBytes = 1L << 30)
-    assert(n == 1 && files() == 1)
-    val got = spark.read.parquet(dir).as[(Long, String)].collect().toSet
-    assert(got == (1L to 10000L).map(i => (i, s"row $i")).toSet)
-    // staging/retired leftovers are gone
-    assert(!Files.exists(java.nio.file.Paths.get(dir + ".compact_staging")))
-    assert(!Files.exists(java.nio.file.Paths.get(dir + ".compact_retired")))
-  }
-
-  test("compactFiles recovers a table stranded mid-swap by a crash") {
-    val dir = Files.createTempDirectory("compact-crash").resolve("t").toString
-    (1L to 100L).map(i => (i, i * 2)).toDF("id", "v").repartition(4).write.parquet(dir)
-    // simulate a death between the two swap renames: table dir moved to
-    // retired, replacement never landed
-    Files.move(java.nio.file.Paths.get(dir),
-      java.nio.file.Paths.get(dir + ".compact_retired"))
-    val n = Maintenance.compactFiles(spark, dir, targetBytes = 1L << 30)
-    assert(n == 1)
-    assert(spark.read.parquet(dir).count() == 100)
-  }
-
   test("zOrderKey interleaves bits as a Morton code") {
     val rows = Seq((0L, 0L), (1L, 0L), (0L, 1L), (1L, 1L), (3L, 3L), (2L, 1L))
       .toDF("x", "y")

@@ -10,8 +10,8 @@ import java.nio.file.Files
 /** The state's manifest commit path: the whole bucketed ingest running
   * on a filesystem whose DIRECTORY renames fail ([[NoRenameFileSystem]] —
   * the object-store simulation) with no conf set, plus the crash windows
-  * the manifest layout claims to close and the loud refusal of the
-  * retired layouts, which would otherwise read as an empty warehouse.
+  * the manifest layout claims to close and the loud refusal of earlier
+  * manifest formats, which would otherwise read the state wrong.
   */
 class ManifestProtocolSpec extends SparkSpec {
 
@@ -171,30 +171,20 @@ class ManifestProtocolSpec extends SparkSpec {
     }
   }
 
-  test("a rename-layout warehouse fails loudly at construction") {
-    val wh = Files.createTempDirectory("rename-layout-wh").toString
-    val bucket = new java.io.File(s"$wh/_state/_bucket=3")
-    assert(bucket.mkdirs())
-    Files.write(bucket.toPath.resolve("part-0.parquet"), Array[Byte](1))
-    val e = intercept[IllegalStateException] {
-      new StreamIngest(spark, WarehouseOptions(database = "rldb"), wh)
-    }
-    assert(e.getMessage.contains(s"$wh/_state") && e.getMessage.contains("--reset"),
-      e.getMessage)
-    assert(!new java.io.File(s"$wh/_state_v").exists(), "nothing written")
-  }
-
   test("a directory-level manifest fails loudly, naming the manifest file") {
     val wh = Files.createTempDirectory("dir-manifest-wh").toString
     val versRoot = new java.io.File(s"$wh/_state_v")
     assert(new java.io.File(versRoot, "b0-1/_bucket=3").mkdirs())
-    Files.write(versRoot.toPath.resolve("manifest-0.tsv"),
-      "3\tb0-1/_bucket=3\n".getBytes("UTF-8"))
-    val e = intercept[IllegalStateException] {
-      new StreamIngest(spark, WarehouseOptions(database = "dmdb"), wh)
+    // the directory-level format, then the format with no bucket count in
+    // its `maxSeq⇥N⇥split` header
+    for (manifest <- Seq("3\tb0-1/_bucket=3\n", "maxSeq\t4\t\\N\n3\tb0-1/part-0.parquet\t9\t4\n")) {
+      Files.write(versRoot.toPath.resolve("manifest-0.tsv"), manifest.getBytes("UTF-8"))
+      val e = intercept[IllegalStateException] {
+        new StreamIngest(spark, WarehouseOptions(database = "dmdb"), wh)
+      }
+      assert(e.getMessage.contains("manifest-0.tsv") && e.getMessage.contains("--reset"),
+        e.getMessage)
     }
-    assert(e.getMessage.contains("manifest-0.tsv") && e.getMessage.contains("--reset"),
-      e.getMessage)
   }
 
   test("a replayed committed batch never re-commits the manifest (r13 review)") {
@@ -244,24 +234,5 @@ class ManifestProtocolSpec extends SparkSpec {
     // the true replay of batch 0 is still skipped
     restarted.applyBatch(mk(b0), 0L)
     assert(names() == before)
-  }
-
-  test("copy-rename stores: StreamIngest constructs, compactFiles refuses") {
-    spark.sparkContext.hadoopConfiguration.set(
-      "fs.s3a.impl", classOf[FakeS3aFileSystem].getName)
-    val wh = "s3a://" + Files.createTempDirectory("s3a-wh").toString
-    // the manifest layout renames no directory, so S3A's copy+delete
-    // "rename" is no hazard to it (the full ingest on a no-directory-rename
-    // FS is the e2e test above — the fake s3a scheme only exists to
-    // exercise the guard, RawLocalFS cannot carry Spark parquet IO under a
-    // foreign scheme)
-    new StreamIngest(spark, WarehouseOptions(database = "s3db"), wh)
-    // compaction's two-rename swap is refused up front — S3A's rename is
-    // a copy+delete that REPORTS SUCCESS — before any IO touches the table
-    val e = intercept[IllegalArgumentException] {
-      graft.ops.Maintenance.compactFiles(spark,
-        "s3a://" + Files.createTempDirectory("s3a-tbl").resolve("t").toString)
-    }
-    assert(e.getMessage.contains("copy+delete"))
   }
 }

@@ -18,15 +18,6 @@ abstract class LocalFileSystemAs(scheme: String) extends RawLocalFileSystem {
       s.getReplication, s.getBlockSize, s.getModificationTime, s.getPath))
 }
 
-/** A local filesystem masquerading as S3A — for the scheme guard that
-  * refuses a directory swap on copy+delete-rename stores
-  * (`StateFs.requireAtomicDirRename`). Unlike [[NoRenameFileSystem]]
-  * its renames "work" (as S3A's do — that is the hazard: they report
-  * success without atomicity), so only the up-front guard stands
-  * between a caller and a silent mid-swap loss.
-  */
-class FakeS3aFileSystem extends LocalFileSystemAs("s3a")
-
 /** A local filesystem that REFUSES directory renames — the object-store
   * simulation ManifestProtocolSpec runs the ingest against. S3A/GCS
   * "rename" is copy+delete: not atomic, O(data), torn on a crash; a
@@ -53,11 +44,12 @@ class NoRenameFileSystem extends LocalFileSystemAs("norename") {
   }
 }
 
-/** A local filesystem that, once armed, tears the next `create` of a
-  * `_state_buckets` file: the file is created (an overwrite truncates
-  * it) and the write then fails before a byte lands — a crash in the
-  * middle of a small-file overwrite. Arming is one-shot, so the restart
-  * after the simulated crash writes normally.
+/** A local filesystem that, once armed, tears the next `create` of a file
+  * under a `_schemas` directory — a schema donor, or its staging name: the
+  * file is created (an overwrite truncates it) and the write then fails
+  * before a byte lands — a crash in the middle of a small-file write.
+  * Arming is one-shot, so the restart after the simulated crash writes
+  * normally.
   */
 class TornWriteFileSystem extends LocalFileSystemAs("tornwrite") {
 
@@ -66,7 +58,7 @@ class TornWriteFileSystem extends LocalFileSystemAs("tornwrite") {
                       replication: Short, blockSize: Long,
                       progress: Progressable): FSDataOutputStream = {
     val out = super.create(f, overwrite, bufferSize, replication, blockSize, progress)
-    if (f.getName.contains("_state_buckets") && TornWriteFileSystem.armed.getAndSet(false)) {
+    if (f.getParent.getName == "_schemas" && TornWriteFileSystem.armed.getAndSet(false)) {
       out.close()
       throw new java.io.IOException(s"torn write (crash simulation): $f")
     }

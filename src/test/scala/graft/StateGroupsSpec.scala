@@ -8,15 +8,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.util.zip.CRC32
 
 /** The ingest state's files are sized by bytes, not one per bucket: a
   * merge writes the buckets it rewrites as groups of consecutive buckets,
   * one file per group and one group per scan split
   * (`spark.sql.files.maxPartitionBytes`), and the manifest names each file
-  * once per bucket it holds. Files of the earlier per-bucket layout stay
-  * readable as one-bucket groups. Every feed is built in-process.
+  * once per bucket it holds. Every feed is built in-process.
   */
 class StateGroupsSpec extends SparkSpec {
 
@@ -152,56 +151,5 @@ class StateGroupsSpec extends SparkSpec {
     assert(manifest(wh).live().get.files.toSet == before.toSet)
     assert(ingest.checkpoint == last.toLong)
     assert(sorted(ingest.changesSince(-1L)) == recompute(base(50)))
-  }
-
-  test("a hand-built manifest of per-bucket _bucket=N files still reads, merges and folds") {
-    val wh = tempDir("legacy-wh")
-    val root = s"$wh/_state_v"
-    val feed = base(200)
-    // the per-bucket layout: one `_bucket=N` directory per bucket, each
-    // file named in the manifest for its one bucket
-    Compact.latestChanges(mk(feed)).select("id", "seqNum", "deleted", "doc")
-      .withColumn("_bucket", pmod(crc32(col("id")), lit(64)).cast("int"))
-      .write.partitionBy("_bucket").parquet(s"$root/b0-1")
-    val fs = fsOf(wh)
-    val lines = for {
-      d <- fs.listStatus(new Path(s"$root/b0-1")).toSeq if d.isDirectory
-      f <- fs.listStatus(d.getPath).toSeq if f.getPath.getName.startsWith("part-")
-    } yield s"${d.getPath.getName.stripPrefix("_bucket=")}\tb0-1/${d.getPath.getName}/${f.getPath.getName}\t${f.getLen}"
-    Files.write(Paths.get(root, "manifest-0.tsv"), ("maxSeq\t200\n" + lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    Files.write(Paths.get(wh, "_state_buckets"), "64".getBytes("UTF-8"))
-
-    val ingest = new StreamIngest(spark, WarehouseOptions(database = "lgdb"), wh)
-    assert(ingest.checkpoint == 200L)
-    assert(sorted(ingest.changesSince(-1L)) == recompute(feed))
-
-    // a merge of one bucket rewrites its one file; the other per-bucket
-    // files carry forward
-    val m0 = manifest(wh).live().get
-    val b = bucketOf("d7")
-    ingest.applyBatch(mk(Seq(typed(201, "d7", 700), typed(7, "d7", 7))), 1L)
-    val m1 = manifest(wh).live().get
-    assert(m1.files.filterNot(_.bucket == b).toSet == m0.files.filterNot(_.bucket == b).toSet)
-    assert(m1.files.filter(_.bucket == b).forall(!_.rel.contains("_bucket=")), s"${m1.files}")
-    var applied = feed :+ typed(201, "d7", 700)
-    assert(sorted(ingest.changesSince(-1L)) == recompute(applied))
-
-    // small syncs until one folds the delta into the per-bucket files
-    var seq = 201
-    var folded = false
-    while (!folded) {
-      assert(seq < 600, "no sync folded the delta")
-      val pending = manifest(wh).live().get.delta.nonEmpty
-      val sync = (1 to 5).map { k => seq += 1; typed(seq, s"n$seq", k) }
-      ingest.applyBatch(mk(sync), (seq / 5).toLong)
-      applied ++= sync
-      folded = pending && manifest(wh).live().get.delta.isEmpty
-      assert(sorted(ingest.changesSince(-1L)) == recompute(applied))
-    }
-    // the retired per-bucket directory of bucket b is swept by a later write
-    assert(!fs.exists(new Path(s"$root/b0-1/_bucket=$b")))
-    ingest.publish()
-    // 200 base docs and one new doc per change since seq 201
-    assert(spark.sql("SELECT COUNT(*) FROM lgdb").head().getLong(0) == 200L + (seq - 201))
   }
 }

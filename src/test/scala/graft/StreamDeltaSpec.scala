@@ -127,7 +127,7 @@ class StreamDeltaSpec extends SparkSpec {
     ingest.applyBatch(mk((1 to 640).map(i => typed(i, s"d$i", "order", i))), 0L)
     val base = manifest(wh).live().get
     val files = base.files.map(_.rel).distinct
-    val rows = base.files.distinctBy(_.rel).flatMap(_.rows).sum
+    val rows = base.files.distinctBy(_.rel).map(_.rows).sum
     val buckets = base.files.map(_.bucket).distinct.size
     // the manifest's row count is the file's
     assert(rows == 640L && spark.read.parquet(files.map(f => s"$wh/_state_v/$f"): _*).count() == rows)

@@ -2,7 +2,7 @@ package graft
 
 import graft.model.ChangeFeed
 import graft.ops.{Compact, Flatten, Split}
-import graft.streaming.{StateFs, StreamIngest}
+import graft.streaming.StreamIngest
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.JsonToStructs
@@ -15,10 +15,10 @@ import scala.jdk.CollectionConverters._
 /** The views `StreamIngest` publishes read the stored `_type` and the
   * state's `id`: a point read filters on plain columns below the doc
   * parse, and every view equals the definition that parses each doc for
-  * its type and id, on the couch fixtures, on a warehouse written before
-  * `_type` was stored, and under a split field other than the one the
-  * state was typed with. A doc whose `_id` is not its change id fails its
-  * sync. Every warehouse is built in-process.
+  * its type and id on the couch fixtures. A warehouse reopened under
+  * another split field than the one its `_type`s were computed under
+  * fails at construction, and a doc whose `_id` is not its change id
+  * fails its sync. Every warehouse is built in-process.
   */
 class StreamViewSpec extends SparkSpec {
 
@@ -134,88 +134,30 @@ class StreamViewSpec extends SparkSpec {
     }
   }
 
-  test("a warehouse written before _type was stored reads, syncs and folds into the new layout") {
-    val wh = tempDir("untyped-wh")
-    val root = s"$wh/_state_v"
-    val feed = (1 to 120).map(i => typed(i, s"d$i", i))
-    // the earlier layout: files with no _type, `bucket⇥path⇥length` lines
-    // under a `maxSeq⇥N` header, `delta⇥bucket⇥seq⇥deleted⇥id⇥doc` lines
-    Compact.latestChanges(mk(feed)).select("id", "seqNum", "deleted", "doc")
-      .coalesce(1).write.parquet(s"$root/b0-1")
-    val fs = fsOf(wh)
-    val file = fs.listStatus(new Path(s"$root/b0-1")).find(_.getPath.getName.startsWith("part-")).get
-    def bucketOf(id: String): Long = {
-      val c = new java.util.zip.CRC32
-      c.update(id.getBytes("UTF-8"))
-      c.getValue % 4
-    }
-    val pending = Seq(typed(121, "d5", 500), typed(122, "n1", 1))
-    val deltaLines = Compact.latestChanges(mk(pending)).collect().map { r =>
-      val id = r.getAs[String]("id")
-      s"delta\t${bucketOf(id)}\t${r.getAs[Long]("seqNum")}\tfalse\t$id\t${r.getAs[String]("doc")}"
-    }
-    val fileLines = feed.indices.map(i => bucketOf(s"d${i + 1}")).distinct.sorted.map(b =>
-      s"$b\tb0-1/${file.getPath.getName}\t${file.getLen}")
-    Files.write(Paths.get(root, "manifest-0.tsv"),
-      (("maxSeq\t122" +: (fileLines ++ deltaLines)).mkString("\n") + "\n").getBytes("UTF-8"))
-    Files.write(Paths.get(wh, "_state_buckets"), "4".getBytes("UTF-8"))
-
-    val opts = WarehouseOptions(database = "utdb", split = Some("type"))
-    val ingest = ingestOf(wh, "utdb", opts.split)
-    var applied = feed ++ pending
-    assertViews(ingest, "utdb", opts.split, applied, "as written")
-    // a delta sync adds typed rows to the untyped ones
-    val sync = Seq(typed(123, "d6", 600), deletion(124, "d7"))
-    ingest.applyBatch(mk(sync), 1L)
-    applied ++= sync
-    assert(manifest(wh).live().get.delta.size == 4)
-    assertViews(ingest, "utdb", opts.split, applied, "with a delta")
-    // a replayed change takes the merge, which folds every file touched
-    ingest.applyBatch(mk(Seq(typed(125, "d8", 800), typed(3, "d3", 3))), 2L)
-    applied :+= typed(125, "d8", 800)
-    val m = manifest(wh).live().get
-    assert(m.delta.isEmpty && m.split == Some("type"))
-    assert(m.files.forall(_.rows.nonEmpty), m.files)
-    val lines = new String(StateFs.readVersioned(fs, new Path(root), "manifest", ".tsv").get._2, "UTF-8")
-      .split("\n").toSeq
-    assert(lines.head == "maxSeq\t125\ttype" && lines.tail.forall(_.split("\t").length == 4), lines)
-    val stored = spark.read.parquet(m.files.map(f => s"$root/${f.rel}").distinct: _*)
-    assert(stored.where(!col("deleted") && col("_type").isNull).isEmpty)
-    assertViews(ingest, "utdb", opts.split, applied, "folded")
-    assertPointRead("utdb_order", "d6", 600.0)
-  }
-
-  test("a warehouse reopened under another split field never shows a row under the wrong type") {
+  test("a warehouse reopened under another split field, or none, fails at construction") {
     val wh = tempDir("resplit-wh")
     val first = ingestOf(wh, "rsp", Some("type"))
-    var applied = (1 to 90).map(i => typed(i, s"d$i", i))
-    first.applyBatch(mk(applied), 0L)
+    val applied = (1 to 90).map(i => typed(i, s"d$i", i)) :+ typed(91, "d1", 2)
+    first.applyBatch(mk(applied.init), 0L)
     // a delta typed by `type`, left pending
-    val pending = Seq(typed(91, "d1", 2), typed(92, "d2", 4))
-    first.applyBatch(mk(pending), 1L)
-    applied ++= pending
+    first.applyBatch(mk(applied.takeRight(1)), 1L)
     assert(manifest(wh).live().get.delta.nonEmpty)
-    var (seq, batch) = (92, 1L)
-    for (split <- Seq(Some("kind"), None, Some("type"), Some("kind"))) {
-      val db = s"rsp${split.getOrElse("none")}"
-      val ingest = ingestOf(wh, db, split)
-      assertViews(ingest, db, split, applied, s"$split reopened")
-      // a new doc and an update, a replayed change that takes the merge,
-      // and a delta left pending for the next split field
-      val steps = Seq(
-        Seq(typed(seq + 1, "d10", seq + 1), typed(seq + 2, s"n$seq", seq)),
-        Seq(typed(seq + 3, "d11", seq + 3), typed(5, "d5", 5)),
-        Seq(typed(seq + 4, "d12", seq)))
-      steps.zipWithIndex.foreach { case (lines, k) =>
-        ingest.applyBatch(mk(lines), batch + 1 + k)
-        applied ++= lines
-        assertViews(ingest, db, split, applied, s"$split step $k")
-        if (k == 1) assert(manifest(wh).live().get.split == split)
-      }
-      assert(manifest(wh).live().get.delta.nonEmpty, s"$split: no delta pending")
-      seq += 4
-      batch += steps.size
+    // every file under the state root with its bytes
+    def state(): Map[String, Seq[Byte]] = {
+      val s = Files.walk(Paths.get(wh, "_state_v"))
+      try s.iterator.asScala.filter(Files.isRegularFile(_))
+        .map(p => p.toString -> Files.readAllBytes(p).toSeq).toMap
+      finally s.close()
     }
+    val before = state()
+    for ((split, named) <- Seq(Some("kind") -> "--split 'kind'", None -> "no --split")) {
+      val e = intercept[IllegalStateException](ingestOf(wh, "rsp2", split))
+      assert(e.getMessage.contains("--split 'type'") && e.getMessage.contains(named) &&
+        e.getMessage.contains("--reset"), e.getMessage)
+      assert(state() == before, s"$split: the refused instance touched the state")
+    }
+    // the original split field still opens it
+    assertViews(ingestOf(wh, "rsp", Some("type")), "rsp", Some("type"), applied, "reopened")
   }
 
   test("a live change whose doc _id is not its id fails its sync, small batch or large") {
