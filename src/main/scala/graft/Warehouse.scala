@@ -3,8 +3,7 @@ package graft
 import graft.model.{ChangeFeed, SchemaDiscovery}
 import graft.model.SchemaDiscovery.DocSchema
 import graft.ops.{Caching, Compact, Flatten, Mango, Split, Transform}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end warehouse build: the Spark-native `couchwarehouse.start()`.
@@ -15,14 +14,16 @@ import org.apache.spark.sql.functions._
   *      form in [[graft.streaming.StreamIngest]]);
   *   2. optional Mango selector filter (source pushdown, A4);
   *   3. optional user transform (A5);
-  *   4. ONE shuffle on `id` compacts every docType at once: per
+  *   4. ONE shuffle on `id` compacts every docType at once under
+  *      [[graft.ops.Compact]]'s rules, the monitor's too: per
   *      `(id, docType)` the latest live row survives unless a tombstone of
   *      that id carries a higher seq (last-writer-wins, delete application,
   *      design-doc drop — A9/A10/A11). The compacted frame also carries each
   *      `(id, docType)`'s first doc and its latest seq, so ONE metadata
-  *      aggregation over it yields the type set, each type's first-doc-wins
-  *      schema donor (A6) and the checkpoint seq — design docs and
-  *      tombstones included. That frame is materialized once per
+  *      aggregation over it yields each type's schema donor — its first
+  *      live doc by seq (A6) — and with it the type set, the types with a
+  *      donor, plus the checkpoint seq, design docs and tombstones
+  *      included. That frame is materialized once per
   *      [[ingest]]: the metadata job is the only job that reads the feed,
   *      and every table view, export, sink and query reads the
   *      materialization instead;
@@ -49,7 +50,8 @@ final case class WarehouseOptions(
 final class Warehouse(spark: SparkSession, opts: WarehouseOptions) {
 
   /** Frozen per-docType schemas — the reference's in-memory `theSchema` map
-    * (`index.js:62`). Populated by [[ingest]]; first doc of each type wins.
+    * (`index.js:62`). Populated by [[ingest]]; first live doc of each type
+    * by seq wins.
     */
   private val schemas = scala.collection.mutable.LinkedHashMap.empty[String, DocSchema]
 
@@ -89,26 +91,30 @@ final class Warehouse(spark: SparkSession, opts: WarehouseOptions) {
     allChanges = Some(transformed)
 
     compacted.foreach(Caching.release(_))
-    val mat = Caching.materialized(Warehouse.compactByType(transformed,
-      opts.split.fold(lit(Split.DefaultType))(f => Split.docType(f, col("doc")))))
+    // per `(id, t)` group: its latest seq; its surviving doc; its `first`
+    // donor, left null where that is the surviving row, so a doc written
+    // once is cached once
+    val mat = Caching.materialized(Compact.byType(
+      transformed.select(col("id"), col("seqNum"), col("deleted"), col("doc")),
+      opts.split.fold(lit(Split.DefaultType))(f => Split.docType(f, col("doc"))))
+      .select(col("t"), col("seqNum"), col("live"), when(col("live"), col("doc")).as("doc"),
+        when(col("t").isNotNull && !(col("live") && col("first.seqNum") === col("seqNum")),
+          col("first")).as("first")))
     compacted = Some(mat)
 
     // the one metadata job; it also fills the materialization. The null
     // group holds the ids without a live doc (tombstones, design docs).
     val meta = mat.groupBy("t")
-      .agg(max(col("seqNum")), min(coalesce(col("first"),
-        when(col("live") && col("doc").isNotNull, struct(col("seqNum"), col("doc"))))))
+      .agg(max(col("seqNum")), min(coalesce(col("first"), Compact.donor)))
       .collect()
     meta.flatMap(r => Option(r.get(1))).map(_.asInstanceOf[Long]).maxOption
       .foreach(s => lastSeq = s)
-    val donors = meta.collect { case r if !r.isNullAt(0) =>
-      r.getString(0) -> Option(r.getStruct(2)).map(_.getString(1))
-    }.toMap
-
-    val types = opts.split.fold(Seq(Split.DefaultType))(_ => donors.keys.toSeq.sorted)
-    types.foreach { t =>
-      val schema = schemas.getOrElseUpdate(t,
-        donors.get(t).flatten.fold(DocSchema(Seq.empty))(SchemaDiscovery.discover))
+    // a donor, once found, is frozen; the type set is the types with one
+    meta.collect { case r if !r.isNullAt(0) && !r.isNullAt(2) => r.getString(0) -> r.getStruct(2).getString(1) }
+      .sortBy(_._1).foreach { case (t, d) =>
+        if (!schemas.contains(t)) schemas(t) = SchemaDiscovery.discover(d)
+      }
+    schemas.foreach { case (t, schema) =>
       if (schema.leaves.nonEmpty) {
         val flat = Flatten(mat.where(col("live") && col("t") === t), schema)
         val name = Split.tableName(opts.database, opts.split.map(_ => t))
@@ -220,43 +226,6 @@ final class Warehouse(spark: SparkSession, opts: WarehouseOptions) {
 }
 
 object Warehouse {
-
-  /** Every docType's compaction in one shuffle on `id`: one row per
-    * `(id, t)` group, `t` being `liveType` on live rows (not deleted, not a
-    * design doc) and null on the rest. Per group it keeps:
-    *   - `seqNum`, the group's latest seq (so `max(seqNum)` over all groups
-    *     is the feed's, tombstones and design docs included);
-    *   - `live` and `doc`: the latest row survives — and keeps its doc —
-    *     iff it is live and no tombstone of its id has a higher seq. This is
-    *     `Compact(Split.ofType(changes, f, t))` for every `t` at once: a doc
-    *     that changed type stays in each type it was live in, until a
-    *     tombstone removes it from all of them;
-    *   - `first`: the group's first non-null doc as `(seqNum, doc)` — the
-    *     schema-donor candidate, kept even when compaction discards that
-    *     version. Left null where it is the surviving row itself, so a doc
-    *     written once is stored once.
-    * Both windows ride the one hash exchange on `id`: the `(id, t)` window
-    * is satisfied by the `id` partitioning.
-    */
-  private def compactByType(changes: DataFrame, liveType: Column): DataFrame = {
-    val live = !col("deleted") && !col("id").startsWith("_design")
-    val group = Window.partitionBy("id", "t").orderBy(col("seqNum").desc)
-    val first = min(when(col("doc").isNotNull, struct(col("seqNum"), col("doc"))))
-      .over(group.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-    val survives = col("t").isNotNull && (col("_tomb").isNull || col("seqNum") > col("_tomb"))
-    // `t` is derived after the exchange, so it is never shuffled
-    changes
-      .select(col("id"), col("seqNum"), col("deleted"), col("doc"))
-      .withColumn("_tomb", max(when(col("deleted"), col("seqNum"))).over(Window.partitionBy("id")))
-      .withColumn("t", when(live, liveType))
-      .select(col("t"), col("seqNum"), col("doc"), col("_tomb"),
-        row_number().over(group).as("_rn"), first.as("_first"))
-      .where(col("_rn") === 1)
-      .select(col("t"), col("seqNum"), survives.as("live"),
-        when(survives, col("doc")).as("doc"),
-        when(col("t").isNotNull && !(survives && col("_first.seqNum") === col("seqNum")),
-          col("_first")).as("first"))
-  }
 
   /** Build a warehouse from a changes-feed file in one call — the batch
     * analog of `couchwarehouse.start(opts)`.

@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * strip `-` (`util.js:1-11`: `"month-54" → "month54"`).
   *
   * Spark-native: docType is a column (`get_json_object` on the raw doc).
-  * The batch [[graft.Warehouse]] compacts every type in one shuffle keyed on
-  * `(id, docType)` and reads the type set off that pass; [[discoverTypes]]
-  * and [[ofType]] are the standalone per-type forms of the same split.
+  * The batch build and the monitor route by it under [[Compact]]'s rules
+  * (last writer wins per `(id, docType)`; the types are those with a schema
+  * donor); [[discoverTypes]] and [[ofType]] are standalone per-type forms.
   */
 object Split {
 

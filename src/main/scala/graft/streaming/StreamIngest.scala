@@ -32,20 +32,22 @@ import scala.jdk.CollectionConverters._
   *      batch when it is small (at most [[StreamIngest.SmallBatchRows]]
   *      rows), else its first rows only; each row's `_bucket` and `_type`
   *      (its docType) are computed there, and what the batch touches —
-  *      `_bucket`s, highest seq, live docTypes — comes from those rows, or
-  *      from ONE aggregation over the cached large batch;
+  *      `_bucket`s, highest seq, each docType's first live doc — comes from
+  *      those rows, or from ONE aggregation over the cached large batch. A
+  *      docType's first doc is its schema donor if it has none yet;
   *   2. a small batch whose every seq is above the state's `maxSeq` is
-  *      last-writer-wins collapsed on the driver into the pending DELTA,
-  *      which the manifest commit carries: no state read, no shuffle, no
-  *      bucket write. Any other batch — large, replayed or older-seq — or
-  *      a delta past one average bucket of the base's rows
-  *      ([[StreamIngest.deltaFits]]) takes the bucketed [[merge]], which
-  *      folds the pending delta in (LWW by seqNum, tombstones retained so
-  *      deletes win over late replays);
-  *   3. re-register each docType's flattened temp view over the state the
-  *      commit just named: its plan, analyzed once per docType, with the
-  *      commit's file relation and delta put in by a tree transform and
-  *      stored in the session catalog as it stands.
+  *      collapsed on the driver into the pending DELTA, which the manifest
+  *      commit carries: no state read, no shuffle, no bucket write. Any
+  *      other batch — large, replayed or older-seq — or a delta past one
+  *      average bucket of the base's rows ([[StreamIngest.deltaFits]])
+  *      takes the bucketed [[merge]], which folds the pending delta in.
+  *      Both apply [[Compact]]'s rules, as the batch build does: last
+  *      writer wins per `(id, docType)`, each id's latest tombstone
+  *      retained so deletes win over late replays;
+  *   3. re-register the flattened temp view of each docType with a donor
+  *      over the state the commit just named: its plan, analyzed once per
+  *      docType, with the commit's file relation and delta put in by a tree
+  *      transform and stored in the session catalog as it stands.
   *
   * The warehouse checkpoint (A13) is the manifest's `maxSeq`, committed
   * with the state; Spark's `checkpointLocation` holds source offsets.
@@ -55,7 +57,7 @@ import scala.jdk.CollectionConverters._
   * split, and a versioned manifest naming every live file plus the delta's
   * rows. Every state read is one parquet scan over the files it names,
   * listing nothing, with the delta resolved at plan time: the base rows
-  * whose id is not in the delta, plus the delta as a local relation. So a
+  * no delta row hides, plus the delta as a local relation. So a
   * small sync costs one Spark job and one SQL execution (its collect) and
   * analyzes no view; [[publish]] after a batch is a no-op: the views stay
   * current until the next batch.
@@ -75,8 +77,9 @@ import scala.jdk.CollectionConverters._
   * Scale: a small sync is O(batch) — the couchwarehouse model of one
   * upsert per change; a merge is one shuffle and one file per group. The
   * driver holds the manifest (a line per bucket of each file and a delta
-  * of at most one average bucket, not the table), frozen schemas and the
-  * seq counter, like the reference's single node held `theSchema`. All
+  * of at most one average bucket, not the table), the frozen schemas —
+  * whose types are the type set — and the seq counter, like the
+  * reference's single node held `theSchema`. All
   * state plumbing drives the Hadoop `FileSystem` resolved from
   * `warehouseDir`, so the warehouse can live on cluster storage, object
   * stores included ([[StateFs]] has the atomicity boundary).
@@ -117,8 +120,9 @@ final class StreamIngest(
   /** The state before its first commit, under this instance's layout. */
   private val noState = ManifestVersion(-1L, -1L, stateBuckets, opts.split, Nil, Nil)
 
-  /** Frozen per-docType schemas, persisted as the donor document JSON so a
-    * restarted stream keeps first-doc-wins semantics (§1.4).
+  /** Frozen per-docType schemas — the type set — persisted as the donor
+    * document JSON so a restarted stream keeps first-doc-wins semantics
+    * (§1.4) and every type's view.
     */
   private val schemas = scala.collection.mutable.LinkedHashMap.empty[String, DocSchema]
   loadSchemas()
@@ -166,30 +170,29 @@ final class StreamIngest(
 
   private def bucketCol = pmod(crc32(col("id")), lit(stateBuckets)).cast("int")
 
-  /** A row that a view can show: live, and not a `_design/` doc. */
-  private def liveDoc = !col("deleted") && !col("id").startsWith("_design")
-
   /** The docType of a view-visible row (null for any other, and for every
     * row without `--split`): what the stored `_type` column holds.
     */
   private def liveType: Column = opts.split.fold(lit(null).cast("string"))(f =>
-    when(liveDoc, Split.docType(f, col("doc"))))
+    when(Compact.liveDoc, Split.docType(f, col("doc"))))
 
   /** One micro-batch application; also callable directly for batch replay
     * tests. A replay of the last applied batch is skipped ([[replayed]]).
     *
     * The batch is read as ONE select — the state columns, `_type` and
     * `_bucket` computed once here, and each live doc's `_id` for
-    * [[checkIds]] — plus a limit. A small batch above the state's `maxSeq`
-    * joins the pending delta ([[withDelta]]); any other batch takes the
-    * bucketed [[merge]]. The views are then published over the manifest
-    * just committed, with no second read of it.
+    * [[checkIds]] (its id where it has none; null on the other rows) —
+    * plus a limit. The batch's donors of types without one are frozen
+    * first. A small batch above the state's `maxSeq` joins the pending
+    * delta ([[withDelta]]); any other batch takes the bucketed [[merge]].
+    * The views are then published over the manifest just committed, with
+    * no second read of it.
     */
   def applyBatch(batch0: DataFrame, batchId: Long): Unit = {
     published = None
     val batch = opts.transform(batch0).select(col("id"), col("seqNum"), col("deleted"),
       col("doc"), liveType.as("_type"), bucketCol.as("_bucket"),
-      when(liveDoc, get_json_object(col("doc"), "$._id")).as("_docId"))
+      when(Compact.liveDoc, coalesce(get_json_object(col("doc"), "$._id"), col("id"))).as("_docId"))
     val head = batch.limit(StreamIngest.SmallBatchRows + 1).collect().toSeq
     val small = Option.when(head.size <= StreamIngest.SmallBatchRows)(head)
     small.foreach(rows => checkIds(rows.collectFirst {
@@ -200,7 +203,12 @@ final class StreamIngest(
     try {
       val meta = small.fold(batchMeta(input))(BatchMeta.of)
       val live = stateManifest.live()
-      val now = if (replayed(batchId, meta.maxSeq, live)) live else {
+      val skip = replayed(batchId, meta.maxSeq, live)
+      // frozen before the commit: every type of a committed state has its donor
+      meta.donors.foreach { case (t, d) =>
+        if (!schemas.contains(t)) schemas(t) = SchemaDiscovery.discover(persistSchema(t, d))
+      }
+      val now = if (skip) live else {
         val m = live.getOrElse(noState)
         val maxSeq = (m.maxSeq +: meta.maxSeq.toSeq).max
         stateManifest.sweepUnreferenced(m.files)
@@ -209,7 +217,7 @@ final class StreamIngest(
           case None        => merge(m, input, meta, batchId, maxSeq)
         })
       }
-      publishWith(meta.types, now)
+      publishWith(now)
     } finally if (small.isEmpty) input.unpersist()
   }
 
@@ -224,32 +232,35 @@ final class StreamIngest(
   }
 
   /** What a large micro-batch touches, read in ONE aggregation over the
-    * cached batch (which is also the job that fills the cache): its
-    * `_bucket`s, its highest seq, its `_type`s — the set
-    * [[Split.discoverTypes]] would return — and its chars; a live change
-    * whose doc's `_id` differs from its id fails it ([[checkIds]]).
+    * cached batch (which is also the job that fills the cache), grouped by
+    * the docType of its live rows: its `_bucket`s, its highest seq, each
+    * docType's first live doc ([[Compact.donor]]) and its chars; a live
+    * change whose doc's `_id` differs from its id fails it ([[checkIds]]).
     */
   private def batchMeta(batch: DataFrame): BatchMeta = {
-    val r = batch.agg(collect_set(col("_bucket")), max(col("seqNum")),
-      collect_set(col("_type")), sum(length(concat_ws("", col("id"), col("doc")))),
-      max(when(col("_docId") =!= col("id"), struct(col("id"), col("_docId"))))).head()
-    checkIds(Option(r.getStruct(4)).map(m => (m.getString(0), m.getString(1))))
-    BatchMeta(r.getSeq[Int](0).toSet, Option(r.get(1)).map(_.asInstanceOf[Long]),
-      r.getSeq[String](2).toSet, Option(r.get(3)).fold(0L)(_.asInstanceOf[Long]))
+    val rs = batch.groupBy(when(col("_docId").isNotNull, coalesce(col("_type"), lit(Split.DefaultType))))
+      .agg(collect_set(col("_bucket")), max(col("seqNum")), min(Compact.donor),
+        sum(length(concat_ws("", col("id"), col("doc")))),
+        max(when(col("_docId") =!= col("id"), struct(col("id"), col("_docId"))))).collect().toSeq
+    def longs(i: Int) = rs.flatMap(r => Option(r.get(i))).map(_.asInstanceOf[Long])
+    checkIds(rs.flatMap(r => Option(r.getStruct(5))).headOption.map(m => (m.getString(0), m.getString(1))))
+    BatchMeta(rs.flatMap(_.getSeq[Int](1)).toSet, longs(2).maxOption,
+      rs.collect { case r if !r.isNullAt(0) && !r.isNullAt(3) => r.getString(0) -> r.getStruct(3).getString(1) }.toMap,
+      longs(4).sum)
   }
 
-  /** The pending delta of `m` with a small batch's `rows` applied, LWW
-    * collapsed per id (tombstones kept, `_design/` docs dropped, as
-    * [[Compact.latestChanges]] does) — None when the batch must take the
-    * bucketed merge instead: a row with no seq or one at or below the
-    * state's `maxSeq` (a replay's or an older change: only a merge orders
-    * it against the base, while readers drop every base row of a delta id
-    * unseen), or a delta past [[StreamIngest.deltaFits]].
+  /** The pending delta of `m` with a small batch's `rows` applied under
+    * [[Compact.latestByType]] (`_design/` docs dropped) — None when the
+    * batch must take the bucketed merge instead: a row with no seq or one
+    * at or below the state's `maxSeq` (a replay's or an older change: only
+    * a merge orders it against the base, while readers hide base rows
+    * behind every delta row unseen), or a delta past
+    * [[StreamIngest.deltaFits]].
     */
   private def withDelta(m: ManifestVersion,
                         rows: Seq[Row]): Option[Seq[DeltaRow]] =
     Option.when(rows.forall(r => !r.isNullAt(1) && r.getLong(1) > m.maxSeq && !r.isNullAt(2))) {
-      DeltaRow.latest(m.delta ++ rows.flatMap(DeltaRow.of))
+      Compact.latestByType(m.delta ++ rows.flatMap(DeltaRow.of))
     }.filter(StreamIngest.deltaFits(m, _))
 
   /** The bucketed merge of `input` into the state of `m`, folding its
@@ -258,11 +269,12 @@ final class StreamIngest(
     * or the delta touch and rewrites the union of their buckets as G
     * groups of consecutive buckets, G = estimated bytes over one scan split
     * (`spark.sql.files.maxPartitionBytes`), between 1 and one per bucket.
-    * ONE exchange on the group serves both the last-writer-wins window and
-    * the write: each group is one task's one file. Every row it writes
-    * carries its `_type`: the batch's from its select, the state's as
-    * stored. The other files' lines carry forward. A crash before the
-    * commit leaves an orphan directory, swept on the next attempt.
+    * ONE exchange on the group serves both [[Compact.byType]]'s windows and
+    * the write: each group is one task's one file, holding the survivors
+    * and each id's latest tombstone. Every row it writes carries its
+    * `_type`: the batch's from its select, the state's as stored. The
+    * other files' lines carry forward. A crash before the commit leaves an
+    * orphan directory, swept on the next attempt.
     */
   private def merge(m: ManifestVersion, input: DataFrame, meta: BatchMeta,
                     batchId: Long, maxSeq: Long): ManifestVersion = {
@@ -277,13 +289,13 @@ final class StreamIngest(
     val parts = scan(read).map(_.withColumn("_bucket", bucketCol)).toSeq :+
       StreamIngest.frame(spark, m.delta.map(_.row)) :+
       input.select(StreamIngest.StateSchema.fieldNames.toSeq.map(col): _*)
-    // a null id has no bucket; the window drops its row
-    val grouped = parts.reduce(_ unionByName _).withColumn("_group", coalesce(
-      typedLit(Seq.tabulate(stateBuckets)(groupOf.getOrElse(_, 0))).getItem(col("_bucket")), lit(0)))
+    // a null id has no bucket, and no row of it is kept
+    val grouped = parts.reduce(_ unionByName _).where(col("id").isNotNull).withColumn("_group",
+      typedLit(Seq.tabulate(stateBuckets)(groupOf.getOrElse(_, 0))).getItem(col("_bucket")))
     val dirName = s"b$batchId-${System.nanoTime()}"
-    // tombstones RETAINED: deletes survive replays, a re-created doc wins
-    // by its higher seq
-    Compact.latestChanges(grouped.repartitionById(g, col("_group")), col("_group"))
+    Compact.byType(grouped.repartitionById(g, col("_group")),
+        coalesce(col("_type"), lit(Split.DefaultType)), col("_group"))
+      .where(col("live") || Compact.tombstone)
       .select(StreamIngest.DataSchema.fieldNames.toSeq.map(col): _*)
       .write.mode("overwrite").option(StreamIngest.SuccessMarker, "false")
       .parquet(stateManifest.dataPath(dirName).toString)
@@ -294,14 +306,15 @@ final class StreamIngest(
 
   /** The warehouse's OWN outbound change feed from persisted state — the
     * CouchDB `_changes` contract re-exposed for downstream incremental
-    * consumers: latest change per id with `seqNum > since`, tombstones
-    * included so deletes propagate (a filter over the state, no shuffle).
-    * Resume token = `max(seqNum)` consumed ([[checkpoint]] for all).
+    * consumers, as [[graft.Warehouse.changesSince]] gives it: latest change
+    * per id with `seqNum > since`, tombstones included so deletes propagate
+    * ([[Compact.latestChanges]] over the state: one shuffle on id). Resume
+    * token = `max(seqNum)` consumed ([[checkpoint]] for all).
     */
   def changesSince(since: Long): DataFrame =
-    existingState()
+    Compact.latestChanges(state(stateManifest.live())
       .getOrElse(throw new IllegalStateException(
-        "changesSince before any ingested state"))
+        "changesSince before any ingested state")))
       .where(col("seqNum") > since)
       .select("id", "seqNum", "deleted", "doc")
 
@@ -331,20 +344,26 @@ final class StreamIngest(
       batchId == m.batchId
     }
 
-  /** The persisted state table as `m` (by default the live manifest, read
-    * afresh so a reading instance sees the writer's commits) names it —
-    * None before any state: the scan of its files without the rows of the
-    * delta's ids, plus the delta rows as a local relation (no broadcast,
-    * no second scan). This shape holds with no delta too (the optimizer
-    * drops the empty relation and folds the empty `IN`), so one analyzed
-    * view plan fits every commit ([[rebind]]). A state with a delta always has
-    * files ([[StreamIngest.deltaFits]]).
+  /** The persisted state table as `m` names it — None before any state:
+    * the scan of its files, plus the delta rows as a local relation (no
+    * broadcast, no second scan). The scan's empty `NOT id IN ()`, which the
+    * optimizer folds, is where [[rebind]] puts the ids a view's delta
+    * hides, so one analyzed view plan fits every commit. A state with a
+    * delta always has files ([[StreamIngest.deltaFits]]).
     */
-  private def existingState(m: Option[ManifestVersion] = stateManifest.live()): Option[DataFrame] =
+  private def state(m: Option[ManifestVersion]): Option[DataFrame] =
     m.filter(_.files.nonEmpty).map { v =>
-      scan(v.files).get.where(!col("id").isin(v.delta.map(_.id): _*))
+      scan(v.files).get.where(!col("id").isin())
         .unionByName(StreamIngest.frame(spark, v.delta.map(_.row)).drop("_bucket"))
     }
+
+  /** The ids whose base rows the delta of `m` hides from the view of the
+    * stored `_type` `stored`: a delta row hides the base row of its
+    * `(id, _type)`, a delta tombstone every base row of its id — no more,
+    * as [[Compact.latestByType]] keeps a doc in each type it was live in.
+    */
+  private def hidden(m: ManifestVersion, stored: Option[String]): Seq[String] =
+    m.delta.filter(d => d.deleted || Option(d.docType) == stored).map(_.id).distinct
 
   /** ONE parquet relation (`id`, `seqNum`, `deleted`, `doc`, `_type`) over
     * exactly `files`, each read once however many buckets it names (None
@@ -371,12 +390,6 @@ final class StreamIngest(
       new ParquetFileFormat, Map.empty)(spark)
   }
 
-  /** docTypes ever published, cached so the per-batch path never rescans
-    * the full state (None until the first publish seeds it — from state
-    * on restart, from the batch alone on a fresh warehouse).
-    */
-  private var knownTypes: Option[Set[String]] = None
-
   /** The views the last publish registered, each with the catalog entry it
     * got; None from the start of an [[applyBatch]] until it publishes.
     */
@@ -388,12 +401,9 @@ final class StreamIngest(
     */
   private val viewPlans = scala.collection.mutable.Map.empty[String, LogicalPlan]
 
-  /** Re-register flattened per-type views over the live rows. The
-    * external form scans state for the type set once and caches it;
-    * [[applyBatch]] extends the cache from the batch's own type set
-    * instead — per-batch publish cost stays O(touched types), never a
-    * full-state scan per trigger. A type whose last doc is deleted keeps
-    * its (now empty) view — known types never un-publish.
+  /** Re-register the flattened view of each type with a donor
+    * ([[schemas]], the persisted `_schemas/` registry) over its live rows:
+    * a type whose last doc is deleted keeps its (now empty) view.
     *
     * A no-op (no job, no listing) when the views are current: every
     * [[applyBatch]] publishes before it returns, and this instance is the
@@ -404,65 +414,42 @@ final class StreamIngest(
   def publish(): Unit =
     if (!published.exists(_.forall { case (name, entry) =>
           GraftSqlBridge.tempView(spark, name).exists(_ eq entry) }))
-      publishWith(Set.empty, stateManifest.live())
+      publishWith(stateManifest.live())
 
   /** Each view is its type's analyzed plan ([[viewPlans]]) with `m`'s file
-    * relation, delta rows and delta ids put in, stored in the session
-    * catalog as it stands: no analysis, no SQL execution, no job — except
-    * the type scan of a first publish and the donor read of a type's first
-    * live doc ([[schemaOf]]).
+    * relation, delta rows and hidden ids put in, stored in the session
+    * catalog as it stands: no analysis, no SQL execution, no job.
     */
-  private def publishWith(batchTypes: Set[String], m: Option[ManifestVersion]): Unit = {
+  private def publishWith(m: Option[ManifestVersion]): Unit = {
     val views = m.filter(_.files.nonEmpty).toSeq.flatMap { v =>
-      lazy val live = existingState(Some(v)).get.where(!col("deleted"))
-      val types = opts.split match {
-        case Some(_) =>
-          val all = knownTypes.getOrElse(live.select("_type").distinct()
-            .collect().map(_.getString(0)).toSet) ++ batchTypes
-          knownTypes = Some(all)
-          all.toSeq.sorted
-        case None => Seq(Split.DefaultType)
-      }
       val rel = relation(v.files)
-      types.flatMap { t =>
-        def slice = opts.split.fold(live)(_ => live.where(col("_type") === t))
-        schemaOf(slice, t).filter(_.leaves.nonEmpty).map { schema =>
-          val plan = viewPlans.getOrElseUpdate(t,
-            Flatten(slice, schema, idCol = Some("id")).queryExecution.analyzed)
-          val name = Split.tableName(opts.database, opts.split.map(_ => t))
-          name -> GraftSqlBridge.replaceTempView(spark, name, rebind(plan, v, rel))
-        }
+      schemas.toSeq.sortBy(_._1).collect { case (t, schema) if schema.leaves.nonEmpty =>
+        val stored = opts.split.map(_ => t)
+        val plan = viewPlans.getOrElseUpdate(t, {
+          val live = state(Some(v)).get.where(!col("deleted"))
+          Flatten(stored.fold(live)(s => live.where(col("_type") === s)), schema,
+            idCol = Some("id")).queryExecution.analyzed
+        })
+        val name = Split.tableName(opts.database, stored)
+        name -> GraftSqlBridge.replaceTempView(spark, name, rebind(plan, v, rel, hidden(v, stored)))
       }
     }
     published = Some(views.toMap)
   }
 
-  /** `plan`, a view over [[existingState]], re-pointed at the state of
-    * `m` by tree transform: its file relation swapped for `rel`, its local
-    * relation's rows and its `NOT id IN (…)` list for `m`'s delta. Every
+  /** `plan`, a view over [[state]], re-pointed at the state of `m` by tree
+    * transform: its file relation swapped for `rel`, its local relation's
+    * rows for `m`'s delta and its `NOT id IN (…)` list for `hidden`. Every
     * attribute id stays, so the plan needs no analysis.
     */
-  private def rebind(plan: LogicalPlan, m: ManifestVersion, rel: HadoopFsRelation): LogicalPlan = {
-    val ids = m.delta.map(d => Literal.create(d.id, StringType))
+  private def rebind(plan: LogicalPlan, m: ManifestVersion, rel: HadoopFsRelation,
+                     hidden: Seq[String]): LogicalPlan = {
+    val ids = hidden.map(Literal.create(_, StringType))
     plan.transformUp {
       case l: LogicalRelation => l.copy(relation = rel)
       case l: LocalRelation => l.copy(data = LocalRelation.fromExternalRows(l.output, m.delta.map(_.row)).data)
     }.transformAllExpressions { case in: In => in.copy(list = ids) }
   }
-
-  /** The frozen schema of `docType`, discovered from its first live doc
-    * (and persisted) on first sight. A type with no live row yet — every
-    * doc of it deleted, or none landed — has no schema: nothing is
-    * memoized, so its first real doc still becomes the donor.
-    */
-  private def schemaOf(slice: => DataFrame, docType: String): Option[DocSchema] =
-    schemas.get(docType).orElse {
-      slice.orderBy(col("seqNum")).select("doc").limit(1).collect().headOption.map { r =>
-        val s = SchemaDiscovery.discover(persistSchema(docType, r.getString(0)))
-        schemas(docType) = s
-        s
-      }
-    }
 
   /** The persisted donor of `docType`: one already there (another
     * instance's) is kept, else `donorDoc` is committed whole
@@ -543,29 +530,31 @@ object StreamIngest {
   private def frame(spark: SparkSession, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(rows.asJava, StateSchema)
 
-  /** A micro-batch's touched buckets, highest seq, live docTypes and
-    * [[chars]].
+  /** A micro-batch's touched buckets, highest seq, each docType's first
+    * live doc ([[Compact.donor]]) and its [[chars]].
     */
   private final case class BatchMeta(buckets: Set[Int], maxSeq: Option[Long],
-                                     types: Set[String], bytes: Long)
+                                     donors: Map[String, String], bytes: Long)
 
   private object BatchMeta {
-    /** The meta of a collected batch: rows of `StateSchema` (and the doc's
-      * `_id`), as `batchMeta` aggregates it.
+    /** The meta of a collected batch: rows of `StateSchema` (and the live
+      * doc's `_id`), as `batchMeta` aggregates it.
       */
     def of(rows: Seq[Row]): BatchMeta = BatchMeta(
       rows.filterNot(_.isNullAt(5)).map(_.getInt(5)).toSet,
       rows.filterNot(_.isNullAt(1)).map(_.getLong(1)).maxOption,
-      rows.filterNot(_.isNullAt(4)).map(_.getString(4)).toSet,
+      Compact.firstDocs(rows.filterNot(_.isNullAt(6)).map(r => (Option(r.getString(4))
+        .getOrElse(Split.DefaultType), Option.when(!r.isNullAt(1))(r.getLong(1)), r.getString(3)))),
       rows.map(r => chars(r.getString(0), r.getString(3))).sum)
   }
 
-  /** A row of the pending delta: the latest change of `id`, newer than
-    * every base row, with its `_type` `docType`, in `_bucket` `bucket` once
-    * folded.
+  /** A row of the pending delta, newer than every base row: a change that
+    * [[Compact.latestByType]] keeps, with its `_type` `docType`, in
+    * `_bucket` `bucket` once folded.
     */
   private[graft] final case class DeltaRow(id: String, seqNum: Long, deleted: Boolean,
-                                           doc: String, docType: String, bucket: Int) {
+                                           doc: String, docType: String, bucket: Int)
+      extends Compact.Change {
     def row: Row = Row(id, seqNum, deleted, doc, docType, bucket)
 
     /** Its weight against [[deltaFits]]' byte caps. */
@@ -580,11 +569,6 @@ object StreamIngest {
     def of(r: Row): Option[DeltaRow] =
       Option(r.getString(0)).filterNot(_.startsWith("_design")).map(id =>
         DeltaRow(id, r.getLong(1), r.getBoolean(2), r.getString(3), r.getString(4), r.getInt(5)))
-
-    /** The latest row per id (highest seq), ordered by id. */
-    def latest(rows: Seq[DeltaRow]): Seq[DeltaRow] =
-      rows.groupMapReduce(_.id)(identity)((a, b) => if (b.seqNum > a.seqNum) b else a)
-        .values.toSeq.sortBy(_.id)
   }
 
   /** A live state file as the manifest names it, once per bucket it

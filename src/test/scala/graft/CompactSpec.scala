@@ -20,27 +20,6 @@ class CompactSpec extends SparkSpec {
     assert(out == Map("a" -> """{"v":2}"""))
   }
 
-  test("merge: incremental batch overrides, delete applies, replay is no-op") {
-    val base = changes(
-      ("a", 1L, false, """{"v":1}"""),
-      ("b", 2L, false, """{"v":2}"""),
-      ("c", 3L, false, """{"v":3}"""))
-    val batch = changes(
-      ("b", 4L, false, """{"v":20}"""), // update
-      ("c", 5L, true, null),            // delete
-      ("a", 1L, false, """{"v":1}"""))  // replayed duplicate
-    val out = Compact.merge(base, batch).collect()
-      .map(r => r.getString(0) -> r.getString(3)).toMap
-    assert(out == Map("a" -> """{"v":1}""", "b" -> """{"v":20}"""))
-  }
-
-  test("applyDeletes is a left anti-join on id") {
-    val base = changes(("a", 1L, false, "{}"), ("b", 2L, false, "{}"))
-    val tombstones = Seq("b").toDF("id")
-    val out = Compact.applyDeletes(base, tombstones).collect().map(_.getString(0))
-    assert(out.toSeq == Seq("a"))
-  }
-
   test("doc recreated after deletion survives (higher seq wins)") {
     val out = Compact(changes(
       ("x", 1L, false, """{"v":1}"""),

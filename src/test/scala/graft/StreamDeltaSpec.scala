@@ -57,12 +57,14 @@ class StreamDeltaSpec extends SparkSpec {
   private def recompute(lines: Seq[String]): Seq[String] =
     sorted(Compact.latestChanges(mk(lines)))
 
-  /** Per-type live row counts of the recompute, as the views must hold. */
+  /** Per-type live row counts, as the views must hold: last writer wins
+    * per `(id, docType)`, so a doc that changed type stays counted in its
+    * old type until deleted.
+    */
   private def liveCounts(lines: Seq[String]): Map[String, Long] = {
     import org.apache.spark.sql.functions._
-    Compact.latestChanges(mk(lines)).where(!col("deleted"))
-      .groupBy(coalesce(get_json_object(col("doc"), "$.type"), lit("_default")))
-      .count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    ByTypeOracle.live(mk(lines), coalesce(get_json_object(col("doc"), "$.type"), lit("_default")))
+      .groupBy("t").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
   }
 
   test("base + delta equals a full LWW recompute on seeded random feeds, across folds") {

@@ -205,13 +205,15 @@ class StreamIngestSpec extends SparkSpec {
       { import spark.implicits._; rows.toDF("value") }, "value")
     val batch = Seq(change(1, "a", """{"_id":"a","_rev":"1","v":1}"""))
     TornWriteFileSystem.armed.set(true)
-    // the crash: the first publish dies while writing the type's donor
+    // the crash: the first sync dies while writing the type's donor,
+    // before its state commit
     intercept[java.io.IOException] {
       new StreamIngest(spark, WarehouseOptions(database = "torndb"), wh)
         .applyBatch(mk(batch), 0L)
     }
     assert(!TornWriteFileSystem.armed.get, "the donor write was never attempted")
-    // the restart constructs, skips the replayed batch and publishes the view
+    // the restart constructs, applies the re-delivered batch and publishes
+    // the view
     val restarted = new StreamIngest(spark, WarehouseOptions(database = "torndb"), wh)
     restarted.applyBatch(mk(batch), 0L)
     restarted.publish()

@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.ChangeFeed
-import graft.ops.{Compact, Flatten, Split}
+import graft.ops.{Flatten, Split}
 import graft.streaming.StreamIngest
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
@@ -57,19 +57,19 @@ class StreamViewSpec extends SparkSpec {
       .map(_.trim.stripSuffix(",")).filter(_.startsWith("{\"seq\""))
 
   /** Every view of `ingest` against the definition that parses the doc for
-    * its type and its id: `Flatten` over the live LWW rows of `lines` whose
-    * doc-derived docType is the view's, with the instance's frozen schema.
+    * its type and its id: `Flatten` over the live rows of `lines` whose
+    * doc-derived docType is the view's (last writer wins per
+    * `(id, docType)`), with the instance's frozen schema.
     */
   private def assertViews(ingest: StreamIngest, db: String, split: Option[String],
                           lines: Seq[String], clue: String): Unit = {
     ingest.publish()
-    val live = Compact.latestChanges(mk(lines)).where(!col("deleted"))
-    val types = split.fold(Seq(Split.DefaultType))(f =>
-      live.select(Split.docType(f, col("doc"))).distinct().collect().map(_.getString(0)).toSeq)
+    val live = ByTypeOracle.live(mk(lines),
+      split.fold(lit(Split.DefaultType))(f => Split.docType(f, col("doc"))))
+    val types = live.select("t").distinct().collect().map(_.getString(0)).toSeq
     assert(types.nonEmpty, clue)
     types.foreach { t =>
-      val want = Flatten(split.fold(live)(f => live.where(Split.docType(f, col("doc")) === t)),
-        ingest.discoveredSchemas(t))
+      val want = Flatten(live.where(col("t") === t), ingest.discoveredSchemas(t))
       val view = spark.table(Split.tableName(db, split.map(_ => t)))
       assert(view.schema == want.schema, s"$clue: $t")
       assert(view.collect().map(_.toString).sorted.toSeq ==
