@@ -1,8 +1,8 @@
 package graft
 
-import graft.model.{ChangeFeed, SchemaDiscovery}
+import graft.model.SchemaDiscovery
 import graft.model.SchemaDiscovery.DocSchema
-import graft.ops.{Caching, Compact, Flatten, Mango, Split, Transform}
+import graft.ops.{Caching, Compact, Flatten, Split, Transform}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,9 +10,12 @@ import org.apache.spark.sql.functions._
   *
   * Orchestration parity with reference `index.js:181-255`, in one pass over
   * the feed:
-  *   1. read the changes feed (spool → here a batch DataFrame; streaming
-  *      form in [[graft.streaming.StreamIngest]]);
-  *   2. optional Mango selector filter (source pushdown, A4);
+  *   1. read the changes feed through the `couch-changes` source
+  *      ([[graft.sources.CouchChangesSource]]; streaming form in
+  *      [[graft.streaming.StreamIngest]]);
+  *   2. the optional Mango selector (A4) runs in that reader, over each
+  *      raw doc, where CouchDB runs it: [[ingest]] takes the changes as
+  *      read;
   *   3. optional user transform (A5);
   *   4. ONE shuffle on `id` compacts every docType at once under
   *      [[graft.ops.Compact]]'s rules, the monitor's too: per
@@ -75,15 +78,12 @@ final class Warehouse(spark: SparkSession, opts: WarehouseOptions) {
   def checkpoint: Long = lastSeq
   def tableNames: Seq[String] = tables.keys.toSeq
 
-  /** Ingest a batch of changes (canonical columns from [[ChangeFeed]]) and
-    * (re)register the warehouse views. Returns the per-table DataFrames.
+  /** Ingest a batch of changes (the columns of the `couch-changes` source)
+    * and (re)register the warehouse views. Returns the per-table
+    * DataFrames.
     */
-  def ingest(changes0: DataFrame): Map[String, DataFrame] = {
-    val selected = opts.mangoSelector match {
-      case Some(sel) => applyMangoOnDoc(changes0, sel)
-      case None      => changes0
-    }
-    val batch = opts.transform(selected)
+  def ingest(changes: DataFrame): Map[String, DataFrame] = {
+    val batch = opts.transform(changes)
     val transformed = allChanges match {
       case Some(prev) => prev.unionByName(batch, allowMissingColumns = true)
       case None       => batch
@@ -134,14 +134,6 @@ final class Warehouse(spark: SparkSession, opts: WarehouseOptions) {
     import spark.implicits._
     tables.keys.toSeq.map(t => (t, lastSeq)).toDF("tablename", "seq")
       .createOrReplaceTempView("couchwarehouse_checkpoints")
-  }
-
-  /** Mango selector evaluated against the document body: flatten-lite via
-    * get_json_object so `{"age":{"$gt":30}}` addresses doc fields directly.
-    */
-  private def applyMangoOnDoc(changes: DataFrame, selectorJson: String): DataFrame = {
-    val pred = Mango.compileOnJson(selectorJson, col("doc"))
-    changes.where(col("deleted") || pred)
   }
 
   /** The delegated-query surface, answered natively (A16). */
@@ -227,12 +219,14 @@ final class Warehouse(spark: SparkSession, opts: WarehouseOptions) {
 
 object Warehouse {
 
-  /** Build a warehouse from a changes-feed file in one call — the batch
-    * analog of `couchwarehouse.start(opts)`.
+  /** Build a warehouse from a changes-feed file or chunk directory in one
+    * call — the batch analog of `couchwarehouse.start(opts)`. The selector
+    * of `opts` runs in the reader.
     */
   def start(spark: SparkSession, path: String, opts: WarehouseOptions): Warehouse = {
     val w = new Warehouse(spark, opts)
-    w.ingest(ChangeFeed.read(spark, path))
+    w.ingest(spark.read.format("couch-changes")
+      .options(opts.mangoSelector.map("selector" -> _).toMap).load(path))
     w
   }
 }

@@ -5,14 +5,18 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
-/** CouchDB Mango selector → Catalyst `Column` compiler.
+/** CouchDB Mango selectors: a document-side evaluator and a Catalyst
+  * `Column` compiler.
   *
   * The reference pushes the `--query` Mango JSON into the `_changes` request
   * as a server-side `selector` (reference `index.js:102-104`,
-  * `bin/couchwarehouse.bin.js:14`) — source-side predicate pushdown. Our
-  * Spark-native equivalent compiles the same JSON to a `Column` predicate,
-  * which Catalyst then pushes down to the scan (PushedFilters) exactly as
-  * CouchDB pushed it to the feed.
+  * `bin/couchwarehouse.bin.js:14`), so it runs before a change reaches the
+  * warehouse. Here [[evalDoc]] runs it in that position: inside the
+  * `couch-changes` reader, over each parsed doc, with CouchDB's type-strict
+  * comparisons and dotted names addressing subfields — the only place a
+  * selector runs over raw docs. [[compile]] turns the same JSON into a
+  * `Column` predicate over typed columns (a flattened table), which
+  * Catalyst can push down to the scan (PushedFilters).
   *
   * Supported operators (the CouchDB Mango set): implicit equality,
   * `$eq $ne $gt $gte $lt $lte $in $nin $exists $regex $and $or $not $nor
@@ -38,64 +42,24 @@ object Mango {
     * argument is a sample comparison value, used to pick a cast when the
     * underlying storage is untyped (raw JSON text).
     */
-  type FieldResolver = (String, JsonNode) => Column
+  private type FieldResolver = (String, JsonNode) => Column
 
   /** Resolve against real DataFrame columns (flattened warehouse table). */
-  val columnResolver: FieldResolver = (field, _) => col(field)
+  private val columnResolver: FieldResolver = (field, _) => col(field)
 
-  /** Resolve against a raw JSON document column: `get_json_object` + a cast
-    * chosen from the comparison literal — the Spark form of CouchDB
-    * evaluating the selector server-side against the document body (A4).
+  /** Compile a Mango selector JSON string, validated by [[parse]], to a
+    * Spark Column predicate over flattened columns.
     */
-  def jsonResolver(doc: Column): FieldResolver = (field, v) => {
+  def compile(selectorJson: String): Column = compileObject(parse(selectorJson), columnResolver)
+
+  /** Resolve against a JSON object element of `$elemMatch`/`$allMatch`:
+    * `get_json_object` + a cast chosen from the comparison literal.
+    */
+  private def jsonResolver(doc: Column): FieldResolver = (field, v) => {
     val raw = get_json_object(doc, "$." + field)
     if (v != null && v.isNumber) raw.cast("double")
     else if (v != null && v.isBoolean) raw.cast("boolean")
     else raw
-  }
-
-  /** Compile a Mango selector JSON string to a Spark Column predicate over
-    * flattened columns.
-    */
-  def compile(selectorJson: String): Column = compile(selectorJson, columnResolver)
-
-  /** Compile a Mango selector evaluated directly against a raw JSON doc
-    * column (pre-flatten, source-pushdown position).
-    *
-    * `$type` over the scalar JSON types is rejected here:
-    * `get_json_object` erases them (42, "42" and true all arrive as
-    * bare text), so a compiled test could only lie. Container/null
-    * checks survive (brackets and SQL NULL are preserved); for full
-    * `$type` semantics use [[evalDoc]] — the position the DSv2 reader
-    * filters in anyway — or the flattened typed columns.
-    */
-  def compileOnJson(selectorJson: String, doc: Column): Column = {
-    val root = parse(selectorJson)
-    def scalarType(n: JsonNode): Boolean = {
-      val it = n.properties().asScala
-      n.isObject && it.exists { e =>
-        (e.getKey == "$type" &&
-          Set("number", "boolean", "string")(e.getValue.asText)) ||
-          scalarType(e.getValue)
-      } || (n.isArray && n.elements().asScala.exists(scalarType))
-    }
-    if (scalarType(root))
-      throw MangoException(
-        "$type number/boolean/string cannot be compiled against raw JSON " +
-          "(get_json_object erases scalar types) — use Mango.evalDoc or " +
-          "the flattened typed columns")
-    compile(selectorJson, jsonResolver(doc))
-  }
-
-  def compile(selectorJson: String, resolve: FieldResolver): Column = {
-    val root =
-      try mapper.readTree(selectorJson)
-      catch { case e: Exception => throw MangoException(s"invalid selector JSON: ${e.getMessage}") }
-    if (root == null || !root.isObject)
-      throw MangoException("selector must be a JSON object")
-    if (root.has("selector"))
-      throw MangoException("selector should not contain a nested 'selector' key")
-    compileObject(root, resolve)
   }
 
   /** An object combines its entries with AND (Mango semantics). */
@@ -282,10 +246,19 @@ object Mango {
     case "$not" => !evalDoc(value, doc)
     case op if op.startsWith("$") => throw MangoException(s"unsupported top-level operator $op")
     case field if value.isObject && value.fieldNames().asScala.forall(_.startsWith("$")) =>
-      val fv = Option(doc.get(field))
+      val fv = subfield(doc, field)
       value.properties().asScala.forall { e => evalOp(fv, e.getKey, e.getValue) }
-    case field => Option(doc.get(field)).exists(fv => cmp(fv, value).contains(0))
+    case field => subfield(doc, field).exists(fv => cmp(fv, value).contains(0))
   }
+
+  /** A field's value in `doc`, CouchDB's field syntax: a dotted name
+    * addresses a subfield (`address.city`), and `\.` is a literal dot.
+    */
+  private def subfield(doc: JsonNode, field: String): Option[JsonNode] =
+    if (field.indexOf('.') < 0) Option(doc.get(field))
+    else field.split("""(?<!\\)\.""").foldLeft(Option(doc)) { (n, k) =>
+      n.flatMap(d => Option(d.get(k.replace("\\.", "."))))
+    }
 
   private def evalOp(fv: Option[JsonNode], op: String, v: JsonNode): Boolean = op match {
     case "$exists" => fv.isDefined == v.asBoolean

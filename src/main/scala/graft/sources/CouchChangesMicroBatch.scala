@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types.StructType
+import CouchChangesSource.chunkFiles
 
 /** Streaming half of the couch-changes source (reference A2, the monitor
   * longpoll loop `index.js:143-170`): a [[MicroBatchStream]] over a
@@ -38,26 +39,13 @@ final class CouchChangesMicroBatch(path: String, selector: Option[String],
                                    maxChunksPerTrigger: Option[Int] = None)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
-  // dot-files are excluded: a live spooler stages each chunk as a hidden
-  // .tmp before its atomic rename, and offsets here are POSITIONAL file
-  // counts over this sorted listing — one visible temp file would shift
-  // the offset→file mapping and both duplicate and skip chunks
-  private def chunkFiles(): Seq[String] = {
-    val f = new java.io.File(path)
-    if (f.isDirectory)
-      f.listFiles().filter(x => x.isFile && !x.getName.startsWith("."))
-        .map(_.getAbsolutePath).sorted.toSeq
-    else if (f.isFile) Seq(f.getAbsolutePath)
-    else Seq.empty
-  }
-
   /** Chunk count frozen by `Trigger.AvailableNow` at query start; batches
     * never read past it so the query terminates on a live directory.
     */
   @volatile private var availableNowCap: Option[Int] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(chunkFiles().size)
+    availableNowCap = Some(chunkFiles(path).size)
 
   override def getDefaultReadLimit: ReadLimit =
     maxChunksPerTrigger.map(ReadLimit.maxFiles).getOrElse(ReadLimit.allAvailable())
@@ -85,7 +73,7 @@ final class CouchChangesMicroBatch(path: String, selector: Option[String],
   }
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val avail = availableNowCap.getOrElse(chunkFiles().size)
+    val avail = availableNowCap.getOrElse(chunkFiles(path).size)
     val s = start.asInstanceOf[ChangesFileOffset].fileCount
     val end = maxFilesIn(limit) match {
       case Some(mf) => math.min(avail, s + mf)
@@ -97,7 +85,7 @@ final class CouchChangesMicroBatch(path: String, selector: Option[String],
   /** True head of the feed for progress reporting, independent of any
     * rate cap or AvailableNow snapshot.
     */
-  override def reportLatestOffset(): Offset = ChangesFileOffset(chunkFiles().size)
+  override def reportLatestOffset(): Offset = ChangesFileOffset(chunkFiles(path).size)
 
   override def deserializeOffset(json: String): Offset = {
     val n = "\\d+".r.findFirstIn(json).map(_.toInt).getOrElse(0)
@@ -107,7 +95,7 @@ final class CouchChangesMicroBatch(path: String, selector: Option[String],
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[ChangesFileOffset].fileCount
     val e = end.asInstanceOf[ChangesFileOffset].fileCount
-    chunkFiles().slice(s, e).map(p => ChangesPartition(p): InputPartition).toArray
+    chunkFiles(path).slice(s, e).map(p => ChangesPartition(p): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

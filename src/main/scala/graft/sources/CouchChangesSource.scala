@@ -15,15 +15,22 @@ import scala.jdk.CollectionConverters._
 /** DataSource V2 implementation of the CouchDB `_changes` feed (batch form,
   * file-backed): `spark.read.format("couch-changes").load(path)`.
   *
+  * The one reader of a changes feed (`Warehouse.start`, the CLI, the
+  * monitor through [[CouchChangesMicroBatch]]). Each change line becomes
+  * `[seq, id, rev, deleted, doc (JSON text), seqNum]`; `seqNum` is the
+  * integer prefix of the seq token (`"47-1abc" → 47`, reference A14).
+  *
   * This is the reference's spool step (A1, `index.js:75-140`) as a real
   * Spark source with SOURCE-SIDE pushdown, mirroring how the reference
   * pushes work to CouchDB:
   *
   *   - **Mango selector pushdown (A4)**: `.option("selector", mangoJson)`
-  *     evaluates the selector against each document inside the reader —
-  *     the exact position CouchDB evaluates `params.selector`
-  *     (`index.js:102-104`). Rows are dropped before they ever become
-  *     Spark rows.
+  *     evaluates the selector against each document inside the reader
+  *     ([[graft.ops.Mango.evalDoc]]: type-strict comparisons, dotted names
+  *     address subfields) — the exact position CouchDB evaluates
+  *     `params.selector` (`index.js:102-104`), and the only place a
+  *     selector runs over raw docs. Rows are dropped before they ever
+  *     become Spark rows; tombstones always pass.
   *   - **Catalyst filter pushdown**: predicates on the feed columns
   *     (`id`, `seq`, `seqNum`, `deleted`, `rev`) are accepted via
   *     `SupportsPushDownFilters` and applied during the line scan — e.g.
@@ -72,6 +79,22 @@ object CouchChangesSource {
       require(n > 0, s"couch-changes: maxChunksPerTrigger must be a positive integer, got '$v'")
       n
     }
+
+  /** The chunk files of a feed path in name order: the file itself, or the
+    * files of a directory minus dot-files — a spooler's staged `.tmp`
+    * chunk must not be read half-written, nor shift the stream's
+    * positional offsets. A missing path fails here, at planning.
+    */
+  def chunkFiles(path: String): Seq[String] = {
+    val f = new java.io.File(path)
+    val listed = f.listFiles() // null unless a directory
+    if (listed != null)
+      listed.filter(x => x.isFile && !x.getName.startsWith("."))
+        .map(_.getAbsolutePath).sorted.toSeq
+    else if (f.isFile) Seq(f.getAbsolutePath)
+    else throw new java.io.FileNotFoundException(
+      s"couch-changes: no changes feed file or directory at $path")
+  }
 }
 
 final class CouchChangesTable(path: String, selector: Option[String],
@@ -131,17 +154,8 @@ final class ChangesScanBuilder(path: String, selector: Option[String],
     override def description(): String =
       s"couch-changes $path selector=${selector.isDefined} pushed=${pushed.mkString(",")}"
 
-    override def planInputPartitions(): Array[InputPartition] = {
-      val f = new java.io.File(path)
-      // skip dot-files: a live spooler's staged .tmp chunks must never be
-      // read half-written (same rule as the streaming listing)
-      val files: Seq[String] =
-        if (f.isDirectory)
-          f.listFiles().filter(x => x.isFile && !x.getName.startsWith("."))
-            .map(_.getAbsolutePath).sorted.toSeq
-        else Seq(f.getAbsolutePath)
-      files.map(p => ChangesPartition(p): InputPartition).toArray
-    }
+    override def planInputPartitions(): Array[InputPartition] =
+      CouchChangesSource.chunkFiles(path).map(p => ChangesPartition(p): InputPartition).toArray
 
     override def createReaderFactory(): PartitionReaderFactory =
       new ChangesReaderFactory(required, pushed, selector)

@@ -29,8 +29,12 @@ import org.apache.spark.sql.SparkSession
   * falls back to `COUCH_DATABASE` and `--url` to `COUCH_URL`, mirroring
   * `bin/couchwarehouse.bin.js:4-5` (the env URL is consulted only when
   * `--feed` is absent — `--feed` has no reference analog and must not be
-  * shadowed by ambient environment). `--reset` (reference `-r`) wipes the persistent
-  * warehouse/checkpoint dirs before a monitor run. User transforms
+  * shadowed by ambient environment). `--monitor` syncs the spool into a
+  * persistent warehouse at `--warehouse-dir`: it applies every chunk the
+  * spool holds, then exits (a `Trigger.AvailableNow` run), and a rerun
+  * syncs again; it exports nothing, so it refuses the export flags.
+  * `--reset` (reference `-r`) wipes the warehouse dir, and with it the
+  * streaming checkpoint kept inside it, before a monitor run. User transforms
   * (reference `--transform`, a JS hook file loaded at
   * `index.js:197-200`): `--transform <fully.qualified.ClassName>` loads a
   * [[graft.ops.Transform.Hook]] (a Scala object or a class with a no-arg
@@ -103,14 +107,15 @@ object CouchWarehouseCli {
     }
   }
 
+  /** A misuse of the command line: printed to stderr, exit status 2. */
+  private final case class Usage(msg: String) extends Exception(msg)
+
   private def parseArgs(args: Array[String]): Map[String, String] = {
     val m = scala.collection.mutable.Map.empty[String, String]
     var i = 0
     while (i < args.length) {
       val flag = args(i)
-      if (!flag.startsWith("--")) {
-        System.err.println(s"unexpected argument: $flag"); sys.exit(2)
-      }
+      if (!flag.startsWith("--")) throw Usage(s"unexpected argument: $flag")
       val key = flag.drop(2)
       if (i + 1 < args.length && !args(i + 1).startsWith("--")) {
         m(key) = args(i + 1); i += 2
@@ -122,11 +127,23 @@ object CouchWarehouseCli {
   /** Env lookup, swappable for tests (a JVM cannot set real env vars). */
   private[graft] var env: String => Option[String] = k => sys.env.get(k)
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    run(args) match { case 0 => case status => sys.exit(status) }
+
+  /** [[main]] without the exit: returns the exit status. */
+  private[graft] def run(args: Array[String]): Int =
+    try { runArgs(args); 0 }
+    catch { case Usage(msg) => Console.err.println(msg); 2 }
+
+  private def runArgs(args: Array[String]): Unit = {
     val opts = parseArgs(args)
     val database = opts.get("database")
       .orElse(env("COUCH_DATABASE"))
-      .getOrElse({ System.err.println("--database (or COUCH_DATABASE) is required"); sys.exit(2); "" })
+      .getOrElse(throw Usage("--database (or COUCH_DATABASE) is required"))
+    if (opts.contains("monitor"))
+      Seq("es-url", "es-index", "jdbc-url", "jdbc-table").find(opts.contains).foreach { f =>
+        throw Usage(s"--$f cannot combine with --monitor, which exports nothing")
+      }
     // --url spools CouchDB → chunk dir first; --feed uses an existing one.
     // COUCH_URL (reference bin/couchwarehouse.bin.js:4) backs --url, but
     // only when --feed is absent so env never shadows an explicit feed.
@@ -146,8 +163,7 @@ object CouchWarehouseCli {
         println(s"spooled to: $spoolDir (seq $seq)")
         spoolDir
       case _ =>
-        System.err.println("exactly one of --feed <changes file|dir> or --url <couchdb url> is required")
-        sys.exit(2); ""
+        throw Usage("exactly one of --feed <changes file|dir> or --url <couchdb url> is required")
     }
 
     // when embedded (tests, notebooks) an active session is reused and
@@ -176,16 +192,14 @@ object CouchWarehouseCli {
           .getOrElse(graft.ops.Transform.identity)))
 
     if (opts.contains("monitor")) {
-      // continuous mode (reference monitor loop): tail the feed directory
-      // as a stream of spool chunks into a persistent bucketed warehouse
+      // monitor mode (reference monitor loop): apply the spool chunks not
+      // yet applied to a persistent bucketed warehouse, then exit
       val whDir = opts.getOrElse("warehouse-dir", s"/tmp/graft-warehouse-$database")
-      val ckDir = opts.getOrElse("checkpoint-dir", s"$whDir/_spark_checkpoint")
       if (opts.contains("reset"))
         // reference --reset: ignore previously downloaded data, start again
-        Seq(whDir, ckDir).foreach(d =>
-          graft.streaming.StreamIngest.deleteRecursively(java.nio.file.Paths.get(d)))
+        graft.streaming.StreamIngest.deleteRecursively(java.nio.file.Paths.get(whDir))
       val ingest = new graft.streaming.StreamIngest(spark, wopts, whDir)
-      val q = ingest.start(feed, ckDir)
+      val q = ingest.start(feed, s"$whDir/_spark_checkpoint")
       q.awaitTermination()
       ingest.publish()
       println(s"warehouse: $whDir")
@@ -194,12 +208,7 @@ object CouchWarehouseCli {
         spark.sql(sql).show(opts.getOrElse("limit", "20").toInt, truncate = false)
       }
     } else {
-      // batch spool through the DSv2 source (Mango/pushdown reader-side)
-      val changes = spark.read.format("couch-changes")
-        .options(opts.get("query").map("selector" -> _).toMap)
-        .load(feed)
-      val w = new Warehouse(spark, wopts.copy(mangoSelector = None))
-      w.ingest(changes)
+      val w = Warehouse.start(spark, feed, wopts)
       println(s"tables: ${w.tableNames.mkString(", ")}")
       println(s"checkpoint seq: ${w.checkpoint}")
       // output targets (reference databaseType=elasticsearch / sql). A
@@ -207,12 +216,9 @@ object CouchWarehouseCli {
       // --split mode each per-type table has its own schema, and funneling
       // them into one index/table would clash mid-export.
       for (flag <- Seq("es-index", "jdbc-table")
-           if opts.contains(flag) && w.tableNames.size > 1) {
-        System.err.println(
-          s"--$flag cannot combine with --split (${w.tableNames.size} tables); " +
-            "per-table names are used — drop the flag")
-        sys.exit(2)
-      }
+           if opts.contains(flag) && w.tableNames.size > 1)
+        throw Usage(s"--$flag cannot combine with --split (${w.tableNames.size} tables); " +
+          "per-table names are used — drop the flag")
       opts.get("es-url").foreach { esUrl =>
         w.tableNames.foreach { tbl =>
           val index = opts.getOrElse("es-index", tbl)

@@ -1,6 +1,5 @@
 package graft
 
-import graft.model.ChangeFeed
 import graft.streaming.StreamIngest
 import org.apache.spark.sql.DataFrame
 import java.nio.file.Files
@@ -29,8 +28,7 @@ class BatchMonitorParitySpec extends SparkSpec {
     change(seq, id, (Seq("_id" -> s""""$id"""", "_rev" -> s""""$seq-r"""", "type" -> s""""$t"""") ++ fields)
       .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}"))
 
-  private def mk(rows: Seq[String]): DataFrame = ChangeFeed.fromLines(
-    { import spark.implicits._; rows.toDF("value") }, "value")
+  private def mk(rows: Seq[String]): DataFrame = CouchFixtures.feed(spark, rows)
 
   private val split = Some("type")
 

@@ -1,6 +1,8 @@
 package graft
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import java.nio.file.{Files, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
 
 /** The CouchDB `_changes` fixtures under `src/test/resources/couch/`:
@@ -22,4 +24,23 @@ object CouchFixtures {
   def results: Seq[JsonNode] =
     new ObjectMapper().readTree(new java.io.File(path("samplechanges.txt")))
       .get("results").elements().asScala.toSeq
+
+  /** A changes feed of `lines` (change objects, one a line) as production
+    * reads one: written to a temp file, deleted when the JVM exits, and
+    * read through the `couch-changes` source, with `selector` as its Mango
+    * selector.
+    */
+  def feed(spark: SparkSession, lines: Seq[String], selector: Option[String] = None): DataFrame = {
+    val file = Files.createTempFile(feedDir, "feed", ".json")
+    file.toFile.deleteOnExit()
+    Files.write(file, lines.asJava)
+    spark.read.format("couch-changes").options(selector.map("selector" -> _).toMap)
+      .load(file.toString)
+  }
+
+  private lazy val feedDir: Path = {
+    val d = Files.createTempDirectory("feeds")
+    d.toFile.deleteOnExit() // after its files: exit deletes in reverse order
+    d
+  }
 }

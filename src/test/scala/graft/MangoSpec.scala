@@ -226,14 +226,17 @@ class MangoSpec extends SparkSpec {
       mapper.readTree("""{"tags":["a"]}""")))
   }
 
-  test("compileOnJson rejects scalar $type (raw text erases JSON types)") {
-    import org.apache.spark.sql.functions.col
-    intercept[MangoException] {
-      Mango.compileOnJson("""{"age":{"$type":"number"}}""", col("doc"))
-    }
-    // container/null checks survive: brackets and SQL NULL are preserved
-    Mango.compileOnJson("""{"tags":{"$type":"array"}}""", col("doc"))
-    Mango.compileOnJson("""{"age":{"$type":"null"}}""", col("doc"))
+  test("evalDoc: a dotted name addresses a subfield, \\. is a literal dot") {
+    val m = new com.fasterxml.jackson.databind.ObjectMapper
+    def ok(sel: String) = Mango.evalDoc(Mango.parse(sel),
+      m.readTree("""{"address":{"city":"x","geo":{"lat":1.5}},"tags":["a"],"a.b":2}"""))
+    assert(ok("""{"address.city":"x"}"""))
+    assert(!ok("""{"address.city":"y"}"""))
+    assert(ok("""{"address.geo.lat":{"$gt":1}}"""))
+    assert(ok("""{"address.zip":{"$exists":false}}"""))
+    assert(!ok("""{"tags.a":{"$exists":true}}"""), "an array has no named subfields")
+    assert(ok("""{"a\\.b":2}"""), "an escaped dot is part of the name")
+    assert(!ok("""{"a.b":{"$exists":true}}"""), "an unescaped dot is a path step")
   }
 
   test("$type predicates survive CODEGEN_ONLY (functions.typeof 4.1.2 " +

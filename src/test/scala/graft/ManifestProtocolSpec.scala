@@ -1,6 +1,5 @@
 package graft
 
-import graft.model.ChangeFeed
 import graft.streaming.{StateFs, StreamIngest}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
@@ -27,8 +26,7 @@ class ManifestProtocolSpec extends SparkSpec {
   private def deletion(seq: Int, id: String): String =
     s"""{"seq":"$seq-x","id":"$id","changes":[{"rev":"$seq-r"}],"deleted":true,"doc":{"_id":"$id","_rev":"$seq-r","_deleted":true}}"""
 
-  private def mk(rows: Seq[String]) = ChangeFeed.fromLines(
-    { import spark.implicits._; rows.toDF("value") }, "value")
+  private def mk(rows: Seq[String]) = CouchFixtures.feed(spark, rows)
 
   test("e2e on a no-directory-rename FS: merge, delete, replay, restart") {
     val wh = noRenameDir("manifest-wh")

@@ -1,9 +1,9 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import graft.model.{ChangeFeed, SchemaDiscovery}
+import graft.model.SchemaDiscovery
 import graft.model.SchemaDiscovery.DocSchema
-import graft.ops.{Compact, Flatten, Mango, Split, Transform}
+import graft.ops.{Compact, Flatten, Split, Transform}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -34,16 +34,14 @@ class OnePassIngestSpec extends SparkSpec {
     s"""{"seq":"$seq-x","id":"$id","changes":[{"rev":"$seq-r"}]$del,"doc":$body}"""
   }
 
-  private def feed(lines: Seq[String]): DataFrame =
-    ChangeFeed.fromLines(lines.toDF("value"), "value")
+  private def feed(lines: Seq[String], selector: Option[String] = None): DataFrame =
+    CouchFixtures.feed(spark, lines, selector)
 
   /** The per-type build as it was: type discovery, a first-doc fetch per
     * type, then one compaction and flatten per type.
     */
   private def perType(changes: DataFrame, opts: WarehouseOptions): Map[String, DataFrame] = {
-    val selected = opts.mangoSelector.fold(changes)(s =>
-      changes.where(col("deleted") || Mango.compileOnJson(s, col("doc"))))
-    val all = opts.transform(selected)
+    val all = opts.transform(changes)
     val types = opts.split.fold(Seq(Split.DefaultType))(f => Split.discoverTypes(all, f))
     types.flatMap { t =>
       val ofType = opts.split.fold(all)(f => all.where(Split.docType(f, col("doc")) === t))
@@ -182,8 +180,10 @@ class OnePassIngestSpec extends SparkSpec {
         mangoSelector = Some("""{"v":{"$gt":400}}""")),
       WarehouseOptions(database = "hook", split = Some("type"), transform = upper))
     variants.foreach { opts =>
+      // the selector runs in the reader, on both sides
+      val read = feed(lines, opts.mangoSelector)
       val w = new Warehouse(spark, opts)
-      assertSameTables(w.ingest(feed(lines)), perType(feed(lines), opts))
+      assertSameTables(w.ingest(read), perType(read, opts))
     }
     val hooked = spark.table("hook_x").select("addr_s").as[String].collect()
     assert(hooked.nonEmpty && hooked.forall(_.startsWith("ST")))

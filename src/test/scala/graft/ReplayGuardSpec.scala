@@ -1,6 +1,5 @@
 package graft
 
-import graft.model.ChangeFeed
 import graft.streaming.StreamIngest
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
@@ -11,17 +10,15 @@ import scala.jdk.CollectionConverters._
   * in-process.
   */
 class ReplayGuardSpec extends SparkSpec {
-  import spark.implicits._
 
   private val Applied = 5L
 
   private def change(seq: Int, id: String, doc: String): String =
     s"""{"seq":"$seq-x","id":"$id","changes":[{"rev":"$seq-r"}],"doc":$doc}"""
 
-  private def feed = ChangeFeed.fromLines(Seq(
+  private def feed = CouchFixtures.feed(spark, Seq(
     change(1, "a", """{"_id":"a","_rev":"1","type":"x","amount":10.5}"""),
-    change(2, "b", """{"_id":"b","_rev":"1","type":"y","amount":2.0}""")
-  ).toDF("value"), "value")
+    change(2, "b", """{"_id":"b","_rev":"1","type":"y","amount":2.0}""")))
 
   /** A warehouse after applying batch [[Applied]], as its state root and a
     * function that re-runs the same batch under another id.

@@ -1,6 +1,5 @@
 package graft
 
-import graft.model.ChangeFeed
 import graft.ops.Compact
 import graft.streaming.{StateFs, StreamIngest}
 import org.apache.hadoop.fs.Path
@@ -27,8 +26,7 @@ class StateGroupsSpec extends SparkSpec {
   private def typed(seq: Int, id: String, v: Int): String =
     change(seq, id, s"""{"_id":"$id","_rev":"$seq-r","type":"order","v":$v}""")
 
-  private def mk(rows: Seq[String]): DataFrame = ChangeFeed.fromLines(
-    { import spark.implicits._; rows.toDF("value") }, "value")
+  private def mk(rows: Seq[String]): DataFrame = CouchFixtures.feed(spark, rows)
 
   private def tempDir(prefix: String): String = Files.createTempDirectory(prefix).toString
 

@@ -1,6 +1,5 @@
 package graft
 
-import graft.model.ChangeFeed
 import graft.ops.Compact
 import graft.streaming.{StateFs, StreamIngest}
 import org.apache.hadoop.fs.Path
@@ -40,8 +39,7 @@ class StreamDeltaSpec extends SparkSpec {
   private def fewBuckets(opts: WarehouseOptions, wh: String): StreamIngest =
     withConf("graft.state.buckets" -> "4")(new StreamIngest(spark, opts, wh))
 
-  private def mk(rows: Seq[String]): DataFrame = ChangeFeed.fromLines(
-    { import spark.implicits._; rows.toDF("value") }, "value")
+  private def mk(rows: Seq[String]): DataFrame = CouchFixtures.feed(spark, rows)
 
   private def tempDir(prefix: String): String = Files.createTempDirectory(prefix).toString
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.StreamIngest
-import graft.model.ChangeFeed
 import java.nio.file.{Files, Paths}
 
 class StreamIngestSpec extends SparkSpec {
@@ -56,14 +55,9 @@ class StreamIngestSpec extends SparkSpec {
   test("replayed batch is idempotent (at-least-once delivery)") {
     val wh = tempDir("replay-wh")
     val ingest = new StreamIngest(spark, WarehouseOptions(database = "rdb"), wh)
-    val batch = ChangeFeed.fromLines(
-      {
-        import spark.implicits._
-        Seq(
-          change(1, "x", """{"_id":"x","_rev":"1-r","v":1}"""),
-          change(2, "y", """{"_id":"y","_rev":"1-r","v":2}""")
-        ).toDF("value")
-      }, "value")
+    val batch = CouchFixtures.feed(spark, Seq(
+      change(1, "x", """{"_id":"x","_rev":"1-r","v":1}"""),
+      change(2, "y", """{"_id":"y","_rev":"1-r","v":2}""")))
     ingest.applyBatch(batch, 0L)
     ingest.applyBatch(batch, 1L) // replay
     ingest.publish()
@@ -73,8 +67,7 @@ class StreamIngestSpec extends SparkSpec {
 
   test("a second instance on the same warehouse reports the writer's checkpoint") {
     val wh = tempDir("ckpt-wh")
-    val mk = (rows: Seq[String]) => ChangeFeed.fromLines(
-      { import spark.implicits._; rows.toDF("value") }, "value")
+    val mk = (rows: Seq[String]) => CouchFixtures.feed(spark, rows)
     val writer = new StreamIngest(spark, WarehouseOptions(database = "cpdb"), wh)
     val reader = new StreamIngest(spark, WarehouseOptions(database = "cpdb2"), wh)
     assert(writer.checkpoint == 0L && reader.checkpoint == 0L)
@@ -91,8 +84,7 @@ class StreamIngestSpec extends SparkSpec {
   test("schema registry survives restart (frozen first-doc-wins)") {
     val wh = tempDir("restart-wh")
     val ingest = new StreamIngest(spark, WarehouseOptions(database = "xdb"), wh)
-    val mk = (s: String) => ChangeFeed.fromLines(
-      { import spark.implicits._; Seq(s).toDF("value") }, "value")
+    val mk = (s: String) => CouchFixtures.feed(spark, Seq(s))
     ingest.applyBatch(mk(change(1, "p", """{"_id":"p","_rev":"1","a":1,"b":"t"}""")), 0L)
     ingest.publish()
     // new instance over same warehouse dir = restart; later doc carries an
@@ -109,8 +101,7 @@ class StreamIngestSpec extends SparkSpec {
     withConf("spark.sql.files.maxPartitionBytes" -> "256") {
       val wh = tempDir("bucket-wh")
       val ingest = new StreamIngest(spark, WarehouseOptions(database = "bdb"), wh)
-      val mk = (rows: Seq[String]) => ChangeFeed.fromLines(
-        { import spark.implicits._; rows.toDF("value") }, "value")
+      val mk = (rows: Seq[String]) => CouchFixtures.feed(spark, rows)
       // enough ids to populate several buckets
       ingest.applyBatch(mk((1 to 40).map(i =>
         change(i, s"doc$i", s"""{"_id":"doc$i","_rev":"1","v":$i}"""))), 0L)
@@ -149,8 +140,7 @@ class StreamIngestSpec extends SparkSpec {
 
   test("state-backed outbound change feed: tombstones included, resumable") {
     val wh = tempDir("feed-wh")
-    val mk = (rows: Seq[String]) => ChangeFeed.fromLines(
-      { import spark.implicits._; rows.toDF("value") }, "value")
+    val mk = (rows: Seq[String]) => CouchFixtures.feed(spark, rows)
     val ingest = new StreamIngest(spark, WarehouseOptions(database = "feeddb"), wh)
     ingest.applyBatch(mk(Seq(
       change(1, "a", """{"_id":"a","_rev":"1","v":1}"""),
@@ -169,13 +159,11 @@ class StreamIngestSpec extends SparkSpec {
   test("an all-filtered first batch does not poison the state directory") {
     val wh = tempDir("empty-wh")
     val ingest = new StreamIngest(spark, WarehouseOptions(database = "edb"), wh)
-    val empty = ChangeFeed.fromLines(spark.createDataset(Seq.empty[String])(
-      org.apache.spark.sql.Encoders.STRING).toDF("value"), "value")
+    val empty = CouchFixtures.feed(spark, Seq.empty)
     ingest.applyBatch(empty, 0L) // no rows -> no buckets land
     // the warehouse must still accept a real batch afterwards
-    val real = ChangeFeed.fromLines(spark.createDataset(Seq(
-      change(1, "a", """{"_id":"a","_rev":"1-r","name":"Ada","score":1}""")))(
-      org.apache.spark.sql.Encoders.STRING).toDF("value"), "value")
+    val real = CouchFixtures.feed(spark, Seq(
+      change(1, "a", """{"_id":"a","_rev":"1-r","name":"Ada","score":1}""")))
     ingest.applyBatch(real, 1L)
     ingest.publish()
     assert(spark.sql("SELECT COUNT(*) FROM edb").collect()(0).getLong(0) == 1L)
@@ -184,9 +172,8 @@ class StreamIngestSpec extends SparkSpec {
   test("restarting with a different bucket count fails loudly, not silently") {
     val wh = tempDir("buckets-wh")
     val ingest = new StreamIngest(spark, WarehouseOptions(database = "bdb"), wh)
-    val batch = ChangeFeed.fromLines(spark.createDataset(Seq(
-      change(1, "a", """{"_id":"a","_rev":"1-r","name":"Ada","score":1}""")))(
-      org.apache.spark.sql.Encoders.STRING).toDF("value"), "value")
+    val batch = CouchFixtures.feed(spark, Seq(
+      change(1, "a", """{"_id":"a","_rev":"1-r","name":"Ada","score":1}""")))
     ingest.applyBatch(batch, 0L)
     spark.conf.set("graft.state.buckets", "128")
     try {
@@ -201,8 +188,7 @@ class StreamIngestSpec extends SparkSpec {
     spark.sparkContext.hadoopConfiguration.set(
       "fs.tornwrite.impl", classOf[TornWriteFileSystem].getName)
     val wh = "tornwrite://" + tempDir("torn-wh")
-    val mk = (rows: Seq[String]) => ChangeFeed.fromLines(
-      { import spark.implicits._; rows.toDF("value") }, "value")
+    val mk = (rows: Seq[String]) => CouchFixtures.feed(spark, rows)
     val batch = Seq(change(1, "a", """{"_id":"a","_rev":"1","v":1}"""))
     TornWriteFileSystem.armed.set(true)
     // the crash: the first sync dies while writing the type's donor,

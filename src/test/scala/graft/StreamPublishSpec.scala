@@ -1,6 +1,5 @@
 package graft
 
-import graft.model.ChangeFeed
 import graft.streaming.StreamIngest
 import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
@@ -28,8 +27,7 @@ class StreamPublishSpec extends SparkSpec {
   private def typed(seq: Int, id: String, t: String, v: Int): String =
     change(seq, id, s"""{"_id":"$id","_rev":"$seq-r","type":"$t","v":$v}""")
 
-  private def mk(rows: Seq[String]): DataFrame = ChangeFeed.fromLines(
-    { import spark.implicits._; rows.toDF("value") }, "value")
+  private def mk(rows: Seq[String]): DataFrame = CouchFixtures.feed(spark, rows)
 
   private val types = Seq("order", "product", "user")
 

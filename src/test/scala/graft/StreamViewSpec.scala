@@ -1,6 +1,5 @@
 package graft
 
-import graft.model.ChangeFeed
 import graft.ops.{Flatten, Split}
 import graft.streaming.StreamIngest
 import org.apache.hadoop.fs.Path
@@ -34,8 +33,7 @@ class StreamViewSpec extends SparkSpec {
   private def typed(seq: Int, id: String, v: Int): String = change(seq, id,
     s"""{"_id":"$id","_rev":"$seq-r","type":"${Seq("order", "product", "user")(v % 3)}","kind":"k${v % 2}","v":$v}""")
 
-  private def mk(rows: Seq[String]): DataFrame = ChangeFeed.fromLines(
-    { import spark.implicits._; rows.toDF("value") }, "value")
+  private def mk(rows: Seq[String]): DataFrame = CouchFixtures.feed(spark, rows)
 
   private def tempDir(prefix: String): String = Files.createTempDirectory(prefix).toString
 

@@ -101,9 +101,7 @@ class WarehouseE2ESpec extends SparkSpec {
   }
 
   test("repeated ingest merges batches (update/delete across batches)") {
-    import spark.implicits._
-    def batch(rows: String*) =
-      graft.model.ChangeFeed.fromLines(rows.toSeq.toDF("value"), "value")
+    def batch(rows: String*) = CouchFixtures.feed(spark, rows)
     val w = new Warehouse(spark, WarehouseOptions(database = "incdb"))
     w.ingest(batch(
       """{"seq":"1-x","id":"a","changes":[{"rev":"1"}],"doc":{"_id":"a","_rev":"1","v":1}}""",
