@@ -83,53 +83,31 @@ object SchemaDiscovery {
     * (`lib/schema.js:4-14`).
     */
   def discover(docJson: String): DocSchema = {
-    val root = mapper.readTree(docJson)
-    val topScalars = scala.collection.mutable.ArrayBuffer.empty[Leaf]
-    val nested = scala.collection.mutable.ArrayBuffer.empty[Leaf]
-    var idLeaf: Option[Leaf] = None
-    var revLeaf: Option[Leaf] = None
-
-    def walk(node: JsonNode, path: Seq[String], out: scala.collection.mutable.ArrayBuffer[Leaf]): Unit = {
+    val leaves = scala.collection.mutable.ArrayBuffer.empty[Leaf]
+    def walk(node: JsonNode, path: Seq[String]): Unit =
       node.properties().asScala.foreach { e =>
         val (key, v) = (e.getKey, e.getValue)
         val p = path :+ key
-        val name = p.mkString("_")
-        if (v.isNull) {
+        if (path.isEmpty && (key == "_id" || key == "_rev"))
+          leaves += Leaf(p, key.tail, StringType, isArray = false)
+        else if (v.isNull) {
           // null leaf in first doc → dropped from schema (lib/flatten.js:38-42)
-        } else if (v.isObject) {
-          walk(v, p, if (path.isEmpty) nested else out)
-        } else if (v.isArray) {
-          out += Leaf(p, name, StringType, isArray = true)
-        } else {
+        } else if (v.isObject) walk(v, p)
+        else {
+          // an array is typed string: its JSON text (lib/flatten.js:45)
           val dt: DataType =
             if (v.isBoolean) BooleanType
             else if (v.isNumber) DoubleType
             else StringType
-          out += Leaf(p, name, dt, isArray = false)
+          leaves += Leaf(p, p.mkString("_"), dt, isArray = v.isArray)
         }
       }
-    }
-
-    // Top level: separate _id/_rev, scalars, and nested objects so the final
-    // order is [top scalars..., id, rev, flattened nested...] as in the
-    // golden output (test/samplequery.json).
-    root.properties().asScala.foreach { e =>
-      val (key, v) = (e.getKey, e.getValue)
-      key match {
-        case "_id"  => idLeaf = Some(Leaf(Seq("_id"), "id", StringType, isArray = false))
-        case "_rev" => revLeaf = Some(Leaf(Seq("_rev"), "rev", StringType, isArray = false))
-        case _ if v.isNull   => ()
-        case _ if v.isObject => walk(v, Seq(key), nested)
-        case _ if v.isArray  => topScalars += Leaf(Seq(key), key, StringType, isArray = true)
-        case _ =>
-          val dt: DataType =
-            if (v.isBoolean) BooleanType
-            else if (v.isNumber) DoubleType
-            else StringType
-          topScalars += Leaf(Seq(key), key, dt, isArray = false)
-      }
-    }
-    DocSchema((topScalars ++ idLeaf ++ revLeaf ++ nested).toSeq)
+    walk(mapper.readTree(docJson), Nil)
+    // the golden order (test/samplequery.json): [top scalars..., id, rev,
+    // flattened nested...]
+    val (top, nested) = leaves.toSeq.partition(_.path.size == 1)
+    val (scalars, meta) = top.partition(l => l.name == l.path.head)
+    DocSchema(scalars ++ meta.sortBy(_.name) ++ nested)
   }
 
   /** The reference's `typeof`-style logical schema map, for tests

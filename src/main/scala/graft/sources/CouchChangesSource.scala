@@ -173,8 +173,9 @@ final class ChangesReaderFactory(required: StructType, pushed: Array[Filter],
 }
 
 /** Executor-side reader: streams the file line by line, parses change
-  * objects with Jackson, applies pushed filters + the Mango selector, and
-  * emits only the pruned columns.
+  * objects with Jackson, applies pushed filters + the Mango selector,
+  * refuses a live change whose doc's `_id` is not its id ([[checkId]]),
+  * and emits only the pruned columns.
   */
 final class ChangesReader(file: String, required: StructType,
                           pushed: Array[Filter], selector: Option[String])
@@ -193,6 +194,7 @@ final class ChangesReader(file: String, required: StructType,
         val line = if (line0.endsWith(",")) line0.dropRight(1) else line0
         val node = try mapper.readTree(line) catch { case _: Exception => null }
         if (node != null && accept(node)) {
+          checkId(node)
           current = toRow(node)
           return true
         }
@@ -209,6 +211,21 @@ final class ChangesReader(file: String, required: StructType,
       Option(n.get("doc")).exists(d => Mango.evalDoc(s, d))
     }
     selOk && pushed.forall(f => evalFilter(f, n, deleted))
+  }
+
+  /** Refuse a live, non-`_design/` change whose doc carries an `_id` other
+    * than its id. CouchDB never writes one; the tables take their `id` from
+    * the change id and last-writer-wins keys on it, so such a doc would
+    * show under an id it does not carry.
+    */
+  private def checkId(n: JsonNode): Unit = {
+    val id = Option(n.get("id")).map(_.asText).orNull
+    if (id != null && !id.startsWith("_design") && !Option(n.get("deleted")).exists(_.asBoolean(false)))
+      Option(n.get("doc")).flatMap(d => Option(d.get("_id"))).filterNot(_.isNull)
+        .map(v => if (v.isTextual) v.asText else v.toString).filter(_ != id).foreach { docId =>
+          throw new IllegalStateException(s"change '$id' carries a doc whose _id is " +
+            s"'$docId': a change's id must equal its doc's _id")
+        }
   }
 
   private def field(n: JsonNode, attr: String, deleted: Boolean): Any = attr match {

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Driver-side state-file plumbing for [[StreamIngest]]: its versioned
-  * manifest and the small files every start parses, driven through the
+  * manifest, the one small file every start parses, driven through the
   * Hadoop `FileSystem` API so the state lives WHEREVER the data lives —
   * as [[graft.sources.IndexFreshness]] does too.
   *
@@ -40,30 +40,6 @@ private[graft] object StateFs {
       while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
       out.toByteArray
     } finally in.close()
-  }
-
-  /** [[readBytes]] decoded as UTF-8. */
-  def readString(fs: FileSystem, p: Path): String =
-    new String(readBytes(fs, p), "UTF-8")
-
-  /** Overwrite-write a small state file. NOT atomic w.r.t. content on
-    * any filesystem (an overwrite truncates before it writes) — callers
-    * that cannot tolerate a torn file use [[commitString]].
-    */
-  def writeString(fs: FileSystem, p: Path, s: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(s.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Commit a small file whole or not at all: the content goes to a
-    * hidden `.<name>.tmp` sibling, then [[renameInto]] makes it visible
-    * under the absent `p`. For files every start parses, where a torn
-    * [[writeString]] would fail, or silently mislead, every later start.
-    */
-  def commitString(fs: FileSystem, p: Path, s: String): Unit = {
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
-    writeString(fs, tmp, s)
-    renameInto(fs, tmp, p)
   }
 
   /** Rename `src` onto an absent `dst` — the atomic commit op on

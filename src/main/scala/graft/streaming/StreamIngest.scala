@@ -34,7 +34,8 @@ import scala.jdk.CollectionConverters._
   *      (its docType) are computed there, and what the batch touches —
   *      `_bucket`s, highest seq, each docType's first live doc — comes from
   *      those rows, or from ONE aggregation over the cached large batch. A
-  *      docType's first doc is its schema donor if it has none yet;
+  *      docType's first doc is its schema donor if the state has none yet,
+  *      and joins the batch's commit;
   *   2. a small batch whose every seq is above the state's `maxSeq` is
   *      collapsed on the driver into the pending DELTA, which the manifest
   *      commit carries: no state read, no shuffle, no bucket write. Any
@@ -55,20 +56,22 @@ import scala.jdk.CollectionConverters._
   * State layout ([[StreamIngest.ManifestDir]]): data files written once
   * under per-batch directories, each a run of hash buckets sized by scan
   * split, and a versioned manifest naming every live file plus the delta's
-  * rows. Every state read is one parquet scan over the files it names,
-  * listing nothing, with the delta resolved at plan time: the base rows
-  * no delta row hides, plus the delta as a local relation. So a
-  * small sync costs one Spark job and one SQL execution (its collect) and
-  * analyzes no view; [[publish]] after a batch is a no-op: the views stay
-  * current until the next batch.
+  * rows and each docType's schema donor, so one manifest commit is all the
+  * state an instance persists. Every state read is one parquet scan over
+  * the files it names, listing nothing, with the delta resolved at plan
+  * time: the base rows no delta row hides, plus the delta as a local
+  * relation. So a small sync costs one Spark job and one SQL execution
+  * (its collect) and analyzes no view; [[publish]] after a batch is a
+  * no-op: the views stay current until the next batch.
   *
   * A view's `id` is the state's `id` column (the change id, which CouchDB
-  * keeps equal to the doc's `_id`; a change whose doc says otherwise fails
-  * its sync), and its type filter reads the stored `_type`; with
-  * `!deleted`, both are plain columns, so a point read on `id` filters in
-  * the scan and parses only the docs it returns. The manifest records the
-  * bucket count and the split field the `_type`s were computed under; an
-  * instance opened with others fails at construction ([[verifyLayout]]).
+  * keeps equal to the doc's `_id`; the `couch-changes` reader refuses a
+  * change whose doc says otherwise), and its type filter reads the stored
+  * `_type`; with `!deleted`, both are plain columns, so a point read on
+  * `id` filters in the scan and parses only the docs it returns. The
+  * manifest records the bucket count and the split field the `_type`s
+  * were computed under; an instance opened with others fails at
+  * construction ([[verifyLayout]]).
   *
   * At-least-once delivery + idempotent merge (replayed changes collapse in
   * the LWW window) reproduces the reference's REPLACE-by-PK semantics
@@ -76,10 +79,10 @@ import scala.jdk.CollectionConverters._
   *
   * Scale: a small sync is O(batch) — the couchwarehouse model of one
   * upsert per change; a merge is one shuffle and one file per group. The
-  * driver holds the manifest (a line per bucket of each file and a delta
-  * of at most one average bucket, not the table), the frozen schemas —
-  * whose types are the type set — and the seq counter, like the
-  * reference's single node held `theSchema`. All
+  * driver holds the manifest — a line per bucket of each file, a delta of
+  * at most one average bucket (not the table), the seq counter and each
+  * docType's donor, whose types are the type set — like the reference's
+  * single node held `theSchema`. All
   * state plumbing drives the Hadoop `FileSystem` resolved from
   * `warehouseDir`, so the warehouse can live on cluster storage, object
   * stores included ([[StateFs]] has the atomicity boundary).
@@ -92,7 +95,6 @@ final class StreamIngest(
 
   private val fs = new Path(warehouseDir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private val schemaDir = new Path(s"$warehouseDir/_schemas")
 
   /** Number of hash buckets the state table is partitioned into
     * (`graft.state.buckets` session conf, default 64). A batch only ever
@@ -115,19 +117,26 @@ final class StreamIngest(
 
   private val versRoot = new Path(s"$warehouseDir/_state_v")
   private val stateManifest = new StreamIngest.ManifestDir(fs, versRoot)
-  stateManifest.live().foreach(verifyLayout)
+
+  /** The manifest this instance last read or committed (None before any
+    * commit): its donors are the type set and [[discoveredSchemas]].
+    */
+  @volatile private var last: Option[ManifestVersion] = None
+
+  /** The live manifest, read now and kept as [[last]]. */
+  private def live(): Option[ManifestVersion] = { last = stateManifest.live(); last }
+
+  live().foreach(verifyLayout)
 
   /** The state before its first commit, under this instance's layout. */
-  private val noState = ManifestVersion(-1L, -1L, stateBuckets, opts.split, Nil, Nil)
+  private val noState = ManifestVersion(-1L, -1L, stateBuckets, opts.split, Nil, Nil, Map.empty)
 
-  /** Frozen per-docType schemas — the type set — persisted as the donor
-    * document JSON so a restarted stream keeps first-doc-wins semantics
-    * (§1.4) and every type's view.
+  /** Each docType's frozen schema, parsed from its donor in [[last]]: a
+    * restarted stream keeps first-doc-wins semantics (§1.4) and every
+    * type's view.
     */
-  private val schemas = scala.collection.mutable.LinkedHashMap.empty[String, DocSchema]
-  loadSchemas()
-
-  def discoveredSchemas: Map[String, DocSchema] = schemas.toMap
+  def discoveredSchemas: Map[String, DocSchema] =
+    last.fold(Map.empty[String, String])(_.donors).view.mapValues(SchemaDiscovery.discover).toMap
 
   /** Tail a directory of spool-chunk files through the DSv2 couch-changes
     * MicroBatchStream (one micro-batch per new chunk; Mango selector and
@@ -152,7 +161,7 @@ final class StreamIngest(
     *     never read the old row, and BOTH versions would survive as silent
     *     duplicates;
     *   - another split field would show rows under the docTypes of the
-    *     stored `_type` column, which the `_schemas/` registry also names.
+    *     stored `_type` column, which the manifest's donors also name.
     */
   private def verifyLayout(m: ManifestVersion): Unit = {
     if (m.buckets != stateBuckets)
@@ -164,7 +173,7 @@ final class StreamIngest(
     if (m.split != opts.split)
       throw new IllegalStateException(s"state under $versRoot was typed with " +
         s"${field(m.split)}, but this instance has ${field(opts.split)}: its stored _type " +
-        "column and _schemas/ registry name the docTypes of the former. Reopen with " +
+        "column and schema donors name the docTypes of the former. Reopen with " +
         s"${field(m.split)} or rebuild the warehouse from its feed (CLI --reset).")
   }
 
@@ -179,71 +188,52 @@ final class StreamIngest(
   /** One micro-batch application; also callable directly for batch replay
     * tests. A replay of the last applied batch is skipped ([[replayed]]).
     *
-    * The batch is read as ONE select — the state columns, `_type` and
-    * `_bucket` computed once here, and each live doc's `_id` for
-    * [[checkIds]] (its id where it has none; null on the other rows) —
-    * plus a limit. The batch's donors of types without one are frozen
-    * first. A small batch above the state's `maxSeq` joins the pending
-    * delta ([[withDelta]]); any other batch takes the bucketed [[merge]].
-    * The views are then published over the manifest just committed, with
-    * no second read of it.
+    * The batch is read as ONE select — the state columns, `_type`,
+    * `_bucket` and whether the row is a live doc ([[Compact.liveDoc]])
+    * computed once here — plus a limit. A small batch above the state's
+    * `maxSeq` joins the pending delta ([[withDelta]]); any other batch
+    * takes the bucketed [[merge]]. Either commit carries the batch's donors
+    * of the types the state has none for, so every type of a committed
+    * state has its donor and a batch that fails before its commit leaves
+    * none. The views are then published over the manifest just committed,
+    * with no second read of it.
     */
   def applyBatch(batch0: DataFrame, batchId: Long): Unit = {
     published = None
     val batch = opts.transform(batch0).select(col("id"), col("seqNum"), col("deleted"),
-      col("doc"), liveType.as("_type"), bucketCol.as("_bucket"),
-      when(Compact.liveDoc, coalesce(get_json_object(col("doc"), "$._id"), col("id"))).as("_docId"))
+      col("doc"), liveType.as("_type"), bucketCol.as("_bucket"), Compact.liveDoc.as("_live"))
     val head = batch.limit(StreamIngest.SmallBatchRows + 1).collect().toSeq
     val small = Option.when(head.size <= StreamIngest.SmallBatchRows)(head)
-    small.foreach(rows => checkIds(rows.collectFirst {
-      case r if !r.isNullAt(6) && r.getString(6) != r.getString(0) => (r.getString(0), r.getString(6))
-    }))
     lazy val input = small.fold(batch.cache())(rows =>
       StreamIngest.frame(spark, rows.map(r => Row.fromSeq(r.toSeq.init))))
     try {
       val meta = small.fold(batchMeta(input))(BatchMeta.of)
-      val live = stateManifest.live()
-      val skip = replayed(batchId, meta.maxSeq, live)
-      // frozen before the commit: every type of a committed state has its donor
-      meta.donors.foreach { case (t, d) =>
-        if (!schemas.contains(t)) schemas(t) = SchemaDiscovery.discover(persistSchema(t, d))
-      }
-      val now = if (skip) live else {
-        val m = live.getOrElse(noState)
-        val maxSeq = (m.maxSeq +: meta.maxSeq.toSeq).max
+      val state = live()
+      val now = if (replayed(batchId, meta.maxSeq, state)) state else {
+        val m = state.getOrElse(noState)
+        val next = m.copy(batchId = batchId, maxSeq = (m.maxSeq +: meta.maxSeq.toSeq).max,
+          donors = meta.donors ++ m.donors)
         stateManifest.sweepUnreferenced(m.files)
         Some(small.flatMap(withDelta(m, _)) match {
-          case Some(delta) => stateManifest.commit(m.copy(batchId = batchId, maxSeq = maxSeq, delta = delta))
-          case None        => merge(m, input, meta, batchId, maxSeq)
+          case Some(delta) => stateManifest.commit(next.copy(delta = delta))
+          case None        => merge(next, input, meta)
         })
       }
+      last = now
       publishWith(now)
     } finally if (small.isEmpty) input.unpersist()
-  }
-
-  /** Fail the sync on a live change whose doc's `_id` is not its id,
-    * given as (id, `_id`). CouchDB never writes one; the views take
-    * their `id` from the change id and last-writer-wins keys on it, so
-    * such a doc would show under an id it does not carry.
-    */
-  private def checkIds(mismatch: Option[(String, String)]): Unit = mismatch.foreach {
-    case (id, docId) => throw new IllegalStateException(s"change '$id' carries a doc whose " +
-      s"_id is '$docId': a change's id must equal its doc's _id")
   }
 
   /** What a large micro-batch touches, read in ONE aggregation over the
     * cached batch (which is also the job that fills the cache), grouped by
     * the docType of its live rows: its `_bucket`s, its highest seq, each
-    * docType's first live doc ([[Compact.donor]]) and its chars; a live
-    * change whose doc's `_id` differs from its id fails it ([[checkIds]]).
+    * docType's first live doc ([[Compact.donor]]) and its chars.
     */
   private def batchMeta(batch: DataFrame): BatchMeta = {
-    val rs = batch.groupBy(when(col("_docId").isNotNull, coalesce(col("_type"), lit(Split.DefaultType))))
+    val rs = batch.groupBy(when(col("_live"), coalesce(col("_type"), lit(Split.DefaultType))))
       .agg(collect_set(col("_bucket")), max(col("seqNum")), min(Compact.donor),
-        sum(length(concat_ws("", col("id"), col("doc")))),
-        max(when(col("_docId") =!= col("id"), struct(col("id"), col("_docId"))))).collect().toSeq
+        sum(length(concat_ws("", col("id"), col("doc"))))).collect().toSeq
     def longs(i: Int) = rs.flatMap(r => Option(r.get(i))).map(_.asInstanceOf[Long])
-    checkIds(rs.flatMap(r => Option(r.getStruct(5))).headOption.map(m => (m.getString(0), m.getString(1))))
     BatchMeta(rs.flatMap(_.getSeq[Int](1)).toSet, longs(2).maxOption,
       rs.collect { case r if !r.isNullAt(0) && !r.isNullAt(3) => r.getString(0) -> r.getStruct(3).getString(1) }.toMap,
       longs(4).sum)
@@ -263,12 +253,14 @@ final class StreamIngest(
       Compact.latestByType(m.delta ++ rows.flatMap(DeltaRow.of))
     }.filter(StreamIngest.deltaFits(m, _))
 
-  /** The bucketed merge of `input` into the state of `m`, folding its
-    * delta in, written ONCE under a fresh per-batch directory and committed
-    * with no delta. It reads every live file naming a bucket that `input`
-    * or the delta touch and rewrites the union of their buckets as G
-    * groups of consecutive buckets, G = estimated bytes over one scan split
-    * (`spark.sql.files.maxPartitionBytes`), between 1 and one per bucket.
+  /** The bucketed merge of `input` into the state of `m` — the manifest
+    * to commit, still naming the files and delta before the batch —
+    * folding its delta in, written ONCE under a fresh per-batch directory
+    * and committed with no delta. It reads every live file naming a bucket
+    * that `input` or the delta touch and rewrites the union of their
+    * buckets as G groups of consecutive buckets, G = estimated bytes over
+    * one scan split (`spark.sql.files.maxPartitionBytes`), between 1 and
+    * one per bucket.
     * ONE exchange on the group serves both [[Compact.byType]]'s windows and
     * the write: each group is one task's one file, holding the survivors
     * and each id's latest tombstone. Every row it writes carries its
@@ -276,8 +268,7 @@ final class StreamIngest(
     * other files' lines carry forward. A crash before the commit leaves an
     * orphan directory, swept on the next attempt.
     */
-  private def merge(m: ManifestVersion, input: DataFrame, meta: BatchMeta,
-                    batchId: Long, maxSeq: Long): ManifestVersion = {
+  private def merge(m: ManifestVersion, input: DataFrame, meta: BatchMeta): ManifestVersion = {
     val touched = meta.buckets ++ m.delta.map(_.bucket)
     val readRels = m.files.filter(f => touched(f.bucket)).map(_.rel).toSet
     val (read, kept) = m.files.partition(f => readRels(f.rel))
@@ -292,7 +283,7 @@ final class StreamIngest(
     // a null id has no bucket, and no row of it is kept
     val grouped = parts.reduce(_ unionByName _).where(col("id").isNotNull).withColumn("_group",
       typedLit(Seq.tabulate(stateBuckets)(groupOf.getOrElse(_, 0))).getItem(col("_bucket")))
-    val dirName = s"b$batchId-${System.nanoTime()}"
+    val dirName = s"b${m.batchId}-${System.nanoTime()}"
     Compact.byType(grouped.repartitionById(g, col("_group")),
         coalesce(col("_type"), lit(Split.DefaultType)), col("_group"))
       .where(col("live") || Compact.tombstone)
@@ -300,8 +291,7 @@ final class StreamIngest(
       .write.mode("overwrite").option(StreamIngest.SuccessMarker, "false")
       .parquet(stateManifest.dataPath(dirName).toString)
     val groups = (0 until g).map(k => buckets.filter(groupOf(_) == k))
-    stateManifest.commit(m.copy(batchId = batchId, maxSeq = maxSeq,
-      files = kept ++ stateManifest.landed(dirName, groups), delta = Nil))
+    stateManifest.commit(m.copy(files = kept ++ stateManifest.landed(dirName, groups), delta = Nil))
   }
 
   /** The warehouse's OWN outbound change feed from persisted state — the
@@ -312,7 +302,7 @@ final class StreamIngest(
     * token = `max(seqNum)` consumed ([[checkpoint]] for all).
     */
   def changesSince(since: Long): DataFrame =
-    Compact.latestChanges(state(stateManifest.live())
+    Compact.latestChanges(state(live())
       .getOrElse(throw new IllegalStateException(
         "changesSince before any ingested state")))
       .where(col("seqNum") > since)
@@ -395,15 +385,15 @@ final class StreamIngest(
     */
   @volatile private var published: Option[Map[String, AnyRef]] = None
 
-  /** Each view's analyzed plan, built once per docType — its schema is
+  /** Each view's analyzed plan, built once per docType — its donor is
     * frozen — and re-pointed at each commit's state by [[rebind]]; no sync
-    * analyzes a view.
+    * analyzes a view. None for a donor of no columns, which has no view.
     */
-  private val viewPlans = scala.collection.mutable.Map.empty[String, LogicalPlan]
+  private val viewPlans = scala.collection.mutable.Map.empty[String, Option[LogicalPlan]]
 
-  /** Re-register the flattened view of each type with a donor
-    * ([[schemas]], the persisted `_schemas/` registry) over its live rows:
-    * a type whose last doc is deleted keeps its (now empty) view.
+  /** Re-register the flattened view of each type with a donor in the live
+    * manifest (another writer's commit may have brought new ones) over its
+    * live rows: a type whose last doc is deleted keeps its (now empty) view.
     *
     * A no-op (no job, no listing) when the views are current: every
     * [[applyBatch]] publishes before it returns, and this instance is the
@@ -414,7 +404,7 @@ final class StreamIngest(
   def publish(): Unit =
     if (!published.exists(_.forall { case (name, entry) =>
           GraftSqlBridge.tempView(spark, name).exists(_ eq entry) }))
-      publishWith(stateManifest.live())
+      publishWith(live())
 
   /** Each view is its type's analyzed plan ([[viewPlans]]) with `m`'s file
     * relation, delta rows and hidden ids put in, stored in the session
@@ -423,15 +413,20 @@ final class StreamIngest(
   private def publishWith(m: Option[ManifestVersion]): Unit = {
     val views = m.filter(_.files.nonEmpty).toSeq.flatMap { v =>
       val rel = relation(v.files)
-      schemas.toSeq.sortBy(_._1).collect { case (t, schema) if schema.leaves.nonEmpty =>
+      v.donors.toSeq.sortBy(_._1).flatMap { case (t, donor) =>
         val stored = opts.split.map(_ => t)
         val plan = viewPlans.getOrElseUpdate(t, {
-          val live = state(Some(v)).get.where(!col("deleted"))
-          Flatten(stored.fold(live)(s => live.where(col("_type") === s)), schema,
-            idCol = Some("id")).queryExecution.analyzed
+          val schema = SchemaDiscovery.discover(donor)
+          Option.when(schema.leaves.nonEmpty) {
+            val live = state(Some(v)).get.where(!col("deleted"))
+            Flatten(stored.fold(live)(s => live.where(col("_type") === s)), schema,
+              idCol = Some("id")).queryExecution.analyzed
+          }
         })
-        val name = Split.tableName(opts.database, stored)
-        name -> GraftSqlBridge.replaceTempView(spark, name, rebind(plan, v, rel, hidden(v, stored)))
+        plan.map { plan =>
+          val name = Split.tableName(opts.database, stored)
+          name -> GraftSqlBridge.replaceTempView(spark, name, rebind(plan, v, rel, hidden(v, stored)))
+        }
       }
     }
     published = Some(views.toMap)
@@ -451,31 +446,10 @@ final class StreamIngest(
     }.transformAllExpressions { case in: In => in.copy(list = ids) }
   }
 
-  /** The persisted donor of `docType`: one already there (another
-    * instance's) is kept, else `donorDoc` is committed whole
-    * ([[StateFs.commitString]]) — every start parses it, and a torn donor
-    * would load as a schema of no columns (its view never published) or
-    * fail every start.
-    */
-  private def persistSchema(docType: String, donorDoc: String): String = {
-    val donor = new Path(schemaDir, s"$docType.json")
-    if (fs.exists(donor)) StateFs.readString(fs, donor)
-    else { StateFs.commitString(fs, donor, donorDoc); donorDoc }
-  }
-
-  /** The persisted donors, skipping the hidden staging names of a
-    * [[persistSchema]] a crash cut short.
-    */
-  private def loadSchemas(): Unit =
-    StateFs.listNames(fs, schemaDir).filterNot(_.startsWith(".")).foreach { n =>
-      schemas(n.stripSuffix(".json")) = SchemaDiscovery.discover(
-        StateFs.readString(fs, new Path(schemaDir, n)))
-    }
-
   /** The highest seq the state has absorbed (A13), 0 before any: the live
     * manifest's `maxSeq`, committed atomically with the state.
     */
-  def checkpoint: Long = stateManifest.live().fold(0L)(m => math.max(0L, m.maxSeq))
+  def checkpoint: Long = live().fold(0L)(m => math.max(0L, m.maxSeq))
 
 }
 
@@ -537,13 +511,13 @@ object StreamIngest {
                                      donors: Map[String, String], bytes: Long)
 
   private object BatchMeta {
-    /** The meta of a collected batch: rows of `StateSchema` (and the live
-      * doc's `_id`), as `batchMeta` aggregates it.
+    /** The meta of a collected batch: rows of `StateSchema` (and whether
+      * each is a live doc), as `batchMeta` aggregates it.
       */
     def of(rows: Seq[Row]): BatchMeta = BatchMeta(
       rows.filterNot(_.isNullAt(5)).map(_.getInt(5)).toSet,
       rows.filterNot(_.isNullAt(1)).map(_.getLong(1)).maxOption,
-      Compact.firstDocs(rows.filterNot(_.isNullAt(6)).map(r => (Option(r.getString(4))
+      Compact.firstDocs(rows.filter(_.get(6) == true).map(r => (Option(r.getString(4))
         .getOrElse(Split.DefaultType), Option.when(!r.isNullAt(1))(r.getLong(1)), r.getString(3)))),
       rows.map(r => chars(r.getString(0), r.getString(3))).sum)
   }
@@ -583,24 +557,28 @@ object StreamIngest {
   /** A committed manifest: its version (the last applied batchId), the
     * highest seq the state has absorbed (-1 before any), the bucket count
     * its rows were hashed with, the split field its `_type`s were computed
-    * under, the live files and the pending delta.
+    * under, the live files, the pending delta and each docType's schema
+    * donor (its first live doc's JSON), whose types are the type set.
     */
   private[graft] final case class ManifestVersion(batchId: Long, maxSeq: Long, buckets: Int,
                                                   split: Option[String],
-                                                  files: Seq[StateFile], delta: Seq[DeltaRow])
+                                                  files: Seq[StateFile], delta: Seq[DeltaRow],
+                                                  donors: Map[String, String])
 
   /** The layout of the state, safe on object stores ([[StateFs]]'s
     * atomicity boundary): each merge writes ONCE, never moved, one
     * `<root>/b<batchId>-<nanos>/part-NNNNN-*` file per group of buckets,
-    * and a versioned MANIFEST — a `maxSeq⇥N⇥buckets⇥split` header (the
-    * bucket count the rows were hashed with, the split field the `_type`s
-    * were computed under), one `bucket⇥path⇥length⇥rows` line per bucket
-    * of each live file, one `delta⇥bucket⇥seq⇥deleted⇥id⇥doc⇥type` line
-    * per pending delta row (strings escaped) — is the file index and the
-    * delta, and the one state file besides the data. The commit is the
-    * manifest landing via [[StateFs.writeVersioned]]: a dst-absent rename
-    * of ONE SMALL FILE, atomic on HDFS/POSIX and a single-object copy-PUT
-    * on S3A/GCS; no DIRECTORY is ever renamed. The manifest's version IS
+    * and a versioned MANIFEST — a `maxSeq⇥N⇥buckets⇥split⇥donors` header
+    * (the bucket count the rows were hashed with, the split field the
+    * `_type`s were computed under, the number of donor lines), one
+    * `bucket⇥path⇥length⇥rows` line per bucket of each live file, one
+    * `delta⇥bucket⇥seq⇥deleted⇥id⇥doc⇥type` line per pending delta row,
+    * one `donor⇥type⇥doc` line per docType (strings escaped) — is the file
+    * index, the delta and the type set, and the one state file besides the
+    * data. The commit is the manifest landing via
+    * [[StateFs.writeVersioned]]: a dst-absent rename of ONE SMALL FILE,
+    * atomic on HDFS/POSIX and a single-object copy-PUT on S3A/GCS; no
+    * DIRECTORY is ever renamed. The manifest's version IS
     * the exactly-once batch marker; a crash before the commit leaves only
     * an unreferenced data directory, swept by [[sweepUnreferenced]] at the
     * next write (single writer).
@@ -610,6 +588,7 @@ object StreamIngest {
     private val Suffix = ".tsv"
     private val Header = "maxSeq"
     private val Delta = "delta"
+    private val Donor = "donor"
 
     /** The live manifest. Any other form — each earlier format of this
       * layout included — fails loudly with the manifest named, rather than
@@ -620,32 +599,39 @@ object StreamIngest {
         val lines = new String(bytes, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
         def unreadable(line: String) = new IllegalStateException(
           s"state manifest ${new Path(root, s"$Prefix-$id$Suffix")} holds " +
-            s"'$line', not a $Header header with a bucket count and file or " +
-            "delta entries of the current format: an earlier state layout " +
-            "that is no longer read. Rebuild the warehouse from its feed " +
-            "(CLI --reset).")
-        val (maxSeq, buckets, split) = lines.headOption.map(_.split("\t", -1)) match {
-          case Some(Array(Header, n, b, f)) if n.toLongOption.nonEmpty && b.toIntOption.exists(_ > 0) =>
-            (n.toLong, b.toInt, Option(unescape(f)))
-          case _ => throw unreadable(lines.headOption.getOrElse(""))
+            s"'$line', not a $Header header with a bucket count and a donor " +
+            "count, and file, delta or donor entries of the current format: an " +
+            "earlier state layout that is no longer read. Rebuild the warehouse " +
+            "from its feed (CLI --reset).")
+        val header = lines.headOption.getOrElse("")
+        val (maxSeq, buckets, split, types) = header.split("\t", -1) match {
+          case Array(Header, n, b, f, d) if n.toLongOption.nonEmpty &&
+              b.toIntOption.exists(_ > 0) && d.toIntOption.nonEmpty =>
+            (n.toLong, b.toInt, Option(unescape(f)), d.toInt)
+          case _ => throw unreadable(header)
         }
-        val entries = lines.tail.map { line =>
+        val files = Seq.newBuilder[StateFile]
+        val delta = Seq.newBuilder[DeltaRow]
+        val donors = Map.newBuilder[String, String]
+        lines.tail.foreach { line =>
           line.split("\t", -1) match {
             case Array(b, rel, len, rows) if b.toIntOption.nonEmpty &&
                 len.toLongOption.nonEmpty && rows.toLongOption.nonEmpty =>
-              Left(StateFile(b.toInt, rel, len.toLong, rows.toLong))
+              files += StateFile(b.toInt, rel, len.toLong, rows.toLong)
             case Array(Delta, b, seq, del, i, doc, t) if b.toIntOption.nonEmpty &&
                 seq.toLongOption.nonEmpty && del.toBooleanOption.nonEmpty =>
-              Right(DeltaRow(unescape(i), seq.toLong, del.toBoolean, unescape(doc), unescape(t), b.toInt))
+              delta += DeltaRow(unescape(i), seq.toLong, del.toBoolean, unescape(doc), unescape(t), b.toInt)
+            case Array(Donor, t, doc) => donors += unescape(t) -> unescape(doc)
             case _ => throw unreadable(line)
           }
         }
-        ManifestVersion(id, maxSeq, buckets, split, entries.collect { case Left(f) => f },
-          entries.collect { case Right(d) => d })
+        val m = ManifestVersion(id, maxSeq, buckets, split, files.result(), delta.result(), donors.result())
+        if (m.donors.size != types) throw unreadable(header)
+        m
       }
 
-    /** A field of a delta line: `\`, tab and newline backslash-escaped,
-      * null as `\N`.
+    /** A field of a delta or donor line: `\`, tab and newline
+      * backslash-escaped, null as `\N`.
       */
     private def escape(s: String): String =
       if (s == null) "\\N"
@@ -700,7 +686,8 @@ object StreamIngest {
       * as readers see it.
       */
     def commit(m: ManifestVersion): ManifestVersion = {
-      val text = new StringBuilder(s"$Header\t${m.maxSeq}\t${m.buckets}\t${escape(m.split.orNull)}\n")
+      val text = new StringBuilder(
+        s"$Header\t${m.maxSeq}\t${m.buckets}\t${escape(m.split.orNull)}\t${m.donors.size}\n")
       m.files.sortBy(f => (f.rel, f.bucket)).foreach { f =>
         require(!f.rel.contains('\t') && !f.rel.contains('\n'),
           s"manifest path contains a tab/newline: ${f.rel}")
@@ -710,6 +697,7 @@ object StreamIngest {
         text ++= s"$Delta\t${d.bucket}\t${d.seqNum}\t${d.deleted}\t${escape(d.id)}\t" +
           s"${escape(d.doc)}\t${escape(d.docType)}\n"
       }
+      m.donors.toSeq.sorted.foreach { case (t, doc) => text ++= s"$Donor\t${escape(t)}\t${escape(doc)}\n" }
       StateFs.writeVersioned(fs, root, Prefix, Suffix, m.batchId, text.toString.getBytes("UTF-8"))
       m
     }

@@ -178,7 +178,8 @@ object CouchWarehouseCli {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel(if (opts.contains("verbose")) "INFO" else "ERROR")
+    // a borrowed session keeps its caller's log level
+    if (!preexisting) spark.sparkContext.setLogLevel(if (opts.contains("verbose")) "INFO" else "ERROR")
 
     val wopts = WarehouseOptions(
       database = database,

@@ -13,7 +13,8 @@ import scala.util.Random
   * on a state of 4 buckets, so its small batches land as a delta and fold;
   * a replayed older seq sends a batch down the bucketed merge; a restart
   * between batches is a fresh instance over the same directory and an
-  * empty set of views. Every feed is built in-process.
+  * empty set of views. A feed with a change whose doc `_id` is not its id
+  * fails both. Every feed is built in-process.
   */
 class BatchMonitorParitySpec extends SparkSpec {
 
@@ -144,5 +145,33 @@ class BatchMonitorParitySpec extends SparkSpec {
         assertParity(feed, cuts, restart, s"seed $seed")
       }
     }
+  }
+
+  test("a doc whose _id is not its change id fails both paths, naming both ids") {
+    // the couch-changes reader refuses it in a task: its message is in the
+    // cause chain
+    def refusal(body: => Any): String = {
+      val e = intercept[Exception](body)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case i: IllegalStateException => i.getMessage }.getOrElse(fail(e))
+    }
+    val forged = change(3, "b", """{"_id":"other","_rev":"3-r","type":"y","v":3}""")
+    val lines = Seq(doc(1, "a", "x", "u" -> "1"), doc(2, "b", "y", "v" -> "2"), forged)
+    val batch = refusal(new Warehouse(spark, WarehouseOptions(database = "pbforged", split = split))
+      .ingest(mk(lines)))
+
+    val wh = Files.createTempDirectory("parity-forged-wh").toString
+    val ingest = withConf("graft.state.buckets" -> "4")(
+      new StreamIngest(spark, WarehouseOptions(database = "pmforged", split = split), wh))
+    ingest.applyBatch(mk(lines.take(2)), 0L)
+    val manifest = new StreamIngest.ManifestDir(
+      new org.apache.hadoop.fs.Path(wh).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new org.apache.hadoop.fs.Path(s"$wh/_state_v"))
+    val before = manifest.live()
+    val monitor = refusal(ingest.applyBatch(mk(lines.drop(2)), 1L))
+    for (m <- Seq(batch, monitor)) assert(m.contains("'b'") && m.contains("'other'"), m)
+    assert(manifest.live() == before, "a refused batch must not commit")
+    dropViews("pbforged")
+    dropViews("pmforged")
   }
 }

@@ -23,12 +23,11 @@ class CliSpec extends SparkSpec {
     try {
       spark // init the shared session first so the CLI reuses (and keeps) it
       val out = new java.io.ByteArrayOutputStream()
-      Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+      keepsLogLevel(Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
         CouchWarehouseCli.main(Array(
           "--url", couch.url, "--database", "sampledata",
           "--spool-dir", spool, "--es-url", es.url, "--verbose"))
-      }
-      spark.sparkContext.setLogLevel("ERROR") // undo the CLI's --verbose INFO
+      })
       print(out.toString("UTF-8")) // pass the captured CLI output through
       assert(out.toString("UTF-8").linesIterator.exists(
         _.matches("""spooled \d+ changes \(.*\) seq=.*""")),
@@ -110,18 +109,28 @@ class CliSpec extends SparkSpec {
     }
   }
 
+  /** `body`, a CLI call on the shared session, asserted to leave the root
+    * log level as it found it: the session is borrowed.
+    */
+  private def keepsLogLevel[T](body: => T): T = {
+    val level = org.apache.logging.log4j.LogManager.getRootLogger.getLevel
+    val result = body
+    assert(org.apache.logging.log4j.LogManager.getRootLogger.getLevel == level,
+      "the CLI changed the log level of a session it did not build")
+    result
+  }
+
   /** `args` run through the CLI: its exit status and what it printed to
     * stdout and stderr.
     */
   private def cli(args: String*): (Int, String, String) = {
     spark // init the shared session first so the CLI reuses (and keeps) it
     val out, err = new java.io.ByteArrayOutputStream()
-    val status = Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+    val status = keepsLogLevel(Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
       Console.withErr(new java.io.PrintStream(err, true, "UTF-8")) {
         CouchWarehouseCli.run(args.toArray)
       }
-    }
-    spark.sparkContext.setLogLevel("WARN") // undo the CLI's ERROR level
+    })
     (status, out.toString("UTF-8"), err.toString("UTF-8"))
   }
 

@@ -4,7 +4,8 @@ import graft.streaming.{StateFs, StreamIngest}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** The state's manifest commit path: the whole bucketed ingest running
   * on a filesystem whose DIRECTORY renames fail ([[NoRenameFileSystem]] —
@@ -69,7 +70,8 @@ class ManifestProtocolSpec extends SparkSpec {
     // simulate a crashed attempt: a data dir no manifest references
     val orphan = new Path(versRoot, "b9-0")
     fs.mkdirs(new Path(orphan, "_bucket=0"))
-    StateFs.writeString(fs, new Path(orphan, "_bucket=0/junk"), "torn write")
+    val junk = fs.create(new Path(orphan, "_bucket=0/junk"), true)
+    try junk.write("torn write".getBytes("UTF-8")) finally junk.close()
     // readers are unaffected (the manifest never named it) …
     val restarted = new StreamIngest(spark, WarehouseOptions(database = "cwdb"), wh)
     restarted.publish()
@@ -183,6 +185,28 @@ class ManifestProtocolSpec extends SparkSpec {
       assert(e.getMessage.contains("manifest-0.tsv") && e.getMessage.contains("--reset"),
         e.getMessage)
     }
+  }
+
+  test("a header with no donor count fails at construction, touching nothing") {
+    val wh = Files.createTempDirectory("donorless-wh").toString
+    val versRoot = new java.io.File(s"$wh/_state_v")
+    assert(versRoot.mkdirs())
+    // the `maxSeq⇥N⇥buckets⇥split` header of the format before the donors
+    // joined the manifest, and one file line
+    Files.write(versRoot.toPath.resolve("manifest-0.tsv"),
+      "maxSeq\t4\t64\t\\N\n3\tb0-1/part-00000-x.parquet\t9\t4\n".getBytes("UTF-8"))
+    def snapshot() = {
+      val paths = Files.walk(Paths.get(wh))
+      try paths.iterator().asScala.toSeq.map(p =>
+        p.toString -> (if (Files.isRegularFile(p)) Files.readAllBytes(p).toSeq else Nil)).sortBy(_._1)
+      finally paths.close()
+    }
+    val before = snapshot()
+    val e = intercept[IllegalStateException] {
+      new StreamIngest(spark, WarehouseOptions(database = "dldb"), wh)
+    }
+    assert(e.getMessage.contains("manifest-0.tsv") && e.getMessage.contains("--reset"), e.getMessage)
+    assert(snapshot() == before, "a refused manifest must leave the directory as it was")
   }
 
   test("a replayed committed batch never re-commits the manifest (r13 review)") {

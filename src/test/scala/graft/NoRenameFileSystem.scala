@@ -45,11 +45,11 @@ class NoRenameFileSystem extends LocalFileSystemAs("norename") {
 }
 
 /** A local filesystem that, once armed, tears the next `create` of a file
-  * under a `_schemas` directory — a schema donor, or its staging name: the
-  * file is created (an overwrite truncates it) and the write then fails
-  * before a byte lands — a crash in the middle of a small-file write.
-  * Arming is one-shot, so the restart after the simulated crash writes
-  * normally.
+  * directly under a `_state_v` directory — the state manifest's hidden
+  * staging name (data files land in subdirectories): the file is created
+  * (an overwrite truncates it) and the write then fails before a byte
+  * lands — a crash in the middle of the commit's small-file write. Arming
+  * is one-shot, so the restart after the simulated crash writes normally.
   */
 class TornWriteFileSystem extends LocalFileSystemAs("tornwrite") {
 
@@ -58,7 +58,7 @@ class TornWriteFileSystem extends LocalFileSystemAs("tornwrite") {
                       replication: Short, blockSize: Long,
                       progress: Progressable): FSDataOutputStream = {
     val out = super.create(f, overwrite, bufferSize, replication, blockSize, progress)
-    if (f.getParent.getName == "_schemas" && TornWriteFileSystem.armed.getAndSet(false)) {
+    if (f.getParent.getName == "_state_v" && TornWriteFileSystem.armed.getAndSet(false)) {
       out.close()
       throw new java.io.IOException(s"torn write (crash simulation): $f")
     }

@@ -82,13 +82,12 @@ class StateFsSpec extends SparkSpec {
     assert(e.getMessage.contains("a") && e.getMessage.contains("b"))
   }
 
-  test("readString reads to EOF; writeString overwrites") {
-    val dir = freshDir("statefs-str")
+  test("readBytes reads to EOF") {
+    val dir = freshDir("statefs-bytes")
     val p = new Path(dir, "s")
-    val big = "x" * 100000 // larger than any single read() return
-    StateFs.writeString(fs, p, big)
-    assert(StateFs.readString(fs, p) == big)
-    StateFs.writeString(fs, p, "short")
-    assert(StateFs.readString(fs, p) == "short")
+    val big = Array.tabulate[Byte](100000)(_.toByte) // larger than any single read() return
+    val out = fs.create(p, true)
+    try out.write(big) finally out.close()
+    assert(StateFs.readBytes(fs, p).sameElements(big))
   }
 }

@@ -184,27 +184,57 @@ class StreamIngestSpec extends SparkSpec {
     } finally spark.conf.unset("graft.state.buckets")
   }
 
-  test("a torn schema donor write does not hide the type's view after a restart") {
+  test("a torn manifest write is recovered by a restart, with the first doc's schema") {
     spark.sparkContext.hadoopConfiguration.set(
       "fs.tornwrite.impl", classOf[TornWriteFileSystem].getName)
     val wh = "tornwrite://" + tempDir("torn-wh")
     val mk = (rows: Seq[String]) => CouchFixtures.feed(spark, rows)
-    val batch = Seq(change(1, "a", """{"_id":"a","_rev":"1","v":1}"""))
+    val batch = Seq(change(1, "a", """{"_id":"a","_rev":"1","v":1}"""),
+      change(2, "b", """{"_id":"b","_rev":"1","v":2,"w":3}"""))
     TornWriteFileSystem.armed.set(true)
-    // the crash: the first sync dies while writing the type's donor,
-    // before its state commit
+    // the crash: the first sync dies while staging its manifest, after
+    // its data write and before its commit
     intercept[java.io.IOException] {
       new StreamIngest(spark, WarehouseOptions(database = "torndb"), wh)
         .applyBatch(mk(batch), 0L)
     }
-    assert(!TornWriteFileSystem.armed.get, "the donor write was never attempted")
+    assert(!TornWriteFileSystem.armed.get, "the manifest write was never attempted")
     // the restart constructs, applies the re-delivered batch and publishes
     // the view
     val restarted = new StreamIngest(spark, WarehouseOptions(database = "torndb"), wh)
+    assert(restarted.checkpoint == 0L && restarted.discoveredSchemas.isEmpty)
     restarted.applyBatch(mk(batch), 0L)
     restarted.publish()
-    assert(spark.sql("SELECT COUNT(*) FROM torndb").collect()(0).getLong(0) == 1L)
-    assert(restarted.discoveredSchemas.values.forall(_.leaves.nonEmpty))
+    assert(spark.sql("SELECT COUNT(*) FROM torndb").collect()(0).getLong(0) == 2L)
+    assert(spark.table("torndb").columns.toSeq == Seq("v", "id", "rev"))
+    assert(restarted.discoveredSchemas.keySet == Set("_default"))
+  }
+
+  test("a warehouse synced through start holds only _state_v and _spark_checkpoint") {
+    val input = tempDir("only-in")
+    val wh = tempDir("only-wh")
+    val ingest = new StreamIngest(spark, WarehouseOptions(database = "odb", split = Some("type")), wh)
+    def typed(seq: Int, id: String, t: String) =
+      change(seq, id, s"""{"_id":"$id","_rev":"$seq-r","type":"$t","v":$seq}""")
+    writeChanges(input, "batch1.jsonl", Seq(typed(1, "a", "x"), typed(2, "b", "y")))
+    ingest.start(input, s"$wh/_spark_checkpoint").awaitTermination()
+    writeChanges(input, "batch2.jsonl", Seq(typed(3, "c", "z"), deletion(4, "a")))
+    ingest.start(input, s"$wh/_spark_checkpoint").awaitTermination()
+    assert(new java.io.File(wh).list().toSet == Set("_state_v", "_spark_checkpoint"))
+    assert(ingest.discoveredSchemas.keySet == Set("x", "y", "z") && ingest.checkpoint == 4L)
+  }
+
+  test("a second instance publishes the types a writer's later commit brought") {
+    val wh = tempDir("second-wh")
+    val mk = (rows: Seq[String]) => CouchFixtures.feed(spark, rows)
+    val writer = new StreamIngest(spark, WarehouseOptions(database = "w2db", split = Some("type")), wh)
+    writer.applyBatch(mk(Seq(change(1, "a", """{"_id":"a","_rev":"1","type":"x","u":1}"""))), 0L)
+    val reader = new StreamIngest(spark, WarehouseOptions(database = "r2db", split = Some("type")), wh)
+    assert(reader.discoveredSchemas.keySet == Set("x"))
+    writer.applyBatch(mk(Seq(change(2, "b", """{"_id":"b","_rev":"1","type":"y","v":2}"""))), 1L)
+    reader.publish()
+    assert(reader.discoveredSchemas.keySet == Set("x", "y"))
+    assert(spark.sql("SELECT id, v FROM r2db_y").collect().map(_.toString).toSeq == Seq("[b,2.0]"))
   }
 
   test("graft.state.buckets must be a positive integer, checked before any state is touched") {
